@@ -37,52 +37,8 @@ def query(name: str, sql: str | None):
     return deco
 
 
-# Fan-out floor: a single-reader input below this size is CHEAPER to leave
-# alone — the r6 interleaved A/B (scripts/ab_fanout_r06.py) measured the
-# blanket repartition-after-read at 1.3-2.4x SLOWER across the headline set
-# at sf0.1 (the round-robin exchange + its sort-before-repartition cost more
-# than the single-core map work it parallelizes on MB-scale tables). Above
-# the floor the classic §2.5 failure mode dominates instead: one unsplittable
-# multi-hundred-MB file serializing the whole plan behind one reader.
-_FAN_MIN_BYTES = 64 << 20
-# kill-switch for A/B measurement (scripts/ab_fanout_r06.py)
-_FAN_ENABLED = True
-
-
-def _fan_out(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Input-parallelism guard (optimization guide §2.5, "one huge
-    unsplittable file → repartition immediately after the read"): the SF dirs
-    ship each table as ONE parquet file with ONE row group, so a bare scan is
-    a single effective reader no matter the cluster size. For a big enough
-    single-reader input (>= _FAN_MIN_BYTES), round-robin repartition to the
-    default parallelism right after the read; smaller inputs pass through
-    untouched (measured: the exchange costs more than it buys below the
-    floor), as do well-split inputs like the partitioned bench corpus — so
-    this is a no-op at real scale and the decision derives from the input
-    (bytes + split count), never a local constant. Catalyst pushes filters
-    below the repartition, so PushedFilters still reach the scan."""
-    if not _FAN_ENABLED:
-        return df
-    try:
-        files = df.inputFiles()
-        import os as _os
-
-        total = sum(
-            _os.path.getsize(f[len("file:"):] if f.startswith("file:") else f)
-            for f in files
-        )
-    except Exception:
-        return df
-    if total < _FAN_MIN_BYTES:
-        return df
-    target = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= target:
-        return df
-    return df.repartition(target)
-
-
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return _fan_out(spark, spark.read.parquet(f"{sf_dir}/{name}.parquet"))
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def _dec(c, scale: int = 4):
@@ -3040,9 +2996,9 @@ def embedding_ann_ivf_trained(spark, sf_dir):
 #   detail is the checked bound, vocab=[0,32768) (GenConfig.vocab default).
 # - drift: all 5 parts pass with metric 0.0 under the default histogram
 #   method (threshold 1.0): part 4's injected drift shifts the n_tok/token
-#   distributions but stays inside the hist threshold at 400 rows — the
-#   KS/t-digest method with its tighter threshold is what flags part 4, as
-#   `test_rules.py` EXPECTED["drift"] gates separately.
+#   distributions but stays inside the hist threshold at 400 rows; on the
+#   larger `test_rules.py` corpus the same method flags it, as
+#   EXPECTED["drift"] gates separately.
 # - schema: the generated corpus always matches the declared contract.
 _FLAGSHIP_ROWS = [
     (0, "column_stats", True, 0.0, 0.0, None),

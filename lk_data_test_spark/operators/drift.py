@@ -10,10 +10,10 @@ single Arrow stage, two small shuffles) without ever collecting raw rows:
 
 1. **n_tok KS statistic.** ``n_tok`` lives in a bounded integer domain
    ([1, 8192]), so an *exact* histogram per (part_id, source) is a mergeable,
-   bounded-size sketch (<= 8192 entries per group — strictly better than a
-   t-digest here; ``functions/tdigest.py`` provides the t-digest path for
-   unbounded real-valued columns). The Kolmogorov–Smirnov sup-distance is
-   taken between the observed ECDF and the reference quantile profile.
+   bounded-size sketch (<= 8192 entries per group — strictly better than an
+   approximate quantile sketch on a bounded domain). The Kolmogorov–Smirnov
+   sup-distance is taken between the observed ECDF and the reference
+   quantile profile.
 
 2. **Token-frequency L1 distance.** The reference profile pins the expected
    relative frequency of the top-K tokens. Token arrays cross into Arrow raw
@@ -52,39 +52,12 @@ DEFAULTS = {
     "ks_threshold": 0.18,
     "l1_threshold": 0.20,
     "min_docs": 300,  # groups smaller than this are too noisy to judge
-    # "hist": exact ECDF from the bounded-int histogram (strictly better for
-    # n_tok's small-int domain). "tdigest": fold the same weighted histogram
-    # into a mergeable t-digest (functions/tdigest.py) and take the KS
-    # distance from its interpolated CDF — the path for unbounded real-valued
-    # drift columns, where an exact histogram has no bounded size.
-    "method": "hist",
     # Driver-OOM guard (plans/shared.py): profiles whose token domain
     # exceeds max_ref_tokens are folded into hash_buckets hashed buckets on
     # both the corpus and profile sides instead of being collected raw.
     "max_ref_tokens": 1_000_000,
     "hash_buckets": 1 << 16,
 }
-
-def _ks_from_tdigest(
-    values: np.ndarray, counts: np.ndarray, quantiles: np.ndarray
-) -> float:
-    """KS sup-distance via a t-digest built from the weighted histogram: the
-    sketch path (north-star wording) — identical inputs to _ks_from_hist, CDF
-    interpolated from <=128 centroids instead of the exact ECDF."""
-    from ..functions.tdigest import TDigest
-
-    order = np.argsort(values)
-    d = TDigest()
-    d.means = values[order].astype(np.float64)
-    d.weights = counts[order].astype(np.float64)
-    d._compress()
-    # sup distance sampled where the reference CDF steps (its 99 quantiles)
-    # and where the digest holds mass (its centroid means)
-    probes = np.unique(np.concatenate([quantiles, d.means]))
-    f_obs = d.cdf(probes)
-    f_ref = np.searchsorted(quantiles, probes, side="right") / 100.0
-    return float(np.max(np.abs(f_obs - f_ref)))
-
 
 def _ks_from_hist(values: np.ndarray, counts: np.ndarray, quantiles: np.ndarray) -> float:
     """KS sup-distance between a histogram ECDF and a 99-quantile profile."""
@@ -104,8 +77,67 @@ def _ks_from_hist(values: np.ndarray, counts: np.ndarray, quantiles: np.ndarray)
     )
 
 
+def resolve_params(params: dict | None) -> dict:
+    """DEFAULTS overlaid with ``params``; the removed ``method`` option is
+    accepted only as its one surviving value, "hist"."""
+    p = {**DEFAULTS, **(params or {})}
+    method = p.pop("method", "hist")
+    if method != "hist":
+        raise ValueError(
+            f"drift method={method!r} was removed: the n_tok histogram is "
+            "exact, so drop the 'method' param (or set it to 'hist')"
+        )
+    return p
+
+
+def profile_maps(prof_rows) -> tuple[dict, dict]:
+    """source -> 99 n_tok quantiles and source -> {token: expected frequency}
+    from the collected reference-profile rows."""
+    quantiles = {
+        r["source"]: np.asarray(r["n_tok_quantiles"], dtype=np.float64)
+        for r in prof_rows
+    }
+    token_freq = {r["source"]: dict(r["token_freq"]) for r in prof_rows}
+    return quantiles, token_freq
+
+
+def ref_index(token_freq: dict) -> dict[int, int]:
+    """token -> position in the sorted union of every source's reference
+    tokens (the L1 vector's layout)."""
+    tokens = sorted({t for m in token_freq.values() for t in m})
+    return {t: i for i, t in enumerate(tokens)}
+
+
+def drift_signal(
+    hist_key, hist_cnt, tok_key, tok_cnt, quantiles, ref, ref_idx
+) -> tuple[float, float, float]:
+    """(ks, l1, n_docs) of one (part, source) group: ``hist_key``/``hist_cnt``
+    is its n_tok histogram, ``tok_key``/``tok_cnt`` its reference-token
+    counts, ``quantiles`` the source's 99-quantile profile (None: no KS),
+    ``ref`` its expected token frequencies and ``ref_idx`` the token ->
+    position map of the (all sources') reference token vector."""
+    hist_key, hist_cnt = np.asarray(hist_key), np.asarray(hist_cnt)
+    n_docs = float(hist_cnt.sum())
+    ks = (
+        _ks_from_hist(hist_key, hist_cnt, quantiles)
+        if quantiles is not None and len(hist_key)
+        else 0.0
+    )
+    # total token mass (incl. out-of-profile tokens) from the histogram:
+    # sum(n_tok * count) — no second scan needed
+    total = float((hist_key * hist_cnt).sum())
+    obs = np.zeros(len(ref_idx))
+    for tok, c in zip(tok_key, tok_cnt):
+        i = ref_idx.get(int(tok))
+        if i is not None:
+            obs[i] = float(c)
+    obs = obs / total if total > 0 else obs
+    refv = np.array([ref.get(tk, 0.0) for tk in ref_idx])
+    return ks, float(np.abs(obs - refv).sum()), n_docs
+
+
 def evaluate(df: DataFrame, ctx: RuleContext) -> RuleResult:
-    p = {**DEFAULTS, **ctx.params.get(RULE_ID, {})}
+    p = resolve_params(ctx.params.get(RULE_ID))
     profiles = ctx.reference_profiles
     if profiles is None:
         raise ValueError("drift rule requires ctx.reference_profiles")
@@ -159,44 +191,20 @@ def evaluate(df: DataFrame, ctx: RuleContext) -> RuleResult:
     else:
         # sane profile: ONE collect of the tiny dimension serves both the
         # quantile and frequency closures (no extra per-run driver jobs)
-        prof_rows = profiles.collect()
-        quantiles = {
-            r["source"]: np.asarray(r["n_tok_quantiles"], dtype=np.float64)
-            for r in prof_rows
-        }
-        token_freq = {r["source"]: dict(r["token_freq"]) for r in prof_rows}
-    ref_tokens = sorted({t for m in token_freq.values() for t in m})
+        quantiles, token_freq = profile_maps(profiles.collect())
 
     # ---- fused stage 2: KS + L1 per (part_id, source) ---------------------
-    ref_idx = {t: i for i, t in enumerate(ref_tokens)}
-    n_ref = len(ref_tokens)
-
-    ks_fn = _ks_from_tdigest if p["method"] == "tdigest" else _ks_from_hist
+    ref_idx = ref_index(token_freq)
 
     def score_fn(pdf: pd.DataFrame) -> pd.DataFrame:
         part_id = int(pdf["part_id"].iloc[0])
         source = str(pdf["source"].iloc[0])
         h = pdf[pdf["kind"] == 0]  # KIND_NTOK
         t = pdf[pdf["kind"] == 1]  # KIND_TOKEN
-        n_docs = float(h["cnt"].sum())
-        q = quantiles.get(source)
-        ks = (
-            ks_fn(h["key"].to_numpy(), h["cnt"].to_numpy(), q)
-            if q is not None and len(h)
-            else 0.0
+        ks, l1, n_docs = drift_signal(
+            h["key"].to_numpy(), h["cnt"].to_numpy(), t["key"], t["cnt"],
+            quantiles.get(source), token_freq.get(source, {}), ref_idx,
         )
-        # total token mass (incl. out-of-profile tokens) from the histogram:
-        # sum(n_tok * count) — no second scan needed
-        total = float((h["key"] * h["cnt"]).sum())
-        obs = np.zeros(n_ref)
-        for tok, c in zip(t["key"], t["cnt"]):
-            i = ref_idx.get(int(tok))
-            if i is not None:
-                obs[i] = float(c)
-        obs = obs / total if total > 0 else obs
-        ref = token_freq.get(source, {})
-        refv = np.array([ref.get(tk, 0.0) for tk in ref_tokens])
-        l1 = float(np.abs(obs - refv).sum())
         return pd.DataFrame(
             {
                 "part_id": [part_id],
@@ -247,7 +255,7 @@ def evaluate(df: DataFrame, ctx: RuleContext) -> RuleResult:
             F.coalesce(F.col("metric"), F.lit(0.0)).alias("metric"),
             F.lit(1.0).alias("threshold"),
             F.lit(
-                f"method={p['method']}"
+                "method=hist"
                 + (f";domain=hashed:{shared.hash_mod}" if shared.hash_mod else "")
             ).alias("detail"),
         )

@@ -40,7 +40,7 @@ is (or has) a mergeable form:
   - drift (IncrementalDriftValidator): the shared token partials
     (plans/shared.py — per (part, source) n_tok histogram + token counts)
     are count rows that add; the KS/L1 scoring re-derives from the merged
-    table with the batch rule's own helpers.
+    table with the batch rule's own drift_signal.
   - referential (IncrementalReferentialValidator): violations are per-row
     independent — delta counts ADD to the stored metric.
   - token_bounds (IncrementalTokenBoundsValidator): same per-row-independent
@@ -58,15 +58,35 @@ is (or has) a mergeable form:
 
 from __future__ import annotations
 
+import base64
+import hashlib
 import json
 import os
-import tempfile
+from functools import reduce
 
-from pyspark.sql import SparkSession
+import numpy as np
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.column_stats import partition_stats
+from ..operators import uniqueness
+from ..operators.column_stats import partition_stats, partition_stats_no_tokens
+from ..operators.drift import (
+    drift_signal,
+    profile_maps,
+    ref_index,
+    resolve_params,
+)
+from ..operators.token_bounds import has_oov
 from ..sources.catalog import PartitionedTable
+from .manifest import load_store, save_store
+from .shared import (
+    KIND_LEN_MISMATCH,
+    KIND_NTOK,
+    KIND_NULL_TOKENS,
+    KIND_OOV_ROWS,
+    KIND_TOKEN,
+    SharedTokenStats,
+)
 
 _SUM_FIELDS = (
     "row_count",
@@ -88,12 +108,16 @@ _BAD_FIELDS = (
 )
 
 
-def _row_to_stats(row) -> dict:
-    d = {k: int(row[k]) for k in _SUM_FIELDS}
-    d["min_n_tok"] = None if row["min_n_tok"] is None else int(row["min_n_tok"])
-    d["max_n_tok"] = None if row["max_n_tok"] is None else int(row["max_n_tok"])
+def _row_to_stats(row, **token_counters) -> dict:
+    """Stats dict from a partition_stats row. The fused suite's tokens-free
+    row gets its two token-derived counters (null_tokens, len_mismatch) from
+    the shared Arrow scan instead, passed as keywords."""
+    r = {**row.asDict(), **token_counters}
+    d = {k: int(r[k]) for k in _SUM_FIELDS}
+    for k in ("min_n_tok", "max_n_tok"):
+        d[k] = None if r[k] is None else int(r[k])
     d["n_tok_hist"] = {
-        str(k): int(v) for k, v in (row["n_tok_hist"] or {}).items()
+        str(k): int(v) for k, v in (r["n_tok_hist"] or {}).items()
     }
     return d
 
@@ -112,13 +136,12 @@ def merge_stats(a: dict, b: dict) -> dict:
     return out
 
 
-def _part_files(table: PartitionedTable, pid: int) -> dict[str, int]:
-    pdir = os.path.join(table.path, f"part_id={pid}")
-    return {
-        f: os.path.getsize(os.path.join(pdir, f))
-        for f in os.listdir(pdir)
-        if f.endswith(".parquet")
-    }
+def _empty_stats() -> dict:
+    d = {k: 0 for k in _SUM_FIELDS}
+    d["min_n_tok"] = None
+    d["max_n_tok"] = None
+    d["n_tok_hist"] = {}
+    return d
 
 
 def classify_partitions(
@@ -130,7 +153,7 @@ def classify_partitions(
     full: list[int] = []
     skip: list[int] = []
     for pid in table.partition_ids():
-        cur = _part_files(table, pid)
+        cur = table.part_files(pid)
         prior = entries.get(str(pid))
         if prior is None:
             full.append(pid)
@@ -139,9 +162,9 @@ def classify_partitions(
         if cur == old:
             skip.append(pid)
         elif all(cur.get(f) == sz for f, sz in old.items()):
-            pdir = os.path.join(table.path, f"part_id={pid}")
             delta[pid] = [
-                os.path.join(pdir, f) for f in sorted(set(cur) - set(old))
+                os.path.join(table.part_dir(pid), f)
+                for f in sorted(set(cur) - set(old))
             ]
         else:  # rewrite / delete / size change -> full recompute
             full.append(pid)
@@ -151,20 +174,82 @@ def classify_partitions(
 def _union_with_part_ids(spark: SparkSession, delta: dict[int, list[str]]):
     """Union every partition's added files with its literal part_id
     (directory-derived columns are absent when reading file paths)."""
-    frames = []
-    for pid, paths in delta.items():
-        frames.append(
+    return reduce(
+        DataFrame.unionByName,
+        [
             spark.read.parquet(*paths).withColumn(
                 "part_id", F.lit(pid).cast("int")
             )
+            for pid, paths in delta.items()
+        ],
+    )
+
+
+def _shared_stats(df, profiles, **kw) -> SharedTokenStats:
+    """The shared token pass over ``df``. Hashed-domain profiles (the
+    pathological-vocabulary fallback) are refused: their bucket folding is a
+    lossy transform, and stored partials would mix domains."""
+    shared = SharedTokenStats.from_profiles(df, profiles, **kw)
+    if shared.hash_mod:
+        raise ValueError(
+            "hashed-domain profiles are not supported incrementally; "
+            "run the batch drift rule"
         )
-    u = frames[0]
-    for fr in frames[1:]:
-        u = u.unionByName(fr)
-    return u
+    return shared
 
 
-class IncrementalStatsValidator:
+def _drift_partials(rows) -> dict[int, list]:
+    """part_id -> [source, kind, key, cnt] for the drift kinds of ``rows``."""
+    out: dict[int, list] = {}
+    for r in rows:
+        if int(r["kind"]) in (KIND_NTOK, KIND_TOKEN):
+            out.setdefault(int(r["part_id"]), []).append(
+                [r["source"], int(r["kind"]), int(r["key"]), int(r["cnt"])]
+            )
+    return out
+
+
+def _count_by_part(df) -> dict[int, int]:
+    rows = df.groupBy("part_id").agg(F.count(F.lit(1)).alias("n")).collect()
+    return {int(r["part_id"]): int(r["n"]) for r in rows}
+
+
+class _IncrementalValidator:
+    """What every incremental validator shares: the file-lineage JSON store,
+    the full/delta scan skeleton and the per-partition store record."""
+
+    _indent: int | None = 1  # JSON indent of the store file
+
+    def __init__(self, table: PartitionedTable, store_path: str):
+        self.table = table
+        self.store_path = store_path
+        self.entries: dict[str, dict] = load_store(store_path)
+
+    def _save(self) -> None:
+        save_store(self.store_path, self.entries, self._indent)
+
+    def _scan(self, spark, delta, full, scan, precomputed=None) -> dict:
+        """{"full": {pid: x}, "delta": {pid: x}} — ONE ``scan`` job over the
+        full partitions and ONE over every partition's added files, or the
+        same-shaped inputs the fused token pass (run_incremental_suite)
+        precomputed."""
+        if precomputed is not None:
+            return precomputed
+        return {
+            "full": scan(self.table.read_partitions(spark, full)) if full else {},
+            "delta": scan(_union_with_part_ids(spark, delta)) if delta else {},
+        }
+
+    def _record(self, pid: int, **state) -> None:
+        self.entries[str(pid)] = {"files": self.table.part_files(pid), **state}
+
+    @staticmethod
+    def _report(results: dict[int, dict], **extra) -> dict:
+        modes = {pid: r["mode"] for pid, r in sorted(results.items())}
+        return {"parts": results, **extra, "modes": modes}
+
+
+class IncrementalStatsValidator(_IncrementalValidator):
     """Incremental column-stats validation with file-level lineage.
 
     ``run(spark)`` returns {part_id: {"mode", "passed", "metric", "stats"}}
@@ -180,62 +265,28 @@ class IncrementalStatsValidator:
         bucket_width: int = 64,
         max_bad: float = 0.0,
     ):
-        self.table = table
-        self.store_path = store_path
+        super().__init__(table, store_path)
         self.n_salt = n_salt
         self.bucket_width = bucket_width
         self.max_bad = max_bad
-        self.entries: dict[str, dict] = {}
-        if os.path.exists(store_path):
-            with open(store_path) as f:
-                self.entries = json.load(f)
-
-    def _save(self) -> None:
-        os.makedirs(os.path.dirname(self.store_path) or ".", exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(self.store_path) or ".")
-        with os.fdopen(fd, "w") as f:
-            json.dump(self.entries, f, indent=1, sort_keys=True)
-        os.replace(tmp, self.store_path)
-
-    def _classify(self) -> tuple[dict[int, list[str]], list[int], list[int]]:
-        return classify_partitions(self.table, self.entries)
 
     def _stats_for(self, df) -> dict[int, dict]:
         rows = partition_stats(df, self.n_salt, self.bucket_width).collect()
         return {int(r["part_id"]): _row_to_stats(r) for r in rows}
 
     def run(self, spark: SparkSession, _precomputed: dict | None = None) -> dict:
-        # _precomputed: {"full": {pid: stats}, "delta": {pid: stats}} from the
-        # fused single-decode token pass (run_incremental_suite) — same dict
-        # shape _stats_for returns, so the merge/verdict logic is identical.
-        delta, full, skip = self._classify()
+        delta, full, skip = classify_partitions(self.table, self.entries)
+        # delta: ONE job over every partition's added files
+        got = self._scan(spark, delta, full, self._stats_for, _precomputed)
         results: dict[int, dict] = {}
         scanned_rows = 0
-
-        if full:
-            stats = (
-                _precomputed["full"]
-                if _precomputed is not None
-                else self._stats_for(self.table.read_partitions(spark, full))
-            )
-            for pid in full:
-                s = stats.get(pid) or _empty_stats()
+        for mode, pids in (("full", full), ("delta", delta)):
+            for pid in pids:
+                s = got[mode].get(pid) or _empty_stats()
                 scanned_rows += s["row_count"]
-                results[pid] = {"mode": "full", "stats": s}
-
-        if delta:
-            # ONE job over every partition's added files
-            dstats = (
-                _precomputed["delta"]
-                if _precomputed is not None
-                else self._stats_for(_union_with_part_ids(spark, delta))
-            )
-            for pid in delta:
-                d = dstats.get(pid) or _empty_stats()
-                scanned_rows += d["row_count"]
-                merged = merge_stats(self.entries[str(pid)]["stats"], d)
-                results[pid] = {"mode": "delta", "stats": merged}
-
+                if mode == "delta":
+                    s = merge_stats(self.entries[str(pid)]["stats"], s)
+                results[pid] = {"mode": mode, "stats": s}
         for pid in skip:
             results[pid] = {
                 "mode": "skip",
@@ -243,39 +294,22 @@ class IncrementalStatsValidator:
             }
 
         for pid, res in results.items():
-            s = res["stats"]
-            bad = sum(s[k] for k in _BAD_FIELDS)
+            bad = sum(res["stats"][k] for k in _BAD_FIELDS)
             res["metric"] = float(bad)
             res["passed"] = bad <= self.max_bad
             if res["mode"] != "skip":
-                self.entries[str(pid)] = {
-                    "files": _part_files(self.table, pid),
-                    "stats": s,
-                }
+                self._record(pid, stats=res["stats"])
         self._save()
-        return {
-            "parts": results,
-            "scanned_rows": scanned_rows,
-            "modes": {
-                pid: res["mode"] for pid, res in sorted(results.items())
-            },
-        }
+        return self._report(results, scanned_rows=scanned_rows)
 
 
-def _empty_stats() -> dict:
-    d = {k: 0 for k in _SUM_FIELDS}
-    d["min_n_tok"] = None
-    d["max_n_tok"] = None
-    d["n_tok_hist"] = {}
-    return d
-
-
-class IncrementalDriftValidator:
+class IncrementalDriftValidator(_IncrementalValidator):
     """Incremental DRIFT validation: the drift rule's entire signal is the
     tagged token partials of plans/shared.py — per (source, kind, key) count
     rows that merge by addition — so appended files contribute partials that
     merge exactly with the stored ones, and the KS/L1 scoring re-derives
-    from the merged table (same helpers, same thresholds as the batch rule).
+    from the merged table (same drift_signal, same thresholds as the batch
+    rule).
 
     Per-partition state is the partials list (bounded by sources x
     (|reference tokens| + |distinct n_tok|), independent of row count) plus
@@ -284,48 +318,23 @@ class IncrementalDriftValidator:
     best kept on the one-shot batch path.
     """
 
+    _indent = None  # the partials store is the large one: compact JSON
+
     def __init__(self, table: PartitionedTable, store_path: str, params: dict | None = None):
-        from ..operators.drift import DEFAULTS
-
-        self.table = table
-        self.store_path = store_path
-        self.params = {**DEFAULTS, **(params or {})}
-        self.entries: dict[str, dict] = {}
-        if os.path.exists(store_path):
-            with open(store_path) as f:
-                self.entries = json.load(f)
-
-    def _save(self) -> None:
-        os.makedirs(os.path.dirname(self.store_path) or ".", exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(self.store_path) or ".")
-        with os.fdopen(fd, "w") as f:
-            json.dump(self.entries, f, sort_keys=True)
-        os.replace(tmp, self.store_path)
+        self.params = resolve_params(params)
+        super().__init__(table, store_path)
 
     def _partials_for(self, spark, df, profiles) -> dict[int, list]:
-        from ..plans.shared import KIND_NTOK, KIND_TOKEN, SharedTokenStats
-
-        shared = SharedTokenStats.from_profiles(
+        shared = _shared_stats(
             df,
             profiles,
             max_ref_tokens=int(self.params["max_ref_tokens"]),
             hash_buckets=int(self.params["hash_buckets"]),
         )
-        if shared.hash_mod:
-            raise ValueError(
-                "hashed-domain profiles are not supported incrementally; "
-                "run the batch drift rule"
-            )
-        rows = (
+        return _drift_partials(
             shared.partials.filter(F.col("kind").isin(KIND_NTOK, KIND_TOKEN))
             .collect()
         )
-        out: dict[int, list] = {}
-        for r in rows:
-            out.setdefault(int(r["part_id"]), []).append(
-                [r["source"], int(r["kind"]), int(r["key"]), int(r["cnt"])]
-            )
-        return out
 
     @staticmethod
     def _merge_partials(a: list, b: list) -> list:
@@ -338,41 +347,22 @@ class IncrementalDriftValidator:
             for (src, kind, key), cnt in sorted(acc.items())
         ]
 
-    def _score(self, partials: list, quantiles, token_freq, ref_tokens) -> float:
-        """max over (source) groups of max(ks/ks_thr, l1/l1_thr) — the same
-        math as the batch rule's score_fn, driver-side over the tiny merged
-        partials (deterministic: partials are sorted before scoring)."""
-        import numpy as np
-
-        from ..operators.drift import _ks_from_hist, _ks_from_tdigest
-
-        ks_fn = (
-            _ks_from_tdigest
-            if self.params["method"] == "tdigest"
-            else _ks_from_hist
-        )
-        by_src: dict[str, dict[int, list]] = {}
+    def _score(self, partials: list, quantiles, token_freq, ref_idx) -> float:
+        """max over (source) groups of max(ks/ks_thr, l1/l1_thr) — the batch
+        rule's drift_signal, driver-side over the tiny merged partials
+        (deterministic: partials are sorted before scoring)."""
+        by_src: dict[str, tuple[list, list]] = {}
         for src, kind, key, cnt in sorted(partials):
-            by_src.setdefault(src, {0: [], 1: []})[kind].append((key, cnt))
+            by_src.setdefault(src, ([], []))[kind].append((key, cnt))
         best = 0.0
         for src, kinds in by_src.items():
-            h = np.array(kinds[0], dtype=np.float64).reshape(-1, 2)
-            n_docs = float(h[:, 1].sum()) if len(h) else 0.0
+            h, t = (np.array(k, dtype=np.int64).reshape(-1, 2) for k in kinds)
+            ks, l1, n_docs = drift_signal(
+                h[:, 0], h[:, 1], t[:, 0], t[:, 1],
+                quantiles.get(src), token_freq.get(src, {}), ref_idx,
+            )
             if n_docs < float(self.params["min_docs"]):
                 continue
-            q = quantiles.get(src)
-            ks = ks_fn(h[:, 0], h[:, 1], q) if q is not None and len(h) else 0.0
-            total = float((h[:, 0] * h[:, 1]).sum()) if len(h) else 0.0
-            obs = np.zeros(len(ref_tokens))
-            idx = {t: i for i, t in enumerate(ref_tokens)}
-            for key, cnt in kinds[1]:
-                i = idx.get(int(key))
-                if i is not None:
-                    obs[i] = float(cnt)
-            obs = obs / total if total > 0 else obs
-            ref = token_freq.get(src, {})
-            refv = np.array([ref.get(tk, 0.0) for tk in ref_tokens])
-            l1 = float(np.abs(obs - refv).sum())
             score = max(
                 ks / float(self.params["ks_threshold"]),
                 l1 / float(self.params["l1_threshold"]),
@@ -383,44 +373,21 @@ class IncrementalDriftValidator:
     def run(
         self, spark: SparkSession, profiles, _precomputed: dict | None = None
     ) -> dict:
-        # _precomputed: {"full": {pid: partials}, "delta": {pid: partials}}
-        # from the fused single-decode token pass (run_incremental_suite) —
-        # the same [source, kind, key, cnt] lists _partials_for returns.
-        import numpy as np
-
         delta, full, skip = classify_partitions(self.table, self.entries)
-        partials_by_part: dict[int, list] = {}
-
-        if full:
-            got = (
-                _precomputed["full"]
-                if _precomputed is not None
-                else self._partials_for(
-                    spark, self.table.read_partitions(spark, full), profiles
-                )
+        got = self._scan(
+            spark, delta, full,
+            lambda df: self._partials_for(spark, df, profiles),
+            _precomputed,
+        )
+        partials_by_part = {pid: sorted(got["full"].get(pid, [])) for pid in full}
+        for pid in delta:
+            partials_by_part[pid] = self._merge_partials(
+                self.entries[str(pid)]["partials"], got["delta"].get(pid, [])
             )
-            for pid in full:
-                partials_by_part[pid] = sorted(got.get(pid, []))
-        if delta:
-            got = (
-                _precomputed["delta"]
-                if _precomputed is not None
-                else self._partials_for(
-                    spark, _union_with_part_ids(spark, delta), profiles
-                )
-            )
-            for pid in delta:
-                partials_by_part[pid] = self._merge_partials(
-                    self.entries[str(pid)]["partials"], got.get(pid, [])
-                )
 
         prof_rows = profiles.collect()
-        quantiles = {
-            r["source"]: np.asarray(r["n_tok_quantiles"], dtype=np.float64)
-            for r in prof_rows
-        }
-        token_freq = {r["source"]: dict(r["token_freq"]) for r in prof_rows}
-        ref_tokens = sorted({t for m in token_freq.values() for t in m})
+        quantiles, token_freq = profile_maps(prof_rows)
+        ref_idx = ref_index(token_freq)
 
         # Score memo: the metric is a pure function of (partials, profiles,
         # params). Re-deriving it for every SKIP partition on every run is
@@ -429,8 +396,6 @@ class IncrementalDriftValidator:
         # whose stored fingerprint matches reuse the stored metric; a
         # profile or threshold change invalidates the fingerprint and
         # rescored metrics (no scan — the partials are state).
-        import hashlib
-
         fp = hashlib.sha256(
             json.dumps(
                 [
@@ -463,7 +428,7 @@ class IncrementalDriftValidator:
             else:
                 partials_by_part[pid] = e["partials"]
         for pid, partials in partials_by_part.items():
-            metric = self._score(partials, quantiles, token_freq, ref_tokens)
+            metric = self._score(partials, quantiles, token_freq, ref_idx)
             mode = (
                 "skip" if pid in skip else "delta" if pid in delta else "full"
             )
@@ -473,89 +438,33 @@ class IncrementalDriftValidator:
                 "passed": metric <= 1.0,
             }
             if mode != "skip":
-                self.entries[str(pid)] = {
-                    "files": _part_files(self.table, pid),
-                    "partials": partials,
-                }
-            self.entries[str(pid)]["metric"] = metric
-            self.entries[str(pid)]["score_fp"] = fp
+                self._record(pid, partials=partials)
+            self.entries[str(pid)].update(metric=metric, score_fp=fp)
         # the store carries every partition's partials (~MBs at real
         # partition counts); rewriting it when nothing was rescored is pure
         # serialization cost on the all-skip path
         if partials_by_part:
             self._save()
-        return {
-            "parts": results,
-            "modes": {pid: r["mode"] for pid, r in sorted(results.items())},
-        }
+        return self._report(results)
 
 
-class IncrementalReferentialValidator:
-    """Incremental REFERENTIAL validation: the rule is per-row independent
-    (a row either has an allowed source or not), so delta files contribute
-    delta violation counts that ADD to the stored metric — nothing else is
-    state. passed = metric == 0, matching the batch rule."""
+class _ViolationCountValidator(_IncrementalValidator):
+    """A per-row independent rule (a row violates it or not): delta files
+    contribute delta violation counts that ADD to the stored metric —
+    nothing else is state. passed = metric == 0, matching the batch rules."""
 
-    def __init__(self, table: PartitionedTable, store_path: str):
-        self.table = table
-        self.store_path = store_path
-        self.entries: dict[str, dict] = {}
-        if os.path.exists(store_path):
-            with open(store_path) as f:
-                self.entries = json.load(f)
-
-    def _save(self) -> None:
-        os.makedirs(os.path.dirname(self.store_path) or ".", exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(self.store_path) or ".")
-        with os.fdopen(fd, "w") as f:
-            json.dump(self.entries, f, indent=1, sort_keys=True)
-        os.replace(tmp, self.store_path)
-
-    @staticmethod
-    def _counts(df, allowed) -> dict[int, int]:
-        active = allowed.filter(F.col("active")).select("source")
-        rows = (
-            df.select("part_id", "source")
-            .join(F.broadcast(active), "source", "left_anti")
-            .groupBy("part_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-        return {int(r["part_id"]): int(r["n"]) for r in rows}
-
-    def run(
-        self,
-        spark: SparkSession,
-        allowed,
-        _precomputed: dict | None = None,
-    ) -> dict:
-        # _precomputed: {"full": {pid: n}, "delta": {pid: n}} — violation
-        # counts from the fused token pass (token_bounds only; referential's
-        # own scan is tokens-free and cheap).
+    def _run_counts(self, spark, counts, _precomputed) -> dict:
         delta, full, skip = classify_partitions(self.table, self.entries)
+        got = self._scan(spark, delta, full, counts, _precomputed)
         results: dict[int, dict] = {}
-        if full:
-            got = (
-                _precomputed["full"]
-                if _precomputed is not None
-                else self._counts(
-                    self.table.read_partitions(spark, full), allowed
-                )
-            )
-            for pid in full:
-                results[pid] = {"mode": "full", "metric": float(got.get(pid, 0))}
-        if delta:
-            got = (
-                _precomputed["delta"]
-                if _precomputed is not None
-                else self._counts(_union_with_part_ids(spark, delta), allowed)
-            )
-            for pid in delta:
-                results[pid] = {
-                    "mode": "delta",
-                    "metric": float(self.entries[str(pid)]["metric"])
-                    + float(got.get(pid, 0)),
-                }
+        for pid in full:
+            results[pid] = {"mode": "full", "metric": float(got["full"].get(pid, 0))}
+        for pid in delta:
+            results[pid] = {
+                "mode": "delta",
+                "metric": float(self.entries[str(pid)]["metric"])
+                + float(got["delta"].get(pid, 0)),
+            }
         for pid in skip:
             results[pid] = {
                 "mode": "skip",
@@ -564,24 +473,39 @@ class IncrementalReferentialValidator:
         for pid, res in results.items():
             res["passed"] = res["metric"] == 0.0
             if res["mode"] != "skip":
-                self.entries[str(pid)] = {
-                    "files": _part_files(self.table, pid),
-                    "metric": res["metric"],
-                }
+                self._record(pid, metric=res["metric"])
         self._save()
-        return {
-            "parts": results,
-            "modes": {pid: r["mode"] for pid, r in sorted(results.items())},
-        }
+        return self._report(results)
 
 
-class IncrementalTokenBoundsValidator(IncrementalReferentialValidator):
-    """Incremental TOKEN_BOUNDS validation: like referential, the rule is
-    per-row independent (a row either contains an out-of-vocab token or
-    not), so delta files contribute delta violation counts that ADD to the
-    stored metric. Inherits the file-lineage store / classify / merge loop
-    from the referential validator; only the counting plan differs — and the
-    ``allowed`` argument is repurposed as (vocab_lo, vocab_size)."""
+class IncrementalReferentialValidator(_ViolationCountValidator):
+    """Incremental REFERENTIAL validation: a row either has an allowed
+    source or not, so delta violation counts add to the stored metric."""
+
+    @staticmethod
+    def _counts(df, allowed) -> dict[int, int]:
+        active = allowed.filter(F.col("active")).select("source")
+        return _count_by_part(
+            df.select("part_id", "source").join(
+                F.broadcast(active), "source", "left_anti"
+            )
+        )
+
+    def run(
+        self,
+        spark: SparkSession,
+        allowed,
+        _precomputed: dict | None = None,
+    ) -> dict:
+        return self._run_counts(
+            spark, lambda df: self._counts(df, allowed), _precomputed
+        )
+
+
+class IncrementalTokenBoundsValidator(_ViolationCountValidator):
+    """Incremental TOKEN_BOUNDS validation: a row either contains a token
+    outside [vocab_lo, vocab_size) or not, so delta OOV-row counts add to
+    the stored metric."""
 
     def __init__(
         self, table: PartitionedTable, store_path: str,
@@ -591,33 +515,16 @@ class IncrementalTokenBoundsValidator(IncrementalReferentialValidator):
         self.vocab_lo = int(vocab_lo)
         self.vocab_size = int(vocab_size)
 
-    def _counts(self, df, allowed=None) -> dict[int, int]:
-        from ..operators.token_bounds import has_oov
-
-        rows = (
-            df.select(
-                "part_id",
-                F.when(has_oov(self.vocab_lo, self.vocab_size), 1)
-                .otherwise(0)
-                .alias("b"),
-            )
-            .groupBy("part_id")
-            .agg(F.sum("b").alias("n"))
-            .filter(F.col("n") > 0)
-            .collect()
+    def _counts(self, df) -> dict[int, int]:
+        return _count_by_part(
+            df.filter(has_oov(self.vocab_lo, self.vocab_size))
         )
-        return {int(r["part_id"]): int(r["n"]) for r in rows}
 
-    def run(
-        self,
-        spark: SparkSession,
-        allowed=None,
-        _precomputed: dict | None = None,
-    ) -> dict:
-        return super().run(spark, allowed, _precomputed=_precomputed)
+    def run(self, spark: SparkSession, _precomputed: dict | None = None) -> dict:
+        return self._run_counts(spark, self._counts, _precomputed)
 
 
-class IncrementalUniquenessValidator:
+class IncrementalUniquenessValidator(_IncrementalValidator):
     """Incremental UNIQUENESS validation: the HLL screen's sketch is
     mergeable by design (Datasketches HLL via F.hll_sketch_agg /
     hll_union_agg), so appended files contribute a delta sketch that unions
@@ -647,22 +554,10 @@ class IncrementalUniquenessValidator:
         self, table: PartitionedTable, store_path: str, rsd: float = 0.01,
         lg_config_k: int = 14, scope: str = "partition",
     ):
-        self.table = table
-        self.store_path = store_path
+        super().__init__(table, store_path)
         self.rsd = rsd
         self.lg_k = lg_config_k
         self.scope = scope
-        self.entries: dict[str, dict] = {}
-        if os.path.exists(store_path):
-            with open(store_path) as f:
-                self.entries = json.load(f)
-
-    def _save(self) -> None:
-        os.makedirs(os.path.dirname(self.store_path) or ".", exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(self.store_path) or ".")
-        with os.fdopen(fd, "w") as f:
-            json.dump(self.entries, f, indent=1, sort_keys=True)
-        os.replace(tmp, self.store_path)
 
     def _sketches(self, df) -> dict[int, tuple[int, bytes]]:
         rows = (
@@ -674,6 +569,10 @@ class IncrementalUniquenessValidator:
             .collect()
         )
         return {int(r["part_id"]): (int(r["n"]), bytes(r["sk"])) for r in rows}
+
+    def _stored(self, pid: int) -> tuple[int, bytes]:
+        e = self.entries[str(pid)]
+        return int(e["n_rows"]), base64.b64decode(e["sketch_b64"])
 
     def _union_sketches(self, spark, pairs: dict[int, list[bytes]]) -> dict[int, tuple[bytes, int]]:
         """Union each partition's sketch list and estimate, one tiny job."""
@@ -690,40 +589,25 @@ class IncrementalUniquenessValidator:
         return {int(r["part_id"]): (bytes(r["u"]), int(r["est"])) for r in rows}
 
     def run(self, spark: SparkSession) -> dict:
-        import base64
-
-        from ..operators.uniqueness import duplicate_doc_ids
-
         delta, full, skip = classify_partitions(self.table, self.entries)
-        state: dict[int, tuple[int, bytes]] = {}  # pid -> (n_rows, sketch)
-        results: dict[int, dict] = {}
-
-        if full:
-            got = self._sketches(self.table.read_partitions(spark, full))
-            for pid in full:
-                state[pid] = got.get(pid, (0, b""))
-                results[pid] = {"mode": "full"}
+        got = self._scan(spark, delta, full, self._sketches)
+        # pid -> (n_rows, sketch)
+        state = {pid: got["full"].get(pid, (0, b"")) for pid in full}
+        results = {pid: {"mode": "full"} for pid in full}
         if delta:
-            got = self._sketches(_union_with_part_ids(spark, delta))
             to_union: dict[int, list[bytes]] = {}
-            d_rows: dict[int, int] = {}
+            n_rows: dict[int, int] = {}
             for pid in delta:
-                n_new, sk_new = got.get(pid, (0, b""))
-                old = self.entries[str(pid)]
-                d_rows[pid] = int(old["n_rows"]) + n_new
-                sks = [base64.b64decode(old["sketch_b64"])]
-                if sk_new:
-                    sks.append(sk_new)
-                to_union[pid] = sks
+                n_new, sk_new = got["delta"].get(pid, (0, b""))
+                n_old, sk_old = self._stored(pid)
+                n_rows[pid] = n_old + n_new
+                to_union[pid] = [sk_old] + ([sk_new] if sk_new else [])
             unioned = self._union_sketches(spark, to_union)
             for pid in delta:
-                state[pid] = (d_rows[pid], unioned[pid][0])
+                state[pid] = (n_rows[pid], unioned[pid][0])
                 results[pid] = {"mode": "delta"}
         for pid in skip:
-            old = self.entries[str(pid)]
-            state[pid] = (
-                int(old["n_rows"]), base64.b64decode(old["sketch_b64"])
-            )
+            state[pid] = self._stored(pid)
             results[pid] = {"mode": "skip"}
 
         # ALL-skip fast path: with every file set unchanged, every verdict —
@@ -748,12 +632,7 @@ class IncrementalUniquenessValidator:
                 results[pid]["metric"] = float(e["metric"])
                 results[pid]["passed"] = float(e["metric"]) == 0.0
                 results[pid]["detail"] = e["detail"]
-            return {
-                "parts": results,
-                "modes": {
-                    pid: r["mode"] for pid, r in sorted(results.items())
-                },
-            }
+            return self._report(results)
 
         # screen over merged state (estimates in one tiny job)
         ests = self._union_sketches(
@@ -765,8 +644,6 @@ class IncrementalUniquenessValidator:
             if sk and n > 0 and ests[pid][1] < n * (1.0 - 3.0 * self.rsd)
         ]
         if self.scope == "global":
-            from ..operators.uniqueness import global_duplicate_doc_ids
-
             # cross screen: union EVERY stored sketch (no scan — one tiny
             # driver-submitted job over n_parts serialized sketches)
             total = sum(n for n, _ in state.values())
@@ -779,112 +656,82 @@ class IncrementalUniquenessValidator:
             exact_pids = sorted(state) if cross else flagged
             dup_counts = {}
             if exact_pids:
-                dups = global_duplicate_doc_ids(
-                    self.table.read_partitions(spark, exact_pids)
+                dup_counts = _count_by_part(
+                    uniqueness.global_duplicate_doc_ids(
+                        self.table.read_partitions(spark, exact_pids)
+                    )
                 )
-                for r in (
-                    dups.groupBy("part_id")
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .collect()
-                ):
-                    dup_counts[int(r["part_id"])] = int(r["n"])
-            for pid, res in results.items():
-                exact = pid in exact_pids
-                metric = float(dup_counts.get(pid, 0)) if exact else 0.0
-                res["metric"] = metric
-                res["passed"] = metric == 0.0
-                res["detail"] = (
-                    "path=exact scope=global"
-                    if exact
-                    else "path=screen scope=global"
-                )
-                if res["mode"] != "skip":
-                    n, sk = state[pid]
-                    self.entries[str(pid)] = {
-                        "files": _part_files(self.table, pid),
-                        "n_rows": n,
-                        "sketch_b64": base64.b64encode(sk).decode(),
-                    }
-                # memo for the all-skip fast path (valid because the global
-                # verdicts are a function of the full unchanged store)
-                self.entries[str(pid)]["metric"] = metric
-                self.entries[str(pid)]["detail"] = res["detail"]
-            self._save()
-            return {
-                "parts": results,
-                "modes": {
-                    pid: r["mode"] for pid, r in sorted(results.items())
-                },
+            scope = " scope=global"
+        else:
+            # Partition-scope exact results are pure functions of the
+            # partition's file set: a SKIP partition's stored exact dup count
+            # cannot have changed, so it is reused instead of re-scanning —
+            # at 10^12 rows, replaying the exact pass over every
+            # flagged-but-unchanged partition on every run is the difference
+            # between an O(delta) rerun and an O(all flagged data) one.
+            # (Global scope cannot memoize per partition: its exact counts
+            # depend on the SET of partitions scanned together.) Changing rsd
+            # between runs can alter which partitions the screen flags;
+            # delete the store to re-derive.
+            exact_pids = flagged
+            dup_counts = {
+                pid: float(self.entries[str(pid)]["metric"])
+                for pid in flagged
+                if results[pid]["mode"] == "skip"
+                and "metric" in self.entries[str(pid)]
             }
-
-        # Partition-scope exact results are pure functions of the partition's
-        # file set: a SKIP partition's stored exact dup count cannot have
-        # changed, so it is reused instead of re-scanning — at 10^12 rows,
-        # replaying the exact pass over every flagged-but-unchanged partition
-        # on every run is the difference between an O(delta) rerun and an
-        # O(all flagged data) one. (Global scope cannot memoize per
-        # partition: its exact counts depend on the SET of partitions
-        # scanned together.) Changing rsd between runs can alter which
-        # partitions the screen flags; delete the store to re-derive.
-        memo = {
-            pid: float(self.entries[str(pid)]["metric"])
-            for pid in flagged
-            if results[pid]["mode"] == "skip"
-            and "metric" in self.entries[str(pid)]
-        }
-        need_exact = [pid for pid in flagged if pid not in memo]
-        dup_counts: dict[int, int] = {}
-        if need_exact:
-            dups = duplicate_doc_ids(
-                self.table.read_partitions(spark, need_exact)
-            )
-            for r in (
-                dups.groupBy("part_id").agg(F.count(F.lit(1)).alias("n")).collect()
-            ):
-                dup_counts[int(r["part_id"])] = int(r["n"])
+            need_exact = [pid for pid in flagged if pid not in dup_counts]
+            if need_exact:
+                dup_counts.update(_count_by_part(
+                    uniqueness.duplicate_doc_ids(
+                        self.table.read_partitions(spark, need_exact)
+                    )
+                ))
+            scope = ""
 
         for pid, res in results.items():
-            exact = pid in flagged
-            if exact:
-                metric = memo.get(pid, float(dup_counts.get(pid, 0)))
-            else:
-                metric = 0.0
+            exact = pid in exact_pids
+            metric = float(dup_counts.get(pid, 0)) if exact else 0.0
             res["metric"] = metric
             res["passed"] = metric == 0.0
-            res["detail"] = "path=exact" if exact else "path=screen"
+            res["detail"] = ("path=exact" if exact else "path=screen") + scope
             if res["mode"] != "skip":
                 n, sk = state[pid]
-                self.entries[str(pid)] = {
-                    "files": _part_files(self.table, pid),
-                    "n_rows": n,
-                    "sketch_b64": base64.b64encode(sk).decode(),
-                }
-            # the memo: exact counts (and screen zeros) ride the store
-            self.entries[str(pid)]["metric"] = metric
-            self.entries[str(pid)]["detail"] = res["detail"]
+                self._record(
+                    pid, n_rows=n, sketch_b64=base64.b64encode(sk).decode()
+                )
+            # the memo: exact counts (and screen zeros) ride the store — in
+            # global scope valid for the all-skip fast path because the
+            # global verdicts are a function of the full unchanged store
+            self.entries[str(pid)].update(metric=metric, detail=res["detail"])
         self._save()
-        return {
-            "parts": results,
-            "modes": {pid: r["mode"] for pid, r in sorted(results.items())},
-        }
+        return self._report(results)
 
 
-def _narrow_row_to_stats(row, null_tokens: int, len_mismatch: int) -> dict:
-    """Assemble the stats dict from the tokens-free salted pass plus the two
-    token-derived counters that came from the shared Arrow scan."""
-    d = {
-        k: int(row[k])
-        for k in _SUM_FIELDS
-        if k not in ("null_tokens", "len_mismatch")
-    }
-    d["null_tokens"] = int(null_tokens)
-    d["len_mismatch"] = int(len_mismatch)
-    d["min_n_tok"] = None if row["min_n_tok"] is None else int(row["min_n_tok"])
-    d["max_n_tok"] = None if row["max_n_tok"] is None else int(row["max_n_tok"])
-    d["n_tok_hist"] = {
-        str(k): int(v) for k, v in (row["n_tok_hist"] or {}).items()
-    }
-    return d
+def _fused_scan(frame, profiles, sv, vocab_lo: int, vocab_hi: int) -> dict:
+    """The one decode of ``tokens`` for a scanned frame: the shared token
+    pass (kinds 0-4) plus the cheap tokens-free salted pass, split into the
+    per-partition inputs of the stats, drift and token_bounds validators."""
+    rows = _shared_stats(
+        frame, profiles, vocab_lo=vocab_lo, vocab_hi=vocab_hi
+    ).partials.collect()
+    oov: dict[int, int] = {}
+    checks: dict[tuple[int, int], int] = {}  # (pid, kind 2|3) -> rows
+    for r in rows:
+        pid, kind = int(r["part_id"]), int(r["kind"])
+        if kind == KIND_OOV_ROWS:
+            oov[pid] = oov.get(pid, 0) + int(r["cnt"])
+        elif kind in (KIND_LEN_MISMATCH, KIND_NULL_TOKENS):
+            checks[pid, kind] = checks.get((pid, kind), 0) + int(r["cnt"])
+    stats = {}
+    for r in partition_stats_no_tokens(frame, sv.n_salt, sv.bucket_width).collect():
+        pid = int(r["part_id"])
+        stats[pid] = _row_to_stats(
+            r,
+            null_tokens=checks.get((pid, KIND_NULL_TOKENS), 0),
+            len_mismatch=checks.get((pid, KIND_LEN_MISMATCH), 0),
+        )
+    return {"column_stats": stats, "drift": _drift_partials(rows), "token_bounds": oov}
 
 
 def run_incremental_suite(
@@ -925,98 +772,44 @@ def run_incremental_suite(
     "uniqueness": ..., "token_bounds": ...} — each the validator's run()
     dict; drift/referential keys absent when their dimension input is None.
     """
-    sv = IncrementalStatsValidator(
-        table, os.path.join(manifest_dir, "incremental_stats.json")
-    )
+
+    def store(name: str) -> str:
+        return os.path.join(manifest_dir, f"incremental_{name}.json")
+
+    sv = IncrementalStatsValidator(table, store("stats"))
     dv = (
-        IncrementalDriftValidator(
-            table, os.path.join(manifest_dir, "incremental_drift.json")
-        )
+        IncrementalDriftValidator(table, store("drift"))
         if profiles is not None
         else None
     )
     tv = IncrementalTokenBoundsValidator(
-        table,
-        os.path.join(manifest_dir, "incremental_token_bounds.json"),
-        vocab_lo,
-        vocab_size,
+        table, store("token_bounds"), vocab_lo, vocab_size
     )
 
     fused = [v for v in (sv, dv, tv) if v is not None]
     classes = [classify_partitions(table, v.entries) for v in fused]
-    agree = all(c == classes[0] for c in classes[1:])
-
-    pre_stats = pre_drift = pre_oov = None
-    if agree and dv is not None:
-        from .shared import (
-            KIND_LEN_MISMATCH,
-            KIND_NTOK,
-            KIND_NULL_TOKENS,
-            KIND_OOV_ROWS,
-            KIND_TOKEN,
-            SharedTokenStats,
-        )
-        from ..operators.column_stats import partition_stats_no_tokens
-
+    pre: dict[str, dict] = {}  # rule -> {"full": {pid: x}, "delta": {...}}
+    if dv is not None and all(c == classes[0] for c in classes[1:]):
         delta, full, _skip = classes[0]
-        pre_stats = {"full": {}, "delta": {}}
-        pre_drift = {"full": {}, "delta": {}}
-        pre_oov = {"full": {}, "delta": {}}
-        for mode, frame in (
-            ("full", table.read_partitions(spark, full) if full else None),
-            ("delta", _union_with_part_ids(spark, delta) if delta else None),
-        ):
-            if frame is None:
-                continue
-            shared = SharedTokenStats.from_profiles(
-                frame, profiles, vocab_lo=vocab_lo,
-                vocab_hi=vocab_lo + vocab_size,
-            )
-            if shared.hash_mod:
-                raise ValueError(
-                    "hashed-domain profiles are not supported incrementally; "
-                    "run the batch drift rule"
-                )
-            # the one decode of `tokens` for this frame
-            rows = shared.partials.collect()
-            tok_checks: dict[int, dict[int, int]] = {}
-            for r in rows:
-                pid, kind = int(r["part_id"]), int(r["kind"])
-                if kind in (KIND_NTOK, KIND_TOKEN):
-                    pre_drift[mode].setdefault(pid, []).append(
-                        [r["source"], kind, int(r["key"]), int(r["cnt"])]
-                    )
-                elif kind == KIND_OOV_ROWS:
-                    pre_oov[mode][pid] = (
-                        pre_oov[mode].get(pid, 0) + int(r["cnt"])
-                    )
-                else:  # len-mismatch / null-tokens -> column_stats
-                    tc = tok_checks.setdefault(pid, {})
-                    tc[kind] = tc.get(kind, 0) + int(r["cnt"])
-            narrow = partition_stats_no_tokens(
-                frame, sv.n_salt, sv.bucket_width
-            ).collect()
-            for r in narrow:
-                pid = int(r["part_id"])
-                tc = tok_checks.get(pid, {})
-                pre_stats[mode][pid] = _narrow_row_to_stats(
-                    r,
-                    tc.get(KIND_NULL_TOKENS, 0),
-                    tc.get(KIND_LEN_MISMATCH, 0),
-                )
+        got = sv._scan(
+            spark, delta, full,
+            # the token_bounds range is [vocab_lo, vocab_size), as in the
+            # batch rule
+            lambda frame: _fused_scan(frame, profiles, sv, vocab_lo, vocab_size),
+        )
+        pre = {
+            rule: {mode: got[mode].get(rule, {}) for mode in got}
+            for rule in ("column_stats", "drift", "token_bounds")
+        }
 
     out: dict[str, dict] = {}
-    out["column_stats"] = sv.run(spark, _precomputed=pre_stats)
+    out["column_stats"] = sv.run(spark, _precomputed=pre.get("column_stats"))
     if dv is not None:
-        out["drift"] = dv.run(spark, profiles, _precomputed=pre_drift)
+        out["drift"] = dv.run(spark, profiles, _precomputed=pre.get("drift"))
     if allowed is not None:
-        rv = IncrementalReferentialValidator(
-            table, os.path.join(manifest_dir, "incremental_referential.json")
-        )
+        rv = IncrementalReferentialValidator(table, store("referential"))
         out["referential"] = rv.run(spark, allowed)
-    uv = IncrementalUniquenessValidator(
-        table, os.path.join(manifest_dir, "incremental_uniqueness.json")
-    )
+    uv = IncrementalUniquenessValidator(table, store("uniqueness"))
     out["uniqueness"] = uv.run(spark)
-    out["token_bounds"] = tv.run(spark, _precomputed=pre_oov)
+    out["token_bounds"] = tv.run(spark, _precomputed=pre.get("token_bounds"))
     return out

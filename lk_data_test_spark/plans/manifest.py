@@ -26,21 +26,31 @@ from ..sources.catalog import PartitionedTable
 from .rules import Rule
 
 
+def load_store(path: str) -> dict:
+    """A JSON store's entries; {} when the store does not exist yet."""
+    if not os.path.exists(path):
+        return {}
+    with open(path) as f:
+        return json.load(f)
+
+
+def save_store(path: str, entries: dict, indent: int | None = 1) -> None:
+    """Atomic save: tmp file in the store's directory + rename."""
+    d = os.path.dirname(path) or "."
+    os.makedirs(d, exist_ok=True)
+    fd, tmp = tempfile.mkstemp(dir=d)
+    with os.fdopen(fd, "w") as f:
+        json.dump(entries, f, indent=indent, sort_keys=True)
+    os.replace(tmp, path)
+
+
 class CheckpointManifest:
     def __init__(self, path: str):
         self.path = path
-        self.entries: dict[str, dict] = {}
-        if os.path.exists(path):
-            with open(path) as f:
-                self.entries = json.load(f)
+        self.entries: dict[str, dict] = load_store(path)
 
-    # -- persistence (atomic: tmp file + rename) ---------------------------
     def save(self) -> None:
-        os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(self.path) or ".")
-        with os.fdopen(fd, "w") as f:
-            json.dump(self.entries, f, indent=1, sort_keys=True)
-        os.replace(tmp, self.path)
+        save_store(self.path, self.entries)
 
     # -- resume logic ------------------------------------------------------
     def pending(self, table: PartitionedTable, rules: list[Rule]) -> list[int]:

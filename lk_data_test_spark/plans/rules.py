@@ -9,7 +9,7 @@ fixed schemas:
 verdicts:    (part_id, rule_id, passed, metric, threshold, detail)  one row per
              partition; ``detail`` records evaluation provenance (e.g. which
              path produced the verdict: ``path=screen`` vs ``path=exact`` for
-             uniqueness, ``method=hist|tdigest`` for drift) so a pass from a
+             uniqueness, ``method=hist`` for drift) so a pass from a
              lower-resolution screen is auditable downstream
 violations:  (part_id, rule_id, doc_id, source, n_tok, detail) zero+ rows
 

@@ -86,9 +86,7 @@ class ValidationRunner:
         if not getattr(self.table, "tolerate_corrupt", False):
             try:
                 direct_files = [
-                    (int(pid), os.path.join(
-                        self.table.path, f"part_id={pid}", f
-                    ))
+                    (int(pid), os.path.join(self.table.part_dir(pid), f))
                     for pid in pending
                     for f in self.table.partition_info(pid).files
                 ] or None

@@ -32,6 +32,23 @@ except Exception:  # ImportError in this sandbox
     HAS_ICEBERG = False
 
 
+def parquet_sizes(d: str) -> dict[str, int]:
+    """{parquet file name: size in bytes} of one directory."""
+    return {
+        f: os.path.getsize(os.path.join(d, f))
+        for f in os.listdir(d)
+        if f.endswith(".parquet")
+    }
+
+
+def files_digest(sizes: dict[str, int]) -> str:
+    """Stable digest of a (file name, size) set: any rewrite changes it."""
+    h = hashlib.sha256()
+    for f in sorted(sizes):
+        h.update(f"{f}:{sizes[f]};".encode())
+    return h.hexdigest()[:16]
+
+
 @dataclass(frozen=True)
 class PartitionInfo:
     part_id: int
@@ -91,16 +108,16 @@ class PartitionedTable:
                 out.append(int(m.group(1)))
         return sorted(out)
 
+    def part_dir(self, part_id: int) -> str:
+        return os.path.join(self.path, f"part_id={part_id}")
+
+    def part_files(self, part_id: int) -> dict[str, int]:
+        """{parquet file name: size in bytes} of one partition."""
+        return parquet_sizes(self.part_dir(part_id))
+
     def partition_info(self, part_id: int) -> PartitionInfo:
-        pdir = os.path.join(self.path, f"part_id={part_id}")
-        files = tuple(
-            sorted(f for f in os.listdir(pdir) if f.endswith(".parquet"))
-        )
-        h = hashlib.sha256()
-        for f in files:
-            sz = os.path.getsize(os.path.join(pdir, f))
-            h.update(f"{f}:{sz};".encode())
-        return PartitionInfo(part_id, h.hexdigest()[:16], files)
+        sizes = self.part_files(part_id)
+        return PartitionInfo(part_id, files_digest(sizes), tuple(sorted(sizes)))
 
     def snapshot_ids(self) -> dict[int, str]:
         return {p: self.partition_info(p).snapshot_id for p in self.partition_ids()}

@@ -26,12 +26,13 @@ the big derived side never shuffles.
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .catalog import files_digest, parquet_sizes
 
 _HEAD = "_head.json"
 
@@ -61,12 +62,7 @@ class DimensionStore:
         return os.path.join(self.path, f"snapshot={n}")
 
     def _snapshot_digest(self, n: int) -> str:
-        d = self._snapshot_dir(n)
-        h = hashlib.sha256()
-        for f in sorted(os.listdir(d)):
-            if f.endswith(".parquet"):
-                h.update(f"{f}:{os.path.getsize(os.path.join(d, f))};".encode())
-        return h.hexdigest()[:16]
+        return files_digest(parquet_sizes(self._snapshot_dir(n)))
 
     def _commit(self, n: int, parent: dict | None, counts: dict) -> dict:
         head = {

@@ -523,3 +523,107 @@ def test_fused_suite_equals_separate_validators(spark, tmp_path, monkeypatch):
             fused3["drift"]["parts"][pid]["metric"]
             == sep2["drift"]["parts"][pid]["metric"]
         )
+
+
+def test_fused_token_bounds_range_with_vocab_lo(spark, tmp_path):
+    """With vocab_lo > 0 every token_bounds path checks [vocab_lo,
+    vocab_size): a token in [vocab_size, vocab_lo + vocab_size) is OOV for
+    the fused suite, the standalone validator and the batch rule alike — on
+    first sight and on an append delta."""
+    from lk_data_test_spark.operators import token_bounds
+    from lk_data_test_spark.plans.incremental_stats import (
+        IncrementalTokenBoundsValidator,
+        run_incremental_suite,
+    )
+    from lk_data_test_spark.plans.rules import RuleContext
+
+    lo, size = 2, 32768
+    d = str(tmp_path / "corpus")
+    generate(spark, d, GenConfig(n_parts=2, rows_per_part=300))
+    table = PartitionedTable(f"{d}/sequences")
+    profiles = spark.read.parquet(f"{d}/reference_profiles")
+
+    def append_oov(pid, n):
+        spark.createDataFrame(
+            [(f"V{pid}-{i}", [5, size + 1], 2, "cases") for i in range(n)],
+            "doc_id string, tokens array<int>, n_tok int, source string",
+        ).coalesce(1).write.mode("append").parquet(f"{d}/sequences/part_id={pid}")
+
+    def check(expect_mode):
+        fused = run_incremental_suite(
+            spark, table, str(tmp_path / "fused"), profiles=profiles,
+            vocab_lo=lo, vocab_size=size,
+        )["token_bounds"]
+        sep = IncrementalTokenBoundsValidator(
+            table, str(tmp_path / "tb.json"), lo, size
+        ).run(spark)
+        spark.catalog.clearCache()
+        ctx = RuleContext(
+            spark=spark, part_ids=table.partition_ids(),
+            params={"vocab_lo": lo, "vocab_size": size},
+        )
+        batch = {
+            int(r["part_id"]): (bool(r["passed"]), float(r["metric"]))
+            for r in token_bounds.evaluate(table.read(spark), ctx).verdicts.collect()
+        }
+        assert fused["modes"][0] == sep["modes"][0] == expect_mode
+        for pid, (passed, metric) in batch.items():
+            assert fused["parts"][pid] == sep["parts"][pid], pid
+            assert (sep["parts"][pid]["passed"], sep["parts"][pid]["metric"]) == (
+                passed, metric,
+            ), pid
+        return batch
+
+    append_oov(0, 3)
+    b1 = check("full")
+    append_oov(0, 2)
+    b2 = check("delta")
+    assert b2[0][1] == b1[0][1] + 2.0
+
+
+def test_incremental_store_format(spark, tmp_path):
+    """The on-disk format of the five incremental stores: per-entry key sets
+    after run_incremental_suite, so a refactor cannot silently change what
+    an existing store holds."""
+    import json
+
+    from lk_data_test_spark.plans.incremental_stats import (
+        run_incremental_suite,
+    )
+
+    d = str(tmp_path / "corpus")
+    generate(spark, d, GenConfig(n_parts=2, rows_per_part=300))
+    table = PartitionedTable(f"{d}/sequences")
+    mdir = str(tmp_path / "stores")
+    run_incremental_suite(
+        spark, table, mdir,
+        profiles=spark.read.parquet(f"{d}/reference_profiles"),
+        allowed=spark.read.parquet(f"{d}/allowed_sources"),
+    )
+    expected = {
+        "stats": {"files", "stats"},
+        "drift": {"files", "partials", "metric", "score_fp"},
+        "referential": {"files", "metric"},
+        "token_bounds": {"files", "metric"},
+        "uniqueness": {"files", "n_rows", "sketch_b64", "metric", "detail"},
+    }
+    assert sorted(
+        f for f in os.listdir(mdir) if f.endswith(".json")
+    ) == sorted(f"incremental_{name}.json" for name in expected)
+    for name, keys in expected.items():
+        with open(os.path.join(mdir, f"incremental_{name}.json")) as f:
+            entries = json.load(f)
+        assert set(entries) == {"0", "1"}, name
+        for pid, e in entries.items():
+            assert set(e) == keys, (name, pid)
+            assert set(e["files"]) == set(
+                table.partition_info(int(pid)).files
+            ), (name, pid)
+        if name == "stats":
+            assert set(entries["0"]["stats"]) == {
+                "row_count", "null_doc_id", "null_source", "null_n_tok",
+                "null_tokens", "nonpos_n_tok", "len_mismatch", "sum_n_tok",
+                "min_n_tok", "max_n_tok", "n_tok_hist",
+            }
+        if name == "drift":
+            assert all(len(p) == 4 for p in entries["0"]["partials"])

@@ -1,4 +1,4 @@
-"""Unit tests: multimodal plumbing, t-digest sketch, string functions."""
+"""Unit tests: multimodal plumbing, string functions."""
 
 from __future__ import annotations
 
@@ -16,7 +16,6 @@ from lk_data_test_spark.functions.strings import (
     strip_prefix,
     zero_pad,
 )
-from lk_data_test_spark.functions.tdigest import TDigest
 from lk_data_test_spark.operators import multimodal
 
 
@@ -44,22 +43,6 @@ def test_frame_sample_fanout(spark):
     frames = multimodal.frame_sample_plan(assets, every_n=2)
     rows = frames.collect()
     assert rows and all(r["frame_no"] % 2 == 0 for r in rows)
-
-
-def test_tdigest_quantiles_and_merge():
-    rng = np.random.default_rng(0)
-    a, b = rng.normal(0, 1, 20000), rng.normal(0, 1, 20000)
-    da, db = TDigest.of(a), TDigest.of(b)
-    merged = da.merge(db)
-    qs = np.array([0.01, 0.25, 0.5, 0.75, 0.99])
-    est = merged.quantile(qs)
-    true = np.quantile(np.concatenate([a, b]), qs)
-    assert np.all(np.abs(est - true) < 0.08)
-    # serialization round-trip
-    rt = TDigest.from_bytes(merged.to_bytes())
-    assert np.allclose(rt.quantile(qs), est)
-    # deterministic
-    assert TDigest.of(a).merge(TDigest.of(b)).to_bytes() == merged.to_bytes()
 
 
 def test_string_functions(spark):

@@ -275,23 +275,31 @@ def test_drift(ctx_df):
     assert v and all(r["part_id"] in EXPECTED["drift"] for r in v)
 
 
-def test_drift_tdigest_method_agrees(ctx_df):
-    """The t-digest sketch path (unbounded-domain tier) flags the same
-    partitions as the exact-histogram path, with close KS scores."""
+def test_drift_removed_method_rejected(ctx_df):
+    """The exact histogram is drift's only KS method: any other ``method``
+    fails fast with the remedy instead of silently scoring with "hist", in
+    the batch rule and the incremental validator alike."""
+    from lk_data_test_spark.plans.incremental_stats import (
+        IncrementalDriftValidator,
+    )
+
     ctx, df = ctx_df
-    td_ctx = RuleContext(
+    bad = RuleContext(
         spark=ctx.spark,
         allowed_sources=ctx.allowed_sources,
         reference_profiles=ctx.reference_profiles,
         part_ids=ctx.part_ids,
         params={"drift": {"method": "tdigest"}},
     )
-    res = drift.evaluate(df, td_ctx)
-    assert _failing(res.verdicts) == EXPECTED["drift"]
-    hist = {r["part_id"]: r["metric"] for r in drift.evaluate(df, ctx).verdicts.collect()}
-    td = {r["part_id"]: r["metric"] for r in res.verdicts.collect()}
-    for pid in hist:
-        assert abs(hist[pid] - td[pid]) < 0.25 * max(1.0, hist[pid]), pid
+    with pytest.raises(ValueError, match="drop the 'method' param"):
+        drift.evaluate(df, bad)
+    with pytest.raises(ValueError, match="drop the 'method' param"):
+        IncrementalDriftValidator(
+            PartitionedTable("unused"), "unused.json",
+            params={"method": "tdigest"},
+        )
+    # the surviving value is still accepted
+    assert drift.resolve_params({"method": "hist"}) == drift.DEFAULTS
 
 
 def test_drift_threshold_override_flips_verdict(ctx_df):
