@@ -19,6 +19,10 @@ Scale design (north_rule: partitioning/shuffle/skew explicit):
 - Row-level violation rows are materialized ONLY for partitions whose
   aggregate verdict failed (partition-pruned second scan), so the common
   all-clean case never rescans data.
+- Inside the suite (``ctx.shared`` set) the verdict runs no aggregation of
+  its own: the six defect counts come from the shared partials' kind-5 row
+  census plus kinds 2/3 (``shared_bad_counts``), and the per-partition
+  ``stats`` frame stays lazy for callers that want it.
 """
 
 from __future__ import annotations
@@ -26,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.rules import RuleContext, RuleResult
+from ..plans.rules import VERDICT_SCHEMA, RuleContext, RuleResult, local_frame
 
 RULE_ID = "column_stats"
 
@@ -199,45 +203,60 @@ def partition_stats_no_tokens(
     )
 
 
+_BAD_FIELDS = (
+    "null_doc_id", "null_source", "null_n_tok", "null_tokens",
+    "nonpos_n_tok", "len_mismatch",
+)
+
+
+def shared_bad_counts(shared) -> dict[int, int]:
+    """part_id -> the six defect counts summed, from the shared partials:
+    the kind-5 census gives null doc_id / n_tok, non-positive n_tok and (its
+    null-source groups) null source; kinds 2/3 give len-mismatch and null
+    tokens. No Spark job beyond the shared collect."""
+    from ..plans.shared import KIND_LEN_MISMATCH, KIND_NULL_TOKENS
+
+    bad = shared.counts_by_part(KIND_LEN_MISMATCH, KIND_NULL_TOKENS)
+    for pid, source, bits, rows in shared.census():
+        n = bin(bits).count("1") + (source is None)
+        if n:
+            bad[pid] = bad.get(pid, 0) + n * rows
+    return bad
+
+
 def evaluate(df: DataFrame, ctx: RuleContext) -> RuleResult:
     p = {**DEFAULTS, **ctx.params.get(RULE_ID, {})}
-    # one row per partition; cached so the verdict collect (for partition
-    # pruning of the violation scan) and downstream reads share one pass
-    from ..plans.rules import VERDICT_SCHEMA
     from ..plans.shared import SharedTokenStats
 
     shared = ctx.shared if isinstance(ctx.shared, SharedTokenStats) else None
-    stats = partition_stats(
-        df, p["n_salt"], p["bucket_width"], shared=shared
-    ).cache()
-
-    # ONE collect of the tiny per-partition stats drives both the verdict
-    # table (rebuilt as a local relation) and the failing-partition list —
-    # the earlier form ran the skeleton-join plan twice (once for the
-    # `failing` collect here, once for the runner's verdict collect), i.e.
-    # two scheduled jobs per suite run for 32 rows of driver state.
-    _bad_fields = (
-        "null_doc_id", "null_source", "null_n_tok", "null_tokens",
-        "nonpos_n_tok", "len_mismatch",
-    )
-    by_part = {int(r["part_id"]): r for r in stats.collect()}
+    stats = partition_stats(df, p["n_salt"], p["bucket_width"], shared=shared)
+    if shared is not None:
+        # the verdict comes from the shared collect; `stats` stays lazy
+        bad_by_part = shared_bad_counts(shared)
+        all_parts = shared.part_ids()
+    else:
+        # ONE collect of the tiny per-partition stats (cached for later
+        # readers) drives both the verdict table and the failing list
+        stats = stats.cache()
+        bad_by_part = {
+            int(r["part_id"]): sum(int(r[k]) for k in _BAD_FIELDS)
+            for r in stats.collect()
+        }
+        all_parts = sorted(bad_by_part)
     part_ids = (
-        sorted(int(x) for x in ctx.part_ids)
-        if ctx.part_ids is not None
-        else sorted(by_part)
+        sorted(int(x) for x in ctx.part_ids) if ctx.part_ids is not None else all_parts
     )
     verdict_rows = []
     failing = []
     for pid in part_ids:
-        r = by_part.get(pid)
-        bad = float(sum(int(r[k]) for k in _bad_fields)) if r is not None else 0.0
+        bad = float(bad_by_part.get(pid, 0))
         passed = bad <= p["max_null_rate"]
         if not passed:
             failing.append(pid)
         verdict_rows.append(
             (pid, RULE_ID, passed, bad, float(p["max_null_rate"]), None)
         )
-    verdicts = ctx.spark.createDataFrame(verdict_rows, VERDICT_SCHEMA)
+    verdicts = local_frame(ctx.spark, verdict_rows, VERDICT_SCHEMA)
     sz = F.size("tokens")
     defect = F.concat_ws(
         ",",

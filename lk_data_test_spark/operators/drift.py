@@ -5,8 +5,9 @@ profile index (``/root/reference/curation/check_fackel_references.py:13-29``)
 and the scored-matching procedure of ``scripts/enrich_fackel_bibls.py:77-96``;
 here generalized to statistical drift detection per (partition, source).
 
-Two signals, both computed in ONE fused pass (single scan of the fact table,
-single Arrow stage, two small shuffles) without ever collecting raw rows:
+Two signals, both computed from ONE fused pass (single scan of the fact
+table, single Arrow stage, one small shuffle) without ever collecting raw
+rows:
 
 1. **n_tok KS statistic.** ``n_tok`` lives in a bounded integer domain
    ([1, 8192]), so an *exact* histogram per (part_id, source) is a mergeable,
@@ -25,11 +26,13 @@ single Arrow stage, two small shuffles) without ever collecting raw rows:
 
 Plan shape::
 
-    scan (part_id, source, n_tok, tokens·filtered)
-      -> mapInPandas: tagged partials  (kind 0: n_tok hist, kind 1: token cnt)
-      -> groupBy(part_id, source, kind, key).sum          [shuffle 1, partial agg]
-      -> applyInPandas per (part_id, source): KS + L1     [shuffle 2, tiny input]
-      -> score / verdicts / violations                    [rows = parts x sources]
+    scan (part_id, source, n_tok, tokens)
+      -> mapInArrow: tagged partials  (kind 0: n_tok hist, kind 1: token cnt)
+      -> groupBy(part_id, source, kind, key).sum          [shuffle, partial agg]
+      -> toArrow: ONE driver collect, shared by the suite's rules
+      -> driver: KS + L1 per (part_id, source)            [drift_signal]
+      -> verdicts (local rows) / violations (local relation, rows = parts x
+         sources; Spark's format_string writes the detail)
 
 Skew note: partial aggregation keys include (kind, key), which fans a hot
 (part, source) over thousands of reducer keys; AQE skew handling covers the
@@ -39,12 +42,11 @@ rest.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.rules import RuleContext, RuleResult, part_skeleton
+from ..plans.rules import VERDICT_SCHEMA, RuleContext, RuleResult, local_frame
 
 RULE_ID = "drift"
 
@@ -158,7 +160,6 @@ def evaluate(df: DataFrame, ctx: RuleContext) -> RuleResult:
             max_ref_tokens=int(p["max_ref_tokens"]),
             hash_buckets=int(p["hash_buckets"]),
         )
-    merged = shared.partials.filter(F.col("kind").isin(KIND_NTOK, KIND_TOKEN))
 
     if shared.hash_mod:
         quantiles: dict[str, np.ndarray] = {
@@ -193,46 +194,31 @@ def evaluate(df: DataFrame, ctx: RuleContext) -> RuleResult:
         # quantile and frequency closures (no extra per-run driver jobs)
         quantiles, token_freq = profile_maps(profiles.collect())
 
-    # ---- fused stage 2: KS + L1 per (part_id, source) ---------------------
+    # ---- stage 2, on the driver: KS + L1 per (part_id, source) over the
+    # shared collect (<= parts x sources groups of bounded size)
     ref_idx = ref_index(token_freq)
-
-    def score_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        part_id = int(pdf["part_id"].iloc[0])
-        source = str(pdf["source"].iloc[0])
-        h = pdf[pdf["kind"] == 0]  # KIND_NTOK
-        t = pdf[pdf["kind"] == 1]  # KIND_TOKEN
+    groups = shared.rows(KIND_NTOK, KIND_TOKEN).to_pandas()
+    ks_thr, l1_thr = p["ks_threshold"], p["l1_threshold"]
+    scored = []
+    for (pid, source), g in groups.groupby(["part_id", "source"], sort=True):
+        h = g[g["kind"] == KIND_NTOK]
+        t = g[g["kind"] == KIND_TOKEN]
         ks, l1, n_docs = drift_signal(
             h["key"].to_numpy(), h["cnt"].to_numpy(), t["key"], t["cnt"],
             quantiles.get(source), token_freq.get(source, {}), ref_idx,
         )
-        return pd.DataFrame(
-            {
-                "part_id": [part_id],
-                "source": [source],
-                "ks": [ks],
-                "l1": [l1],
-                "n_docs": [n_docs],
-            }
-        )
+        if n_docs >= float(p["min_docs"]):
+            score = max(ks / ks_thr, l1 / l1_thr)
+            scored.append((int(pid), source, ks, l1, n_docs, score))
 
-    # cached: tiny (one row per part x source) but expensive to produce;
-    # verdicts and violations both read it
-    per_group = (
-        merged.groupBy("part_id", "source")
-        .applyInPandas(
-            score_fn, "part_id int, source string, ks double, l1 double, n_docs double"
-        )
-        .filter(F.col("n_docs") >= F.lit(float(p["min_docs"])))
-        .withColumn(
-            "score",
-            F.greatest(
-                F.col("ks") / F.lit(p["ks_threshold"]),
-                F.col("l1") / F.lit(p["l1_threshold"]),
-            ),
-        )
-        .cache()
+    # the scores as a local relation: Spark's format_string builds the
+    # violation detail (Java rounds %.4f ties half-up, Python half-even)
+    per_group = local_frame(
+        ctx.spark,
+        scored,
+        "part_id int, source string, ks double, l1 double, n_docs double,"
+        " score double",
     )
-
     violations = per_group.filter(F.col("score") > 1.0).select(
         F.col("part_id").cast("int"),
         F.lit(RULE_ID).alias("rule_id"),
@@ -244,20 +230,20 @@ def evaluate(df: DataFrame, ctx: RuleContext) -> RuleResult:
         ).alias("detail"),
     )
 
-    scores = per_group.groupBy("part_id").agg(F.max("score").alias("metric"))
-    verdicts = (
-        part_skeleton(df, ctx)
-        .join(scores, "part_id", "left")
-        .select(
-            F.col("part_id").cast("int"),
-            F.lit(RULE_ID).alias("rule_id"),
-            (F.coalesce(F.col("metric"), F.lit(0.0)) <= 1.0).alias("passed"),
-            F.coalesce(F.col("metric"), F.lit(0.0)).alias("metric"),
-            F.lit(1.0).alias("threshold"),
-            F.lit(
-                "method=hist"
-                + (f";domain=hashed:{shared.hash_mod}" if shared.hash_mod else "")
-            ).alias("detail"),
-        )
+    metric: dict[int, float] = {}
+    for pid, *_, score in scored:
+        metric[pid] = max(metric.get(pid, score), score)
+    part_ids = (
+        sorted(int(x) for x in ctx.part_ids)
+        if ctx.part_ids is not None
+        else shared.part_ids()
     )
+    detail = "method=hist" + (
+        f";domain=hashed:{shared.hash_mod}" if shared.hash_mod else ""
+    )
+    rows = []
+    for pid in part_ids:
+        m = metric.get(pid, 0.0)
+        rows.append((pid, RULE_ID, m <= 1.0, m, 1.0, detail))
+    verdicts = local_frame(ctx.spark, rows, VERDICT_SCHEMA)
     return RuleResult(verdicts, violations, stats=per_group)

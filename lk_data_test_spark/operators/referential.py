@@ -11,6 +11,12 @@ Spark plan: broadcast LEFT ANTI join fact->dim. The dimension is tiny
 (20 rows here; <=10^5 realistically), so the anti join is a broadcast hash
 join with zero shuffle of the 10^12-row fact side; the scan reads only
 (doc_id, source, n_tok, part_id) — `tokens` is column-pruned away.
+
+Inside the suite (``ctx.shared`` set) the verdict needs no join at all: the
+shared partials' kind-5 row census counts rows per (part_id, source), so the
+per-partition violation count is the census rows whose source is null or not
+in the collected active set — a null source never matches in the anti join
+either. The violation rows stay the lazy anti join above.
 """
 
 from __future__ import annotations
@@ -19,8 +25,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.rules import (
+    VERDICT_SCHEMA,
     RuleContext,
     RuleResult,
+    local_frame,
     verdict_from_violations,
 )
 
@@ -45,5 +53,26 @@ def evaluate(df: DataFrame, ctx: RuleContext) -> RuleResult:
             F.concat(F.lit("unknown source: "), F.col("source")).alias("detail"),
         )
     )
-    verdicts = verdict_from_violations(df, violations, ctx, RULE_ID)
+    from ..plans.shared import SharedTokenStats
+
+    shared = ctx.shared
+    if not isinstance(shared, SharedTokenStats):
+        verdicts = verdict_from_violations(df, violations, ctx, RULE_ID)
+        return RuleResult(verdicts, violations)
+
+    known = {r["source"] for r in active.collect()}
+    unknown: dict[int, int] = {}
+    for pid, source, _, rows in shared.census():
+        if source is None or source not in known:
+            unknown[pid] = unknown.get(pid, 0) + rows
+    part_ids = (
+        sorted(int(x) for x in ctx.part_ids)
+        if ctx.part_ids is not None
+        else shared.part_ids()
+    )
+    rows = []
+    for pid in part_ids:
+        n = float(unknown.get(pid, 0))
+        rows.append((pid, RULE_ID, n <= 0.0, n, 0.0, None))
+    verdicts = local_frame(ctx.spark, rows, VERDICT_SCHEMA)
     return RuleResult(verdicts, violations)

@@ -15,7 +15,8 @@ Scale design (north_rule: partitioning / shuffle / skew explicit):
   kind 4): per (part_id, source) counts of rows containing an OOV token,
   computed on the RAW token values before any profile-domain hashing —
   checking bounds adds two vectorized compares + a bincount per chunk to a
-  pass the suite already pays for, so the rule costs ~zero extra I/O.
+  pass the suite already pays for, so the rule costs ~zero extra I/O; the
+  counts are read from the suite's one driver-side collect of the partials.
 - Violation ROWS are materialized only for partitions the screen flagged
   (partition-pruned second scan, the same two-phase shape as uniqueness's
   exact pass and column_stats' row extraction): the common all-clean case
@@ -31,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.rules import RuleContext, RuleResult
+from ..plans.rules import VERDICT_SCHEMA, RuleContext, RuleResult, local_frame
 
 RULE_ID = "token_bounds"
 
@@ -61,12 +62,13 @@ def evaluate(df: DataFrame, ctx: RuleContext) -> RuleResult:
     if use_shared:
         from ..plans.shared import KIND_OOV_ROWS
 
-        counts = (
-            shared.partials.filter(F.col("kind") == KIND_OOV_ROWS)
-            .groupBy("part_id")
-            .agg(F.sum("cnt").alias("oov_rows"))
-        )
+        # read from the suite's one collect of the shared partials
+        oov_by_part = shared.counts_by_part(KIND_OOV_ROWS)
+        all_parts = shared.part_ids()
     else:
+        # ONE tiny collect (<= n_parts longs even at 10^12 rows) feeds both
+        # the verdict table (rebuilt as a local relation) and the flagged
+        # partition list
         counts = (
             df.select(
                 "part_id",
@@ -75,30 +77,17 @@ def evaluate(df: DataFrame, ctx: RuleContext) -> RuleResult:
             .groupBy("part_id")
             .agg(F.sum("b").alias("oov_rows"))
         )
+        oov_by_part = {
+            int(r["part_id"]): int(r["oov_rows"] or 0) for r in counts.collect()
+        }
+        all_parts = sorted(oov_by_part)
 
-    # ONE tiny collect (<= n_parts longs even at 10^12 rows) feeds both the
-    # verdict table (rebuilt as a local relation) and the flagged-partition
-    # list — the earlier form scheduled a second job over the shared
-    # partials for the runner's verdict collect.
-    from ..plans.rules import VERDICT_SCHEMA
-
-    oov_by_part = {
-        int(r["part_id"]): int(r["oov_rows"] or 0) for r in counts.collect()
-    }
-    if ctx.part_ids is not None:
-        part_ids = sorted(int(x) for x in ctx.part_ids)
-    else:
-        # shared-path `counts` only carries parts with OOV rows — recover
-        # the clean parts from the (metadata-cheap) distinct partition scan,
-        # exactly as part_skeleton did
-        part_ids = sorted(
-            int(r["part_id"])
-            for r in df.select(F.col("part_id").cast("int"))
-            .distinct()
-            .collect()
-        )
+    part_ids = (
+        sorted(int(x) for x in ctx.part_ids) if ctx.part_ids is not None else all_parts
+    )
     detail = f"vocab=[{lo},{hi})"
-    verdicts = ctx.spark.createDataFrame(
+    verdicts = local_frame(
+        ctx.spark,
         [
             (
                 pid,

@@ -52,7 +52,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.rules import RuleContext, RuleResult
+from ..plans.rules import VERDICT_SCHEMA, RuleContext, RuleResult, local_frame
 
 RULE_ID = "uniqueness"
 
@@ -139,8 +139,6 @@ def _verdicts_from_dups(
     skeleton-join form ran the cached dup plan twice per suite run (once
     here, once for the runner's verdict collect) — r6 collect-once pattern
     shared with column_stats / token_bounds."""
-    from ..plans.rules import VERDICT_SCHEMA
-
     metrics = {
         int(r["part_id"]): float(r["metric"])
         for r in dups.groupBy("part_id")
@@ -156,7 +154,8 @@ def _verdicts_from_dups(
             .distinct()
             .collect()
         )
-    return ctx.spark.createDataFrame(
+    return local_frame(
+        ctx.spark,
         [
             (
                 pid,

@@ -68,8 +68,9 @@ class RuleContext:
     part_ids: list[int] | None = None  # known partitions (skips a distinct())
     params: dict = field(default_factory=dict)
     # shared token-scan partials (plans/shared.py): when the runner provides
-    # this, drift and column_stats consume ONE physical pass over `tokens`
-    # instead of scanning the dominant column once per rule
+    # this, column_stats, token_bounds, referential and drift take their
+    # verdicts from ONE driver-side collect of ONE pass over `tokens`
+    # instead of each running its own aggregation jobs
     shared: object | None = None
 
 
@@ -81,12 +82,28 @@ class Rule:
     params: dict = field(default_factory=dict)
 
 
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: T.StructType | str
+) -> DataFrame:
+    """A small driver-side table (verdict rows, per-group scores) as a
+    LocalRelation: built through Arrow from pandas, so reading it back runs
+    no Spark job. A frame built from a Python list is an RDD scan that costs
+    one job of default-parallelism tasks per read."""
+    if isinstance(schema, str):
+        schema = T.DataType.fromDDL(schema)
+    if not rows:
+        return spark.createDataFrame([], schema)
+    import pandas as pd
+
+    return spark.createDataFrame(pd.DataFrame(rows, columns=schema.names), schema)
+
+
 def part_skeleton(df: DataFrame, ctx: RuleContext) -> DataFrame:
     """One row per partition — from ctx (free) or a distinct scan (cheap:
     part_id is a directory column, so only partition metadata is read)."""
     if ctx.part_ids is not None:
-        return ctx.spark.createDataFrame(
-            [(int(p),) for p in sorted(ctx.part_ids)], "part_id int"
+        return local_frame(
+            ctx.spark, [(int(p),) for p in sorted(ctx.part_ids)], "part_id int"
         )
     return df.select(F.col("part_id").cast("int")).distinct()
 

@@ -1,9 +1,14 @@
-"""Suite runner: one Spark job over all pending partitions, per rule.
+"""Suite runner: one pass over all pending partitions, shared by the rules.
 
-NOT a per-partition loop — each rule is a single declarative plan grouped by
-``part_id``, so Catalyst/AQE schedule all partitions in one pass (the driver
-only touches the tiny verdict rows). Pending partitions are selected by the
-checkpoint manifest and pushed into the scan as a partition-pruning filter.
+NOT a per-partition loop. The pending partitions (selected by the checkpoint
+manifest and pushed into the scan as a partition-pruning filter) are listed
+ONCE; that listing feeds the shared token pass (plans/shared.py) and is what
+the manifest records. Four rules (column_stats, token_bounds, referential,
+drift) take their verdicts from one driver-side collect of the shared
+partials; schema and uniqueness run their own plans grouped by ``part_id``.
+All rules are submitted at once: a rule waiting for the shared collect waits
+on a driver lock and holds no task slot. ``rows_validated`` is the shared
+row census total.
 """
 
 from __future__ import annotations
@@ -22,6 +27,7 @@ from .rules import (
     canonical_violations,
     default_rules,
 )
+from .shared import KIND_ROWS, SharedTokenStats
 
 
 @dataclass
@@ -70,13 +76,10 @@ class ValidationRunner:
             return SuiteResult([], empty, [], skipped)
 
         df = self.table.read_partitions(self.spark, pending)
-        # ONE shared physical pass over `tokens` (the dominant column) serves
-        # drift (kinds 0/1), column_stats (kinds 2/3) and the token_bounds
-        # screen (kind 4); persisted so whichever rule thread triggers it
-        # first materializes it for all of them (BlockManager locks dedupe
-        # concurrent partition computation).
+        # the ONE listing of this run: the shared pass reads these files and
+        # the manifest records them, so a file appended mid-run stays pending
+        infos = {pid: self.table.partition_info(pid) for pid in pending}
         from ..operators.token_bounds import DEFAULTS as TB_DEFAULTS
-        from .shared import SharedTokenStats
 
         # Local parquet layout -> feed the shared pass from pyarrow directly
         # (plans/shared.py::_build_partials_direct): the token buffers never
@@ -84,14 +87,11 @@ class ValidationRunner:
         # the Spark scan (ignoreCorruptFiles semantics live there).
         direct_files: list[tuple[int, str]] | None = None
         if not getattr(self.table, "tolerate_corrupt", False):
-            try:
-                direct_files = [
-                    (int(pid), os.path.join(self.table.part_dir(pid), f))
-                    for pid in pending
-                    for f in self.table.partition_info(pid).files
-                ] or None
-            except OSError:
-                direct_files = None
+            direct_files = [
+                (int(pid), os.path.join(self.table.part_dir(pid), f))
+                for pid in pending
+                for f in infos[pid].files
+            ] or None
         shared = SharedTokenStats.from_profiles(
             df,
             self.reference_profiles,
@@ -100,7 +100,7 @@ class ValidationRunner:
                 self.params.get("vocab_size", TB_DEFAULTS["vocab_size"])
             ),
             direct_files=direct_files,
-        ).persist()
+        )
         ctx = RuleContext(
             spark=self.spark,
             allowed_sources=self.allowed_sources,
@@ -110,14 +110,16 @@ class ValidationRunner:
             shared=shared,
         )
 
-        # Rules are independent plans over the same scan: evaluate them
-        # CONCURRENTLY (one driver thread each) so their jobs overlap — the
-        # fixed per-job costs (python-worker spin-up, codegen, scheduling
-        # latency) amortize across rules and the executor cores stay full.
-        # Spark job submission is thread-safe; outputs keep rule order.
-        # Each rule's violations are persisted so that plans consumed twice
-        # (once inside the verdict aggregation, once by the sink) run ONCE —
-        # without this the sink silently re-runs every rule's full scan.
+        # Rules are independent plans: evaluate them CONCURRENTLY (one driver
+        # thread each) so their jobs overlap — the fixed per-job costs
+        # (python-worker spin-up, codegen, scheduling latency) amortize
+        # across rules and the executor cores stay full. The shared
+        # consumers block on SharedTokenStats.table()'s driver lock until the
+        # first of them has collected the partials. Spark job submission is
+        # thread-safe; outputs keep rule order. Each rule's violations are
+        # persisted so that a plan consumed twice (once inside a rule's own
+        # verdict aggregation, e.g. verdict_from_violations, once by the
+        # sink) runs ONCE.
         from concurrent.futures import ThreadPoolExecutor
 
         from pyspark import StorageLevel
@@ -159,38 +161,10 @@ class ValidationRunner:
             rule_secs[rule.rule_id] = round(_time.time() - t0, 3)
             return rows, viol, res.stats
 
-        # Two-phase schedule around the ONE shared materialization:
-        # phase 1 overlaps the shared token pass with everything that does
-        # not consume it (rows_validated count + the narrow-scan rules);
-        # phase 2 releases the shared-consuming rules once the partials are
-        # cached. Letting all rules race instead makes the shared consumers
-        # block on the same BlockManager compute locks while HOLDING task
-        # slots (~3s of slot starvation measured on the 32-part bench
-        # corpus); materializing strictly BEFORE any rule serializes the
-        # independent rules behind a pass they do not need.
-        shared_consumers = {"column_stats", "token_bounds", "drift"}
-        phase1 = [r for r in self.rules if r.rule_id not in shared_consumers]
-        phase2 = [r for r in self.rules if r.rule_id in shared_consumers]
-
-        def materialize_shared():
-            self.spark.sparkContext.setJobDescription(
-                "suite: shared token-scan partials"
-            )
-            shared.partials.count()
-            self.spark.sparkContext.setJobDescription(None)
-
-        with ThreadPoolExecutor(
-            max_workers=max(1, len(self.rules)) + 2
-        ) as ex:
-            shared_f = ex.submit(materialize_shared)
-            count_f = ex.submit(df.count)
-            phase1_fs = {r.rule_id: ex.submit(eval_rule, r) for r in phase1}
-            shared_f.result()
-            phase2_fs = {r.rule_id: ex.submit(eval_rule, r) for r in phase2}
-            all_fs = {**phase1_fs, **phase2_fs}
-            # preserve self.rules order for verdict/violation aggregation
-            results = [all_fs[r.rule_id].result() for r in self.rules]
-            rows_validated = count_f.result()
+        with ThreadPoolExecutor(max_workers=max(1, len(self.rules))) as ex:
+            futures = [ex.submit(eval_rule, r) for r in self.rules]
+            results = [f.result() for f in futures]
+        rows_validated = sum(shared.counts_by_part(KIND_ROWS).values())
 
         verdict_rows: list[dict] = []
         violation_frames: list[DataFrame] = []
@@ -289,7 +263,6 @@ class ValidationRunner:
             }
             with open(metrics_path, "w") as f:
                 _json.dump(metrics, f, indent=1, sort_keys=True)
-        shared.unpersist()
         for fr in violation_frames + stats_frames:
             try:
                 fr.unpersist()
@@ -300,8 +273,7 @@ class ValidationRunner:
         by_part: dict[int, dict[str, dict]] = {}
         for v in verdict_rows:
             by_part.setdefault(int(v["part_id"]), {})[v["rule_id"]] = v
-        for pid in pending:
-            info = self.table.partition_info(pid)
+        for pid, info in infos.items():
             rules_v = by_part.get(pid, {})
             ok = all(v["passed"] for v in rules_v.values()) and len(rules_v) == len(
                 self.rules

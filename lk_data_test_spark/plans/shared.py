@@ -13,6 +13,8 @@ Arrow-native pass emitting tagged, mergeable partials that both rules consume
     kind 3  null-tokens rows       key = 0                cnt = rows with tokens IS NULL
     kind 4  out-of-vocab rows      key = 0                cnt = rows with any token
                                                                 outside [vocab_lo, vocab_hi)
+    kind 5  row census             key = defect bitmask   cnt = rows
+                                   (1 null doc_id | 2 null n_tok | 4 non-null n_tok <= 0)
 
 Kind 4 is emitted only when the scan is built with explicit vocab bounds
 (``vocab_lo``/``vocab_hi``): it screens the token_bounds rule against the
@@ -22,7 +24,15 @@ token ids at all, so the bound check always runs on the raw values BEFORE any
 hashing.
 
 Kinds 0/1 are drift's signals and are emitted only for non-null sources (a
-null source has no reference profile; such rows still count in kinds 2/3).
+null source has no reference profile; such rows still count in kinds 2-5).
+Kind 5 covers every row exactly once, so its total is the row count and its
+per-source groups give referential its unknown-source count and column_stats
+its null/non-positive counts without another scan.
+
+Consumers read the partials through ``SharedTokenStats.table()``: ONE
+memoized driver collect (``partials.toArrow()``), so the suite runs the
+partials plan once however many rules ask, and each rule's verdict is a
+driver function of the merged partials.
 
 Vectorization: `mapInArrow` hands us pyarrow RecordBatches; the token lists
 are consumed as (lengths, flat values) — no per-row ndarray conversion, no
@@ -47,6 +57,8 @@ rows); nothing is ever shuffled at token granularity either way.
 
 from __future__ import annotations
 
+import threading
+
 import numpy as np
 
 from pyspark.sql import DataFrame
@@ -57,6 +69,12 @@ KIND_TOKEN = 1
 KIND_LEN_MISMATCH = 2
 KIND_NULL_TOKENS = 3
 KIND_OOV_ROWS = 4
+KIND_ROWS = 5
+
+# kind-5 defect bits
+ROW_NULL_DOC_ID = 1
+ROW_NULL_NTOK = 2
+ROW_NONPOS_NTOK = 4
 
 # Driver-OOM guard for the reference-profile token domain: the collected
 # token-id set is bounded by the reference vocabulary (~10^5-10^6 for real
@@ -82,7 +100,8 @@ _NTOK_MASK = np.int64((1 << 33) - 1)
 
 
 class SharedTokenStats:
-    """Lazily-built, optionally persisted partials DataFrame."""
+    """Lazily-built, optionally persisted partials DataFrame, and its one
+    memoized driver-side collect."""
 
     def __init__(self, df: DataFrame, lo: int, hi: int, contiguous: bool,
                  ref_tokens: list[int] | None = None,
@@ -97,6 +116,8 @@ class SharedTokenStats:
         self.hash_mod = hash_mod
         self.vocab_lo = vocab_lo
         self.vocab_hi = vocab_hi  # exclusive; None disables kind 4
+        self._lock = threading.Lock()
+        self._table = None
         if direct_files:
             self._partials = _build_partials_direct(
                 df.sparkSession, direct_files, self.lo, self.hi,
@@ -159,6 +180,43 @@ class SharedTokenStats:
         except Exception:
             pass
 
+    def table(self):
+        """The merged partials as one pyarrow Table. The first caller runs
+        the partials plan (the one Spark job over them); concurrent callers
+        wait on the lock, on the driver, holding no task slot."""
+        with self._lock:
+            if self._table is None:
+                self._table = self._partials.toArrow()
+            return self._table
+
+    def rows(self, *kinds: int):
+        """The collected partials of the given kinds, as a pyarrow Table."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        t = self.table()
+        return t.filter(pc.is_in(t["kind"], value_set=pa.array(kinds, pa.int32())))
+
+    def counts_by_part(self, *kinds: int) -> dict[int, int]:
+        """part_id -> summed ``cnt`` of the given kinds (parts with none
+        are absent)."""
+        t = self.rows(*kinds)
+        out: dict[int, int] = {}
+        for pid, cnt in zip(t["part_id"].to_pylist(), t["cnt"].to_pylist()):
+            out[pid] = out.get(pid, 0) + cnt
+        return out
+
+    def census(self) -> list[tuple[int, str | None, int, int]]:
+        """The kind-5 rows: (part_id, source, defect bits, rows)."""
+        t = self.rows(KIND_ROWS)
+        return list(
+            zip(*(t[c].to_pylist() for c in ("part_id", "source", "key", "cnt")))
+        )
+
+    def part_ids(self) -> list[int]:
+        """The partitions holding at least one row."""
+        return sorted(self.counts_by_part(KIND_ROWS))
+
 
 def _decode_ntok(masked: np.ndarray) -> np.ndarray:
     """Undo the 33-bit two's-complement packing of n_tok keys."""
@@ -182,6 +240,7 @@ def _build_partials(
     # over 4e9 array elements costs ~3x the whole vectorized numpy mask, and
     # Arrow moves the raw int32 buffer essentially at memcpy speed (measured:
     # JVM-filter path 24s vs full-transfer+numpy-mask 17s on 38M rows/16c).
+    n_tok = F.col("n_tok")
     src = df.select(
         "part_id",
         "source",
@@ -189,6 +248,11 @@ def _build_partials(
         # -1 encodes NULL arrays portably (ANSI mode makes size(NULL) = NULL)
         F.coalesce(F.size("tokens"), F.lit(-1)).alias("tok_sz"),
         "tokens",
+        (
+            F.when(F.col("doc_id").isNull(), ROW_NULL_DOC_ID).otherwise(0)
+            + F.when(n_tok.isNull(), ROW_NULL_NTOK).otherwise(0)
+            + F.when(n_tok <= 0, ROW_NONPOS_NTOK).otherwise(0)
+        ).alias("defects"),
     )
     gen = _make_batch_gen(lo, hi, ref_tokens, hash_mod, vocab_lo, vocab_hi)
     return (
@@ -217,13 +281,18 @@ def _build_partials_direct(
     rows at all). Measured at the 3.2M-row bench corpus: the Spark-scan
     feed costs ~1.5s before the kernel sees a byte, the pyarrow feed ~0.4s.
 
-    Spark still owns distribution and retries — the input is the (part_id,
-    path) file list, repartitioned so each task streams one file — and the
-    partials contract (schema, counts, nulls) is bit-identical to the
-    mapInArrow path (pinned by tests/test_rules.py). Used only for local
-    parquet layouts (the PartitionedTable contract); any exotic source
-    falls back to the mapInArrow path."""
+    Spark still owns distribution and retries — the input is a range of
+    indexes into the (part_id, path) file list, one range partition (task)
+    per file, so no shuffle precedes the kernel — and the partials contract
+    (schema, counts, nulls) is bit-identical to the mapInArrow path (pinned
+    by tests/test_rules.py). Used only for local parquet layouts (the
+    PartitionedTable contract); any exotic source falls back to the
+    mapInArrow path."""
+    files = [(int(p), str(f)) for p, f in files]
     kernel = _make_batch_gen(lo, hi, ref_tokens, hash_mod, vocab_lo, vocab_hi)
+
+    def _mask(bools):
+        return bools.to_numpy(zero_copy_only=False).astype(np.int32)
 
     def read_gen(batches):
         import pyarrow as pa
@@ -231,9 +300,8 @@ def _build_partials_direct(
         import pyarrow.parquet as pq
 
         for b in batches:
-            pids = b.column(0).to_pylist()
-            paths = b.column(1).to_pylist()
-            for pid, path in zip(pids, paths):
+            for i in b.column(0).to_pylist():
+                pid, path = files[i]
                 pf = pq.ParquetFile(path)
                 outs: list = []
                 # 16k-row batches, measured optimum (r6 interleaved A/B):
@@ -244,22 +312,30 @@ def _build_partials_direct(
                 # slower.
                 for rb in pf.iter_batches(
                     batch_size=16384,
-                    columns=["source", "n_tok", "tokens"],
+                    columns=["doc_id", "source", "n_tok", "tokens"],
                     use_threads=False,
                 ):
-                    toks = rb.column(2)
+                    n_tok = rb.column(2)
+                    toks = rb.column(3)
+                    defects = (
+                        ROW_NULL_DOC_ID * _mask(pc.is_null(rb.column(0)))
+                        | ROW_NULL_NTOK * _mask(pc.is_null(n_tok))
+                        | ROW_NONPOS_NTOK
+                        * _mask(pc.fill_null(pc.less_equal(n_tok, 0), False))
+                    )
                     asm = pa.RecordBatch.from_arrays(
                         [
                             pa.array(
                                 np.full(rb.num_rows, pid, dtype=np.int32)
                             ),
-                            rb.column(0),
                             rb.column(1),
+                            n_tok,
                             pc.fill_null(pc.list_value_length(toks), -1),
                             toks,
+                            pa.array(defects),
                         ],
                         names=["part_id", "source", "n_tok", "tok_sz",
-                               "tokens"],
+                               "tokens", "defects"],
                     )
                     outs.extend(kernel([asm]))
                 if outs:
@@ -312,11 +388,9 @@ def _build_partials_direct(
             names=["part_id", "source", "kind", "key", "cnt"],
         )
 
-    file_df = spark.createDataFrame(
-        [(int(p), str(f)) for p, f in files], "part_id int, path string"
-    ).repartition(max(1, len(files)))
     return (
-        file_df.mapInArrow(read_gen, PARTIAL_SCHEMA)
+        spark.range(0, len(files), 1, numPartitions=len(files))
+        .mapInArrow(read_gen, PARTIAL_SCHEMA)
         .groupBy("part_id", "source", "kind", "key")
         .agg(F.sum("cnt").alias("cnt"))
     )
@@ -332,7 +406,8 @@ def _make_batch_gen(
 ):
     """The per-batch counting kernel, shared by the mapInArrow feed and the
     pyarrow-direct feed. Input batches have columns (part_id, source, n_tok,
-    tok_sz, tokens) in that order."""
+    tok_sz, tokens, defects) in that order; ``defects`` is the kind-5 bitmask
+    of the row."""
     span = hi - lo + 1
     ref_np = (
         np.asarray(ref_tokens, dtype=np.int64) if ref_tokens is not None else None
@@ -353,9 +428,10 @@ def _make_batch_gen(
             ntok = b.column(2).to_numpy(zero_copy_only=False)  # float+NaN if nulls
             tok_sz = b.column(3).to_numpy(zero_copy_only=False).astype(np.int64)
             lists = b.column(4)
+            defects = b.column(5).to_numpy(zero_copy_only=False).astype(np.int64)
 
             # group labels: factorize (part_id, source) — vectorized.
-            # null sources get the sentinel code n_src (kinds 2/3 only).
+            # null sources get the sentinel code n_src (kinds 2-5 only).
             d = pc.dictionary_encode(src_arr)
             idx = d.indices.to_numpy(zero_copy_only=False)
             n_src = len(d.dictionary)
@@ -517,8 +593,11 @@ def _make_batch_gen(
                 nz = np.nonzero(bc)[0]
                 emit(nz, KIND_NULL_TOKENS, np.zeros(len(nz)), bc[nz])
 
-            if not out["pid"]:
-                continue
+            # ---- kind 5: row census, every row once ----------------------
+            bc = np.bincount(ginv * 8 + defects, minlength=ng * 8)
+            nz = np.nonzero(bc)[0]
+            emit(nz // 8, KIND_ROWS, nz % 8, bc[nz])
+
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array(np.concatenate(out["pid"]), type=pa.int32()),

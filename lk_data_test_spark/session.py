@@ -13,6 +13,12 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_shuffle_partitions(cores: int | str | None) -> int:
+    """2x the requested cores (the host's for ``*``/None), at least 8."""
+    ncores = (os.cpu_count() or 8) if cores in ("*", None) else int(cores)
+    return max(8, 2 * ncores)
+
+
 def get_spark(
     app_name: str = "lk-validate-spark",
     cores: int | str | None = None,
@@ -29,9 +35,8 @@ def get_spark(
     if cores is None:
         cores = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = os.environ.get("SPARK_MASTER", f"local[{cores}]")
-    ncores = os.cpu_count() or 8 if cores in ("*", None) else int(cores)
     if shuffle_partitions is None:
-        shuffle_partitions = max(8, 2 * ncores)
+        shuffle_partitions = default_shuffle_partitions(cores)
 
     builder = (
         SparkSession.builder.master(master)

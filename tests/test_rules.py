@@ -3,6 +3,9 @@ role injects that rule's violation (FIXTURES.md §1, SURVEY.md §7.2)."""
 
 from __future__ import annotations
 
+import os
+from collections import Counter
+
 import pandas as pd
 import pytest
 
@@ -378,9 +381,9 @@ def test_shared_scan_matches_legacy(ctx_df):
         part_ids=ctx.part_ids,
         shared=shared,
     )
-    a = {(r["part_id"]): (r["passed"], round(r["metric"], 9))
+    a = {(r["part_id"]): (r["passed"], r["metric"])
          for r in drift.evaluate(df, ctx).verdicts.collect()}
-    b = {(r["part_id"]): (r["passed"], round(r["metric"], 9))
+    b = {(r["part_id"]): (r["passed"], r["metric"])
          for r in drift.evaluate(df, shared_ctx).verdicts.collect()}
     assert a == b
 
@@ -390,18 +393,10 @@ def test_shared_scan_direct_feed_matches_mapinarrow(ctx_df, corpus_dir):
     themselves, skipping the JVM row round-trip) must produce partials
     bit-identical to the mapInArrow feed — every kind, over a corpus that
     includes null n_tok, len-mismatch, OOV tokens and unknown sources."""
-    import os
-
     from lk_data_test_spark.plans.shared import SharedTokenStats
-    from lk_data_test_spark.sources.catalog import PartitionedTable
 
     ctx, df = ctx_df
-    table = PartitionedTable(os.path.join(corpus_dir, "sequences"))
-    files = [
-        (pid, os.path.join(table.path, f"part_id={pid}", f))
-        for pid in table.partition_ids()
-        for f in table.partition_info(pid).files
-    ]
+    files = _direct_files(PartitionedTable(os.path.join(corpus_dir, "sequences")))
     kwargs = dict(vocab_lo=0, vocab_hi=32768)
     via_spark = SharedTokenStats.from_profiles(
         df, ctx.reference_profiles, **kwargs
@@ -419,6 +414,171 @@ def test_shared_scan_direct_feed_matches_mapinarrow(ctx_df, corpus_dir):
     a, b = snap(via_spark), snap(via_pyarrow)
     assert a == b
     assert len(a) > 0
+
+
+def _direct_files(table) -> list[tuple[int, str]]:
+    return [
+        (pid, os.path.join(table.part_dir(pid), f))
+        for pid in table.partition_ids()
+        for f in table.partition_info(pid).files
+    ]
+
+
+def _tuples(frame) -> Counter:
+    """The rows as a multiset of tuples (null-safe, order-free)."""
+    return Counter(tuple(r) for r in frame.collect())
+
+
+@pytest.fixture(scope="module")
+def defect_corpus(corpus_dir, tmp_path_factory):
+    """Two 400-row partitions cut from the generated corpus (clean part 0,
+    drift part 4), each split over two files, with one row of each defect:
+    null doc_id, null source, null n_tok, n_tok = 0, null tokens and an
+    unknown source."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src = PartitionedTable(f"{corpus_dir}/sequences")
+    root = tmp_path_factory.mktemp("defects")
+    for pid in (0, 4):
+        t = pq.read_table(
+            src.part_dir(pid), columns=["doc_id", "tokens", "n_tok", "source"]
+        ).slice(0, 400)
+        cols = {c: t[c].to_pylist() for c in t.column_names}
+        cols["doc_id"][0] = None
+        cols["source"][1] = None
+        cols["n_tok"][2] = None
+        cols["n_tok"][3] = 0
+        cols["tokens"][4] = None
+        cols["source"][5] = "unknown-xx"
+        out = pa.table(
+            {c: pa.array(v, type=t.schema.field(c).type) for c, v in cols.items()}
+        )
+        d = root / f"part_id={pid}"
+        d.mkdir()
+        pq.write_table(out.slice(0, 250), str(d / "part-0.parquet"))
+        pq.write_table(out.slice(250), str(d / "part-1.parquet"))
+    return str(root)
+
+
+def test_defect_corpus_census_and_feeds_agree(ctx_df, defect_corpus):
+    """Both feeds emit identical partials, kind 5 included, and the census
+    counts every row once with its defect bits."""
+    from lk_data_test_spark.plans.shared import (
+        ROW_NONPOS_NTOK,
+        ROW_NULL_DOC_ID,
+        ROW_NULL_NTOK,
+        SharedTokenStats,
+    )
+
+    ctx, _ = ctx_df
+    table = PartitionedTable(defect_corpus)
+    df = table.read(ctx.spark)
+    kwargs = dict(vocab_lo=0, vocab_hi=TEST_CFG.vocab)
+    via_spark = SharedTokenStats.from_profiles(df, ctx.reference_profiles, **kwargs)
+    via_pyarrow = SharedTokenStats.from_profiles(
+        df, ctx.reference_profiles, direct_files=_direct_files(table), **kwargs
+    )
+    assert _tuples(via_spark.partials) == _tuples(via_pyarrow.partials)
+
+    census = via_pyarrow.census()
+    assert Counter(via_spark.census()) == Counter(census)
+    for pid in (0, 4):
+        rows = [(src, bits, n) for p, src, bits, n in census if p == pid]
+        assert sum(n for _, _, n in rows) == 400
+        assert sum(n for src, _, n in rows if src is None) == 1
+        for bit in (ROW_NULL_DOC_ID, ROW_NULL_NTOK, ROW_NONPOS_NTOK):
+            assert sum(n for _, bits, n in rows if bits & bit) == 1
+    assert via_pyarrow.part_ids() == [0, 4]
+
+
+@pytest.mark.parametrize("corpus", ["generated", "defects"])
+def test_shared_verdicts_match_standalone(ctx_df, corpus_dir, defect_corpus, corpus):
+    """column_stats, token_bounds, referential and drift give the same
+    verdict and violation tuples, metric compared with ==, from the suite's
+    shared collect as from their standalone plans."""
+    from lk_data_test_spark.operators import token_bounds
+    from lk_data_test_spark.plans.shared import SharedTokenStats
+
+    ctx, _ = ctx_df
+    if corpus == "generated":
+        table, params = PartitionedTable(f"{corpus_dir}/sequences"), {}
+    else:
+        # groups of ~20 rows: score drift anyway
+        table, params = PartitionedTable(defect_corpus), {"drift": {"min_docs": 1}}
+    df = table.read(ctx.spark)
+    base = dict(
+        spark=ctx.spark,
+        allowed_sources=ctx.allowed_sources,
+        reference_profiles=ctx.reference_profiles,
+        part_ids=table.partition_ids(),
+        params=params,
+    )
+    shared = SharedTokenStats.from_profiles(
+        df,
+        ctx.reference_profiles,
+        vocab_lo=token_bounds.DEFAULTS["vocab_lo"],
+        vocab_hi=token_bounds.DEFAULTS["vocab_size"],
+        direct_files=_direct_files(table),
+    )
+    standalone, suite = RuleContext(**base), RuleContext(**base, shared=shared)
+    failing = set()
+    for rule in (column_stats, token_bounds, referential, drift):
+        a, b = rule.evaluate(df, standalone), rule.evaluate(df, suite)
+        verdicts = _tuples(b.verdicts)
+        assert _tuples(a.verdicts) == verdicts, rule.RULE_ID
+        assert _tuples(a.violations) == _tuples(b.violations), rule.RULE_ID
+        failing |= {(v[0], v[1]) for v in verdicts if not v[2]}
+    if corpus == "defects":
+        # every defect lands in both parts; tiny drift groups score (noisily)
+        assert {(p, r) for p, r in failing if r != "drift"} == {
+            (pid, rule)
+            for pid in (0, 4)
+            for rule in ("column_stats", "referential")
+        }
+        assert (4, "drift") in failing
+
+
+def test_shared_table_runs_the_partials_once(ctx_df, corpus_dir):
+    """Readers racing on the shared table (more threads than the four
+    shared-consuming rules, and than cores, with a short switch interval)
+    launch exactly the Spark jobs of one read, and all get the one
+    collected table."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from lk_data_test_spark.plans.shared import SharedTokenStats
+
+    ctx, df = ctx_df
+    table = PartitionedTable(f"{corpus_dir}/sequences")
+    sc = ctx.spark.sparkContext
+
+    def job_ids() -> set[int]:
+        return set(sc.statusTracker().getJobIdsForGroup(None))
+
+    def build():
+        return SharedTokenStats.from_profiles(
+            df, ctx.reference_profiles, direct_files=_direct_files(table)
+        )
+
+    single = build()
+    before = job_ids()
+    single.table()
+    one_read = len(job_ids() - before)
+
+    shared = build()
+    before = job_ids()
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as ex:
+            tables = list(ex.map(lambda _: shared.table(), range(8), timeout=600))
+    finally:
+        sys.setswitchinterval(interval)
+    assert len(tables) == 8
+    assert one_read > 0
+    assert len(job_ids() - before) == one_read
+    assert all(t is tables[0] for t in tables)
 
 
 def test_shared_scan_noncontiguous_vocab(spark):

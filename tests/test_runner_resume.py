@@ -164,3 +164,49 @@ def test_token_digest_invariant(spark, corpus_dir):
     d1 = token_digests(df).orderBy("doc_id", "token_digest").collect()
     d2 = token_digests(df).orderBy("doc_id", "token_digest").collect()
     assert d1 == d2 and len(d1) == TEST_CFG.n_parts * TEST_CFG.rows_per_part
+
+
+def test_file_appended_mid_run_stays_pending(spark, corpus_dir, tmp_path):
+    """The manifest records the listing the run validated: a file that
+    lands after the run listed its partitions leaves that partition in
+    pending() for the next run instead of being marked validated."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    clean = sorted(set(range(TEST_CFG.n_parts)) - ALL_FAILING)[:2]
+    root = tmp_path / "sequences"
+    for pid in clean:
+        shutil.copytree(
+            f"{corpus_dir}/sequences/part_id={pid}", root / f"part_id={pid}"
+        )
+    target = clean[0]
+
+    class AppendAfterListing(PartitionedTable):
+        appended = False
+
+        def partition_info(self, part_id):
+            info = super().partition_info(part_id)
+            if part_id == target and not self.appended:
+                # 50 copied rows with fresh doc_ids: still a clean partition
+                self.appended = True
+                t = pq.read_table(self.part_dir(part_id)).slice(0, 50)
+                fresh = pa.array([f"appended-{i}" for i in range(50)], pa.string())
+                pq.write_table(
+                    t.set_column(t.schema.get_field_index("doc_id"), "doc_id", fresh),
+                    os.path.join(self.part_dir(part_id), "part-appended.parquet"),
+                )
+            return info
+
+    r = ValidationRunner(
+        spark,
+        AppendAfterListing(str(root)),
+        allowed_sources=spark.read.parquet(f"{corpus_dir}/allowed_sources"),
+        reference_profiles=spark.read.parquet(f"{corpus_dir}/reference_profiles"),
+        manifest_path=str(tmp_path / "manifest.json"),
+    )
+    res = r.run(force=True)
+    assert sorted(res.ran_parts) == clean
+    assert all(v["passed"] for v in res.verdicts)
+    assert r.manifest.pending(PartitionedTable(str(root)), r.rules) == [target]
