@@ -116,10 +116,11 @@ class ValidationRunner:
         # across rules and the executor cores stay full. The shared
         # consumers block on SharedTokenStats.table()'s driver lock until the
         # first of them has collected the partials. Spark job submission is
-        # thread-safe; outputs keep rule order. Each rule's violations are
-        # persisted so that a plan consumed twice (once inside a rule's own
-        # verdict aggregation, e.g. verdict_from_violations, once by the
-        # sink) runs ONCE.
+        # thread-safe; outputs keep rule order. With a sink, each rule's
+        # violations are persisted so that a plan consumed twice (once
+        # inside a rule's own verdict aggregation, e.g.
+        # verdict_from_violations, once by the sink) runs ONCE; without one
+        # nothing in the run reads them again, so they stay lazy.
         from concurrent.futures import ThreadPoolExecutor
 
         from pyspark import StorageLevel
@@ -154,7 +155,7 @@ class ValidationRunner:
                     .filter(F.col("__rn") <= int(viol_cap))
                     .drop("__rn")
                 )
-            viol = v.persist(StorageLevel.MEMORY_AND_DISK)
+            viol = v.persist(StorageLevel.MEMORY_AND_DISK) if self.output_dir else v
             rows = [r.asDict() for r in res.verdicts.collect()]
             # wall time to a materialized verdict (rules run concurrently,
             # so these overlap — they are per-rule latencies, not a sum)
@@ -263,7 +264,7 @@ class ValidationRunner:
             }
             with open(metrics_path, "w") as f:
                 _json.dump(metrics, f, indent=1, sort_keys=True)
-        for fr in violation_frames + stats_frames:
+        for fr in (violation_frames if self.output_dir else []) + stats_frames:
             try:
                 fr.unpersist()
             except Exception:

@@ -282,13 +282,16 @@ def _build_partials_direct(
     feed costs ~1.5s before the kernel sees a byte, the pyarrow feed ~0.4s.
 
     Spark still owns distribution and retries — the input is a range of
-    indexes into the (part_id, path) file list, one range partition (task)
-    per file, so no shuffle precedes the kernel — and the partials contract
-    (schema, counts, nulls) is bit-identical to the mapInArrow path (pinned
-    by tests/test_rules.py). Used only for local parquet layouts (the
-    PartitionedTable contract); any exotic source falls back to the
-    mapInArrow path."""
+    indexes into ``pack_files`` groups of the (part_id, path) file list, one
+    range partition (task) per group, so no shuffle precedes the kernel —
+    and the partials contract (schema, counts, nulls) is bit-identical to
+    the mapInArrow path (pinned by tests/test_rules.py). Used only for local
+    parquet layouts (the PartitionedTable contract); any exotic source falls
+    back to the mapInArrow path."""
     files = [(int(p), str(f)) for p, f in files]
+    groups = pack_files(
+        [f for _, f in files], spark.sparkContext.defaultParallelism
+    )
     kernel = _make_batch_gen(lo, hi, ref_tokens, hash_mod, vocab_lo, vocab_hi)
 
     def _mask(bools):
@@ -300,7 +303,7 @@ def _build_partials_direct(
         import pyarrow.parquet as pq
 
         for b in batches:
-            for i in b.column(0).to_pylist():
+            for i in (j for g in b.column(0).to_pylist() for j in groups[g]):
                 pid, path = files[i]
                 pf = pq.ParquetFile(path)
                 outs: list = []
@@ -389,11 +392,37 @@ def _build_partials_direct(
         )
 
     return (
-        spark.range(0, len(files), 1, numPartitions=len(files))
+        spark.range(0, len(groups), 1, numPartitions=len(groups))
         .mapInArrow(read_gen, PARTIAL_SCHEMA)
         .groupBy("part_id", "source", "kind", "key")
         .agg(F.sum("cnt").alias("cnt"))
     )
+
+
+def pack_files(paths: list[str], n_tasks: int) -> list[list[int]]:
+    """Indexes of ``paths`` in at most ``n_tasks`` groups of about equal
+    bytes: largest file first onto the lightest group, each group in list
+    order. A Python task has a fixed set-up cost (the worker re-reads its
+    zip imports on every task, ~0.25 s of CPU on a 4-core VM), so a task per
+    small file spends more on set-up than on the kernel; groups capped at
+    the default parallelism still keep every core busy."""
+    import heapq
+    import os
+
+    sizes = []
+    for p in paths:
+        try:
+            sizes.append(os.path.getsize(p))
+        except OSError:
+            sizes.append(0)
+    n = max(1, min(len(paths), int(n_tasks)))
+    lightest = [(0, g) for g in range(n)]  # (bytes, group) min-heap
+    groups: list[list[int]] = [[] for _ in range(n)]
+    for i in sorted(range(len(paths)), key=lambda i: (-sizes[i], i)):
+        load, g = heapq.heappop(lightest)
+        groups[g].append(i)
+        heapq.heappush(lightest, (load + sizes[i], g))
+    return [sorted(g) for g in groups if g]
 
 
 def _make_batch_gen(

@@ -256,6 +256,25 @@ def test_uniqueness_global_matches_partition_scope_without_cross_dups(ctx_df):
     assert _failing(g.verdicts) == EXPECTED["uniqueness"]
 
 
+def test_uniqueness_screen_packs_small_input(ctx_df):
+    """The HLL screen reads a small table in one task, and its per-partition
+    row counts and HLL++ estimates equal those of Spark's default split."""
+    ctx, df = ctx_df
+    ids = df.select("part_id", "doc_id")
+    packed = uniqueness._screen_input(ids)
+    assert packed.rdd.getNumPartitions() == 1 < ids.rdd.getNumPartitions()
+
+    def screen(frame):
+        return sorted(
+            tuple(r)
+            for r in frame.groupBy("part_id")
+            .agg(F.count(F.lit(1)), F.approx_count_distinct("doc_id", 0.01))
+            .collect()
+        )
+
+    assert screen(packed) == screen(ids)
+
+
 def test_uniqueness_always_exact_matches_screen(ctx_df):
     ctx, df = ctx_df
     exact_ctx = RuleContext(
@@ -414,6 +433,26 @@ def test_shared_scan_direct_feed_matches_mapinarrow(ctx_df, corpus_dir):
     a, b = snap(via_spark), snap(via_pyarrow)
     assert a == b
     assert len(a) > 0
+
+
+def test_pack_files_balances_bytes(tmp_path):
+    """Every file lands in exactly one group, largest first onto the
+    lightest group; never more groups than files or tasks."""
+    from lk_data_test_spark.plans.shared import pack_files
+
+    sizes = [50, 10, 40, 30, 20, 60]
+    paths = []
+    for i, n in enumerate(sizes):
+        p = tmp_path / f"f{i}.parquet"
+        p.write_bytes(b"x" * n)
+        paths.append(str(p))
+    groups = pack_files(paths, 3)
+    assert groups == [[1, 5], [0, 4], [2, 3]]
+    assert [sum(sizes[i] for i in g) for g in groups] == [70, 70, 70]
+    assert pack_files(paths, 10) == [[i] for i in (5, 0, 2, 3, 4, 1)]
+    assert pack_files(paths + [str(tmp_path / "gone.parquet")], 1) == [
+        list(range(7))
+    ]
 
 
 def _direct_files(table) -> list[tuple[int, str]]:
