@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from .operators import dedup, similarity, textstats
 from .operators.dedup import MERSENNE31, MINHASH_A, MINHASH_B
+from .sources.catalog import read_parquet
 
 Q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: dict[str, str] = {}
@@ -38,7 +39,8 @@ def query(name: str, sql: str | None):
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """The testdata table ``name`` under ``sf_dir`` (``<name>.parquet``)."""
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def _dec(c, scale: int = 4):

@@ -1,2 +1,1 @@
 from .catalog import PartitionedTable  # noqa: F401
-from .testdata import TESTDATA_TABLES, load_table, register_views  # noqa: F401

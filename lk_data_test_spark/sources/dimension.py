@@ -32,7 +32,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .catalog import files_digest, parquet_sizes
+from .catalog import files_digest, parquet_sizes, read_parquet
 
 _HEAD = "_head.json"
 
@@ -83,7 +83,7 @@ class DimensionStore:
         head = self.head()
         if head is None:
             raise FileNotFoundError(f"dimension store {self.path} has no head")
-        return spark.read.parquet(self._snapshot_dir(head["snapshot"]))
+        return read_parquet(spark, self._snapshot_dir(head["snapshot"]))
 
     # -- writes ------------------------------------------------------------
     def init(self, df: DataFrame) -> dict:
