@@ -3066,6 +3066,7 @@ def _flagship_values_sql() -> str:
 def validation_suite_verdicts(spark, sf_dir):
     from .datagen import GenConfig, allowed_sources_df, reference_profiles_df, sequences_df
     from .plans.rules import RuleContext, default_rules
+    from .plans.shared import build_shared
 
     cfg = GenConfig(n_parts=5, rows_per_part=400)
     df = sequences_df(spark, cfg).cache()
@@ -3075,6 +3076,8 @@ def validation_suite_verdicts(spark, sf_dir):
         reference_profiles=reference_profiles_df(spark, cfg),
         part_ids=list(range(cfg.n_parts)),
     )
+    # one shared token pass for the four data rules, as the runner builds
+    ctx.shared = build_shared(df, ctx)
     out = None
     for rule in default_rules():
         v = rule.evaluate(df, ctx).verdicts
@@ -4153,7 +4156,7 @@ GATED_ORDER = [
     "supplier_geo_wkt",           # §2.8 geo WKT (sole geo exemplar)
     "union_lang_subsets",         # §2.7 union + P4/P7 predicates
     "incremental_delta_verdicts",  # §2.9 incremental/file-delta validation
-    "doc_column_stats",           # A10/R1 salted single-pass column stats
+    "doc_column_stats",           # A10/R1 single-pass column stats
     "doc_referential_violations",  # J2/R3 left-anti referential
     "doc_source_drift",           # §2.10/R4 KS drift applyInPandas
     "doc_lang_id",                # text-pipeline lang-id

@@ -144,22 +144,11 @@ def evaluate(df: DataFrame, ctx: RuleContext) -> RuleResult:
     if profiles is None:
         raise ValueError("drift rule requires ctx.reference_profiles")
 
-    # ---- stage 1: tagged partials — shared with column_stats when the
-    # runner provides ctx.shared (ONE scan of `tokens` for the whole suite)
-    from ..plans.shared import (
-        HASH_MULT,
-        KIND_NTOK,
-        KIND_TOKEN,
-        SharedTokenStats,
-    )
+    # ---- stage 1: tagged partials — the suite's shared pass (ONE scan of
+    # `tokens` for the whole suite), or one built from ctx when run alone
+    from ..plans.shared import HASH_MULT, KIND_NTOK, KIND_TOKEN, shared_for
 
-    shared = ctx.shared
-    if shared is None or not isinstance(shared, SharedTokenStats):
-        shared = SharedTokenStats.from_profiles(
-            df, profiles,
-            max_ref_tokens=int(p["max_ref_tokens"]),
-            hash_buckets=int(p["hash_buckets"]),
-        )
+    shared = shared_for(df, ctx)
 
     if shared.hash_mod:
         quantiles: dict[str, np.ndarray] = {
@@ -246,4 +235,4 @@ def evaluate(df: DataFrame, ctx: RuleContext) -> RuleResult:
         m = metric.get(pid, 0.0)
         rows.append((pid, RULE_ID, m <= 1.0, m, 1.0, detail))
     verdicts = local_frame(ctx.spark, rows, VERDICT_SCHEMA)
-    return RuleResult(verdicts, violations, stats=per_group)
+    return RuleResult(verdicts, violations)

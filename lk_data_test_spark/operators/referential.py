@@ -7,16 +7,17 @@ check_authors.py:7-17``; the curation variant ``curation/
 check_authors_exist_in_listperson.py:14-25`` has a latent bug — line 16
 re-binds ``authors=set()`` — we implement the intended semantics).
 
-Spark plan: broadcast LEFT ANTI join fact->dim. The dimension is tiny
+The verdict needs no join: the shared token pass's kind-5 row census
+(plans/shared.py) counts rows per (part_id, source), so the per-partition
+violation count is the census rows whose source is null or not in the
+collected active set — a null source never matches in the anti join either.
+In the suite the census comes from the suite's one collect of the partials;
+run alone, the rule builds its own pass (``shared_for``).
+
+Violation rows: broadcast LEFT ANTI join fact->dim. The dimension is tiny
 (20 rows here; <=10^5 realistically), so the anti join is a broadcast hash
 join with zero shuffle of the 10^12-row fact side; the scan reads only
 (doc_id, source, n_tok, part_id) — `tokens` is column-pruned away.
-
-Inside the suite (``ctx.shared`` set) the verdict needs no join at all: the
-shared partials' kind-5 row census counts rows per (part_id, source), so the
-per-partition violation count is the census rows whose source is null or not
-in the collected active set — a null source never matches in the anti join
-either. The violation rows stay the lazy anti join above.
 """
 
 from __future__ import annotations
@@ -24,13 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.rules import (
-    VERDICT_SCHEMA,
-    RuleContext,
-    RuleResult,
-    local_frame,
-    verdict_from_violations,
-)
+from ..plans.rules import VERDICT_SCHEMA, RuleContext, RuleResult, local_frame
+from ..plans.shared import shared_for
 
 RULE_ID = "referential"
 
@@ -53,13 +49,7 @@ def evaluate(df: DataFrame, ctx: RuleContext) -> RuleResult:
             F.concat(F.lit("unknown source: "), F.col("source")).alias("detail"),
         )
     )
-    from ..plans.shared import SharedTokenStats
-
-    shared = ctx.shared
-    if not isinstance(shared, SharedTokenStats):
-        verdicts = verdict_from_violations(df, violations, ctx, RULE_ID)
-        return RuleResult(verdicts, violations)
-
+    shared = shared_for(df, ctx)
     known = {r["source"] for r in active.collect()}
     unknown: dict[int, int] = {}
     for pid, source, _, rows in shared.census():

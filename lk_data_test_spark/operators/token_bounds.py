@@ -11,20 +11,17 @@ the sequence.  This rule flags every row whose ``tokens`` array contains at
 least one out-of-vocab id.
 
 Scale design (north_rule: partitioning / shuffle / skew explicit):
-- The SCREEN rides the suite's shared Arrow token scan (plans/shared.py
-  kind 4): per (part_id, source) counts of rows containing an OOV token,
-  computed on the RAW token values before any profile-domain hashing —
-  checking bounds adds two vectorized compares + a bincount per chunk to a
-  pass the suite already pays for, so the rule costs ~zero extra I/O; the
-  counts are read from the suite's one driver-side collect of the partials.
+- The SCREEN is the shared Arrow token pass's kind 4 (plans/shared.py): per
+  (part_id, source) counts of rows containing an OOV token, computed on the
+  RAW token values before any profile-domain hashing. In the suite it adds
+  two vectorized compares + a bincount per chunk to a pass the suite already
+  pays for, and the counts come from the suite's one driver-side collect of
+  the partials. Run alone, or handed a pass built for other vocab bounds,
+  the rule builds its own pass from its context (``shared_for``).
 - Violation ROWS are materialized only for partitions the screen flagged
   (partition-pruned second scan, the same two-phase shape as uniqueness's
   exact pass and column_stats' row extraction): the common all-clean case
   never rescans ``tokens``.
-- Without a shared scan (standalone use) the screen falls back to one
-  JVM-side aggregate — ``exists(tokens, t -> t < lo OR t >= hi)`` never
-  leaves whole-stage codegen and reduces to one boolean per row before the
-  partial aggregation, so nothing is shuffled at token granularity.
 """
 
 from __future__ import annotations
@@ -33,6 +30,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.rules import VERDICT_SCHEMA, RuleContext, RuleResult, local_frame
+from ..plans.shared import KIND_OOV_ROWS, shared_for, vocab_bounds
 
 RULE_ID = "token_bounds"
 
@@ -50,40 +48,14 @@ def has_oov(lo: int, hi: int) -> Column:
 
 
 def evaluate(df: DataFrame, ctx: RuleContext) -> RuleResult:
-    p = {**DEFAULTS, **(ctx.params or {})}
-    lo, hi = int(p["vocab_lo"]), int(p["vocab_size"])
-
-    shared = ctx.shared
-    use_shared = (
-        shared is not None
-        and getattr(shared, "vocab_hi", None) == hi
-        and (getattr(shared, "vocab_lo", None) or 0) == lo
-    )
-    if use_shared:
-        from ..plans.shared import KIND_OOV_ROWS
-
-        # read from the suite's one collect of the shared partials
-        oov_by_part = shared.counts_by_part(KIND_OOV_ROWS)
-        all_parts = shared.part_ids()
-    else:
-        # ONE tiny collect (<= n_parts longs even at 10^12 rows) feeds both
-        # the verdict table (rebuilt as a local relation) and the flagged
-        # partition list
-        counts = (
-            df.select(
-                "part_id",
-                F.when(has_oov(lo, hi), 1).otherwise(0).alias("b"),
-            )
-            .groupBy("part_id")
-            .agg(F.sum("b").alias("oov_rows"))
-        )
-        oov_by_part = {
-            int(r["part_id"]): int(r["oov_rows"] or 0) for r in counts.collect()
-        }
-        all_parts = sorted(oov_by_part)
+    lo, hi = vocab_bounds(ctx.params)
+    shared = shared_for(df, ctx)
+    oov_by_part = shared.counts_by_part(KIND_OOV_ROWS)
 
     part_ids = (
-        sorted(int(x) for x in ctx.part_ids) if ctx.part_ids is not None else all_parts
+        sorted(int(x) for x in ctx.part_ids)
+        if ctx.part_ids is not None
+        else shared.part_ids()
     )
     detail = f"vocab=[{lo},{hi})"
     verdicts = local_frame(

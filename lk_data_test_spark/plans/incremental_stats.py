@@ -12,9 +12,9 @@ set plus the merged stats row, and on re-run
 
   - skip   — file set unchanged: nothing read;
   - delta  — pure append (every previously validated file still present with
-    the same size): ONLY the added files are scanned, one salted stats pass
-    over the union of all partitions' delta files, then a driver-side merge
-    of two tiny stats rows per partition;
+    the same size): ONLY the added files are scanned, one shared token pass
+    (plans/shared.py) over the union of all partitions' delta files, then a
+    driver-side merge of two tiny stats rows per partition;
   - full   — anything else (rewrite, delete, size change, first sight):
     correctness over cleverness, the whole partition re-runs.
 
@@ -69,7 +69,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import uniqueness
-from ..operators.column_stats import partition_stats, partition_stats_no_tokens
+from ..operators.column_stats import BAD_FIELDS, part_stats
 from ..operators.drift import (
     drift_signal,
     profile_maps,
@@ -79,13 +79,13 @@ from ..operators.drift import (
 from ..operators.token_bounds import has_oov
 from ..sources.catalog import PartitionedTable
 from .manifest import load_store, save_store
+from .rules import RuleContext
 from .shared import (
-    KIND_LEN_MISMATCH,
     KIND_NTOK,
-    KIND_NULL_TOKENS,
     KIND_OOV_ROWS,
     KIND_TOKEN,
     SharedTokenStats,
+    build_shared,
 )
 
 _SUM_FIELDS = (
@@ -98,28 +98,6 @@ _SUM_FIELDS = (
     "len_mismatch",
     "sum_n_tok",
 )
-_BAD_FIELDS = (
-    "null_doc_id",
-    "null_source",
-    "null_n_tok",
-    "null_tokens",
-    "nonpos_n_tok",
-    "len_mismatch",
-)
-
-
-def _row_to_stats(row, **token_counters) -> dict:
-    """Stats dict from a partition_stats row. The fused suite's tokens-free
-    row gets its two token-derived counters (null_tokens, len_mismatch) from
-    the shared Arrow scan instead, passed as keywords."""
-    r = {**row.asDict(), **token_counters}
-    d = {k: int(r[k]) for k in _SUM_FIELDS}
-    for k in ("min_n_tok", "max_n_tok"):
-        d[k] = None if r[k] is None else int(r[k])
-    d["n_tok_hist"] = {
-        str(k): int(v) for k, v in (r["n_tok_hist"] or {}).items()
-    }
-    return d
 
 
 def merge_stats(a: dict, b: dict) -> dict:
@@ -185,11 +163,17 @@ def _union_with_part_ids(spark: SparkSession, delta: dict[int, list[str]]):
     )
 
 
-def _shared_stats(df, profiles, **kw) -> SharedTokenStats:
-    """The shared token pass over ``df``. Hashed-domain profiles (the
-    pathological-vocabulary fallback) are refused: their bucket folding is a
-    lossy transform, and stored partials would mix domains."""
-    shared = SharedTokenStats.from_profiles(df, profiles, **kw)
+def _shared_stats(df, profiles=None, **params) -> SharedTokenStats:
+    """The shared token pass over ``df`` (``build_shared`` with these rule
+    params). Hashed-domain profiles (the pathological-vocabulary fallback)
+    are refused: their bucket folding is a lossy transform, and stored
+    partials would mix domains."""
+    shared = build_shared(
+        df,
+        RuleContext(
+            spark=df.sparkSession, reference_profiles=profiles, params=params
+        ),
+    )
     if shared.hash_mod:
         raise ValueError(
             "hashed-domain profiles are not supported incrementally; "
@@ -198,13 +182,15 @@ def _shared_stats(df, profiles, **kw) -> SharedTokenStats:
     return shared
 
 
-def _drift_partials(rows) -> dict[int, list]:
-    """part_id -> [source, kind, key, cnt] for the drift kinds of ``rows``."""
+def _drift_partials(shared: SharedTokenStats) -> dict[int, list]:
+    """part_id -> [source, kind, key, cnt] for the drift kinds of the
+    collected partials, null sources dropped (drift scores none, and the
+    store sorts by source)."""
     out: dict[int, list] = {}
-    for r in rows:
-        if int(r["kind"]) in (KIND_NTOK, KIND_TOKEN):
-            out.setdefault(int(r["part_id"]), []).append(
-                [r["source"], int(r["kind"]), int(r["key"]), int(r["cnt"])]
+    for r in shared.rows(KIND_NTOK, KIND_TOKEN).to_pylist():
+        if r["source"] is not None:
+            out.setdefault(r["part_id"], []).append(
+                [r["source"], r["kind"], r["key"], r["cnt"]]
             )
     return out
 
@@ -261,18 +247,15 @@ class IncrementalStatsValidator(_IncrementalValidator):
         self,
         table: PartitionedTable,
         store_path: str,
-        n_salt: int = 16,
         bucket_width: int = 64,
         max_bad: float = 0.0,
     ):
         super().__init__(table, store_path)
-        self.n_salt = n_salt
         self.bucket_width = bucket_width
         self.max_bad = max_bad
 
     def _stats_for(self, df) -> dict[int, dict]:
-        rows = partition_stats(df, self.n_salt, self.bucket_width).collect()
-        return {int(r["part_id"]): _row_to_stats(r) for r in rows}
+        return part_stats(_shared_stats(df), self.bucket_width)
 
     def run(self, spark: SparkSession, _precomputed: dict | None = None) -> dict:
         delta, full, skip = classify_partitions(self.table, self.entries)
@@ -294,7 +277,7 @@ class IncrementalStatsValidator(_IncrementalValidator):
             }
 
         for pid, res in results.items():
-            bad = sum(res["stats"][k] for k in _BAD_FIELDS)
+            bad = sum(res["stats"][k] for k in BAD_FIELDS)
             res["metric"] = float(bad)
             res["passed"] = bad <= self.max_bad
             if res["mode"] != "skip":
@@ -325,16 +308,7 @@ class IncrementalDriftValidator(_IncrementalValidator):
         super().__init__(table, store_path)
 
     def _partials_for(self, spark, df, profiles) -> dict[int, list]:
-        shared = _shared_stats(
-            df,
-            profiles,
-            max_ref_tokens=int(self.params["max_ref_tokens"]),
-            hash_buckets=int(self.params["hash_buckets"]),
-        )
-        return _drift_partials(
-            shared.partials.filter(F.col("kind").isin(KIND_NTOK, KIND_TOKEN))
-            .collect()
-        )
+        return _drift_partials(_shared_stats(df, profiles, drift=self.params))
 
     @staticmethod
     def _merge_partials(a: list, b: list) -> list:
@@ -708,30 +682,16 @@ class IncrementalUniquenessValidator(_IncrementalValidator):
         return self._report(results)
 
 
-def _fused_scan(frame, profiles, sv, vocab_lo: int, vocab_hi: int) -> dict:
-    """The one decode of ``tokens`` for a scanned frame: the shared token
-    pass (kinds 0-4) plus the cheap tokens-free salted pass, split into the
-    per-partition inputs of the stats, drift and token_bounds validators."""
-    rows = _shared_stats(
-        frame, profiles, vocab_lo=vocab_lo, vocab_hi=vocab_hi
-    ).partials.collect()
-    oov: dict[int, int] = {}
-    checks: dict[tuple[int, int], int] = {}  # (pid, kind 2|3) -> rows
-    for r in rows:
-        pid, kind = int(r["part_id"]), int(r["kind"])
-        if kind == KIND_OOV_ROWS:
-            oov[pid] = oov.get(pid, 0) + int(r["cnt"])
-        elif kind in (KIND_LEN_MISMATCH, KIND_NULL_TOKENS):
-            checks[pid, kind] = checks.get((pid, kind), 0) + int(r["cnt"])
-    stats = {}
-    for r in partition_stats_no_tokens(frame, sv.n_salt, sv.bucket_width).collect():
-        pid = int(r["part_id"])
-        stats[pid] = _row_to_stats(
-            r,
-            null_tokens=checks.get((pid, KIND_NULL_TOKENS), 0),
-            len_mismatch=checks.get((pid, KIND_LEN_MISMATCH), 0),
-        )
-    return {"column_stats": stats, "drift": _drift_partials(rows), "token_bounds": oov}
+def _fused_scan(frame, profiles, sv, params: dict) -> dict:
+    """The one decode of ``tokens`` for a scanned frame: ONE shared token
+    pass, split into the per-partition inputs of the stats, drift and
+    token_bounds validators."""
+    shared = _shared_stats(frame, profiles, **params)
+    return {
+        "column_stats": part_stats(shared, sv.bucket_width),
+        "drift": _drift_partials(shared),
+        "token_bounds": shared.counts_by_part(KIND_OOV_ROWS),
+    }
 
 
 def run_incremental_suite(
@@ -751,15 +711,15 @@ def run_incremental_suite(
     (OOV rows) — on first sight that is 3x the dominant I/O, exactly the
     duplication the batch suite already eliminates via plans/shared.py. This
     orchestrator classifies once, runs ONE SharedTokenStats pass per scanned
-    frame (kinds 0-4: n_tok histogram, token freq, len-mismatch, null-tokens,
-    OOV rows) plus the cheap tokens-free salted pass, and feeds all three
-    validators their per-partition inputs; referential (source-only scan) and
-    uniqueness (doc_id sketches) keep their own narrow jobs.
+    frame (kinds 0-5: n_tok histogram, token freq, len-mismatch, null-tokens,
+    OOV rows, row census) and feeds all three validators their per-partition
+    inputs; referential (source-only scan) and uniqueness (doc_id sketches)
+    keep their own narrow jobs.
 
     Correctness: the fused inputs are the identical quantities each
-    validator's own scan derives — the batch suite's shared-vs-direct
-    equivalence is already part of the rule contracts (column_stats consumes
-    kinds 2/3 and token_bounds kind 4 in batch mode) — and the fusion only
+    validator's own scan derives — the stats and drift validators read the
+    same shared pass on their own, and token_bounds' kind 4 is its batch
+    rule's screen — and the fusion only
     engages when all three validators agree on every partition's mode (their
     stores are written together by this CLI path, so they do unless a store
     was hand-edited or lost); on ANY disagreement each validator falls back
@@ -791,11 +751,12 @@ def run_incremental_suite(
     pre: dict[str, dict] = {}  # rule -> {"full": {pid: x}, "delta": {...}}
     if dv is not None and all(c == classes[0] for c in classes[1:]):
         delta, full, _skip = classes[0]
+        # the token_bounds range is [vocab_lo, vocab_size), as in the batch
+        # rule; drift's domain caps are the drift validator's
+        params = {"vocab_lo": vocab_lo, "vocab_size": vocab_size, "drift": dv.params}
         got = sv._scan(
             spark, delta, full,
-            # the token_bounds range is [vocab_lo, vocab_size), as in the
-            # batch rule
-            lambda frame: _fused_scan(frame, profiles, sv, vocab_lo, vocab_size),
+            lambda frame: _fused_scan(frame, profiles, sv, params),
         )
         pre = {
             rule: {mode: got[mode].get(rule, {}) for mode in got}

@@ -55,7 +55,6 @@ VIOLATION_SCHEMA = T.StructType(
 class RuleResult:
     verdicts: DataFrame
     violations: DataFrame
-    stats: DataFrame | None = None  # optional per-partition metrics table
 
 
 @dataclass
@@ -67,10 +66,11 @@ class RuleContext:
     reference_profiles: DataFrame | None = None
     part_ids: list[int] | None = None  # known partitions (skips a distinct())
     params: dict = field(default_factory=dict)
-    # shared token-scan partials (plans/shared.py): when the runner provides
-    # this, column_stats, token_bounds, referential and drift take their
-    # verdicts from ONE driver-side collect of ONE pass over `tokens`
-    # instead of each running its own aggregation jobs
+    # the shared token pass (plans/shared.py SharedTokenStats): column_stats,
+    # token_bounds, referential and drift take their verdicts from ONE
+    # driver-side collect of its partials. The runner builds it once per run
+    # with ``build_shared``; a rule given none, or one built for other vocab
+    # bounds than ``params`` names, builds its own from this context
     shared: object | None = None
 
 

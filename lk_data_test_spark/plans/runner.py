@@ -27,7 +27,7 @@ from .rules import (
     canonical_violations,
     default_rules,
 )
-from .shared import KIND_ROWS, SharedTokenStats
+from .shared import KIND_ROWS, build_shared
 
 
 @dataclass
@@ -79,7 +79,6 @@ class ValidationRunner:
         # the ONE listing of this run: the shared pass reads these files and
         # the manifest records them, so a file appended mid-run stays pending
         infos = {pid: self.table.partition_info(pid) for pid in pending}
-        from ..operators.token_bounds import DEFAULTS as TB_DEFAULTS
 
         # Local parquet layout -> feed the shared pass from pyarrow directly
         # (plans/shared.py::_build_partials_direct): the token buffers never
@@ -92,23 +91,14 @@ class ValidationRunner:
                 for pid in pending
                 for f in infos[pid].files
             ] or None
-        shared = SharedTokenStats.from_profiles(
-            df,
-            self.reference_profiles,
-            vocab_lo=int(self.params.get("vocab_lo", TB_DEFAULTS["vocab_lo"])),
-            vocab_hi=int(
-                self.params.get("vocab_size", TB_DEFAULTS["vocab_size"])
-            ),
-            direct_files=direct_files,
-        )
         ctx = RuleContext(
             spark=self.spark,
             allowed_sources=self.allowed_sources,
             reference_profiles=self.reference_profiles,
             part_ids=pending,
             params=self.params,
-            shared=shared,
         )
+        ctx.shared = shared = build_shared(df, ctx, direct_files=direct_files)
 
         # Rules are independent plans: evaluate them CONCURRENTLY (one driver
         # thread each) so their jobs overlap — the fixed per-job costs
@@ -160,21 +150,15 @@ class ValidationRunner:
             # wall time to a materialized verdict (rules run concurrently,
             # so these overlap — they are per-rule latencies, not a sum)
             rule_secs[rule.rule_id] = round(_time.time() - t0, 3)
-            return rows, viol, res.stats
+            return rows, viol
 
         with ThreadPoolExecutor(max_workers=max(1, len(self.rules))) as ex:
             futures = [ex.submit(eval_rule, r) for r in self.rules]
             results = [f.result() for f in futures]
         rows_validated = sum(shared.counts_by_part(KIND_ROWS).values())
 
-        verdict_rows: list[dict] = []
-        violation_frames: list[DataFrame] = []
-        stats_frames: list[DataFrame] = []
-        for rows, viol, stats in results:
-            verdict_rows.extend(rows)
-            violation_frames.append(viol)
-            if stats is not None:
-                stats_frames.append(stats)
+        verdict_rows = [row for rows, _ in results for row in rows]
+        violation_frames = [viol for _, viol in results]
 
         violations = canonical_violations(_union_all(violation_frames))
         if self.output_dir:
@@ -264,11 +248,11 @@ class ValidationRunner:
             }
             with open(metrics_path, "w") as f:
                 _json.dump(metrics, f, indent=1, sort_keys=True)
-        for fr in (violation_frames if self.output_dir else []) + stats_frames:
-            try:
-                fr.unpersist()
-            except Exception:
-                pass
+            for fr in violation_frames:
+                try:
+                    fr.unpersist()
+                except Exception:
+                    pass
 
         # manifest update: per-part verdict = all rules passed
         by_part: dict[int, dict[str, dict]] = {}

@@ -23,16 +23,22 @@ kinds 0/1 use — in the hashed-domain fallback the profile keys are no longer
 token ids at all, so the bound check always runs on the raw values BEFORE any
 hashing.
 
-Kinds 0/1 are drift's signals and are emitted only for non-null sources (a
-null source has no reference profile; such rows still count in kinds 2-5).
-Kind 5 covers every row exactly once, so its total is the row count and its
-per-source groups give referential its unknown-source count and column_stats
-its null/non-positive counts without another scan.
+Kind 0 covers every row with a non-null ``n_tok``, null source included:
+drift scores only the non-null sources (a null source has no reference
+profile), while column_stats reads ``n_tok``'s min, max, sum and histogram
+over all rows from it. Kind 1 is emitted only for non-null sources, and not
+at all for a pass built without profiles (``build_shared`` with no
+``reference_profiles``: an empty token domain). Kind 5 covers every row
+exactly once, so its total is the row count and its per-source groups give
+referential its unknown-source count and column_stats its null/non-positive
+counts without another scan.
 
 Consumers read the partials through ``SharedTokenStats.table()``: ONE
 memoized driver collect (``partials.toArrow()``), so the suite runs the
 partials plan once however many rules ask, and each rule's verdict is a
-driver function of the merged partials.
+driver function of the merged partials. ``build_shared`` makes the pass a
+``RuleContext`` asks for; ``shared_for`` hands a rule the suite's pass, or
+builds one when the rule runs alone.
 
 Vectorization: `mapInArrow` hands us pyarrow RecordBatches; the token lists
 are consumed as (lengths, flat values) — no per-row ndarray conversion, no
@@ -216,6 +222,48 @@ class SharedTokenStats:
     def part_ids(self) -> list[int]:
         """The partitions holding at least one row."""
         return sorted(self.counts_by_part(KIND_ROWS))
+
+
+def build_shared(df: DataFrame, ctx, direct_files=None) -> SharedTokenStats:
+    """The shared pass a ``RuleContext`` asks for: token_bounds' vocab
+    bounds from ``ctx.params`` (kind 4), drift's domain caps
+    (``max_ref_tokens``, ``hash_buckets``) from ``ctx.params["drift"]`` and
+    the reference domain from ``ctx.reference_profiles`` — with no profiles,
+    an empty domain and so no kind-1 rows."""
+    lo, hi = vocab_bounds(ctx.params)
+    if ctx.reference_profiles is None:
+        return SharedTokenStats(df, 0, -1, True, vocab_lo=lo, vocab_hi=hi,
+                                direct_files=direct_files)
+    d = ctx.params.get("drift") or {}
+    return SharedTokenStats.from_profiles(
+        df,
+        ctx.reference_profiles,
+        max_ref_tokens=int(d.get("max_ref_tokens", DEFAULT_MAX_REF_TOKENS)),
+        hash_buckets=int(d.get("hash_buckets", DEFAULT_HASH_BUCKETS)),
+        vocab_lo=lo,
+        vocab_hi=hi,
+        direct_files=direct_files,
+    )
+
+
+def vocab_bounds(params: dict | None) -> tuple[int, int]:
+    """token_bounds' [vocab_lo, vocab_size) from rule params."""
+    from ..operators.token_bounds import DEFAULTS
+
+    p = {**DEFAULTS, **(params or {})}
+    return int(p["vocab_lo"]), int(p["vocab_size"])
+
+
+def shared_for(df: DataFrame, ctx) -> SharedTokenStats:
+    """``ctx.shared`` when the suite built it for the same vocab bounds;
+    otherwise (a rule run alone, or a pass built for other bounds) a fresh
+    ``build_shared`` pass over ``df``."""
+    shared = ctx.shared
+    if shared is not None and (shared.vocab_lo, shared.vocab_hi) == vocab_bounds(
+        ctx.params
+    ):
+        return shared
+    return build_shared(df, ctx)
 
 
 def _decode_ntok(masked: np.ndarray) -> np.ndarray:
@@ -460,7 +508,7 @@ def _make_batch_gen(
             defects = b.column(5).to_numpy(zero_copy_only=False).astype(np.int64)
 
             # group labels: factorize (part_id, source) — vectorized.
-            # null sources get the sentinel code n_src (kinds 2-5 only).
+            # null sources get the sentinel code n_src (every kind but 1).
             d = pc.dictionary_encode(src_arr)
             idx = d.indices.to_numpy(zero_copy_only=False)
             n_src = len(d.dictionary)
@@ -487,12 +535,11 @@ def _make_batch_gen(
                 out["key"].append(np.asarray(key, dtype=np.int64))
                 out["cnt"].append(np.asarray(cnt, dtype=np.int64))
 
-            # ---- kind 0: n_tok histogram (non-null n_tok, non-null source) -
+            # ---- kind 0: n_tok histogram (every row with a non-null n_tok) --
             valid = ~np.isnan(ntok) if ntok.dtype.kind == "f" else np.ones(n, bool)
-            m0 = valid & row_src_ok
-            nt = ntok[m0].astype(np.int64)
+            nt = ntok[valid].astype(np.int64)
             if nt.size:
-                comb = (ginv[m0] << _NTOK_BITS) | (nt & _NTOK_MASK)
+                comb = (ginv[valid] << _NTOK_BITS) | (nt & _NTOK_MASK)
                 u, c = np.unique(comb, return_counts=True)
                 emit((u >> _NTOK_BITS).astype(np.int64), KIND_NTOK,
                      _decode_ntok(u & _NTOK_MASK), c)

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..plans.rules import RuleContext, canonical_violations, default_rules
+from ..plans.shared import build_shared
 
 SEQ_STREAM_SCHEMA = T.StructType(
     [
@@ -70,6 +71,9 @@ def validate_stream(
             reference_profiles=reference_profiles,
             part_ids=part_ids,
         )
+        # one shared token pass per micro-batch, as the batch runner builds
+        # per run: the data rules take their verdicts from its one collect
+        ctx.shared = build_shared(batch_df, ctx)
         verdicts: list[dict] = []
         violations = None
         for rule in rules:

@@ -6,13 +6,12 @@ from __future__ import annotations
 import os
 
 from lk_data_test_spark.datagen import GenConfig, generate
-from lk_data_test_spark.operators.column_stats import partition_stats
 from lk_data_test_spark.plans.incremental_stats import (
     IncrementalStatsValidator,
-    _row_to_stats,
     merge_stats,
 )
 from lk_data_test_spark.sources.catalog import PartitionedTable
+from tests.conftest import stats_oracle
 
 
 def test_merge_stats_is_exact_and_commutative():
@@ -71,11 +70,7 @@ def test_incremental_stats_delta_merge(spark, tmp_path):
     assert r2["modes"][1] == "delta"
     assert all(m == "skip" for p, m in r2["modes"].items() if p != 1)
     assert r2["scanned_rows"] == 50
-    fresh = partition_stats(
-        table.read_partitions(spark, [1]), 16, 64
-    ).collect()
-    assert len(fresh) == 1
-    assert r2["parts"][1]["stats"] == _row_to_stats(fresh[0])
+    assert r2["parts"][1]["stats"] == stats_oracle(table.part_dir(1))
 
     # idempotent: third run reads nothing
     r3 = v2.run(spark)
@@ -89,6 +84,35 @@ def test_incremental_stats_delta_merge(spark, tmp_path):
     r4 = v2.run(spark)
     assert r4["modes"][3] == "full"
     assert all(m == "skip" for p, m in r4["modes"].items() if p != 3)
+
+
+def test_incremental_stats_all_null_n_tok(spark, tmp_path):
+    """A partition whose every n_tok is null: sum 0, min/max None, all rows
+    in histogram bucket -1, and the partition fails on null_n_tok."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path / "seq" / "part_id=0"
+    d.mkdir(parents=True)
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array([f"d{i}" for i in range(4)]),
+                "tokens": pa.array([[1, 2]] * 4, type=pa.list_(pa.int32())),
+                "n_tok": pa.array([None] * 4, type=pa.int32()),
+                "source": pa.array(["cases"] * 4),
+            }
+        ),
+        str(d / "part-0.parquet"),
+    )
+    table = PartitionedTable(str(tmp_path / "seq"))
+    r = IncrementalStatsValidator(table, str(tmp_path / "store.json")).run(spark)
+    stats = r["parts"][0]["stats"]
+    assert stats == stats_oracle(str(d))
+    assert stats["sum_n_tok"] == 0
+    assert stats["min_n_tok"] is None and stats["max_n_tok"] is None
+    assert stats["null_n_tok"] == 4 and stats["n_tok_hist"] == {"-1": 4}
+    assert r["parts"][0]["passed"] is False and r["parts"][0]["metric"] == 4.0
 
 
 def test_incremental_drift_delta_matches_batch(spark, tmp_path):

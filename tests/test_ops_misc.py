@@ -735,23 +735,6 @@ def test_sessionize_gap_boundary(spark):
     assert got == {1: 1, 2: 1, 3: 2, 4: 1}
 
 
-def test_column_stats_shared_path_never_reads_tokens(spark, corpus_dir):
-    """With the suite's shared token scan, the column_stats aggregation plan
-    must scan only the narrow columns (tokens pruned out of ReadSchema)."""
-    from lk_data_test_spark.operators.column_stats import partition_stats_no_tokens
-    from lk_data_test_spark.sources.catalog import PartitionedTable
-
-    df = PartitionedTable(f"{corpus_dir}/sequences").read(spark)
-    plan = (
-        partition_stats_no_tokens(df, 4, 64)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    scan = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
-    assert scan and all("tokens" not in ln for ln in scan)
-
-
 def test_vocab_ids_reuses_single_range_shuffle(spark):
     """vocab_ids' two-stage rank derives local ranks AND per-partition counts
     from the same range-partitioned frame; correctness requires both branches

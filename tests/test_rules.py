@@ -15,7 +15,7 @@ from lk_data_test_spark.datagen import expected_failing_parts
 from lk_data_test_spark.operators import column_stats, drift, referential, uniqueness
 from lk_data_test_spark.plans.rules import RuleContext
 from lk_data_test_spark.sources.catalog import PartitionedTable
-from tests.conftest import TEST_CFG
+from tests.conftest import TEST_CFG, stats_oracle
 
 EXPECTED = expected_failing_parts(TEST_CFG)
 
@@ -49,13 +49,13 @@ def test_referential(ctx_df):
 
 def test_token_bounds(ctx_df):
     """badcol parts plant exactly 5 rows with an out-of-vocab first token
-    (3 above vocab, 2 negative). Both screen paths — standalone JVM
-    aggregate and the shared-scan kind-4 partials — must agree exactly."""
+    (3 above vocab, 2 negative). The rule run alone (it builds its own
+    shared pass) and the rule handed the suite's pass must agree exactly."""
     from lk_data_test_spark.operators import token_bounds
     from lk_data_test_spark.plans.shared import SharedTokenStats
 
     ctx, df = ctx_df
-    res = token_bounds.evaluate(df, ctx)  # ctx.shared is None -> JVM path
+    res = token_bounds.evaluate(df, ctx)  # ctx.shared is None -> own pass
     assert _failing(res.verdicts) == EXPECTED["token_bounds"]
     by_part = {
         r["part_id"]: r["metric"] for r in res.verdicts.collect()
@@ -93,7 +93,7 @@ def test_token_bounds(ctx_df):
 
 def test_token_bounds_shared_scan_mismatched_vocab_falls_back(ctx_df):
     """A shared scan built for a DIFFERENT vocab bound must not be consumed:
-    the rule falls back to its own JVM screen and still gets the right
+    the rule builds its own pass from its context and still gets the right
     answer (guards against silently reusing stale kind-4 partials)."""
     from lk_data_test_spark.operators import token_bounds
     from lk_data_test_spark.plans.shared import SharedTokenStats
@@ -129,8 +129,10 @@ def test_column_stats(ctx_df):
     assert len(v) == 6 * len(EXPECTED["column_stats"])
     details = {r["detail"] for r in v}
     assert "null_n_tok" in details and "len_mismatch" in details
-    # stats table sanity
-    stats = {r["part_id"]: r for r in res.stats.collect()}
+    # stats sanity, from the stats function over the rule's own pass
+    from lk_data_test_spark.plans.shared import build_shared
+
+    stats = column_stats.part_stats(build_shared(df, ctx))
     p = next(iter(EXPECTED["column_stats"]))
     assert stats[p]["row_count"] == TEST_CFG.rows_per_part
     assert stats[p]["null_n_tok"] == 2
@@ -374,24 +376,22 @@ def test_schema_check(ctx_df):
     assert len(v) == len(defects) * len(ctx.part_ids)
 
 
-def test_shared_scan_matches_legacy(ctx_df):
-    """column_stats/drift through the shared token scan must produce exactly
-    the per-partition stats and verdicts of their standalone (legacy) plans."""
-    from lk_data_test_spark.operators.column_stats import partition_stats
+def test_shared_scan_matches_legacy(ctx_df, corpus_dir):
+    """column_stats' per-partition stats from the shared token scan equal
+    the parquet oracle, and drift gives the same verdicts from a shared pass
+    handed in as from the one it builds alone."""
     from lk_data_test_spark.plans.rules import RuleContext
     from lk_data_test_spark.plans.shared import SharedTokenStats
 
     ctx, df = ctx_df
-    shared = SharedTokenStats.from_profiles(df, ctx.reference_profiles)
-
-    legacy = {r["part_id"]: r.asDict() for r in partition_stats(df, 4, 64).collect()}
-    fused = {
-        r["part_id"]: r.asDict()
-        for r in partition_stats(df, 4, 64, shared=shared).collect()
-    }
-    assert legacy.keys() == fused.keys()
-    for pid in legacy:
-        assert legacy[pid] == fused[pid], f"part {pid}"
+    table = PartitionedTable(f"{corpus_dir}/sequences")
+    shared = SharedTokenStats.from_profiles(
+        df, ctx.reference_profiles, vocab_lo=0, vocab_hi=32768
+    )
+    fused = column_stats.part_stats(shared, 64)
+    assert sorted(fused) == table.partition_ids()
+    for pid in fused:
+        assert fused[pid] == stats_oracle(table.part_dir(pid), 64), f"part {pid}"
 
     shared_ctx = RuleContext(
         spark=ctx.spark,
@@ -576,6 +576,101 @@ def test_shared_verdicts_match_standalone(ctx_df, corpus_dir, defect_corpus, cor
             for rule in ("column_stats", "referential")
         }
         assert (4, "drift") in failing
+
+
+@pytest.mark.parametrize("corpus", ["generated", "defects"])
+def test_part_stats_match_parquet_oracle(ctx_df, corpus_dir, defect_corpus, corpus):
+    """The stats dict of every partition equals the one computed straight
+    from its parquet files, over both feeds of the shared pass — on the
+    defect corpus too (null doc_id, null source with a non-null n_tok, null
+    n_tok, n_tok = 0, null tokens, unknown source)."""
+    from lk_data_test_spark.plans.shared import SharedTokenStats
+
+    ctx, _ = ctx_df
+    table = PartitionedTable(
+        f"{corpus_dir}/sequences" if corpus == "generated" else defect_corpus
+    )
+    df = table.read(ctx.spark)
+    oracle = {pid: stats_oracle(table.part_dir(pid)) for pid in table.partition_ids()}
+    for direct_files in (None, _direct_files(table)):
+        shared = SharedTokenStats.from_profiles(
+            df, ctx.reference_profiles, direct_files=direct_files
+        )
+        assert column_stats.part_stats(shared) == oracle
+    if corpus == "defects":
+        assert all(
+            s["null_source"] == 1 and s["nonpos_n_tok"] == 1 for s in oracle.values()
+        )
+
+
+def test_verdicts_from_collected_partials_submit_no_jobs(ctx_df, corpus_dir):
+    """Once the shared partials are collected, the column_stats,
+    token_bounds and referential verdicts are driver work over them: the
+    three rules' evaluate and verdict collect submit no Spark job (the
+    dimension is handed in as a local relation, as a driver-side table)."""
+    from lk_data_test_spark.operators import token_bounds
+    from lk_data_test_spark.plans.rules import local_frame
+    from lk_data_test_spark.plans.shared import build_shared
+
+    ctx, df = ctx_df
+    table = PartitionedTable(f"{corpus_dir}/sequences")
+    allowed = ctx.allowed_sources
+    suite = RuleContext(
+        spark=ctx.spark,
+        allowed_sources=local_frame(
+            ctx.spark, [tuple(r) for r in allowed.collect()], allowed.schema
+        ),
+        reference_profiles=ctx.reference_profiles,
+        part_ids=table.partition_ids(),
+    )
+    suite.shared = build_shared(df, suite, direct_files=_direct_files(table))
+    suite.shared.table()
+    sc = ctx.spark.sparkContext
+    before = set(sc.statusTracker().getJobIdsForGroup(None))
+    failing = set()
+    for rule in (column_stats, token_bounds, referential):
+        verdicts = rule.evaluate(df, suite).verdicts.collect()
+        failing |= {(r["part_id"], r["rule_id"]) for r in verdicts if not r["passed"]}
+    assert set(sc.statusTracker().getJobIdsForGroup(None)) == before
+    assert failing == {
+        (pid, rule)
+        for rule in ("column_stats", "token_bounds", "referential")
+        for pid in EXPECTED[rule]
+    }
+
+
+def test_suite_honours_drift_domain_caps(ctx_df, corpus_dir, tmp_path):
+    """A user-set drift domain cap reaches the suite's shared pass: the
+    runner and drift run alone give equal verdicts, both over the hashed
+    domain."""
+    from lk_data_test_spark.plans.rules import Rule
+    from lk_data_test_spark.plans.runner import ValidationRunner
+
+    ctx, df = ctx_df
+    params = {"drift": {"max_ref_tokens": 10}}
+    res = ValidationRunner(
+        ctx.spark,
+        PartitionedTable(f"{corpus_dir}/sequences"),
+        allowed_sources=ctx.allowed_sources,
+        reference_profiles=ctx.reference_profiles,
+        rules=[Rule("drift", "1.0", drift.evaluate)],
+        manifest_path=str(tmp_path / "manifest.json"),
+        params=params,
+    ).run(force=True)
+    fields = ("part_id", "rule_id", "passed", "metric", "threshold", "detail")
+    suite = sorted(tuple(v[f] for f in fields) for v in res.verdicts)
+    alone = drift.evaluate(
+        df,
+        RuleContext(
+            spark=ctx.spark,
+            allowed_sources=ctx.allowed_sources,
+            reference_profiles=ctx.reference_profiles,
+            part_ids=ctx.part_ids,
+            params=params,
+        ),
+    )
+    assert suite == sorted(tuple(r) for r in alone.verdicts.collect())
+    assert all("domain=hashed:" in v[-1] for v in suite)
 
 
 def test_shared_table_runs_the_partials_once(ctx_df, corpus_dir):
