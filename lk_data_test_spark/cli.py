@@ -90,9 +90,9 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument(
         "--incremental-stats",
         action="store_true",
-        help="file-delta incremental column-stats validation "
+        help="file-delta incremental validation of the data-rule suite "
         "(plans/incremental_stats.py): partitions whose file set only GREW "
-        "scan just the added files and merge the stored mergeable stats; "
+        "scan just the added files and merge the stored mergeable partials; "
         "unchanged partitions scan nothing; rewrites fall back to full",
     )
     ap.add_argument(

@@ -51,13 +51,16 @@ BAD_FIELDS = (
 )
 
 
-def part_stats(shared, bucket_width: int = DEFAULTS["bucket_width"]) -> dict[int, dict]:
+def part_stats(
+    shared, bucket_width: int = DEFAULTS["bucket_width"], part_ids=()
+) -> dict[int, dict]:
     """part_id -> its stats dict, from the collected partials of ``shared``
     (kinds 0/2/3/5; no Spark job beyond that collect): the counters
     ``row_count``, the six ``BAD_FIELDS`` and ``sum_n_tok``; ``min_n_tok`` /
     ``max_n_tok`` (None when every n_tok is null); and ``n_tok_hist``,
     bucket ``floor(n_tok / bucket_width)`` -> rows as a str-keyed dict in
-    bucket order, null n_tok counted in bucket -1."""
+    bucket order, null n_tok counted in bucket -1. Each of ``part_ids``
+    without rows gets the stats of no rows (zeros, None, {})."""
     t = shared.rows(KIND_NTOK, KIND_LEN_MISMATCH, KIND_NULL_TOKENS, KIND_ROWS)
     pid, kind, key, cnt = (
         t[c].to_numpy(zero_copy_only=False).astype(np.int64)
@@ -66,8 +69,11 @@ def part_stats(shared, bucket_width: int = DEFAULTS["bucket_width"]) -> dict[int
     null_src = t["source"].is_null().to_numpy(zero_copy_only=False)
     order = np.argsort(pid, kind="stable")
     bounds = np.flatnonzero(np.diff(pid[order])) + 1
+    groups = {int(pid[g[0]]): g for g in (np.split(order, bounds) if len(order) else [])}
+    for p in part_ids:
+        groups.setdefault(int(p), order[:0])
     out: dict[int, dict] = {}
-    for idx in (np.split(order, bounds) if len(order) else []):
+    for p, idx in groups.items():
         k, key_, cnt_ = kind[idx], key[idx], cnt[idx]
         census = k == KIND_ROWS
 
@@ -95,7 +101,7 @@ def part_stats(shared, bucket_width: int = DEFAULTS["bucket_width"]) -> dict[int
         s["n_tok_hist"] = {
             str(int(b)): int(c) for b, c in zip(buckets, hist) if c
         }
-        out[int(pid[idx[0]])] = s
+        out[p] = s
     return out
 
 

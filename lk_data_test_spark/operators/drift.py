@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.rules import VERDICT_SCHEMA, RuleContext, RuleResult, local_frame
+from ..plans.shared import HASH_MULT, KIND_NTOK, KIND_TOKEN, shared_for
 
 RULE_ID = "drift"
 
@@ -138,6 +139,28 @@ def drift_signal(
     return ks, float(np.abs(obs - refv).sum()), n_docs
 
 
+def score_groups(rows, quantiles: dict, token_freq: dict, p: dict) -> list[tuple]:
+    """(part_id, source, ks, l1, n_docs, score) of every (part, source) group
+    of ``rows`` (kind-0/1 partials, a pyarrow Table) with at least
+    ``p["min_docs"]`` documents, in (part_id, source) order; score =
+    max(ks / ks_threshold, l1 / l1_threshold). Null sources are not scored
+    (no reference profile)."""
+    ref_idx = ref_index(token_freq)
+    groups = rows.to_pandas()
+    scored = []
+    for (pid, source), g in groups.groupby(["part_id", "source"], sort=True):
+        h = g[g["kind"] == KIND_NTOK]
+        t = g[g["kind"] == KIND_TOKEN]
+        ks, l1, n_docs = drift_signal(
+            h["key"].to_numpy(), h["cnt"].to_numpy(), t["key"], t["cnt"],
+            quantiles.get(source), token_freq.get(source, {}), ref_idx,
+        )
+        if n_docs >= float(p["min_docs"]):
+            score = max(ks / p["ks_threshold"], l1 / p["l1_threshold"])
+            scored.append((int(pid), source, ks, l1, n_docs, score))
+    return scored
+
+
 def evaluate(df: DataFrame, ctx: RuleContext) -> RuleResult:
     p = resolve_params(ctx.params.get(RULE_ID))
     profiles = ctx.reference_profiles
@@ -146,8 +169,6 @@ def evaluate(df: DataFrame, ctx: RuleContext) -> RuleResult:
 
     # ---- stage 1: tagged partials — the suite's shared pass (ONE scan of
     # `tokens` for the whole suite), or one built from ctx when run alone
-    from ..plans.shared import HASH_MULT, KIND_NTOK, KIND_TOKEN, shared_for
-
     shared = shared_for(df, ctx)
 
     if shared.hash_mod:
@@ -185,20 +206,9 @@ def evaluate(df: DataFrame, ctx: RuleContext) -> RuleResult:
 
     # ---- stage 2, on the driver: KS + L1 per (part_id, source) over the
     # shared collect (<= parts x sources groups of bounded size)
-    ref_idx = ref_index(token_freq)
-    groups = shared.rows(KIND_NTOK, KIND_TOKEN).to_pandas()
-    ks_thr, l1_thr = p["ks_threshold"], p["l1_threshold"]
-    scored = []
-    for (pid, source), g in groups.groupby(["part_id", "source"], sort=True):
-        h = g[g["kind"] == KIND_NTOK]
-        t = g[g["kind"] == KIND_TOKEN]
-        ks, l1, n_docs = drift_signal(
-            h["key"].to_numpy(), h["cnt"].to_numpy(), t["key"], t["cnt"],
-            quantiles.get(source), token_freq.get(source, {}), ref_idx,
-        )
-        if n_docs >= float(p["min_docs"]):
-            score = max(ks / ks_thr, l1 / l1_thr)
-            scored.append((int(pid), source, ks, l1, n_docs, score))
+    scored = score_groups(
+        shared.rows(KIND_NTOK, KIND_TOKEN), quantiles, token_freq, p
+    )
 
     # the scores as a local relation: Spark's format_string builds the
     # violation detail (Java rounds %.4f ties half-up, Python half-even)

@@ -31,15 +31,29 @@ from ..plans.shared import shared_for
 RULE_ID = "referential"
 
 
+def active_sources(allowed: DataFrame) -> DataFrame:
+    return allowed.filter(F.col("active")).select("source")
+
+
+def unknown_by_part(shared, allowed: DataFrame) -> dict[int, int]:
+    """part_id -> rows whose source is null or not active in ``allowed``
+    (one collect of the active sources), from the kind-5 census of
+    ``shared``; partitions with none are absent."""
+    known = {r["source"] for r in active_sources(allowed).collect()}
+    unknown: dict[int, int] = {}
+    for pid, source, _, rows in shared.census():
+        if source is None or source not in known:
+            unknown[pid] = unknown.get(pid, 0) + rows
+    return unknown
+
+
 def evaluate(df: DataFrame, ctx: RuleContext) -> RuleResult:
     allowed = ctx.allowed_sources
     if allowed is None:
         raise ValueError("referential rule requires ctx.allowed_sources")
-    active = allowed.filter(F.col("active")).select("source")
-
     violations = (
         df.select("part_id", "doc_id", "source", "n_tok")
-        .join(F.broadcast(active), "source", "left_anti")
+        .join(F.broadcast(active_sources(allowed)), "source", "left_anti")
         .select(
             F.col("part_id").cast("int"),
             F.lit(RULE_ID).alias("rule_id"),
@@ -50,11 +64,7 @@ def evaluate(df: DataFrame, ctx: RuleContext) -> RuleResult:
         )
     )
     shared = shared_for(df, ctx)
-    known = {r["source"] for r in active.collect()}
-    unknown: dict[int, int] = {}
-    for pid, source, _, rows in shared.census():
-        if source is None or source not in known:
-            unknown[pid] = unknown.get(pid, 0) + rows
+    unknown = unknown_by_part(shared, allowed)
     part_ids = (
         sorted(int(x) for x in ctx.part_ids)
         if ctx.part_ids is not None

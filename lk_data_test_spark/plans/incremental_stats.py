@@ -1,59 +1,55 @@
-"""File-delta INCREMENTAL validation: validate only appended files, merge
-mergeable partition stats.
+"""File-delta INCREMENTAL validation: read only the files a run has not
+validated yet, and merge their mergeable partials into the stored ones.
 
 The checkpoint manifest (plans/manifest.py) resumes at PARTITION granularity:
 a partition whose snapshot changed re-runs in full. Under append-only
 ingestion (the Iceberg norm — snapshots that only ADD data files) that
-re-reads every old row to re-derive statistics that are, for the stats rule,
-perfectly MERGEABLE: counts, null/defect counters and sums add; min/max take
-min/max; the bucketed n_tok histogram adds bucket-wise. This module is the
-fast path on top: per partition it stores the validated (file name -> size)
-set plus the merged stats row, and on re-run
+re-reads every old row. This module is the fast path on top. Per partition
+its store holds the validated (file name -> size) set and the partition's
+shared partials (plans/shared.py, kinds 0-5: n_tok histogram, reference-token
+counts, len-mismatch, null-tokens and out-of-vocab rows, row census). They
+are count rows keyed by (source, kind, key) that merge by addition, so the
+stored partials plus those of the added files ARE the partials of a full
+recompute. A run lists every partition once and classifies it:
 
   - skip   — file set unchanged: nothing read;
-  - delta  — pure append (every previously validated file still present with
-    the same size): ONLY the added files are scanned, one shared token pass
-    (plans/shared.py) over the union of all partitions' delta files, then a
-    driver-side merge of two tiny stats rows per partition;
-  - full   — anything else (rewrite, delete, size change, first sight):
-    correctness over cleverness, the whole partition re-runs.
+  - delta  — pure append (every validated file still present with the same
+    size): only the added files are read, and their partials add to the
+    stored ones;
+  - full   — anything else (rewrite, delete, size change, first sight, an
+    entry of an older store format or recorded for other pass inputs): the
+    whole partition is read, and its partials replace the stored ones.
 
-The merged result is bit-identical to a full recompute (integer sums,
-min/max, exact histogram) — asserted by tests — so delta mode never trades
-accuracy, only I/O: an appended 1% of a partition costs 1% of the scan.
+ONE ``build_shared`` pass reads the files of every full partition and the
+added files of every delta partition through the direct feed. The store
+records exactly the listing that pass read, so a file that lands mid-run is
+read by the next run. The verdicts are the batch rules' own driver functions
+of the merged partials — column_stats ``part_stats`` and ``BAD_FIELDS``,
+token_bounds' kind-4 counts, referential ``unknown_by_part``, drift
+``score_groups`` — so a delta verdict equals a fresh batch evaluation of the
+grown table (asserted by tests). An input that changes while no file does
+(the allowed sources, the drift thresholds, the profiles' quantiles) reaches
+every partition without a scan. The partials themselves depend on two pass
+inputs, the vocab bounds (kind 4) and the reference token domain (kind 1);
+each entry records them, and an entry recorded for other inputs is full.
+Drift's per-partition metric is memoized under a (profiles, params)
+fingerprint, so an all-skip run re-scores nothing.
 
-Reference analog: the idempotent enrich re-runs that delete ONLY derived
-matches and keep everything else (`/root/reference/scripts/
-enrich_fackel_bibls.py:18-25`) — re-expressed as file-level lineage.
+Uniqueness keeps its own store, because its Datasketches HLL state is not a
+shared-pass kind (IncrementalUniquenessValidator): the sketch UNIONS, the
+exact row count adds, and the exact hash-group pass runs only for a
+partition the merged screen flags.
 
-Scale shape (10^12 rows): the per-partition state is one JSON-able stats row
-(a dozen longs + a bounded histogram map) and a file->size dict — O(files),
-never O(rows); the delta scan is one partition-pruned-by-construction job
-over exactly the added files; the merge is driver-side over n_parts tiny
-rows.
+Two inputs fail fast instead of giving a wrong store: hashed-domain profiles
+(their bucket folding is lossy, and stored partials would mix domains; the
+batch drift rule handles them) and ``PartitionedTable(tolerate_corrupt=True)``
+(the direct feed has no ``ignoreCorruptFiles``, and a skipped file must not
+be recorded as validated; ValidationRunner reads such tables).
 
-The whole data-rule suite is incremental here, because every rule's signal
-is (or has) a mergeable form:
-  - column_stats (IncrementalStatsValidator): sums add, min/max take
-    min/max, the bucketed histogram adds bucket-wise — merge is
-    bit-identical to a full recompute.
-  - drift (IncrementalDriftValidator): the shared token partials
-    (plans/shared.py — per (part, source) n_tok histogram + token counts)
-    are count rows that add; the KS/L1 scoring re-derives from the merged
-    table with the batch rule's own drift_signal.
-  - referential (IncrementalReferentialValidator): violations are per-row
-    independent — delta counts ADD to the stored metric.
-  - token_bounds (IncrementalTokenBoundsValidator): same per-row-independent
-    shape as referential — delta OOV-row counts ADD.
-  - uniqueness (IncrementalUniquenessValidator): the Datasketches HLL
-    sketch UNIONS (F.hll_sketch_agg / hll_union_agg) and the exact row
-    count adds; only a partition the MERGED screen flags pays the exact
-    cross-file hash-group pass (duplicates can straddle old and new files,
-    so no delta-only exact check is sound — the screen's job is making the
-    full pass rare). scope="global" adds the cross-partition screen
-    (sum of per-partition estimates vs the union of EVERY stored sketch)
-    with no scan at all on skip/delta runs.
-  - schema is metadata-only per file; the batch rule is already O(1).
+Scale shape: per-partition state is bounded by sources x (|reference tokens|
++ |distinct n_tok|) count rows plus a file->size dict — O(files), never
+O(rows); a run reads exactly the unseen files; verdicts are driver work over
+the merged count rows.
 """
 
 from __future__ import annotations
@@ -62,76 +58,47 @@ import base64
 import hashlib
 import json
 import os
-from functools import reduce
 
-import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators import uniqueness
+from ..operators import drift, referential, uniqueness
 from ..operators.column_stats import BAD_FIELDS, part_stats
-from ..operators.drift import (
-    drift_signal,
-    profile_maps,
-    ref_index,
-    resolve_params,
-)
-from ..operators.token_bounds import has_oov
 from ..sources.catalog import PartitionedTable
 from .manifest import load_store, save_store
 from .rules import RuleContext
 from .shared import (
     KIND_NTOK,
     KIND_OOV_ROWS,
+    KIND_ROWS,
     KIND_TOKEN,
     SharedTokenStats,
     build_shared,
 )
 
-_SUM_FIELDS = (
-    "row_count",
-    "null_doc_id",
-    "null_source",
-    "null_n_tok",
-    "null_tokens",
-    "nonpos_n_tok",
-    "len_mismatch",
-    "sum_n_tok",
+_KEYS = ["part_id", "source", "kind", "key"]
+_PARTIALS = pa.schema(
+    [("part_id", pa.int32()), ("source", pa.string()), ("kind", pa.int32()),
+     ("key", pa.int64()), ("cnt", pa.int64())]
 )
 
 
-def merge_stats(a: dict, b: dict) -> dict:
-    """Merge two partition-stats dicts — exact (integer) and commutative."""
-    out = {k: a[k] + b[k] for k in _SUM_FIELDS}
-    mins = [v for v in (a["min_n_tok"], b["min_n_tok"]) if v is not None]
-    maxs = [v for v in (a["max_n_tok"], b["max_n_tok"]) if v is not None]
-    out["min_n_tok"] = min(mins) if mins else None
-    out["max_n_tok"] = max(maxs) if maxs else None
-    hist = dict(a["n_tok_hist"])
-    for k, v in b["n_tok_hist"].items():
-        hist[k] = hist.get(k, 0) + v
-    out["n_tok_hist"] = hist
-    return out
-
-
-def _empty_stats() -> dict:
-    d = {k: 0 for k in _SUM_FIELDS}
-    d["min_n_tok"] = None
-    d["max_n_tok"] = None
-    d["n_tok_hist"] = {}
-    return d
-
-
 def classify_partitions(
-    table: PartitionedTable, entries: dict[str, dict]
+    table: PartitionedTable,
+    entries: dict[str, dict],
+    listing: dict[int, dict[str, int]] | None = None,
 ) -> tuple[dict[int, list[str]], list[int], list[int]]:
-    """File-level lineage triage shared by the incremental validators:
+    """File-level lineage triage of ``listing`` (part_id -> {file: size};
+    the table is listed now when it is None) against the stored entries:
     -> (delta part -> added file paths, full parts, skipped parts)."""
+    if listing is None:
+        listing = {pid: table.part_files(pid) for pid in table.partition_ids()}
     delta: dict[int, list[str]] = {}
     full: list[int] = []
     skip: list[int] = []
-    for pid in table.partition_ids():
-        cur = table.part_files(pid)
+    for pid, cur in listing.items():
         prior = entries.get(str(pid))
         if prior is None:
             full.append(pid)
@@ -149,99 +116,81 @@ def classify_partitions(
     return delta, full, skip
 
 
-def _union_with_part_ids(spark: SparkSession, delta: dict[int, list[str]]):
-    """Union every partition's added files with its literal part_id
-    (directory-derived columns are absent when reading file paths)."""
-    return reduce(
-        DataFrame.unionByName,
-        [
-            spark.read.parquet(*paths).withColumn(
-                "part_id", F.lit(pid).cast("int")
-            )
-            for pid, paths in delta.items()
-        ],
-    )
-
-
-def _shared_stats(df, profiles=None, **params) -> SharedTokenStats:
-    """The shared token pass over ``df`` (``build_shared`` with these rule
-    params). Hashed-domain profiles (the pathological-vocabulary fallback)
-    are refused: their bucket folding is a lossy transform, and stored
-    partials would mix domains."""
-    shared = build_shared(
-        df,
-        RuleContext(
-            spark=df.sparkSession, reference_profiles=profiles, params=params
-        ),
-    )
-    if shared.hash_mod:
-        raise ValueError(
-            "hashed-domain profiles are not supported incrementally; "
-            "run the batch drift rule"
-        )
-    return shared
-
-
-def _drift_partials(shared: SharedTokenStats) -> dict[int, list]:
-    """part_id -> [source, kind, key, cnt] for the drift kinds of the
-    collected partials, null sources dropped (drift scores none, and the
-    store sorts by source)."""
-    out: dict[int, list] = {}
-    for r in shared.rows(KIND_NTOK, KIND_TOKEN).to_pylist():
-        if r["source"] is not None:
-            out.setdefault(r["part_id"], []).append(
-                [r["source"], r["kind"], r["key"], r["cnt"]]
-            )
-    return out
-
-
 def _count_by_part(df) -> dict[int, int]:
     rows = df.groupBy("part_id").agg(F.count(F.lit(1)).alias("n")).collect()
     return {int(r["part_id"]): int(r["n"]) for r in rows}
 
 
 class _IncrementalValidator:
-    """What every incremental validator shares: the file-lineage JSON store,
-    the full/delta scan skeleton and the per-partition store record."""
+    """What both incremental stores share: the file-lineage JSON store, the
+    one listing a run classifies, reads and records, and the report shape."""
 
     _indent: int | None = 1  # JSON indent of the store file
 
     def __init__(self, table: PartitionedTable, store_path: str):
+        if table.tolerate_corrupt:
+            raise ValueError(
+                "incremental validation reads every listed file directly and "
+                "cannot skip a corrupt one; validate a tolerate_corrupt table "
+                "with ValidationRunner"
+            )
         self.table = table
         self.store_path = store_path
         self.entries: dict[str, dict] = load_store(store_path)
+        self.listing: dict[int, dict[str, int]] = {}
 
     def _save(self) -> None:
         save_store(self.store_path, self.entries, self._indent)
 
-    def _scan(self, spark, delta, full, scan, precomputed=None) -> dict:
-        """{"full": {pid: x}, "delta": {pid: x}} — ONE ``scan`` job over the
-        full partitions and ONE over every partition's added files, or the
-        same-shaped inputs the fused token pass (run_incremental_suite)
-        precomputed."""
-        if precomputed is not None:
-            return precomputed
-        return {
-            "full": scan(self.table.read_partitions(spark, full)) if full else {},
-            "delta": scan(_union_with_part_ids(spark, delta)) if delta else {},
+    def _classify(self, entries: dict[str, dict]):
+        """List the table once (the listing this run reads and records) and
+        classify it against ``entries``."""
+        self.listing = {
+            pid: self.table.part_files(pid) for pid in self.table.partition_ids()
         }
+        return classify_partitions(self.table, entries, self.listing)
+
+    def _files(self, pids) -> list[tuple[int, str]]:
+        """(part_id, path) of every listed file of ``pids``."""
+        return [
+            (pid, os.path.join(self.table.part_dir(pid), f))
+            for pid in pids
+            for f in sorted(self.listing[pid])
+        ]
+
+    def _read(self, spark: SparkSession, files: list[tuple[int, str]]) -> DataFrame:
+        """Exactly these files, ``part_id`` derived from their paths."""
+        return spark.read.option("basePath", self.table.path).parquet(
+            *(path for _, path in files)
+        )
 
     def _record(self, pid: int, **state) -> None:
-        self.entries[str(pid)] = {"files": self.table.part_files(pid), **state}
+        self.entries[str(pid)] = {"files": self.listing[pid], **state}
 
     @staticmethod
-    def _report(results: dict[int, dict], **extra) -> dict:
+    def _report(results: dict[int, dict]) -> dict:
         modes = {pid: r["mode"] for pid, r in sorted(results.items())}
-        return {"parts": results, **extra, "modes": modes}
+        return {"parts": results, "modes": modes}
+
+
+def _digest(obj) -> str:
+    return hashlib.sha256(json.dumps(obj, default=str).encode()).hexdigest()[:16]
 
 
 class IncrementalStatsValidator(_IncrementalValidator):
-    """Incremental column-stats validation with file-level lineage.
+    """The store of merged per-partition shared partials, and every verdict
+    they give.
 
-    ``run(spark)`` returns {part_id: {"mode", "passed", "metric", "stats"}}
-    and persists the merged state; ``scanned_rows`` on the result object
-    reports exactly how many rows the run read (the delta-mode guarantee).
+    ``run(spark)`` reads the unseen files in one shared pass, merges and
+    stores the partials, and returns the column_stats report: {"parts":
+    {part_id: {"mode", "passed", "metric", "stats"}}, "scanned_rows" (rows
+    this run read), "modes"}. Every rule's report — column_stats and
+    token_bounds always, drift given ``profiles``, referential given
+    ``allowed`` — is left in ``reports``, each {"parts": {part_id: {"mode",
+    "passed", "metric", ...}}, "modes"}. ``params`` are drift's.
     """
+
+    _indent = None  # the partials store is the large one: compact JSON
 
     def __init__(
         self,
@@ -249,253 +198,155 @@ class IncrementalStatsValidator(_IncrementalValidator):
         store_path: str,
         bucket_width: int = 64,
         max_bad: float = 0.0,
+        profiles=None,
+        allowed=None,
+        vocab_lo: int = 0,
+        vocab_size: int = 32768,
+        params: dict | None = None,
     ):
+        self.params = drift.resolve_params(params)
         super().__init__(table, store_path)
         self.bucket_width = bucket_width
         self.max_bad = max_bad
+        self.profiles = profiles
+        self.allowed = allowed
+        self.vocab = [int(vocab_lo), int(vocab_size)]
+        self.reports: dict[str, dict] = {}
 
-    def _stats_for(self, df) -> dict[int, dict]:
-        return part_stats(_shared_stats(df), self.bucket_width)
+    def run(self, spark: SparkSession) -> dict:
+        prof_rows = self.profiles.collect() if self.profiles is not None else []
+        domain = sorted({int(t) for r in prof_rows for t in r["token_freq"]})
+        if len(domain) > int(self.params["max_ref_tokens"]):
+            raise ValueError(
+                "hashed-domain profiles are not supported incrementally; "
+                "run the batch drift rule"
+            )
+        inputs = {"vocab": self.vocab, "domain": _digest(domain)}
+        delta, full, skip = self._classify(
+            {k: e for k, e in self.entries.items() if e.get("inputs") == inputs}
+        )
+        modes = {pid: "full" for pid in full}
+        modes.update({pid: "delta" for pid in delta})
+        modes.update({pid: "skip" for pid in skip})
 
-    def run(self, spark: SparkSession, _precomputed: dict | None = None) -> dict:
-        delta, full, skip = classify_partitions(self.table, self.entries)
-        # delta: ONE job over every partition's added files
-        got = self._scan(spark, delta, full, self._stats_for, _precomputed)
-        results: dict[int, dict] = {}
-        scanned_rows = 0
-        for mode, pids in (("full", full), ("delta", delta)):
-            for pid in pids:
-                s = got[mode].get(pid) or _empty_stats()
-                scanned_rows += s["row_count"]
-                if mode == "delta":
-                    s = merge_stats(self.entries[str(pid)]["stats"], s)
-                results[pid] = {"mode": mode, "stats": s}
-        for pid in skip:
-            results[pid] = {
-                "mode": "skip",
-                "stats": self.entries[str(pid)]["stats"],
-            }
-
-        for pid, res in results.items():
-            bad = sum(res["stats"][k] for k in BAD_FIELDS)
-            res["metric"] = float(bad)
-            res["passed"] = bad <= self.max_bad
-            if res["mode"] != "skip":
-                self._record(pid, stats=res["stats"])
-        self._save()
-        return self._report(results, scanned_rows=scanned_rows)
-
-
-class IncrementalDriftValidator(_IncrementalValidator):
-    """Incremental DRIFT validation: the drift rule's entire signal is the
-    tagged token partials of plans/shared.py — per (source, kind, key) count
-    rows that merge by addition — so appended files contribute partials that
-    merge exactly with the stored ones, and the KS/L1 scoring re-derives
-    from the merged table (same drift_signal, same thresholds as the batch
-    rule).
-
-    Per-partition state is the partials list (bounded by sources x
-    (|reference tokens| + |distinct n_tok|), independent of row count) plus
-    the file lineage. Hashed-domain profiles (the pathological-vocabulary
-    fallback) are refused here — their bucket folding is a lossy transform
-    best kept on the one-shot batch path.
-    """
-
-    _indent = None  # the partials store is the large one: compact JSON
-
-    def __init__(self, table: PartitionedTable, store_path: str, params: dict | None = None):
-        self.params = resolve_params(params)
-        super().__init__(table, store_path)
-
-    def _partials_for(self, spark, df, profiles) -> dict[int, list]:
-        return _drift_partials(_shared_stats(df, profiles, drift=self.params))
-
-    @staticmethod
-    def _merge_partials(a: list, b: list) -> list:
-        acc: dict[tuple, int] = {}
-        for src, kind, key, cnt in list(a) + list(b):
-            k = (src, int(kind), int(key))
-            acc[k] = acc.get(k, 0) + int(cnt)
-        return [
-            [src, kind, key, cnt]
-            for (src, kind, key), cnt in sorted(acc.items())
+        stored = [
+            (pid, *r)
+            for pid in (*delta, *skip)
+            for r in self.entries[str(pid)]["partials"]
         ]
-
-    def _score(self, partials: list, quantiles, token_freq, ref_idx) -> float:
-        """max over (source) groups of max(ks/ks_thr, l1/l1_thr) — the batch
-        rule's drift_signal, driver-side over the tiny merged partials
-        (deterministic: partials are sorted before scoring)."""
-        by_src: dict[str, tuple[list, list]] = {}
-        for src, kind, key, cnt in sorted(partials):
-            by_src.setdefault(src, ([], []))[kind].append((key, cnt))
-        best = 0.0
-        for src, kinds in by_src.items():
-            h, t = (np.array(k, dtype=np.int64).reshape(-1, 2) for k in kinds)
-            ks, l1, n_docs = drift_signal(
-                h[:, 0], h[:, 1], t[:, 0], t[:, 1],
-                quantiles.get(src), token_freq.get(src, {}), ref_idx,
-            )
-            if n_docs < float(self.params["min_docs"]):
-                continue
-            score = max(
-                ks / float(self.params["ks_threshold"]),
-                l1 / float(self.params["l1_threshold"]),
-            )
-            best = max(best, score)
-        return best
-
-    def run(
-        self, spark: SparkSession, profiles, _precomputed: dict | None = None
-    ) -> dict:
-        delta, full, skip = classify_partitions(self.table, self.entries)
-        got = self._scan(
-            spark, delta, full,
-            lambda df: self._partials_for(spark, df, profiles),
-            _precomputed,
+        merged = pa.Table.from_arrays(
+            [
+                pa.array(col, f.type)
+                for col, f in zip(list(zip(*stored)) or [()] * 5, _PARTIALS)
+            ],
+            schema=_PARTIALS,
         )
-        partials_by_part = {pid: sorted(got["full"].get(pid, [])) for pid in full}
-        for pid in delta:
-            partials_by_part[pid] = self._merge_partials(
-                self.entries[str(pid)]["partials"], got["delta"].get(pid, [])
+        files = self._files(full) + [
+            (pid, path) for pid, paths in delta.items() for path in paths
+        ]
+        scanned_rows = 0
+        if files:
+            ctx = RuleContext(
+                spark=spark,
+                reference_profiles=self.profiles,
+                params={
+                    "vocab_lo": self.vocab[0],
+                    "vocab_size": self.vocab[1],
+                    "drift": self.params,
+                },
             )
+            new = build_shared(None, ctx, direct_files=files)
+            scanned_rows = sum(new.counts_by_part(KIND_ROWS).values())
+            merged = (
+                pa.concat_tables([merged, new.table().cast(_PARTIALS)])
+                .group_by(_KEYS, use_threads=False)
+                .aggregate([("cnt", "sum")])
+                .rename_columns([*_KEYS, "cnt"])
+                .sort_by([(k, "ascending") for k in _KEYS])
+            )
+        by_part: dict[int, list] = {pid: [] for pid in (*full, *delta)}
+        for pid, *r in zip(*(c.to_pylist() for c in merged.columns)):
+            if pid in by_part:
+                by_part[pid].append(r)
+        for pid, partials in by_part.items():
+            self._record(pid, inputs=inputs, partials=partials)
+        shared = SharedTokenStats.collected(merged)
 
-        prof_rows = profiles.collect()
-        quantiles, token_freq = profile_maps(prof_rows)
-        ref_idx = ref_index(token_freq)
-
-        # Score memo: the metric is a pure function of (partials, profiles,
-        # params). Re-deriving it for every SKIP partition on every run is
-        # O(n_parts x sources x hist-domain) of driver-side python — at 10^6
-        # partitions that dwarfs the actual delta work. Skip partitions
-        # whose stored fingerprint matches reuse the stored metric; a
-        # profile or threshold change invalidates the fingerprint and
-        # rescored metrics (no scan — the partials are state).
-        fp = hashlib.sha256(
-            json.dumps(
-                [
-                    sorted(
-                        (
-                            r["source"],
-                            [float(q) for q in r["n_tok_quantiles"]],
-                            sorted(
-                                (int(k), float(v))
-                                for k, v in r["token_freq"].items()
-                            ),
-                        )
-                        for r in prof_rows
-                    ),
-                    {k: self.params[k] for k in sorted(self.params)},
-                ],
-                default=str,
-            ).encode()
-        ).hexdigest()
-
-        results: dict[int, dict] = {}
-        for pid in skip:
-            e = self.entries[str(pid)]
-            if e.get("score_fp") == fp and "metric" in e:
-                results[pid] = {
-                    "mode": "skip",
-                    "metric": float(e["metric"]),
-                    "passed": float(e["metric"]) <= 1.0,
+        def report(metric: dict, passed, **extra) -> dict:
+            return self._report(
+                {
+                    pid: {
+                        "mode": modes[pid],
+                        "metric": float(metric.get(pid, 0)),
+                        "passed": passed(float(metric.get(pid, 0))),
+                        **{k: v[pid] for k, v in extra.items()},
+                    }
+                    for pid in sorted(modes)
                 }
-            else:
-                partials_by_part[pid] = e["partials"]
-        for pid, partials in partials_by_part.items():
-            metric = self._score(partials, quantiles, token_freq, ref_idx)
-            mode = (
-                "skip" if pid in skip else "delta" if pid in delta else "full"
             )
-            results[pid] = {
-                "mode": mode,
-                "metric": metric,
-                "passed": metric <= 1.0,
-            }
-            if mode != "skip":
-                self._record(pid, partials=partials)
-            self.entries[str(pid)].update(metric=metric, score_fp=fp)
-        # the store carries every partition's partials (~MBs at real
-        # partition counts); rewriting it when nothing was rescored is pure
-        # serialization cost on the all-skip path
-        if partials_by_part:
+
+        stats = part_stats(shared, self.bucket_width, modes)
+        bad = {pid: sum(s[k] for k in BAD_FIELDS) for pid, s in stats.items()}
+        cs = report(bad, lambda m: m <= self.max_bad, stats=stats)
+        self.reports = {"column_stats": {**cs, "scanned_rows": scanned_rows}}
+        self.reports["token_bounds"] = report(
+            shared.counts_by_part(KIND_OOV_ROWS), lambda m: m == 0.0
+        )
+        if self.allowed is not None:
+            self.reports["referential"] = report(
+                referential.unknown_by_part(shared, self.allowed),
+                lambda m: m == 0.0,
+            )
+        rescored = []
+        if self.profiles is not None:
+            rescored = self._drift(shared, prof_rows, modes)
+            self.reports["drift"] = report(
+                {pid: self.entries[str(pid)]["drift_metric"] for pid in modes},
+                lambda m: m <= 1.0,
+            )
+        if by_part or rescored:
             self._save()
-        return self._report(results)
+        return self.reports["column_stats"]
 
+    def _drift(self, shared: SharedTokenStats, prof_rows, modes) -> list[int]:
+        """Store every partition's drift metric (max score over its (part,
+        source) groups, 0 with none) in its entry; -> the re-scored parts.
 
-class _ViolationCountValidator(_IncrementalValidator):
-    """A per-row independent rule (a row violates it or not): delta files
-    contribute delta violation counts that ADD to the stored metric —
-    nothing else is state. passed = metric == 0, matching the batch rules."""
-
-    def _run_counts(self, spark, counts, _precomputed) -> dict:
-        delta, full, skip = classify_partitions(self.table, self.entries)
-        got = self._scan(spark, delta, full, counts, _precomputed)
-        results: dict[int, dict] = {}
-        for pid in full:
-            results[pid] = {"mode": "full", "metric": float(got["full"].get(pid, 0))}
-        for pid in delta:
-            results[pid] = {
-                "mode": "delta",
-                "metric": float(self.entries[str(pid)]["metric"])
-                + float(got["delta"].get(pid, 0)),
-            }
-        for pid in skip:
-            results[pid] = {
-                "mode": "skip",
-                "metric": float(self.entries[str(pid)]["metric"]),
-            }
-        for pid, res in results.items():
-            res["passed"] = res["metric"] == 0.0
-            if res["mode"] != "skip":
-                self._record(pid, metric=res["metric"])
-        self._save()
-        return self._report(results)
-
-
-class IncrementalReferentialValidator(_ViolationCountValidator):
-    """Incremental REFERENTIAL validation: a row either has an allowed
-    source or not, so delta violation counts add to the stored metric."""
-
-    @staticmethod
-    def _counts(df, allowed) -> dict[int, int]:
-        active = allowed.filter(F.col("active")).select("source")
-        return _count_by_part(
-            df.select("part_id", "source").join(
-                F.broadcast(active), "source", "left_anti"
-            )
+        The metric is a pure function of (partials, profiles, params): a
+        skip partition whose stored fingerprint matches keeps its metric,
+        since re-scoring every skip partition on every run is O(n_parts x
+        sources x histogram domain) of driver Python. A profile or threshold
+        change re-scores from the stored partials, with no scan."""
+        fp = _digest(
+            [
+                sorted(
+                    (
+                        r["source"],
+                        [float(q) for q in r["n_tok_quantiles"]],
+                        sorted((int(k), float(v)) for k, v in r["token_freq"].items()),
+                    )
+                    for r in prof_rows
+                ),
+                {k: self.params[k] for k in sorted(self.params)},
+            ]
         )
-
-    def run(
-        self,
-        spark: SparkSession,
-        allowed,
-        _precomputed: dict | None = None,
-    ) -> dict:
-        return self._run_counts(
-            spark, lambda df: self._counts(df, allowed), _precomputed
-        )
-
-
-class IncrementalTokenBoundsValidator(_ViolationCountValidator):
-    """Incremental TOKEN_BOUNDS validation: a row either contains a token
-    outside [vocab_lo, vocab_size) or not, so delta OOV-row counts add to
-    the stored metric."""
-
-    def __init__(
-        self, table: PartitionedTable, store_path: str,
-        vocab_lo: int = 0, vocab_size: int = 32768,
-    ):
-        super().__init__(table, store_path)
-        self.vocab_lo = int(vocab_lo)
-        self.vocab_size = int(vocab_size)
-
-    def _counts(self, df) -> dict[int, int]:
-        return _count_by_part(
-            df.filter(has_oov(self.vocab_lo, self.vocab_size))
-        )
-
-    def run(self, spark: SparkSession, _precomputed: dict | None = None) -> dict:
-        return self._run_counts(spark, self._counts, _precomputed)
+        todo = [
+            pid
+            for pid, mode in modes.items()
+            if mode != "skip" or self.entries[str(pid)].get("drift_fp") != fp
+        ]
+        if todo:
+            quantiles, token_freq = drift.profile_maps(prof_rows)
+            t = shared.rows(KIND_NTOK, KIND_TOKEN)
+            t = t.filter(pc.is_in(t["part_id"], value_set=pa.array(todo, pa.int32())))
+            metric = dict.fromkeys(todo, 0.0)
+            for pid, *_, score in drift.score_groups(
+                t, quantiles, token_freq, self.params
+            ):
+                metric[pid] = max(metric[pid], score)
+            for pid in todo:
+                self.entries[str(pid)].update(drift_metric=metric[pid], drift_fp=fp)
+        return todo
 
 
 class IncrementalUniquenessValidator(_IncrementalValidator):
@@ -563,16 +414,20 @@ class IncrementalUniquenessValidator(_IncrementalValidator):
         return {int(r["part_id"]): (bytes(r["u"]), int(r["est"])) for r in rows}
 
     def run(self, spark: SparkSession) -> dict:
-        delta, full, skip = classify_partitions(self.table, self.entries)
-        got = self._scan(spark, delta, full, self._sketches)
+        delta, full, skip = self._classify(self.entries)
+        # ONE job over every full partition's files and every added file
+        files = self._files(full) + [
+            (pid, path) for pid, paths in delta.items() for path in paths
+        ]
+        got = self._sketches(self._read(spark, files)) if files else {}
         # pid -> (n_rows, sketch)
-        state = {pid: got["full"].get(pid, (0, b"")) for pid in full}
+        state = {pid: got.get(pid, (0, b"")) for pid in full}
         results = {pid: {"mode": "full"} for pid in full}
         if delta:
             to_union: dict[int, list[bytes]] = {}
             n_rows: dict[int, int] = {}
             for pid in delta:
-                n_new, sk_new = got["delta"].get(pid, (0, b""))
+                n_new, sk_new = got.get(pid, (0, b""))
                 n_old, sk_old = self._stored(pid)
                 n_rows[pid] = n_old + n_new
                 to_union[pid] = [sk_old] + ([sk_new] if sk_new else [])
@@ -632,7 +487,7 @@ class IncrementalUniquenessValidator(_IncrementalValidator):
             if exact_pids:
                 dup_counts = _count_by_part(
                     uniqueness.global_duplicate_doc_ids(
-                        self.table.read_partitions(spark, exact_pids)
+                        self._read(spark, self._files(exact_pids))
                     )
                 )
             scope = " scope=global"
@@ -658,7 +513,7 @@ class IncrementalUniquenessValidator(_IncrementalValidator):
             if need_exact:
                 dup_counts.update(_count_by_part(
                     uniqueness.duplicate_doc_ids(
-                        self.table.read_partitions(spark, need_exact)
+                        self._read(spark, self._files(need_exact))
                     )
                 ))
             scope = ""
@@ -682,18 +537,6 @@ class IncrementalUniquenessValidator(_IncrementalValidator):
         return self._report(results)
 
 
-def _fused_scan(frame, profiles, sv, params: dict) -> dict:
-    """The one decode of ``tokens`` for a scanned frame: ONE shared token
-    pass, split into the per-partition inputs of the stats, drift and
-    token_bounds validators."""
-    shared = _shared_stats(frame, profiles, **params)
-    return {
-        "column_stats": part_stats(shared, sv.bucket_width),
-        "drift": _drift_partials(shared),
-        "token_bounds": shared.counts_by_part(KIND_OOV_ROWS),
-    }
-
-
 def run_incremental_suite(
     spark: SparkSession,
     table: PartitionedTable,
@@ -703,74 +546,27 @@ def run_incremental_suite(
     vocab_lo: int = 0,
     vocab_size: int = 32768,
 ) -> dict[str, dict]:
-    """The incremental suite with ONE `tokens` decode per scanned file set.
+    """The incremental data-rule suite over two stores in ``manifest_dir``:
+    ``incremental_stats.json`` (merged shared partials: column_stats,
+    token_bounds, drift, referential) and ``incremental_uniqueness.json``
+    (HLL sketches). The unseen files' ``tokens`` are decoded once, by the
+    one shared pass.
 
-    Run separately, three of the five incremental validators each pay their
-    own scan of the `tokens` column (~99% of the table's bytes): column_stats
-    (size/null checks), drift (token-frequency partials) and token_bounds
-    (OOV rows) — on first sight that is 3x the dominant I/O, exactly the
-    duplication the batch suite already eliminates via plans/shared.py. This
-    orchestrator classifies once, runs ONE SharedTokenStats pass per scanned
-    frame (kinds 0-5: n_tok histogram, token freq, len-mismatch, null-tokens,
-    OOV rows, row census) and feeds all three validators their per-partition
-    inputs; referential (source-only scan) and uniqueness (doc_id sketches)
-    keep their own narrow jobs.
-
-    Correctness: the fused inputs are the identical quantities each
-    validator's own scan derives — the stats and drift validators read the
-    same shared pass on their own, and token_bounds' kind 4 is its batch
-    rule's screen — and the fusion only
-    engages when all three validators agree on every partition's mode (their
-    stores are written together by this CLI path, so they do unless a store
-    was hand-edited or lost); on ANY disagreement each validator falls back
-    to its own scan, correctness over cleverness. Drift's hashed-domain
-    fallback cannot run incrementally (stored partials would mix domains), so
-    that case also falls back per-validator (the drift validator raises, as
-    it does today).
-
-    Returns {"column_stats": ..., "drift": ..., "referential": ...,
-    "uniqueness": ..., "token_bounds": ...} — each the validator's run()
-    dict; drift/referential keys absent when their dimension input is None.
+    Returns {"column_stats": ..., "token_bounds": ..., "drift": ...,
+    "referential": ..., "uniqueness": ...}, each {"parts", "modes"} (plus
+    column_stats' "scanned_rows"); drift/referential are absent when their
+    dimension input is None.
     """
-
-    def store(name: str) -> str:
-        return os.path.join(manifest_dir, f"incremental_{name}.json")
-
-    sv = IncrementalStatsValidator(table, store("stats"))
-    dv = (
-        IncrementalDriftValidator(table, store("drift"))
-        if profiles is not None
-        else None
+    sv = IncrementalStatsValidator(
+        table,
+        os.path.join(manifest_dir, "incremental_stats.json"),
+        profiles=profiles,
+        allowed=allowed,
+        vocab_lo=vocab_lo,
+        vocab_size=vocab_size,
     )
-    tv = IncrementalTokenBoundsValidator(
-        table, store("token_bounds"), vocab_lo, vocab_size
+    sv.run(spark)
+    uv = IncrementalUniquenessValidator(
+        table, os.path.join(manifest_dir, "incremental_uniqueness.json")
     )
-
-    fused = [v for v in (sv, dv, tv) if v is not None]
-    classes = [classify_partitions(table, v.entries) for v in fused]
-    pre: dict[str, dict] = {}  # rule -> {"full": {pid: x}, "delta": {...}}
-    if dv is not None and all(c == classes[0] for c in classes[1:]):
-        delta, full, _skip = classes[0]
-        # the token_bounds range is [vocab_lo, vocab_size), as in the batch
-        # rule; drift's domain caps are the drift validator's
-        params = {"vocab_lo": vocab_lo, "vocab_size": vocab_size, "drift": dv.params}
-        got = sv._scan(
-            spark, delta, full,
-            lambda frame: _fused_scan(frame, profiles, sv, params),
-        )
-        pre = {
-            rule: {mode: got[mode].get(rule, {}) for mode in got}
-            for rule in ("column_stats", "drift", "token_bounds")
-        }
-
-    out: dict[str, dict] = {}
-    out["column_stats"] = sv.run(spark, _precomputed=pre.get("column_stats"))
-    if dv is not None:
-        out["drift"] = dv.run(spark, profiles, _precomputed=pre.get("drift"))
-    if allowed is not None:
-        rv = IncrementalReferentialValidator(table, store("referential"))
-        out["referential"] = rv.run(spark, allowed)
-    uv = IncrementalUniquenessValidator(table, store("uniqueness"))
-    out["uniqueness"] = uv.run(spark)
-    out["token_bounds"] = tv.run(spark, _precomputed=pre.get("token_bounds"))
-    return out
+    return {**sv.reports, "uniqueness": uv.run(spark)}

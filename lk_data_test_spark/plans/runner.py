@@ -108,9 +108,11 @@ class ValidationRunner:
         # first of them has collected the partials. Spark job submission is
         # thread-safe; outputs keep rule order. With a sink, each rule's
         # violations are persisted so that a plan consumed twice (once
-        # inside a rule's own verdict aggregation, e.g.
-        # verdict_from_violations, once by the sink) runs ONCE; without one
-        # nothing in the run reads them again, so they stay lazy.
+        # inside a rule's own verdict aggregation — today only the opt-in
+        # seq_structure rule's verdict_from_violations; the default rules
+        # take theirs from the shared partials or a cached duplicate-id
+        # frame — once by the sink) runs ONCE; without one nothing in the
+        # run reads them again, so they stay lazy.
         from concurrent.futures import ThreadPoolExecutor
 
         from pyspark import StorageLevel

@@ -67,7 +67,7 @@ import threading
 
 import numpy as np
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 KIND_NTOK = 0
@@ -107,14 +107,17 @@ _NTOK_MASK = np.int64((1 << 33) - 1)
 
 class SharedTokenStats:
     """Lazily-built, optionally persisted partials DataFrame, and its one
-    memoized driver-side collect."""
+    memoized driver-side collect. With ``direct_files`` the pass reads those
+    files (``df`` may then be None: the active session runs it);
+    ``collected`` wraps partials that are already on the driver."""
 
-    def __init__(self, df: DataFrame, lo: int, hi: int, contiguous: bool,
+    def __init__(self, df: DataFrame | None, lo: int, hi: int, contiguous: bool,
                  ref_tokens: list[int] | None = None,
                  hash_mod: int | None = None,
                  vocab_lo: int | None = None,
                  vocab_hi: int | None = None,
-                 direct_files: list[tuple[int, str]] | None = None):
+                 direct_files: list[tuple[int, str]] | None = None,
+                 table=None):
         self.lo = int(lo)
         self.hi = int(hi)
         self.contiguous = bool(contiguous)
@@ -123,10 +126,13 @@ class SharedTokenStats:
         self.vocab_lo = vocab_lo
         self.vocab_hi = vocab_hi  # exclusive; None disables kind 4
         self._lock = threading.Lock()
-        self._table = None
-        if direct_files:
+        self._table = table
+        if table is not None:
+            self._partials = None
+        elif direct_files:
             self._partials = _build_partials_direct(
-                df.sparkSession, direct_files, self.lo, self.hi,
+                df.sparkSession if df is not None else SparkSession.active(),
+                direct_files, self.lo, self.hi,
                 self.contiguous, ref_tokens, hash_mod, vocab_lo, vocab_hi,
             )
         else:
@@ -169,6 +175,13 @@ class SharedTokenStats:
         return cls(df, lo, hi, contiguous, None if contiguous else ref_tokens,
                    vocab_lo=vocab_lo, vocab_hi=vocab_hi,
                    direct_files=direct_files)
+
+    @classmethod
+    def collected(cls, table) -> "SharedTokenStats":
+        """Partials already on the driver (a pyarrow Table of the
+        ``PARTIAL_SCHEMA`` columns, e.g. stored partials merged with a new
+        pass's): the readers below, with no Spark plan behind them."""
+        return cls(None, 0, -1, True, table=table)
 
     @property
     def partials(self) -> DataFrame:
@@ -229,7 +242,8 @@ def build_shared(df: DataFrame, ctx, direct_files=None) -> SharedTokenStats:
     bounds from ``ctx.params`` (kind 4), drift's domain caps
     (``max_ref_tokens``, ``hash_buckets``) from ``ctx.params["drift"]`` and
     the reference domain from ``ctx.reference_profiles`` — with no profiles,
-    an empty domain and so no kind-1 rows."""
+    an empty domain and so no kind-1 rows. With ``direct_files`` the pass
+    reads just those (part_id, path) files and ``df`` may be None."""
     lo, hi = vocab_bounds(ctx.params)
     if ctx.reference_profiles is None:
         return SharedTokenStats(df, 0, -1, True, vocab_lo=lo, vocab_hi=hi,

@@ -5,38 +5,22 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from lk_data_test_spark.datagen import GenConfig, generate
 from lk_data_test_spark.plans.incremental_stats import (
     IncrementalStatsValidator,
-    merge_stats,
 )
 from lk_data_test_spark.sources.catalog import PartitionedTable
 from tests.conftest import stats_oracle
 
 
-def test_merge_stats_is_exact_and_commutative():
-    a = {
-        "row_count": 10, "null_doc_id": 1, "null_source": 0, "null_n_tok": 2,
-        "null_tokens": 0, "nonpos_n_tok": 1, "len_mismatch": 3,
-        "sum_n_tok": 500, "min_n_tok": 3, "max_n_tok": 90,
-        "n_tok_hist": {"0": 4, "1": 6},
-    }
-    b = {
-        "row_count": 5, "null_doc_id": 0, "null_source": 2, "null_n_tok": 0,
-        "null_tokens": 1, "nonpos_n_tok": 0, "len_mismatch": 0,
-        "sum_n_tok": 100, "min_n_tok": 1, "max_n_tok": 40,
-        "n_tok_hist": {"1": 2, "3": 5},
-    }
-    m = merge_stats(a, b)
-    assert m == merge_stats(b, a)
-    assert m["row_count"] == 15 and m["min_n_tok"] == 1 and m["max_n_tok"] == 90
-    assert m["n_tok_hist"] == {"0": 4, "1": 8, "3": 5}
-    empty = {
-        "row_count": 0, "null_doc_id": 0, "null_source": 0, "null_n_tok": 0,
-        "null_tokens": 0, "nonpos_n_tok": 0, "len_mismatch": 0,
-        "sum_n_tok": 0, "min_n_tok": None, "max_n_tok": None, "n_tok_hist": {},
-    }
-    assert merge_stats(a, empty) == a
+def _reports(spark, table, store, **kw) -> dict:
+    """Every rule's report of one run of a fresh IncrementalStatsValidator
+    (a new instance per run: the state round-trips through disk)."""
+    v = IncrementalStatsValidator(table, store, **kw)
+    v.run(spark)
+    return v.reports
 
 
 def test_incremental_stats_delta_merge(spark, tmp_path):
@@ -123,9 +107,6 @@ def test_incremental_drift_delta_matches_batch(spark, tmp_path):
     import numpy as np
 
     from lk_data_test_spark.operators import drift
-    from lk_data_test_spark.plans.incremental_stats import (
-        IncrementalDriftValidator,
-    )
     from lk_data_test_spark.plans.rules import RuleContext
 
     d = str(tmp_path / "corpus")
@@ -152,8 +133,8 @@ def test_incremental_drift_delta_matches_batch(spark, tmp_path):
             for r in drift.evaluate(table.read(spark), ctx).verdicts.collect()
         }
 
-    v = IncrementalDriftValidator(table, str(tmp_path / "drift_store.json"))
-    r1 = v.run(spark, profiles)
+    store = str(tmp_path / "drift_store.json")
+    r1 = _reports(spark, table, store, profiles=profiles)["drift"]
     b1 = batch_verdicts()
     assert all(m == "full" for m in r1["modes"].values())
     assert set(r1["parts"]) == set(b1)
@@ -175,8 +156,7 @@ def test_incremental_drift_delta_matches_batch(spark, tmp_path):
         rows, "doc_id string, tokens array<int>, n_tok int, source string"
     ).coalesce(1).write.mode("append").parquet(f"{d}/sequences/part_id=0")
 
-    v2 = IncrementalDriftValidator(table, str(tmp_path / "drift_store.json"))
-    r2 = v2.run(spark, profiles)
+    r2 = _reports(spark, table, store, profiles=profiles)["drift"]
     assert r2["modes"][0] == "delta"
     assert all(m == "skip" for p, m in r2["modes"].items() if p != 0)
     b2 = batch_verdicts()
@@ -185,19 +165,18 @@ def test_incremental_drift_delta_matches_batch(spark, tmp_path):
         assert np.isclose(res["metric"], b2[pid][1], rtol=1e-9), pid
 
     # idempotent
-    r3 = v2.run(spark, profiles)
+    r3 = _reports(spark, table, store, profiles=profiles)["drift"]
     assert all(m == "skip" for m in r3["modes"].values())
 
 
 def test_incremental_referential_and_uniqueness(spark, tmp_path):
-    """The remaining data rules go incremental too: referential metrics ADD
-    (per-row independent), the uniqueness HLL sketch UNIONS (mergeable by
-    design) with the exact hash-group pass reserved for partitions the
-    merged screen flags. Full-run and post-append delta-run verdicts both
-    match fresh batch evaluations."""
+    """The remaining data rules go incremental too: referential counts come
+    from the merged row census (per-row independent), the uniqueness HLL
+    sketch UNIONS (mergeable by design) with the exact hash-group pass
+    reserved for partitions the merged screen flags. Full-run and
+    post-append delta-run verdicts both match fresh batch evaluations."""
     from lk_data_test_spark.operators import referential, uniqueness
     from lk_data_test_spark.plans.incremental_stats import (
-        IncrementalReferentialValidator,
         IncrementalUniquenessValidator,
     )
     from lk_data_test_spark.plans.rules import RuleContext
@@ -219,9 +198,10 @@ def test_incremental_referential_and_uniqueness(spark, tmp_path):
             for r in rule_mod.evaluate(table.read(spark), ctx).verdicts.collect()
         }
 
-    vr = IncrementalReferentialValidator(table, str(tmp_path / "ref.json"))
+    ref = str(tmp_path / "ref.json")
     vu = IncrementalUniquenessValidator(table, str(tmp_path / "uniq.json"))
-    r1, u1 = vr.run(spark, allowed), vu.run(spark)
+    r1 = _reports(spark, table, ref, allowed=allowed)["referential"]
+    u1 = vu.run(spark)
     br, bu = batch(referential), batch(uniqueness)
     # roles: part 1 dup (uniqueness fails), part 3 badsrc (referential fails)
     assert br[3][0] is False and bu[1][0] is False
@@ -244,9 +224,7 @@ def test_incremental_referential_and_uniqueness(spark, tmp_path):
         "doc_id string, tokens array<int>, n_tok int, source string",
     ).coalesce(1).write.mode("append").parquet(f"{d}/sequences/part_id=2")
 
-    r2 = IncrementalReferentialValidator(table, str(tmp_path / "ref.json")).run(
-        spark, allowed
-    )
+    r2 = _reports(spark, table, ref, allowed=allowed)["referential"]
     u2 = IncrementalUniquenessValidator(table, str(tmp_path / "uniq.json")).run(
         spark
     )
@@ -263,9 +241,7 @@ def test_incremental_referential_and_uniqueness(spark, tmp_path):
     assert u2["parts"][0]["metric"] == 1.0
 
     # idempotent
-    r3 = IncrementalReferentialValidator(table, str(tmp_path / "ref.json")).run(
-        spark, allowed
-    )
+    r3 = _reports(spark, table, ref, allowed=allowed)["referential"]
     u3 = IncrementalUniquenessValidator(table, str(tmp_path / "uniq.json")).run(
         spark
     )
@@ -347,12 +323,9 @@ def test_incremental_uniqueness_global_cross_partition_append(spark, tmp_path):
 
 def test_incremental_token_bounds_delta_adds(spark, tmp_path):
     """token_bounds is per-row independent like referential: delta files add
-    delta OOV-row counts to the stored metric; full-run and post-append
+    their kind-4 OOV-row counts to the stored ones; full-run and post-append
     delta-run both match a fresh batch evaluation; reruns skip."""
     from lk_data_test_spark.operators import token_bounds
-    from lk_data_test_spark.plans.incremental_stats import (
-        IncrementalTokenBoundsValidator,
-    )
     from lk_data_test_spark.plans.rules import RuleContext
 
     d = str(tmp_path / "corpus")
@@ -371,7 +344,7 @@ def test_incremental_token_bounds_delta_adds(spark, tmp_path):
         }
 
     store = str(tmp_path / "tb.json")
-    v1 = IncrementalTokenBoundsValidator(table, store).run(spark)
+    v1 = _reports(spark, table, store)["token_bounds"]
     b1 = batch()
     assert b1[2][0] is False and b1[2][1] == 5.0  # badcol role plants 5
     for pid in b1:
@@ -389,7 +362,7 @@ def test_incremental_token_bounds_delta_adds(spark, tmp_path):
         "doc_id string, tokens array<int>, n_tok int, source string",
     ).coalesce(1).write.mode("append").parquet(f"{d}/sequences/part_id=2")
 
-    v2 = IncrementalTokenBoundsValidator(table, store).run(spark)
+    v2 = _reports(spark, table, store)["token_bounds"]
     assert v2["modes"][0] == "delta" and v2["modes"][2] == "delta"
     b2 = batch()
     assert b2[0] == (False, 3.0) and b2[2] == (False, 5.0)
@@ -397,7 +370,7 @@ def test_incremental_token_bounds_delta_adds(spark, tmp_path):
         assert v2["parts"][pid]["passed"] == b2[pid][0], pid
         assert v2["parts"][pid]["metric"] == b2[pid][1], pid
 
-    v3 = IncrementalTokenBoundsValidator(table, store).run(spark)
+    v3 = _reports(spark, table, store)["token_bounds"]
     assert all(m == "skip" for m in v3["modes"].values())
     assert v3["parts"][0]["metric"] == 3.0
 
@@ -410,9 +383,9 @@ def test_skip_runs_do_no_work(spark, tmp_path, monkeypatch):
     pre-memoization behavior — replaying the exact pass over every flagged
     partition and re-scoring every histogram — dominates an otherwise
     O(delta) rerun."""
+    import lk_data_test_spark.operators.drift as drift_mod
     import lk_data_test_spark.operators.uniqueness as uniq_mod
     from lk_data_test_spark.plans.incremental_stats import (
-        IncrementalDriftValidator,
         IncrementalUniquenessValidator,
     )
 
@@ -425,17 +398,17 @@ def test_skip_runs_do_no_work(spark, tmp_path, monkeypatch):
     ustore = str(tmp_path / "uniq.json")
     dstore = str(tmp_path / "drift.json")
     u1 = IncrementalUniquenessValidator(table, ustore).run(spark)
-    d1 = IncrementalDriftValidator(table, dstore).run(spark, profiles)
+    d1 = _reports(spark, table, dstore, profiles=profiles)["drift"]
     assert u1["parts"][1]["detail"] == "path=exact"  # dup role got flagged
 
     def boom(*a, **k):
         raise AssertionError("exact pass ran on an all-skip rerun")
 
     monkeypatch.setattr(uniq_mod, "duplicate_doc_ids", boom)
-    monkeypatch.setattr(IncrementalDriftValidator, "_score", boom)
+    monkeypatch.setattr(drift_mod, "score_groups", boom)
 
     u2 = IncrementalUniquenessValidator(table, ustore).run(spark)
-    d2 = IncrementalDriftValidator(table, dstore).run(spark, profiles)
+    d2 = _reports(spark, table, dstore, profiles=profiles)["drift"]
     assert all(m == "skip" for m in u2["modes"].values())
     assert all(m == "skip" for m in d2["modes"].values())
     for pid in u1["parts"]:
@@ -447,27 +420,69 @@ def test_skip_runs_do_no_work(spark, tmp_path, monkeypatch):
     # RE-SCORES from stored partials (no scan) instead of reusing the memo —
     # proven via a sentinel scorer that must be consulted
     monkeypatch.setattr(
-        IncrementalDriftValidator, "_score", lambda self, *a, **k: 42.0
+        drift_mod,
+        "score_groups",
+        lambda rows, *a, **k: [
+            (pid, "cases", 0.0, 0.0, 0.0, 42.0)
+            for pid in set(rows["part_id"].to_pylist())
+        ],
     )
-    d3 = IncrementalDriftValidator(
-        table, dstore, params={"ks_threshold": 0.5}
-    ).run(spark, profiles)
+    d3 = _reports(
+        spark, table, dstore, profiles=profiles, params={"ks_threshold": 0.5}
+    )["drift"]
     assert all(m == "skip" for m in d3["modes"].values())
     assert all(r["metric"] == 42.0 for r in d3["parts"].values())
 
 
-def test_fused_suite_equals_separate_validators(spark, tmp_path, monkeypatch):
-    """run_incremental_suite fuses the three tokens-reading validators onto
-    ONE SharedTokenStats pass per scanned frame. Equivalence contract: the
-    fused results (modes, metrics, verdicts, merged stats) are identical to
-    each validator running its own scan, on first sight AND on an append
-    delta — and under fusion the per-validator scan methods are never
-    called (proven with raising sentinels)."""
-    from lk_data_test_spark.plans.incremental_stats import (
-        IncrementalDriftValidator,
-        IncrementalTokenBoundsValidator,
-        run_incremental_suite,
+def _batch(spark, table, allowed=None, profiles=None, params=None) -> dict:
+    """rule -> {part_id: (passed, metric)} of a fresh batch evaluate of every
+    data rule the incremental suite covers (drift/referential only with
+    their dimension)."""
+    from lk_data_test_spark.operators import (
+        column_stats,
+        drift,
+        referential,
+        token_bounds,
+        uniqueness,
     )
+    from lk_data_test_spark.plans.rules import RuleContext
+
+    spark.catalog.clearCache()
+    ctx = RuleContext(
+        spark=spark, allowed_sources=allowed, reference_profiles=profiles,
+        part_ids=table.partition_ids(), params=params or {},
+    )
+    mods = [column_stats, token_bounds, uniqueness]
+    mods += [drift] if profiles is not None else []
+    mods += [referential] if allowed is not None else []
+    df = table.read(spark)
+    return {
+        m.RULE_ID: {
+            int(r["part_id"]): (bool(r["passed"]), float(r["metric"]))
+            for r in m.evaluate(df, ctx).verdicts.collect()
+        }
+        for m in mods
+    }
+
+
+def _check_batch(out, batch):
+    assert set(out) == set(batch)
+    for rule, verdicts in batch.items():
+        got = {
+            pid: (r["passed"], r["metric"])
+            for pid, r in out[rule]["parts"].items()
+        }
+        assert got == verdicts, rule
+
+
+def test_incremental_suite_equals_batch_rules(spark, tmp_path, monkeypatch):
+    """run_incremental_suite gives every rule the verdicts of a fresh batch
+    evaluate of the table, on first sight and after an append, from ONE
+    build_shared pass per run (with and without profiles; none on an
+    all-skip run); with its partials store deleted, every partition is full
+    again and the verdicts are the same."""
+    import lk_data_test_spark.plans.incremental_stats as inc_mod
+    from lk_data_test_spark.plans.incremental_stats import run_incremental_suite
 
     d = str(tmp_path / "corpus")
     cfg = GenConfig(n_parts=5, rows_per_part=400)
@@ -475,47 +490,31 @@ def test_fused_suite_equals_separate_validators(spark, tmp_path, monkeypatch):
     table = PartitionedTable(f"{d}/sequences")
     profiles = spark.read.parquet(f"{d}/reference_profiles")
     allowed = spark.read.parquet(f"{d}/allowed_sources")
-    fdir, sdir = str(tmp_path / "fused"), str(tmp_path / "sep")
+    fdir = str(tmp_path / "fused")
 
-    def run_separate():
-        return {
-            "column_stats": IncrementalStatsValidator(
-                table, os.path.join(sdir, "incremental_stats.json")
-            ).run(spark),
-            "drift": IncrementalDriftValidator(
-                table, os.path.join(sdir, "incremental_drift.json")
-            ).run(spark, profiles),
-            "token_bounds": IncrementalTokenBoundsValidator(
-                table, os.path.join(sdir, "incremental_token_bounds.json")
-            ).run(spark),
-        }
+    calls = []
+    real = inc_mod.build_shared
+    monkeypatch.setattr(
+        inc_mod, "build_shared", lambda *a, **k: calls.append(1) or real(*a, **k)
+    )
 
-    def run_fused():
-        with monkeypatch.context() as m:
-            def boom(*a, **k):
-                raise AssertionError("per-validator scan ran under fusion")
+    def run(mdir=fdir, passes=1, **kw):
+        calls.clear()
+        kw = kw or dict(profiles=profiles, allowed=allowed)
+        out = run_incremental_suite(spark, table, mdir, **kw)
+        assert len(calls) == passes
+        return out
 
-            m.setattr(IncrementalStatsValidator, "_stats_for", boom)
-            m.setattr(IncrementalDriftValidator, "_partials_for", boom)
-            m.setattr(IncrementalTokenBoundsValidator, "_counts", boom)
-            return run_incremental_suite(
-                spark, table, fdir, profiles=profiles, allowed=allowed
-            )
-
-    def check(fused, sep):
-        for rule in ("column_stats", "drift", "token_bounds"):
-            fp, sp = fused[rule]["parts"], sep[rule]["parts"]
-            assert set(fp) == set(sp), rule
-            for pid in fp:
-                assert fp[pid] == sp[pid], (rule, pid, fp[pid], sp[pid])
-
-    sep1 = run_separate()
-    fused1 = run_fused()
-    check(fused1, sep1)
+    fused1 = run()
+    _check_batch(fused1, _batch(spark, table, allowed, profiles))
     assert fused1["column_stats"]["scanned_rows"] == 5 * 400
     # the suite also ran the two narrow validators
     assert set(fused1["uniqueness"]["parts"]) == set(range(5))
     assert set(fused1["referential"]["parts"]) == set(range(5))
+    # one pass without profiles too (no kind-1 rows, no drift report)
+    bare = run(str(tmp_path / "bare"), allowed=allowed)
+    assert "drift" not in bare
+    assert bare["column_stats"]["scanned_rows"] == 5 * 400
 
     # pure append: OOV rows into clean part 0, clean rows into part 3
     spark.createDataFrame(
@@ -527,36 +526,31 @@ def test_fused_suite_equals_separate_validators(spark, tmp_path, monkeypatch):
         "doc_id string, tokens array<int>, n_tok int, source string",
     ).coalesce(1).write.mode("append").parquet(f"{d}/sequences/part_id=3")
 
-    sep2 = run_separate()
-    fused2 = run_fused()
-    check(fused2, sep2)
+    fused2 = run()
+    b2 = _batch(spark, table, allowed, profiles)
+    _check_batch(fused2, b2)
     assert fused2["column_stats"]["modes"][0] == "delta"
     assert fused2["token_bounds"]["parts"][0]["metric"] == 3.0
     assert fused2["column_stats"]["scanned_rows"] == 5  # only the added rows
+    skip = run(passes=0)
+    assert all(m == "skip" for m in skip["column_stats"]["modes"].values())
 
-    # classification disagreement -> fusion disengages, each validator falls
-    # back to its own scan and the run still completes correctly
-    os.remove(os.path.join(fdir, "incremental_drift.json"))
-    fused3 = run_incremental_suite(
-        spark, table, fdir, profiles=profiles, allowed=allowed
-    )
-    assert all(m == "full" for m in fused3["drift"]["modes"].values())
-    assert all(m == "skip" for m in fused3["column_stats"]["modes"].values())
-    for pid in fused3["drift"]["parts"]:
-        assert (
-            fused3["drift"]["parts"][pid]["metric"]
-            == sep2["drift"]["parts"][pid]["metric"]
-        )
+    # the partials store deleted -> every partition full, same verdicts
+    os.remove(os.path.join(fdir, "incremental_stats.json"))
+    fused3 = run()
+    for rule in ("column_stats", "token_bounds", "drift", "referential"):
+        assert all(m == "full" for m in fused3[rule]["modes"].values()), rule
+    assert all(m == "skip" for m in fused3["uniqueness"]["modes"].values())
+    _check_batch(fused3, b2)
 
 
 def test_fused_token_bounds_range_with_vocab_lo(spark, tmp_path):
     """With vocab_lo > 0 every token_bounds path checks [vocab_lo,
     vocab_size): a token in [vocab_size, vocab_lo + vocab_size) is OOV for
-    the fused suite, the standalone validator and the batch rule alike — on
-    first sight and on an append delta."""
+    the incremental suite, the standalone validator and the batch rule
+    alike — on first sight and on an append delta."""
     from lk_data_test_spark.operators import token_bounds
     from lk_data_test_spark.plans.incremental_stats import (
-        IncrementalTokenBoundsValidator,
         run_incremental_suite,
     )
     from lk_data_test_spark.plans.rules import RuleContext
@@ -578,9 +572,9 @@ def test_fused_token_bounds_range_with_vocab_lo(spark, tmp_path):
             spark, table, str(tmp_path / "fused"), profiles=profiles,
             vocab_lo=lo, vocab_size=size,
         )["token_bounds"]
-        sep = IncrementalTokenBoundsValidator(
-            table, str(tmp_path / "tb.json"), lo, size
-        ).run(spark)
+        sep = _reports(
+            spark, table, str(tmp_path / "tb.json"), vocab_lo=lo, vocab_size=size
+        )["token_bounds"]
         spark.catalog.clearCache()
         ctx = RuleContext(
             spark=spark, part_ids=table.partition_ids(),
@@ -606,7 +600,7 @@ def test_fused_token_bounds_range_with_vocab_lo(spark, tmp_path):
 
 
 def test_incremental_store_format(spark, tmp_path):
-    """The on-disk format of the five incremental stores: per-entry key sets
+    """The on-disk format of the two incremental stores: per-entry key sets
     after run_incremental_suite, so a refactor cannot silently change what
     an existing store holds."""
     import json
@@ -625,10 +619,7 @@ def test_incremental_store_format(spark, tmp_path):
         allowed=spark.read.parquet(f"{d}/allowed_sources"),
     )
     expected = {
-        "stats": {"files", "stats"},
-        "drift": {"files", "partials", "metric", "score_fp"},
-        "referential": {"files", "metric"},
-        "token_bounds": {"files", "metric"},
+        "stats": {"files", "inputs", "partials", "drift_metric", "drift_fp"},
         "uniqueness": {"files", "n_rows", "sketch_b64", "metric", "detail"},
     }
     assert sorted(
@@ -644,10 +635,173 @@ def test_incremental_store_format(spark, tmp_path):
                 table.partition_info(int(pid)).files
             ), (name, pid)
         if name == "stats":
-            assert set(entries["0"]["stats"]) == {
-                "row_count", "null_doc_id", "null_source", "null_n_tok",
-                "null_tokens", "nonpos_n_tok", "len_mismatch", "sum_n_tok",
-                "min_n_tok", "max_n_tok", "n_tok_hist",
-            }
-        if name == "drift":
+            assert entries["0"]["inputs"]["vocab"] == [0, 32768]
+            assert set(entries["0"]["inputs"]) == {"vocab", "domain"}
             assert all(len(p) == 4 for p in entries["0"]["partials"])
+            kinds = {p[1] for p in entries["0"]["partials"]}
+            assert {0, 1, 5} <= kinds <= set(range(6))
+
+
+def _append_rows(table, pid, name, n, null_n_tok=False):
+    """Copy ``n`` rows of a generated file of a partition into a new file
+    with fresh doc_ids (and, optionally, null n_tok)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pdir = table.part_dir(pid)
+    src = min(f for f in os.listdir(pdir) if f.startswith("part-"))
+    t = pq.read_table(os.path.join(pdir, src)).slice(0, n)
+    t = t.set_column(
+        t.schema.get_field_index("doc_id"), "doc_id",
+        pa.array([f"{name}-{i}" for i in range(n)], pa.string()),
+    )
+    if null_n_tok:
+        i = t.schema.get_field_index("n_tok")
+        t = t.set_column(i, t.schema.field(i), pa.nulls(n, t.schema.field(i).type))
+    pq.write_table(t, os.path.join(table.part_dir(pid), f"{name}.parquet"))
+
+
+def test_file_landing_mid_run_is_read_next_run(spark, tmp_path, monkeypatch):
+    """Both stores record the listing their scan read: a file that lands
+    after a store classified its partitions is not recorded as validated,
+    so the next run reads it as a delta."""
+    import lk_data_test_spark.plans.incremental_stats as inc_mod
+    from lk_data_test_spark.plans.incremental_stats import (
+        IncrementalUniquenessValidator,
+        run_incremental_suite,
+    )
+
+    d = str(tmp_path / "corpus")
+    generate(spark, d, GenConfig(n_parts=2, rows_per_part=300))
+    table = PartitionedTable(f"{d}/sequences")
+    mdir = str(tmp_path / "stores")
+
+    real_build, real_sketches = (
+        inc_mod.build_shared, IncrementalUniquenessValidator._sketches
+    )
+
+    def build_then_land(*a, **k):
+        # 7 rows with null n_tok land after the partials store's listing
+        _append_rows(table, 0, "landed-a", 7, null_n_tok=True)
+        return real_build(*a, **k)
+
+    def sketch_then_land(self, df):
+        # 5 clean rows land after the uniqueness store's listing
+        _append_rows(table, 0, "landed-b", 5)
+        return real_sketches(self, df)
+
+    with monkeypatch.context() as m:
+        m.setattr(inc_mod, "build_shared", build_then_land)
+        m.setattr(IncrementalUniquenessValidator, "_sketches", sketch_then_land)
+        r1 = run_incremental_suite(spark, table, mdir)
+    assert r1["column_stats"]["scanned_rows"] == 600
+    assert r1["column_stats"]["parts"][0]["passed"] is True
+
+    r2 = run_incremental_suite(spark, table, mdir)
+    cs = r2["column_stats"]
+    assert cs["modes"] == {0: "delta", 1: "skip"}
+    assert cs["scanned_rows"] == 12
+    assert cs["parts"][0]["metric"] == 7.0
+    assert cs["parts"][0]["stats"] == stats_oracle(table.part_dir(0))
+    assert r2["uniqueness"]["modes"] == {0: "delta", 1: "skip"}
+    assert r2["uniqueness"]["parts"][0]["passed"] is True
+
+
+def _two_part_corpus(spark, tmp_path):
+    from lk_data_test_spark.plans.incremental_stats import run_incremental_suite
+
+    d = str(tmp_path / "corpus")
+    generate(spark, d, GenConfig(n_parts=2, rows_per_part=300))
+    table = PartitionedTable(f"{d}/sequences")
+    allowed = spark.read.parquet(f"{d}/allowed_sources")
+    mdir = str(tmp_path / "stores")
+    run_incremental_suite(spark, table, mdir, allowed=allowed)
+    return d, table, allowed, mdir
+
+
+def test_allowed_change_rederives_referential_without_scan(spark, tmp_path):
+    """A deactivated source reaches every skip partition: referential is
+    derived again from the stored census against the new active set, with
+    no scan, and equals the batch rule under the new set."""
+    from lk_data_test_spark.plans.incremental_stats import run_incremental_suite
+    from pyspark.sql import functions as F
+
+    _, table, allowed, mdir = _two_part_corpus(spark, tmp_path)
+    no_cases = allowed.withColumn(
+        "active", F.col("active") & (F.col("source") != "cases")
+    )
+    r = run_incremental_suite(spark, table, mdir, allowed=no_cases)
+    batch = _batch(spark, table, allowed=no_cases)
+    assert r["column_stats"]["scanned_rows"] == 0
+    assert all(m == "skip" for m in r["referential"]["modes"].values())
+    assert not any(p for p, _ in batch["referential"].values())
+    _check_batch(r, batch)
+
+
+def test_pass_input_change_reads_every_partition(spark, tmp_path):
+    """The partials depend on two pass inputs, the vocab bounds (kind 4)
+    and the reference token domain (kind 1): a new vocab size, and then a
+    first run with profiles, classify every partition full, and each
+    verdict equals the batch rule's under the new inputs."""
+    from lk_data_test_spark.plans.incremental_stats import run_incremental_suite
+
+    d, table, allowed, mdir = _two_part_corpus(spark, tmp_path)
+    r = run_incremental_suite(spark, table, mdir, allowed=allowed, vocab_size=900)
+    batch = _batch(spark, table, allowed=allowed, params={"vocab_size": 900})
+    assert r["column_stats"]["scanned_rows"] == 600
+    assert any(m > 0 for _, m in batch["token_bounds"].values())
+    _check_batch(r, batch)
+
+    # first run with profiles: the stored partials have no kind-1 rows
+    profiles = spark.read.parquet(f"{d}/reference_profiles")
+    r = run_incremental_suite(
+        spark, table, mdir, profiles=profiles, allowed=allowed, vocab_size=900
+    )
+    assert all(m == "full" for m in r["drift"]["modes"].values())
+    _check_batch(
+        r, _batch(spark, table, allowed, profiles, params={"vocab_size": 900})
+    )
+
+
+def test_incremental_fails_fast(spark, tmp_path):
+    """Known failure modes raise a named error before any store is
+    written: hashed-domain profiles (name the batch drift rule) and a
+    corrupt-tolerant table (name ValidationRunner); an entry in the store
+    format before the shared partials classifies full."""
+    import json
+
+    from lk_data_test_spark.plans.incremental_stats import (
+        IncrementalUniquenessValidator,
+        run_incremental_suite,
+    )
+
+    d = str(tmp_path / "corpus")
+    generate(spark, d, GenConfig(n_parts=2, rows_per_part=300))
+    table = PartitionedTable(f"{d}/sequences")
+    profiles = spark.read.parquet(f"{d}/reference_profiles")
+    store = str(tmp_path / "stats.json")
+
+    v = IncrementalStatsValidator(
+        table, store, profiles=profiles, params={"max_ref_tokens": 1}
+    )
+    with pytest.raises(ValueError, match="run the batch drift rule"):
+        v.run(spark)
+    assert not os.path.exists(store)
+
+    tolerant = PartitionedTable(f"{d}/sequences", tolerate_corrupt=True)
+    for make in (
+        lambda: IncrementalStatsValidator(tolerant, store),
+        lambda: IncrementalUniquenessValidator(tolerant, store),
+        lambda: run_incremental_suite(spark, tolerant, str(tmp_path / "m")),
+    ):
+        with pytest.raises(ValueError, match="ValidationRunner"):
+            make()
+
+    # upgrade: an old-format entry ({"files", "stats"}) for unchanged files
+    with open(store, "w") as f:
+        json.dump(
+            {"0": {"files": table.part_files(0), "stats": {"row_count": 300}}}, f
+        )
+    r = IncrementalStatsValidator(table, store).run(spark)
+    assert r["modes"] == {0: "full", 1: "full"}
+    assert r["parts"][0]["stats"] == stats_oracle(table.part_dir(0))

@@ -304,7 +304,7 @@ def test_drift_removed_method_rejected(ctx_df):
     fails fast with the remedy instead of silently scoring with "hist", in
     the batch rule and the incremental validator alike."""
     from lk_data_test_spark.plans.incremental_stats import (
-        IncrementalDriftValidator,
+        IncrementalStatsValidator,
     )
 
     ctx, df = ctx_df
@@ -318,7 +318,7 @@ def test_drift_removed_method_rejected(ctx_df):
     with pytest.raises(ValueError, match="drop the 'method' param"):
         drift.evaluate(df, bad)
     with pytest.raises(ValueError, match="drop the 'method' param"):
-        IncrementalDriftValidator(
+        IncrementalStatsValidator(
             PartitionedTable("unused"), "unused.json",
             params={"method": "tdigest"},
         )
