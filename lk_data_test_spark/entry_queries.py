@@ -622,8 +622,8 @@ def distinct_users_per_type(spark, sf_dir):
 # string value-checks whichever shipped SF the harness runs). Derivation:
 # exact per-type counts are 15 / 150 / 1500 at sf0.001/0.01/0.1 (all five
 # event types share the same user population by construction); the rsd=1%
-# HLL reports 15 / 151 / 1507 — within 1% of exact, as the R2 uniqueness
-# rule's pytest bound asserts for the same sketch.
+# HLL reports 15 / 151 / 1507 — within 1% of exact, as the pytest bound in
+# tests/test_ops_misc.py asserts for the same sketch.
 @query(
     "approx_distinct_users_per_type",
     """
@@ -3202,7 +3202,7 @@ def global_uniqueness_verdicts(spark, sf_dir):
     per-partition Datasketches HLL sketches; sum(per-part estimates) minus
     the union-sketch estimate screens for cross-partition ids at zero extra
     scan cost, and only flagged scopes pay the exact 8-byte-hash group pass
-    (operators/uniqueness.py:_evaluate_global)."""
+    (operators/uniqueness.py: ``sketch_state``, ``screen``)."""
     from .datagen import GenConfig, sequences_df
     from .operators import uniqueness
     from .plans.rules import RuleContext

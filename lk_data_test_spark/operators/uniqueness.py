@@ -1,4 +1,4 @@
-"""R2 — doc_id uniqueness: HyperLogLog screen + exact hashed fallback.
+"""R2 — doc_id uniqueness: one HyperLogLog sketch screen + exact hashed fallback.
 
 Reference semantics: Counter-based duplicate detection, report keys with
 count > 1 (``/root/reference/curation/check_fackel_references.py:32,55``,
@@ -7,32 +7,40 @@ count > 1 (``/root/reference/curation/check_fackel_references.py:32,55``,
 
 Scale design: an exact count-distinct over 10^12 doc_ids is a massive
 shuffle, so:
-1. SCREEN: per partition, ``count(*)`` vs ``approx_count_distinct(doc_id,
-   rsd)`` (HLL++, map-side mergeable, no row shuffle). Partitions where the
-   HLL estimate is more than 2*rsd below the row count are *flagged*.
-2. EXACT (flagged partitions only, partition-pruned scan):
+1. STATE (``sketch_state``): ONE aggregation pass gives every partition a
+   (row count, Datasketches HLL sketch, estimate) triple
+   (``F.hll_sketch_agg`` / ``hll_sketch_estimate``; map-side mergeable, no
+   row shuffle). lgConfigK follows from rsd by Spark's HLL++ precision
+   formula, ``ceil(2*log2(1.106/rsd))`` (``lg_config_k``): 14, ~0.8%
+   relative error, at the default rsd 0.01.
+2. SCREEN (``screen``): partitions whose estimate is more than 3*rsd below
+   their row count are *flagged*.
+3. EXACT (flagged partitions only, partition-pruned scan):
    a. group by ``xxhash64(doc_id)`` (8-byte shuffle key instead of the full
       string) and keep hashes with count > 1;
    b. semi-join the fact rows of those hashes (tiny set) and re-group by the
       real ``doc_id`` to eliminate hash collisions and emit exact duplicate
       keys with their counts.
 
+The sketches UNION (``union_state``): the rows add and the union's sketch
+is the sketch of all rows, so the incremental store
+(``plans/incremental_stats.py`` ``IncrementalUniquenessValidator``) screens
+its stored sketches unioned with an append's delta sketches through the same
+``screen``, with no scan of the old rows.
+
 The screen can miss duplicate rates below its resolution (~3*rsd); callers
 needing certainty set params ``{"uniqueness": {"always_exact": True}}`` which
-skips the screen. rsd defaults to 0.01 (HLL++ p=14; rsd<=0.005 switches Spark
-to a 10x slower sort-based aggregation path — measured), so duplicate rates
->=3% are reliably caught; the HLL sketch is deterministic for a given dataset.
-Every verdict row records which path produced it (``detail`` =
-``path=screen`` | ``path=exact``), so a pass that rests on the screen alone is
-auditable downstream rather than indistinguishable from an exact pass.
+skips the screen. At the default rsd duplicate rates >=3% are reliably
+caught; the sketch is deterministic for a given dataset. Every verdict row
+records which path produced it (``detail`` = ``path=screen`` |
+``path=exact``), so a pass that rests on the screen alone is auditable
+downstream rather than indistinguishable from an exact pass.
 
 GLOBAL scope (``params={"uniqueness": {"scope": "global"}}``): the default
 partition scope cannot see a doc_id duplicated ACROSS partitions — the common
 real-world corruption (re-ingested shards, overlapping dumps). Global scope
-keeps the one-pass screen economics via sketch mergeability (Datasketches HLL,
-``F.hll_sketch_agg`` / ``hll_union_agg``): ONE aggregation pass yields a
-per-partition (row count, HLL sketch) pair; the per-partition estimates screen
-for local duplicates exactly as before, while
+screens the same per-partition state: the per-partition estimates screen for
+local duplicates exactly as before, while
 
     sum(per-partition estimates) - estimate(union of sketches)
 
@@ -49,7 +57,9 @@ violations record ``global_count`` and the number of partitions the id spans.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import math
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.rules import VERDICT_SCHEMA, RuleContext, RuleResult, local_frame
@@ -63,28 +73,103 @@ DEFAULTS = {
     # Counter-per-report semantics). "global": duplicates counted across the
     # whole table, attributed back to every partition holding the id.
     "scope": "partition",
-    # lgConfigK of the Datasketches HLL sketch used by the global screen
-    # (~0.8% relative error at 14 — inside the rsd=0.01 band).
-    "lg_k": 14,
 }
 
+# the lgConfigK values Spark's Datasketches HLL functions accept
+LG_K_MIN, LG_K_MAX = 4, 21
 
-# Estimated input bytes per map task of the HLL screen. At rsd 0.01 the
-# HLL++ buffer is 1,639 words per group, and every map task generates its
-# update and merge projections over all of them before it reads a row
-# (~0.25 s of CPU per task on a 4-core VM). The screen reads only (part_id,
-# doc_id), so it packs its scan into few large tasks instead of Spark's
-# default of at least one task per core.
-SCREEN_BYTES_PER_TASK = 1 << 30
+# (rows, HLL sketch bytes, estimate) of one partition; (0, b"", 0.0) when
+# the partition has no rows
+State = tuple[int, bytes, float]
 
 
-def _screen_input(ids: DataFrame) -> DataFrame:
-    """``ids`` coalesced to one partition per ``SCREEN_BYTES_PER_TASK`` of
-    the optimizer's size estimate. HLL++ registers merge by max, so the
-    estimates do not depend on how the rows are split."""
-    stats = ids._jdf.queryExecution().optimizedPlan().stats()
-    est = int(str(stats.sizeInBytes()))
-    return ids.coalesce(max(1, -(-est // SCREEN_BYTES_PER_TASK)))
+def lg_config_k(rsd: float) -> int:
+    """lgConfigK of the screen's sketch for relative standard deviation
+    ``rsd``: Spark's HLL++ precision formula, ceil(2*log2(1.106/rsd)) — 14 at
+    rsd 0.01, 16 at 0.005. An rsd that needs a lgConfigK outside the range
+    the sketch functions accept raises here, before any job runs."""
+    k = math.ceil(2.0 * math.log(1.106 / rsd) / math.log(2.0)) if rsd > 0 else 0
+    if not LG_K_MIN <= k <= LG_K_MAX:
+        raise ValueError(
+            f"uniqueness rsd={rsd!r} is out of range: lgConfigK = "
+            f"ceil(2*log2(1.106/rsd)) must lie in {LG_K_MIN}-{LG_K_MAX}"
+        )
+    return k
+
+
+def sketch_state(df: DataFrame, lg_k: int) -> dict[int, State]:
+    """ONE aggregation pass over ``df``'s rows -> {part_id: (rows, sketch,
+    estimate)}. Everything after it is driver work over n_parts tiny rows."""
+    rows = (
+        df.groupBy("part_id")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.hll_sketch_agg("doc_id", F.lit(lg_k)).alias("sk"),
+        )
+        .select("part_id", "n", "sk", F.hll_sketch_estimate("sk").alias("est"))
+        .collect()
+    )
+    return {
+        int(r["part_id"]): (int(r["n"]), bytes(r["sk"]), float(r["est"]))
+        for r in rows
+    }
+
+
+def union_state(
+    spark: SparkSession, parts: dict[int, list[tuple[int, bytes]]]
+) -> dict[int, State]:
+    """Per key, the state of a list of (rows, sketch) pairs: the rows add,
+    the sketches union, the estimate is the union's. One tiny job over the
+    serialized sketches, never a scan of rows; none when there is no
+    sketch."""
+    data = [(k, sk) for k, pairs in parts.items() for _, sk in pairs if sk]
+    got = {}
+    if data:
+        got = {
+            int(r["k"]): (bytes(r["u"]), float(r["est"]))
+            for r in local_frame(spark, data, "k int, sk binary")
+            .groupBy("k")
+            .agg(F.hll_union_agg("sk").alias("u"))
+            .select("k", "u", F.hll_sketch_estimate("u").alias("est"))
+            .collect()
+        }
+    return {
+        k: (sum(n for n, _ in pairs), *got.get(k, (b"", 0.0)))
+        for k, pairs in parts.items()
+    }
+
+
+def screen(
+    spark: SparkSession, state: dict[int, State], rsd: float, scope: str, every
+) -> set[int]:
+    """The partitions that need the exact pass: those whose estimate is more
+    than 3*rsd below their row count; at global scope all of ``every`` when
+    the union of the sketches falls more than 3*rsd*rows below the sum of
+    their estimates (ids in more than one partition). Each estimate carries
+    ~rsd relative error, so the cross band mirrors the local one."""
+    flagged = {
+        pid for pid, (n, _, est) in state.items() if est < n * (1.0 - 3.0 * rsd)
+    }
+    if scope == "global" and state:
+        total = sum(n for n, _, _ in state.values())
+        sum_est = sum(est for _, _, est in state.values())
+        pairs = [(n, sk) for n, sk, _ in state.values()]
+        union_est = union_state(spark, {0: pairs})[0][2]
+        if sum_est - union_est > 3.0 * rsd * total:
+            return set(every)
+    return flagged
+
+
+def exact_path(scope: str):
+    """What depends on the scope: (exact-pass function, violation
+    ``detail`` column, verdict ``detail`` suffix)."""
+    if scope == "global":
+        detail = F.format_string(
+            "duplicate doc_id global_count=%d parts=%d", "global_count", "n_parts"
+        )
+        return global_duplicate_doc_ids, detail, " scope=global"
+    detail = F.format_string("duplicate doc_id count=%d", "dup_count")
+    return duplicate_doc_ids, detail, ""
 
 
 def duplicate_doc_ids(df: DataFrame) -> DataFrame:
@@ -144,35 +229,55 @@ def global_duplicate_doc_ids(df: DataFrame) -> DataFrame:
     return per_part.join(global_counts, "doc_id")
 
 
-def _verdicts_from_dups(
-    df: DataFrame,
-    ctx: RuleContext,
-    dups: DataFrame,
-    exact_parts: set[int],
-    exact_detail: str,
-    screen_detail: str,
-) -> DataFrame:
-    """ONE collect of the per-partition duplicate-key counts (tiny: <=
-    n_parts rows) -> the verdict table as a local relation. The earlier
-    skeleton-join form ran the cached dup plan twice per suite run (once
-    here, once for the runner's verdict collect) — r6 collect-once pattern
-    shared with column_stats / token_bounds."""
+def evaluate(df: DataFrame, ctx: RuleContext) -> RuleResult:
+    p = {**DEFAULTS, **ctx.params.get(RULE_ID, {})}
+    lg_k = lg_config_k(p["rsd"])
+    part_ids = None if ctx.part_ids is None else sorted(int(x) for x in ctx.part_ids)
+
+    if p["always_exact"]:
+        if part_ids is None:
+            part_ids = sorted(
+                int(r["part_id"])
+                for r in df.select(F.col("part_id").cast("int")).distinct().collect()
+            )
+        exact_parts = set(part_ids)
+    else:
+        state = sketch_state(df, lg_k)
+        if part_ids is None:
+            part_ids = sorted(state)
+        exact_parts = screen(ctx.spark, state, p["rsd"], p["scope"], part_ids)
+    # no pruning when every partition is exact: at global scope duplicates
+    # may straddle any pair
+    scoped = (
+        df
+        if exact_parts == set(part_ids)
+        else df.filter(F.col("part_id").isin(sorted(exact_parts)))
+    )
+
+    exact_pass, detail, suffix = exact_path(p["scope"])
+    # tiny (one row per duplicated key); cache so violations + verdicts don't
+    # re-run the hash-group plan
+    dups = exact_pass(scoped).cache()
+    violations = dups.select(
+        F.col("part_id").cast("int"),
+        F.lit(RULE_ID).alias("rule_id"),
+        "doc_id",
+        "source",
+        F.col("n_tok").cast("int"),
+        detail.alias("detail"),
+    )
+
+    # ONE collect of the per-partition duplicate-key counts (<= n_parts rows)
+    # -> the verdict table as a local relation. Provenance: 'path=exact'
+    # means the hash-group exact scan ran for the partition; 'path=screen'
+    # means the pass rests on the sketch screen alone (resolution ~3*rsd)
     metrics = {
         int(r["part_id"]): float(r["metric"])
         for r in dups.groupBy("part_id")
         .agg(F.count(F.lit(1)).cast("double").alias("metric"))
         .collect()
     }
-    if ctx.part_ids is not None:
-        part_ids = sorted(int(x) for x in ctx.part_ids)
-    else:
-        part_ids = sorted(
-            int(r["part_id"])
-            for r in df.select(F.col("part_id").cast("int"))
-            .distinct()
-            .collect()
-        )
-    return local_frame(
+    verdicts = local_frame(
         ctx.spark,
         [
             (
@@ -181,146 +286,10 @@ def _verdicts_from_dups(
                 metrics.get(pid, 0.0) == 0.0,
                 metrics.get(pid, 0.0),
                 0.0,
-                exact_detail if pid in exact_parts else screen_detail,
+                ("path=exact" if pid in exact_parts else "path=screen") + suffix,
             )
             for pid in part_ids
         ],
         VERDICT_SCHEMA,
-    )
-
-
-def _all_part_ids(df: DataFrame, ctx: RuleContext) -> set[int]:
-    if ctx.part_ids is not None:
-        return {int(x) for x in ctx.part_ids}
-    return {
-        int(r["part_id"])
-        for r in df.select("part_id").distinct().collect()
-    }
-
-
-def _evaluate_global(df: DataFrame, ctx: RuleContext, p: dict) -> RuleResult:
-    ids = df.select("part_id", "doc_id")
-    rsd = p["rsd"]
-
-    exact_parts: set[int]
-    if p["always_exact"]:
-        scoped = df
-        exact_parts = _all_part_ids(df, ctx)
-    else:
-        # ONE pass over the fact rows: per-partition count + mergeable HLL
-        # sketch. Everything after is driver work over n_parts tiny rows.
-        per = ids.groupBy("part_id").agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.hll_sketch_agg("doc_id", F.lit(int(p["lg_k"]))).alias("sk"),
-        )
-        rows = per.select(
-            "part_id", "cnt", F.hll_sketch_estimate("sk").alias("est"), "sk"
-        ).collect()
-        total = sum(int(r["cnt"]) for r in rows)
-        sum_est = sum(float(r["est"]) for r in rows)
-        # union the serialized sketches: a driver-submitted job over n_parts
-        # rows — NOT a second scan of the table
-        union_est = 0.0
-        if rows:
-            union_est = float(
-                ctx.spark.createDataFrame(
-                    [(bytes(r["sk"]),) for r in rows], "sk binary"
-                )
-                .agg(F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("u"))
-                .collect()[0]["u"]
-            )
-        local_flagged = {
-            int(r["part_id"])
-            for r in rows
-            if float(r["est"]) < int(r["cnt"]) * (1.0 - 3.0 * rsd)
-        }
-        # ids present in >1 partition shrink the union relative to the sum
-        # of per-partition estimates; each estimate carries ~rsd relative
-        # error, so the detection band mirrors the local screen's 3*rsd
-        cross_flag = (sum_est - union_est) > 3.0 * rsd * total
-        if cross_flag:
-            scoped = df  # duplicates may straddle ANY pair — no pruning
-            exact_parts = _all_part_ids(df, ctx)
-        elif local_flagged:
-            scoped = df.filter(F.col("part_id").isin(sorted(local_flagged)))
-            exact_parts = local_flagged
-        else:
-            scoped = df.filter(F.lit(False))
-            exact_parts = set()
-
-    dups = global_duplicate_doc_ids(scoped).cache()
-
-    violations = dups.select(
-        F.col("part_id").cast("int"),
-        F.lit(RULE_ID).alias("rule_id"),
-        "doc_id",
-        "source",
-        F.col("n_tok").cast("int"),
-        F.format_string(
-            "duplicate doc_id global_count=%d parts=%d",
-            F.col("global_count"),
-            F.col("n_parts"),
-        ).alias("detail"),
-    )
-
-    verdicts = _verdicts_from_dups(
-        df, ctx, dups, {int(x) for x in exact_parts},
-        "path=exact scope=global", "path=screen scope=global",
-    )
-    return RuleResult(verdicts, violations)
-
-
-def evaluate(df: DataFrame, ctx: RuleContext) -> RuleResult:
-    p = {**DEFAULTS, **ctx.params.get(RULE_ID, {})}
-    if p["scope"] == "global":
-        return _evaluate_global(df, ctx, p)
-    ids = df.select("part_id", "doc_id")
-
-    exact_parts: set[int]  # partitions whose verdict comes from the exact path
-    if p["always_exact"]:
-        scoped = df  # exact path over everything
-        exact_parts = set(
-            ctx.part_ids
-            if ctx.part_ids is not None
-            else [r["part_id"] for r in ids.select("part_id").distinct().collect()]
-        )
-    else:
-        screen = _screen_input(ids).groupBy("part_id").agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.approx_count_distinct("doc_id", p["rsd"]).alias("approx"),
-        )
-        flagged = [
-            r["part_id"]
-            for r in screen.filter(
-                F.col("approx") < F.col("cnt") * (1.0 - 3.0 * p["rsd"])
-            ).collect()
-        ]
-        scoped = df.filter(
-            F.col("part_id").isin(flagged) if flagged else F.lit(False)
-        )
-        exact_parts = set(flagged)
-
-    # tiny (one row per duplicated key); cache so violations + verdicts don't
-    # re-run the hash-group plan
-    dups = duplicate_doc_ids(scoped).cache()
-
-    violations = dups.select(
-        F.col("part_id").cast("int"),
-        F.lit(RULE_ID).alias("rule_id"),
-        "doc_id",
-        "source",
-        F.col("n_tok").cast("int"),
-        F.format_string("duplicate doc_id count=%d", F.col("dup_count")).alias(
-            "detail"
-        ),
-    )
-
-    # provenance: which path produced this verdict — 'path=exact' means the
-    # hash-group exact scan ran for the partition; 'path=screen' means the
-    # pass rests on the HLL screen alone (resolution ~3*rsd — auditable
-    # downstream instead of indistinguishable from an exact pass)
-    verdicts = _verdicts_from_dups(
-        df, ctx, dups, {int(x) for x in exact_parts},
-        "path=exact", "path=screen",
     )
     return RuleResult(verdicts, violations)

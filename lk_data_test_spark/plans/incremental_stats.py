@@ -36,9 +36,12 @@ Drift's per-partition metric is memoized under a (profiles, params)
 fingerprint, so an all-skip run re-scores nothing.
 
 Uniqueness keeps its own store, because its Datasketches HLL state is not a
-shared-pass kind (IncrementalUniquenessValidator): the sketch UNIONS, the
-exact row count adds, and the exact hash-group pass runs only for a
-partition the merged screen flags.
+shared-pass kind (IncrementalUniquenessValidator). It is the batch rule's
+state and screen (operators/uniqueness.py ``sketch_state``, ``union_state``,
+``screen``): the stored sketch UNIONS with the delta's, the exact row count
+adds, and the exact hash-group pass runs only for a partition the merged
+screen flags. Its entries record their own inputs, the screen's rsd and
+scope.
 
 Two inputs fail fast instead of giving a wrong store: hashed-domain profiles
 (their bucket folding is lossy, and stored partials would mix domains; the
@@ -138,16 +141,21 @@ class _IncrementalValidator:
         self.store_path = store_path
         self.entries: dict[str, dict] = load_store(store_path)
         self.listing: dict[int, dict[str, int]] = {}
+        self.inputs: dict = {}
 
     def _save(self) -> None:
         save_store(self.store_path, self.entries, self._indent)
 
-    def _classify(self, entries: dict[str, dict]):
+    def _classify(self, inputs: dict):
         """List the table once (the listing this run reads and records) and
-        classify it against ``entries``."""
+        classify it against the entries recorded for ``inputs`` (the inputs
+        that shape an entry's state and verdicts); an entry recorded for
+        other inputs, or in an older store format without them, is full."""
+        self.inputs = inputs
         self.listing = {
             pid: self.table.part_files(pid) for pid in self.table.partition_ids()
         }
+        entries = {k: e for k, e in self.entries.items() if e.get("inputs") == inputs}
         return classify_partitions(self.table, entries, self.listing)
 
     def _files(self, pids) -> list[tuple[int, str]]:
@@ -159,13 +167,19 @@ class _IncrementalValidator:
         ]
 
     def _read(self, spark: SparkSession, files: list[tuple[int, str]]) -> DataFrame:
-        """Exactly these files, ``part_id`` derived from their paths."""
-        return spark.read.option("basePath", self.table.path).parquet(
-            *(path for _, path in files)
+        """Exactly these files, ``part_id`` derived from their paths, under
+        the table's schema (memoized by ``read_parquet``): a read without a
+        schema runs a footer-inference job each time."""
+        return (
+            spark.read.schema(self.table.read(spark).schema)
+            .option("basePath", self.table.path)
+            .parquet(*(path for _, path in files))
         )
 
     def _record(self, pid: int, **state) -> None:
-        self.entries[str(pid)] = {"files": self.listing[pid], **state}
+        self.entries[str(pid)] = {
+            "files": self.listing[pid], "inputs": self.inputs, **state
+        }
 
     @staticmethod
     def _report(results: dict[int, dict]) -> dict:
@@ -221,9 +235,8 @@ class IncrementalStatsValidator(_IncrementalValidator):
                 "hashed-domain profiles are not supported incrementally; "
                 "run the batch drift rule"
             )
-        inputs = {"vocab": self.vocab, "domain": _digest(domain)}
         delta, full, skip = self._classify(
-            {k: e for k, e in self.entries.items() if e.get("inputs") == inputs}
+            {"vocab": self.vocab, "domain": _digest(domain)}
         )
         modes = {pid: "full" for pid in full}
         modes.update({pid: "delta" for pid in delta})
@@ -269,7 +282,7 @@ class IncrementalStatsValidator(_IncrementalValidator):
             if pid in by_part:
                 by_part[pid].append(r)
         for pid, partials in by_part.items():
-            self._record(pid, inputs=inputs, partials=partials)
+            self._record(pid, partials=partials)
         shared = SharedTokenStats.collected(merged)
 
         def report(metric: dict, passed, **extra) -> dict:
@@ -350,19 +363,20 @@ class IncrementalStatsValidator(_IncrementalValidator):
 
 
 class IncrementalUniquenessValidator(_IncrementalValidator):
-    """Incremental UNIQUENESS validation: the HLL screen's sketch is
-    mergeable by design (Datasketches HLL via F.hll_sketch_agg /
-    hll_union_agg), so appended files contribute a delta sketch that unions
-    with the stored one, and the exact row count adds. A partition whose
-    MERGED screen flags possible duplicates (estimate < rows * (1 - 3*rsd),
-    the batch rule's band) falls back to the exact hash-group pass over the
-    WHOLE partition — duplicates can straddle old and new files, so no
-    delta-only exact check is sound; the screen's job is making that full
-    pass rare. A still-flagged partition re-runs its exact pass on EVERY
-    run, including skip runs — the same contract as the manifest's
-    failure-replay semantics (validated partitions skip, failures replay).
-    lgConfigK=14 gives the sketch ~0.8% relative error, inside the rsd=0.01
-    band.
+    """Incremental UNIQUENESS validation on the batch rule's own state and
+    screen (operators/uniqueness.py): a partition's (rows, Datasketches HLL
+    sketch) is mergeable by design, so appended files contribute a delta
+    sketch that unions with the stored one (``union_state``), and the exact
+    row count adds. ``screen`` over the merged state flags a partition whose
+    estimate is below rows * (1 - 3*rsd); a flagged partition falls back to
+    the exact hash-group pass over the WHOLE partition — duplicates can
+    straddle old and new files, so no delta-only exact check is sound; the
+    screen's job is making that full pass rare. A still-flagged partition
+    keeps its exact verdict on every run, including skip runs — the same
+    contract as the manifest's failure-replay semantics (validated
+    partitions skip, failures replay). lgConfigK follows from rsd as in the
+    batch rule. Each entry records its inputs (rsd, scope); an entry
+    recorded for others is full.
 
     scope="global" (cross-partition duplicates) is where the stored sketches
     pay twice: the global screen — sum(per-partition estimates) minus the
@@ -376,156 +390,90 @@ class IncrementalUniquenessValidator(_IncrementalValidator):
     """
 
     def __init__(
-        self, table: PartitionedTable, store_path: str, rsd: float = 0.01,
-        lg_config_k: int = 14, scope: str = "partition",
+        self, table: PartitionedTable, store_path: str,
+        rsd: float = uniqueness.DEFAULTS["rsd"],
+        scope: str = uniqueness.DEFAULTS["scope"],
     ):
+        self.lg_k = uniqueness.lg_config_k(rsd)
         super().__init__(table, store_path)
         self.rsd = rsd
-        self.lg_k = lg_config_k
         self.scope = scope
-
-    def _sketches(self, df) -> dict[int, tuple[int, bytes]]:
-        rows = (
-            df.groupBy("part_id")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.hll_sketch_agg("doc_id", F.lit(self.lg_k)).alias("sk"),
-            )
-            .collect()
-        )
-        return {int(r["part_id"]): (int(r["n"]), bytes(r["sk"])) for r in rows}
 
     def _stored(self, pid: int) -> tuple[int, bytes]:
         e = self.entries[str(pid)]
         return int(e["n_rows"]), base64.b64decode(e["sketch_b64"])
 
-    def _union_sketches(self, spark, pairs: dict[int, list[bytes]]) -> dict[int, tuple[bytes, int]]:
-        """Union each partition's sketch list and estimate, one tiny job."""
-        data = [(pid, sk) for pid, sks in pairs.items() for sk in sks]
-        rows = (
-            spark.createDataFrame(data, "part_id int, sk binary")
-            .groupBy("part_id")
-            .agg(F.hll_union_agg("sk").alias("u"))
-            .select(
-                "part_id", "u", F.hll_sketch_estimate("u").alias("est")
-            )
-            .collect()
-        )
-        return {int(r["part_id"]): (bytes(r["u"]), int(r["est"])) for r in rows}
-
     def run(self, spark: SparkSession) -> dict:
-        delta, full, skip = self._classify(self.entries)
-        # ONE job over every full partition's files and every added file
+        delta, full, skip = self._classify({"rsd": self.rsd, "scope": self.scope})
+        results = {pid: {"mode": "full"} for pid in full}
+        results.update({pid: {"mode": "delta"} for pid in delta})
+        results.update({pid: {"mode": "skip"} for pid in skip})
+
+        # ALL-skip fast path: with every file set and input unchanged, every
+        # verdict — screen flags included, and in global scope the cross
+        # signal too — is a pure function of the unchanged store, so the
+        # stored results are returned without submitting a single job or
+        # rewriting the store. (A delta/full partition falls through: in
+        # global scope one changed partition can legitimately flip a skip
+        # partition's verdict, so the screen re-runs over the merged state.)
+        if not full and not delta:
+            for pid in skip:
+                e = self.entries[str(pid)]
+                results[pid].update(
+                    metric=float(e["metric"]),
+                    passed=float(e["metric"]) == 0.0,
+                    detail=e["detail"],
+                )
+            return self._report(results)
+
+        # ONE scan over every full partition's files and every added file
         files = self._files(full) + [
             (pid, path) for pid, paths in delta.items() for path in paths
         ]
-        got = self._sketches(self._read(spark, files)) if files else {}
-        # pid -> (n_rows, sketch)
-        state = {pid: got.get(pid, (0, b"")) for pid in full}
-        results = {pid: {"mode": "full"} for pid in full}
-        if delta:
-            to_union: dict[int, list[bytes]] = {}
-            n_rows: dict[int, int] = {}
-            for pid in delta:
-                n_new, sk_new = got.get(pid, (0, b""))
-                n_old, sk_old = self._stored(pid)
-                n_rows[pid] = n_old + n_new
-                to_union[pid] = [sk_old] + ([sk_new] if sk_new else [])
-            unioned = self._union_sketches(spark, to_union)
-            for pid in delta:
-                state[pid] = (n_rows[pid], unioned[pid][0])
-                results[pid] = {"mode": "delta"}
-        for pid in skip:
-            state[pid] = self._stored(pid)
-            results[pid] = {"mode": "skip"}
-
-        # ALL-skip fast path: with every file set unchanged, every verdict —
-        # screen flags included, and in global scope the cross signal too —
-        # is a pure function of the unchanged store, so the stored results
-        # are returned without submitting a single job or rewriting the
-        # store. (A delta/full partition falls through: in global scope one
-        # changed partition can legitimately flip a skip partition's
-        # verdict, so the screen re-runs over the full merged state below.)
-        if not full and not delta and all(
-            "metric" in self.entries[str(pid)]
-            and "detail" in self.entries[str(pid)]
-            # a memo recorded under the other scope is not reusable
-            and (
-                ("scope=global" in self.entries[str(pid)]["detail"])
-                == (self.scope == "global")
+        got = {}
+        if files:
+            got = uniqueness.sketch_state(self._read(spark, files), self.lg_k)
+        state = {pid: got.get(pid, (0, b"", 0.0)) for pid in full}
+        # stored sketches, unioned with the delta's: one tiny job, no scan
+        state.update(
+            uniqueness.union_state(
+                spark,
+                {
+                    pid: [self._stored(pid), *([got[pid][:2]] if pid in got else [])]
+                    for pid in (*delta, *skip)
+                },
             )
-            for pid in skip
-        ):
-            for pid in skip:
-                e = self.entries[str(pid)]
-                results[pid]["metric"] = float(e["metric"])
-                results[pid]["passed"] = float(e["metric"]) == 0.0
-                results[pid]["detail"] = e["detail"]
-            return self._report(results)
-
-        # screen over merged state (estimates in one tiny job)
-        ests = self._union_sketches(
-            spark, {pid: [sk] for pid, (_, sk) in state.items() if sk}
         )
-        flagged = [
-            pid
-            for pid, (n, sk) in state.items()
-            if sk and n > 0 and ests[pid][1] < n * (1.0 - 3.0 * self.rsd)
-        ]
-        if self.scope == "global":
-            # cross screen: union EVERY stored sketch (no scan — one tiny
-            # driver-submitted job over n_parts serialized sketches)
-            total = sum(n for n, _ in state.values())
-            sum_est = sum(ests[pid][1] for pid in ests)
-            all_sks = [sk for _, sk in state.values() if sk]
-            union_est = 0
-            if all_sks:
-                union_est = self._union_sketches(spark, {-1: all_sks})[-1][1]
-            cross = (sum_est - union_est) > 3.0 * self.rsd * total
-            exact_pids = sorted(state) if cross else flagged
-            dup_counts = {}
-            if exact_pids:
-                dup_counts = _count_by_part(
-                    uniqueness.global_duplicate_doc_ids(
-                        self._read(spark, self._files(exact_pids))
-                    )
-                )
-            scope = " scope=global"
-        else:
-            # Partition-scope exact results are pure functions of the
-            # partition's file set: a SKIP partition's stored exact dup count
-            # cannot have changed, so it is reused instead of re-scanning —
-            # at 10^12 rows, replaying the exact pass over every
-            # flagged-but-unchanged partition on every run is the difference
-            # between an O(delta) rerun and an O(all flagged data) one.
-            # (Global scope cannot memoize per partition: its exact counts
-            # depend on the SET of partitions scanned together.) Changing rsd
-            # between runs can alter which partitions the screen flags;
-            # delete the store to re-derive.
-            exact_pids = flagged
+        exact = uniqueness.screen(spark, state, self.rsd, self.scope, state)
+        exact_pass, _, suffix = uniqueness.exact_path(self.scope)
+        # Partition-scope exact results are pure functions of the partition's
+        # file set: a SKIP partition's stored exact dup count cannot have
+        # changed, so it is reused instead of re-scanning — at 10^12 rows,
+        # replaying the exact pass over every flagged-but-unchanged partition
+        # on every run is the difference between an O(delta) rerun and an
+        # O(all flagged data) one. (Global scope cannot memoize per
+        # partition: its exact counts depend on the SET of partitions
+        # scanned together.)
+        dup_counts = {}
+        if self.scope != "global":
             dup_counts = {
                 pid: float(self.entries[str(pid)]["metric"])
-                for pid in flagged
+                for pid in exact
                 if results[pid]["mode"] == "skip"
-                and "metric" in self.entries[str(pid)]
             }
-            need_exact = [pid for pid in flagged if pid not in dup_counts]
-            if need_exact:
-                dup_counts.update(_count_by_part(
-                    uniqueness.duplicate_doc_ids(
-                        self._read(spark, self._files(need_exact))
-                    )
-                ))
-            scope = ""
+        need_exact = sorted(set(exact) - set(dup_counts))
+        if need_exact:
+            dup_counts.update(
+                _count_by_part(exact_pass(self._read(spark, self._files(need_exact))))
+            )
 
         for pid, res in results.items():
-            exact = pid in exact_pids
-            metric = float(dup_counts.get(pid, 0)) if exact else 0.0
+            metric = float(dup_counts.get(pid, 0)) if pid in exact else 0.0
             res["metric"] = metric
             res["passed"] = metric == 0.0
-            res["detail"] = ("path=exact" if exact else "path=screen") + scope
+            res["detail"] = ("path=exact" if pid in exact else "path=screen") + suffix
             if res["mode"] != "skip":
-                n, sk = state[pid]
+                n, sk, _ = state[pid]
                 self._record(
                     pid, n_rows=n, sketch_b64=base64.b64encode(sk).decode()
                 )

@@ -434,10 +434,76 @@ def test_skip_runs_do_no_work(spark, tmp_path, monkeypatch):
     assert all(r["metric"] == 42.0 for r in d3["parts"].values())
 
 
+def test_uniqueness_input_change_reaches_unchanged_partitions(spark, tmp_path):
+    """An rsd or scope change with no file change reaches every partition:
+    each uniqueness entry records the inputs it was screened under, so an
+    entry recorded for others is read again (full), and the report equals
+    the batch rule under the new inputs. At rsd 0.2 the dup-role partition
+    passes on the screen where rsd 0.01 flagged and failed it."""
+    from lk_data_test_spark.operators import uniqueness
+    from lk_data_test_spark.plans.incremental_stats import (
+        IncrementalUniquenessValidator,
+    )
+    from lk_data_test_spark.plans.rules import RuleContext
+
+    d = str(tmp_path / "corpus")
+    generate(spark, d, GenConfig(n_parts=5, rows_per_part=1200))
+    table = PartitionedTable(f"{d}/sequences")
+    store = str(tmp_path / "uniq.json")
+
+    def check(mode, **params):
+        out = IncrementalUniquenessValidator(table, store, **params).run(spark)
+        spark.catalog.clearCache()
+        ctx = RuleContext(
+            spark=spark, part_ids=table.partition_ids(),
+            params={"uniqueness": params},
+        )
+        batch = {
+            int(r["part_id"]): (bool(r["passed"]), float(r["metric"]), r["detail"])
+            for r in uniqueness.evaluate(table.read(spark), ctx).verdicts.collect()
+        }
+        got = {
+            pid: (r["passed"], r["metric"], r["detail"])
+            for pid, r in out["parts"].items()
+        }
+        assert got == batch, params
+        assert all(m == mode for m in out["modes"].values()), params
+        return got
+
+    assert check("full", rsd=0.01)[1] == (False, 60.0, "path=exact")
+    assert check("full", rsd=0.2)[1] == (True, 0.0, "path=screen")
+    check("skip", rsd=0.2)
+    assert check("full", rsd=0.2, scope="global")[1] == (
+        True, 0.0, "path=screen scope=global",
+    )
+    check("skip", rsd=0.2, scope="global")
+
+
+def test_incremental_read_runs_no_footer_job(spark, tmp_path):
+    """The incremental stores read their files under the table's memoized
+    schema: building the read of a partition's files runs no Spark job,
+    where a read without a schema runs a footer-inference job each time."""
+    from lk_data_test_spark.plans.incremental_stats import (
+        IncrementalUniquenessValidator,
+    )
+    from tests.test_catalog import _jobs
+
+    d = str(tmp_path / "corpus")
+    generate(spark, d, GenConfig(n_parts=2, rows_per_part=300))
+    table = PartitionedTable(f"{d}/sequences")
+    v = IncrementalUniquenessValidator(table, str(tmp_path / "u.json"))
+    v.run(spark)
+    df, jobs = _jobs(spark, lambda: v._read(spark, v._files([0])))
+    assert jobs == 0
+    assert df.schema == table.read(spark).schema
+    assert df.count() == 300
+    assert {r["part_id"] for r in df.select("part_id").distinct().collect()} == {0}
+
+
 def _batch(spark, table, allowed=None, profiles=None, params=None) -> dict:
     """rule -> {part_id: (passed, metric)} of a fresh batch evaluate of every
     data rule the incremental suite covers (drift/referential only with
-    their dimension)."""
+    their dimension); uniqueness adds its ``detail`` (path=screen|exact)."""
     from lk_data_test_spark.operators import (
         column_stats,
         drift,
@@ -459,6 +525,7 @@ def _batch(spark, table, allowed=None, profiles=None, params=None) -> dict:
     return {
         m.RULE_ID: {
             int(r["part_id"]): (bool(r["passed"]), float(r["metric"]))
+            + ((r["detail"],) if m is uniqueness else ())
             for r in m.evaluate(df, ctx).verdicts.collect()
         }
         for m in mods
@@ -468,8 +535,9 @@ def _batch(spark, table, allowed=None, profiles=None, params=None) -> dict:
 def _check_batch(out, batch):
     assert set(out) == set(batch)
     for rule, verdicts in batch.items():
+        fields = ["passed", "metric"] + (["detail"] if rule == "uniqueness" else [])
         got = {
-            pid: (r["passed"], r["metric"])
+            pid: tuple(r[f] for f in fields)
             for pid, r in out[rule]["parts"].items()
         }
         assert got == verdicts, rule
@@ -620,7 +688,9 @@ def test_incremental_store_format(spark, tmp_path):
     )
     expected = {
         "stats": {"files", "inputs", "partials", "drift_metric", "drift_fp"},
-        "uniqueness": {"files", "n_rows", "sketch_b64", "metric", "detail"},
+        "uniqueness": {
+            "files", "inputs", "n_rows", "sketch_b64", "metric", "detail"
+        },
     }
     assert sorted(
         f for f in os.listdir(mdir) if f.endswith(".json")
@@ -634,6 +704,8 @@ def test_incremental_store_format(spark, tmp_path):
             assert set(e["files"]) == set(
                 table.partition_info(int(pid)).files
             ), (name, pid)
+        if name == "uniqueness":
+            assert entries["0"]["inputs"] == {"rsd": 0.01, "scope": "partition"}
         if name == "stats":
             assert entries["0"]["inputs"]["vocab"] == [0, 32768]
             assert set(entries["0"]["inputs"]) == {"vocab", "domain"}
@@ -665,34 +737,30 @@ def test_file_landing_mid_run_is_read_next_run(spark, tmp_path, monkeypatch):
     """Both stores record the listing their scan read: a file that lands
     after a store classified its partitions is not recorded as validated,
     so the next run reads it as a delta."""
+    import lk_data_test_spark.operators.uniqueness as uniq_mod
     import lk_data_test_spark.plans.incremental_stats as inc_mod
-    from lk_data_test_spark.plans.incremental_stats import (
-        IncrementalUniquenessValidator,
-        run_incremental_suite,
-    )
+    from lk_data_test_spark.plans.incremental_stats import run_incremental_suite
 
     d = str(tmp_path / "corpus")
     generate(spark, d, GenConfig(n_parts=2, rows_per_part=300))
     table = PartitionedTable(f"{d}/sequences")
     mdir = str(tmp_path / "stores")
 
-    real_build, real_sketches = (
-        inc_mod.build_shared, IncrementalUniquenessValidator._sketches
-    )
+    real_build, real_sketches = inc_mod.build_shared, uniq_mod.sketch_state
 
     def build_then_land(*a, **k):
         # 7 rows with null n_tok land after the partials store's listing
         _append_rows(table, 0, "landed-a", 7, null_n_tok=True)
         return real_build(*a, **k)
 
-    def sketch_then_land(self, df):
+    def sketch_then_land(*a, **k):
         # 5 clean rows land after the uniqueness store's listing
         _append_rows(table, 0, "landed-b", 5)
-        return real_sketches(self, df)
+        return real_sketches(*a, **k)
 
     with monkeypatch.context() as m:
         m.setattr(inc_mod, "build_shared", build_then_land)
-        m.setattr(IncrementalUniquenessValidator, "_sketches", sketch_then_land)
+        m.setattr(uniq_mod, "sketch_state", sketch_then_land)
         r1 = run_incremental_suite(spark, table, mdir)
     assert r1["column_stats"]["scanned_rows"] == 600
     assert r1["column_stats"]["parts"][0]["passed"] is True

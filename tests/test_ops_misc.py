@@ -275,18 +275,28 @@ def test_packed_char_bins_greedy_budget(spark):
 
 
 def test_hll_approx_distinct_within_error_bound(spark):
-    """The HLL screen the uniqueness rule leans on: approx_count_distinct at
-    the default rsd=0.05 stays within 3*rsd of exact on real column shapes
-    (doc_id ~unique; source low-cardinality)."""
+    """The HLL estimators the engine leans on stay within 3*rsd of exact on
+    real column shapes (doc_id ~unique; source low-cardinality):
+    approx_count_distinct at its default rsd=0.05 (constraint suggestion)
+    and the uniqueness screen's Datasketches sketch at the lgConfigK its
+    default rsd=0.01 derives."""
+    from lk_data_test_spark.operators import uniqueness
+
+    rsd = uniqueness.DEFAULTS["rsd"]
+    lg_k = F.lit(uniqueness.lg_config_k(rsd))
     d = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     row = d.agg(
         F.approx_count_distinct("doc_id").alias("a_doc"),
+        F.hll_sketch_estimate(F.hll_sketch_agg("doc_id", lg_k)).alias("s_doc"),
         F.countDistinct("doc_id").alias("e_doc"),
         F.approx_count_distinct("source").alias("a_src"),
+        F.hll_sketch_estimate(F.hll_sketch_agg("source", lg_k)).alias("s_src"),
         F.countDistinct("source").alias("e_src"),
     ).collect()[0]
     assert abs(row["a_doc"] - row["e_doc"]) / row["e_doc"] <= 0.15
     assert abs(row["a_src"] - row["e_src"]) / row["e_src"] <= 0.15
+    assert abs(row["s_doc"] - row["e_doc"]) / row["e_doc"] <= 3 * rsd
+    assert abs(row["s_src"] - row["e_src"]) / row["e_src"] <= 3 * rsd
 
 
 def test_scored_best_match_argmax_tiebreak_and_blocking(spark):

@@ -258,23 +258,33 @@ def test_uniqueness_global_matches_partition_scope_without_cross_dups(ctx_df):
     assert _failing(g.verdicts) == EXPECTED["uniqueness"]
 
 
-def test_uniqueness_screen_packs_small_input(ctx_df):
-    """The HLL screen reads a small table in one task, and its per-partition
-    row counts and HLL++ estimates equal those of Spark's default split."""
+def test_uniqueness_lg_k_follows_rsd(ctx_df, corpus_dir, tmp_path):
+    """lgConfigK is Spark's HLL++ precision for rsd (14 at the default 0.01,
+    so stored sketches keep their format); an rsd outside the sketch's
+    range raises a ValueError naming the range before any job runs, in the
+    batch rule and in the incremental validator alike."""
+    from lk_data_test_spark.plans.incremental_stats import (
+        IncrementalUniquenessValidator,
+    )
+
+    assert uniqueness.lg_config_k(0.01) == 14
+    assert uniqueness.lg_config_k(0.005) == 16
+    assert uniqueness.lg_config_k(0.39) == 4
+    assert uniqueness.lg_config_k(0.0008) == 21
     ctx, df = ctx_df
-    ids = df.select("part_id", "doc_id")
-    packed = uniqueness._screen_input(ids)
-    assert packed.rdd.getNumPartitions() == 1 < ids.rdd.getNumPartitions()
-
-    def screen(frame):
-        return sorted(
-            tuple(r)
-            for r in frame.groupBy("part_id")
-            .agg(F.count(F.lit(1)), F.approx_count_distinct("doc_id", 0.01))
-            .collect()
+    table = PartitionedTable(f"{corpus_dir}/sequences")
+    tracker = ctx.spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    for rsd in (0.5, 0.0005, 0.0, -0.01):
+        bad = RuleContext(
+            spark=ctx.spark, part_ids=ctx.part_ids,
+            params={"uniqueness": {"rsd": rsd}},
         )
-
-    assert screen(packed) == screen(ids)
+        with pytest.raises(ValueError, match="must lie in 4-21"):
+            uniqueness.evaluate(df, bad)
+        with pytest.raises(ValueError, match="must lie in 4-21"):
+            IncrementalUniquenessValidator(table, str(tmp_path / "u.json"), rsd=rsd)
+    assert set(tracker.getJobIdsForGroup(None)) == before
 
 
 def test_uniqueness_always_exact_matches_screen(ctx_df):
