@@ -52,7 +52,7 @@ def main(argv: list[str] | None = None) -> int:
         "--params",
         default=None,
         help="JSON rule-parameter overrides, keyed by rule id, e.g. "
-        '\'{"drift": {"ks_threshold": 0.25}, "uniqueness": {"max_dup_rate": 0}}\'',
+        '\'{"drift": {"ks_threshold": 0.25}, "uniqueness": {"rsd": 0.02}}\'',
     )
     ap.add_argument(
         "--extra-rules",
@@ -93,7 +93,8 @@ def main(argv: list[str] | None = None) -> int:
         help="file-delta incremental validation of the data-rule suite "
         "(plans/incremental_stats.py): partitions whose file set only GREW "
         "scan just the added files and merge the stored mergeable partials; "
-        "unchanged partitions scan nothing; rewrites fall back to full",
+        "unchanged partitions scan nothing; rewrites fall back to full; "
+        "takes the rule --params of a full run",
     )
     ap.add_argument(
         "--suggest-from-parts",
@@ -125,6 +126,7 @@ def main(argv: list[str] | None = None) -> int:
         "throughput: excludes one-time JVM/python-worker/codegen startup)",
     )
     args = ap.parse_args(argv)
+    params = json.loads(args.params) if args.params else None
 
     from lk_data_test_spark.datagen import GenConfig, generate
     from lk_data_test_spark.plans.runner import ValidationRunner
@@ -212,56 +214,37 @@ def main(argv: list[str] | None = None) -> int:
             run_incremental_suite,
         )
 
-        table = PartitionedTable(seq_path)
-        mdir = os.path.join(args.data_dir, "_manifest")
+        def dimension(name: str):
+            path = os.path.join(args.data_dir, name)
+            return spark.read.parquet(path) if os.path.exists(path) else None
+
         t0 = time.time()
-        prof_path = os.path.join(args.data_dir, "reference_profiles")
-        allowed_path = os.path.join(args.data_dir, "allowed_sources")
         suite = run_incremental_suite(
             spark,
-            table,
-            mdir,
-            profiles=(
-                spark.read.parquet(prof_path)
-                if os.path.exists(prof_path)
-                else None
-            ),
-            allowed=(
-                spark.read.parquet(allowed_path)
-                if os.path.exists(allowed_path)
-                else None
-            ),
+            PartitionedTable(seq_path),
+            os.path.join(args.data_dir, "_manifest"),
+            profiles=dimension("reference_profiles"),
+            allowed=dimension("allowed_sources"),
+            params=params,
         )
+
+        def failed(rule: str) -> list[int]:
+            parts = suite[rule]["parts"]
+            return sorted(p for p, res in parts.items() if not res["passed"])
+
         r = suite["column_stats"]
         out = {
             "modes": {str(k): m for k, m in r["modes"].items()},
             "scanned_rows": r["scanned_rows"],
-            "failed_partitions": sorted(
-                p for p, res in r["parts"].items() if not res["passed"]
-            ),
+            "failed_partitions": failed("column_stats"),
         }
         if "drift" in suite:
-            rd = suite["drift"]
-            out["drift_modes"] = {str(k): m for k, m in rd["modes"].items()}
-            out["drift_failed_partitions"] = sorted(
-                p for p, res in rd["parts"].items() if not res["passed"]
-            )
-        if "referential" in suite:
-            out["referential_failed_partitions"] = sorted(
-                p
-                for p, res in suite["referential"]["parts"].items()
-                if not res["passed"]
-            )
-        out["uniqueness_failed_partitions"] = sorted(
-            p
-            for p, res in suite["uniqueness"]["parts"].items()
-            if not res["passed"]
-        )
-        out["token_bounds_failed_partitions"] = sorted(
-            p
-            for p, res in suite["token_bounds"]["parts"].items()
-            if not res["passed"]
-        )
+            out["drift_modes"] = {
+                str(k): m for k, m in suite["drift"]["modes"].items()
+            }
+        for rule in ("drift", "referential", "uniqueness", "token_bounds"):
+            if rule in suite:
+                out[f"{rule}_failed_partitions"] = failed(rule)
         out["elapsed_sec"] = round(time.time() - t0, 2)
         print(json.dumps(out))
         return 0
@@ -326,7 +309,7 @@ def main(argv: list[str] | None = None) -> int:
         ),
         rules=rules,
         output_dir=os.path.join(args.data_dir, "validation_out"),
-        params=json.loads(args.params) if args.params else None,
+        params=params,
     )
     run_times = []
     for i in range(max(1, args.repeat)):

@@ -24,9 +24,9 @@ shuffle, so:
 
 The sketches UNION (``union_state``): the rows add and the union's sketch
 is the sketch of all rows, so the incremental store
-(``plans/incremental_stats.py`` ``IncrementalUniquenessValidator``) screens
-its stored sketches unioned with an append's delta sketches through the same
-``screen``, with no scan of the old rows.
+(``plans/incremental_stats.py``, one entry per partition beside its shared
+partials) screens its stored sketches unioned with an append's delta
+sketches through the same ``screen``, with no scan of the old rows.
 
 The screen can miss duplicate rates below its resolution (~3*rsd); callers
 needing certainty set params ``{"uniqueness": {"always_exact": True}}`` which

@@ -1,47 +1,59 @@
 """File-delta INCREMENTAL validation: read only the files a run has not
-validated yet, and merge their mergeable partials into the stored ones.
+validated yet, and merge their mergeable state into the stored one.
 
 The checkpoint manifest (plans/manifest.py) resumes at PARTITION granularity:
 a partition whose snapshot changed re-runs in full. Under append-only
 ingestion (the Iceberg norm — snapshots that only ADD data files) that
-re-reads every old row. This module is the fast path on top. Per partition
-its store holds the validated (file name -> size) set and the partition's
-shared partials (plans/shared.py, kinds 0-5: n_tok histogram, reference-token
-counts, len-mismatch, null-tokens and out-of-vocab rows, row census). They
-are count rows keyed by (source, kind, key) that merge by addition, so the
-stored partials plus those of the added files ARE the partials of a full
-recompute. A run lists every partition once and classifies it:
+re-reads every old row. This module is the fast path on top. Its one store
+holds one entry per partition: the validated (file name -> size) set, the
+partition's shared partials (plans/shared.py, kinds 0-5: n_tok histogram,
+reference-token counts, len-mismatch, null-tokens and out-of-vocab rows, row
+census) and its uniqueness sketch (operators/uniqueness.py, a Datasketches
+HLL sketch of its doc_ids). The partials are count rows keyed by (source,
+kind, key) that merge by addition, and sketches merge by union, so the
+stored state plus that of the added files IS the state of a full recompute.
+A run lists every partition once and classifies it:
 
   - skip   — file set unchanged: nothing read;
   - delta  — pure append (every validated file still present with the same
-    size): only the added files are read, and their partials add to the
-    stored ones;
+    size): only the added files are read, and their state merges into the
+    stored one;
   - full   — anything else (rewrite, delete, size change, first sight, an
-    entry of an older store format or recorded for other pass inputs): the
-    whole partition is read, and its partials replace the stored ones.
+    entry of an older store format or recorded for other inputs): the whole
+    partition is read, and its state replaces the stored one.
 
-ONE ``build_shared`` pass reads the files of every full partition and the
-added files of every delta partition through the direct feed. The store
-records exactly the listing that pass read, so a file that lands mid-run is
-read by the next run. The verdicts are the batch rules' own driver functions
-of the merged partials — column_stats ``part_stats`` and ``BAD_FIELDS``,
-token_bounds' kind-4 counts, referential ``unknown_by_part``, drift
-``score_groups`` — so a delta verdict equals a fresh batch evaluation of the
-grown table (asserted by tests). An input that changes while no file does
-(the allowed sources, the drift thresholds, the profiles' quantiles) reaches
-every partition without a scan. The partials themselves depend on two pass
-inputs, the vocab bounds (kind 4) and the reference token domain (kind 1);
-each entry records them, and an entry recorded for other inputs is full.
-Drift's per-partition metric is memoized under a (profiles, params)
-fingerprint, so an all-skip run re-scores nothing.
+ONE ``build_shared`` pass and ONE ``uniqueness.sketch_state`` pass read the
+files of every full partition and the added files of every delta partition.
+The store records exactly the listing those passes read, so a file that
+lands mid-run is read by the next run. The verdicts are the batch rules' own
+driver functions of the merged state — column_stats ``part_stats`` and
+``BAD_FIELDS``, token_bounds' kind-4 counts, referential ``unknown_by_part``,
+drift ``score_groups``, uniqueness ``screen`` — under the rule ``params`` of
+``ValidationRunner``, so a delta verdict equals a fresh batch evaluation of
+the grown table (asserted by tests). An input that changes while no file
+does (the allowed sources, the thresholds, the profiles' quantiles) reaches
+every partition without a scan. The stored state itself depends on the
+vocab bounds (kind 4), the reference token domain (kind 1) and the
+uniqueness screen's rsd, scope and always_exact; each entry records them
+(``inputs``), and an entry recorded for other inputs is full. Drift's
+per-partition metric is memoized under a (profiles, params) fingerprint, so
+an all-skip run re-scores nothing.
 
-Uniqueness keeps its own store, because its Datasketches HLL state is not a
-shared-pass kind (IncrementalUniquenessValidator). It is the batch rule's
-state and screen (operators/uniqueness.py ``sketch_state``, ``union_state``,
-``screen``): the stored sketch UNIONS with the delta's, the exact row count
-adds, and the exact hash-group pass runs only for a partition the merged
-screen flags. Its entries record their own inputs, the screen's rsd and
-scope.
+Uniqueness screens the merged sketches (the rows are the kind-5 census), and
+the exact hash-group pass runs only for a partition the screen flags. A
+flagged partition falls back to the exact pass over the WHOLE partition —
+duplicates can straddle old and new files, so no delta-only exact check is
+sound; the screen's job is making that full pass rare. At partition scope a
+skip partition's stored exact count is reused, so a still-flagged partition
+keeps its exact verdict on every run, including skip runs — the manifest's
+failure-replay contract. At global scope the cross signal (sum of
+estimates minus the estimate of the union of every sketch) comes from the
+stored sketches with no scan: an append that duplicates ids living in an
+untouched (skip) partition flips the signal and runs the exact global pass
+over the whole table — the one case where a skip partition's verdict changes
+without its files changing, which is the point of the global scope. A run
+where every partition skips returns the stored verdicts with no uniqueness
+job.
 
 Two inputs fail fast instead of giving a wrong store: hashed-domain profiles
 (their bucket folding is lossy, and stored partials would mix domains; the
@@ -50,9 +62,9 @@ batch drift rule handles them) and ``PartitionedTable(tolerate_corrupt=True)``
 be recorded as validated; ValidationRunner reads such tables).
 
 Scale shape: per-partition state is bounded by sources x (|reference tokens|
-+ |distinct n_tok|) count rows plus a file->size dict — O(files), never
-O(rows); a run reads exactly the unseen files; verdicts are driver work over
-the merged count rows.
++ |distinct n_tok|) count rows, one sketch of at most 2^lgConfigK bytes and
+a file->size dict — O(files), never O(rows); a run reads exactly the unseen
+files; verdicts are driver work over the merged state.
 """
 
 from __future__ import annotations
@@ -67,8 +79,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators import drift, referential, uniqueness
-from ..operators.column_stats import BAD_FIELDS, part_stats
+from ..operators import column_stats, drift, referential, uniqueness
 from ..sources.catalog import PartitionedTable
 from .manifest import load_store, save_store
 from .rules import RuleContext
@@ -79,6 +90,7 @@ from .shared import (
     KIND_TOKEN,
     SharedTokenStats,
     build_shared,
+    vocab_bounds,
 )
 
 _KEYS = ["part_id", "source", "kind", "key"]
@@ -124,13 +136,38 @@ def _count_by_part(df) -> dict[int, int]:
     return {int(r["part_id"]): int(r["n"]) for r in rows}
 
 
-class _IncrementalValidator:
-    """What both incremental stores share: the file-lineage JSON store, the
-    one listing a run classifies, reads and records, and the report shape."""
+def _digest(obj) -> str:
+    return hashlib.sha256(json.dumps(obj, default=str).encode()).hexdigest()[:16]
 
-    _indent: int | None = 1  # JSON indent of the store file
 
-    def __init__(self, table: PartitionedTable, store_path: str):
+class IncrementalStatsValidator:
+    """The store of per-partition merged state, and every data rule's
+    verdict from it.
+
+    ``params`` take ``ValidationRunner``'s shape: top-level ``vocab_lo`` /
+    ``vocab_size`` and the ``column_stats``, ``drift`` and ``uniqueness``
+    dicts, each over its rule's defaults. ``run(spark)`` reads the unseen
+    files, merges and stores their state, and returns the column_stats
+    report: {"parts": {part_id: {"mode", "passed", "metric", "stats"}},
+    "scanned_rows" (rows this run read), "modes"}. Every rule's report —
+    column_stats, token_bounds and uniqueness always, drift given
+    ``profiles``, referential given ``allowed`` — is left in ``reports``,
+    each {"parts": {part_id: {"mode", "passed", "metric", ...}}, "modes"};
+    uniqueness adds each partition's ``detail`` (path=screen|exact).
+    """
+
+    def __init__(
+        self,
+        table: PartitionedTable,
+        store_path: str,
+        profiles=None,
+        allowed=None,
+        params: dict | None = None,
+    ):
+        self.params = params or {}
+        self.drift = drift.resolve_params(self.params.get("drift"))
+        self.uniq = {**uniqueness.DEFAULTS, **self.params.get("uniqueness", {})}
+        self.lg_k = uniqueness.lg_config_k(self.uniq["rsd"])
         if table.tolerate_corrupt:
             raise ValueError(
                 "incremental validation reads every listed file directly and "
@@ -139,24 +176,11 @@ class _IncrementalValidator:
             )
         self.table = table
         self.store_path = store_path
+        self.profiles = profiles
+        self.allowed = allowed
         self.entries: dict[str, dict] = load_store(store_path)
         self.listing: dict[int, dict[str, int]] = {}
-        self.inputs: dict = {}
-
-    def _save(self) -> None:
-        save_store(self.store_path, self.entries, self._indent)
-
-    def _classify(self, inputs: dict):
-        """List the table once (the listing this run reads and records) and
-        classify it against the entries recorded for ``inputs`` (the inputs
-        that shape an entry's state and verdicts); an entry recorded for
-        other inputs, or in an older store format without them, is full."""
-        self.inputs = inputs
-        self.listing = {
-            pid: self.table.part_files(pid) for pid in self.table.partition_ids()
-        }
-        entries = {k: e for k, e in self.entries.items() if e.get("inputs") == inputs}
-        return classify_partitions(self.table, entries, self.listing)
+        self.reports: dict[str, dict] = {}
 
     def _files(self, pids) -> list[tuple[int, str]]:
         """(part_id, path) of every listed file of ``pids``."""
@@ -176,67 +200,27 @@ class _IncrementalValidator:
             .parquet(*(path for _, path in files))
         )
 
-    def _record(self, pid: int, **state) -> None:
-        self.entries[str(pid)] = {
-            "files": self.listing[pid], "inputs": self.inputs, **state
-        }
-
-    @staticmethod
-    def _report(results: dict[int, dict]) -> dict:
-        modes = {pid: r["mode"] for pid, r in sorted(results.items())}
-        return {"parts": results, "modes": modes}
-
-
-def _digest(obj) -> str:
-    return hashlib.sha256(json.dumps(obj, default=str).encode()).hexdigest()[:16]
-
-
-class IncrementalStatsValidator(_IncrementalValidator):
-    """The store of merged per-partition shared partials, and every verdict
-    they give.
-
-    ``run(spark)`` reads the unseen files in one shared pass, merges and
-    stores the partials, and returns the column_stats report: {"parts":
-    {part_id: {"mode", "passed", "metric", "stats"}}, "scanned_rows" (rows
-    this run read), "modes"}. Every rule's report — column_stats and
-    token_bounds always, drift given ``profiles``, referential given
-    ``allowed`` — is left in ``reports``, each {"parts": {part_id: {"mode",
-    "passed", "metric", ...}}, "modes"}. ``params`` are drift's.
-    """
-
-    _indent = None  # the partials store is the large one: compact JSON
-
-    def __init__(
-        self,
-        table: PartitionedTable,
-        store_path: str,
-        bucket_width: int = 64,
-        max_bad: float = 0.0,
-        profiles=None,
-        allowed=None,
-        vocab_lo: int = 0,
-        vocab_size: int = 32768,
-        params: dict | None = None,
-    ):
-        self.params = drift.resolve_params(params)
-        super().__init__(table, store_path)
-        self.bucket_width = bucket_width
-        self.max_bad = max_bad
-        self.profiles = profiles
-        self.allowed = allowed
-        self.vocab = [int(vocab_lo), int(vocab_size)]
-        self.reports: dict[str, dict] = {}
-
     def run(self, spark: SparkSession) -> dict:
         prof_rows = self.profiles.collect() if self.profiles is not None else []
         domain = sorted({int(t) for r in prof_rows for t in r["token_freq"]})
-        if len(domain) > int(self.params["max_ref_tokens"]):
+        if len(domain) > int(self.drift["max_ref_tokens"]):
             raise ValueError(
                 "hashed-domain profiles are not supported incrementally; "
                 "run the batch drift rule"
             )
-        delta, full, skip = self._classify(
-            {"vocab": self.vocab, "domain": _digest(domain)}
+        # the one listing this run classifies, reads and records
+        self.listing = {
+            pid: self.table.part_files(pid) for pid in self.table.partition_ids()
+        }
+        inputs = {
+            "vocab": list(vocab_bounds(self.params)),
+            "domain": _digest(domain),
+            **{k: self.uniq[k] for k in uniqueness.DEFAULTS},
+        }
+        delta, full, skip = classify_partitions(
+            self.table,
+            {k: e for k, e in self.entries.items() if e.get("inputs") == inputs},
+            self.listing,
         )
         modes = {pid: "full" for pid in full}
         modes.update({pid: "delta" for pid in delta})
@@ -258,15 +242,10 @@ class IncrementalStatsValidator(_IncrementalValidator):
             (pid, path) for pid, paths in delta.items() for path in paths
         ]
         scanned_rows = 0
+        sketches: dict[int, uniqueness.State] = {}
         if files:
             ctx = RuleContext(
-                spark=spark,
-                reference_profiles=self.profiles,
-                params={
-                    "vocab_lo": self.vocab[0],
-                    "vocab_size": self.vocab[1],
-                    "drift": self.params,
-                },
+                spark=spark, reference_profiles=self.profiles, params=self.params
             )
             new = build_shared(None, ctx, direct_files=files)
             scanned_rows = sum(new.counts_by_part(KIND_ROWS).values())
@@ -277,34 +256,60 @@ class IncrementalStatsValidator(_IncrementalValidator):
                 .rename_columns([*_KEYS, "cnt"])
                 .sort_by([(k, "ascending") for k in _KEYS])
             )
+            sketches = uniqueness.sketch_state(self._read(spark, files), self.lg_k)
         by_part: dict[int, list] = {pid: [] for pid in (*full, *delta)}
         for pid, *r in zip(*(c.to_pylist() for c in merged.columns)):
             if pid in by_part:
                 by_part[pid].append(r)
         for pid, partials in by_part.items():
-            self._record(pid, partials=partials)
+            # a delta entry keeps its sketch for the union below
+            self.entries[str(pid)] = {
+                **(self.entries[str(pid)] if pid in delta else {}),
+                "files": self.listing[pid],
+                "inputs": inputs,
+                "partials": partials,
+            }
         shared = SharedTokenStats.collected(merged)
+        if by_part:
+            # with every partition skipped, every stored uniqueness verdict
+            # stands (at global scope too): no uniqueness job runs
+            self._uniqueness(spark, shared, sketches, modes)
 
         def report(metric: dict, passed, **extra) -> dict:
-            return self._report(
-                {
-                    pid: {
-                        "mode": modes[pid],
-                        "metric": float(metric.get(pid, 0)),
-                        "passed": passed(float(metric.get(pid, 0))),
-                        **{k: v[pid] for k, v in extra.items()},
-                    }
-                    for pid in sorted(modes)
+            parts = {
+                pid: {
+                    "mode": modes[pid],
+                    "metric": float(metric.get(pid, 0)),
+                    "passed": passed(float(metric.get(pid, 0))),
+                    **{k: v[pid] for k, v in extra.items()},
                 }
-            )
+                for pid in sorted(modes)
+            }
+            return {"parts": parts, "modes": {p: r["mode"] for p, r in parts.items()}}
 
-        stats = part_stats(shared, self.bucket_width, modes)
-        bad = {pid: sum(s[k] for k in BAD_FIELDS) for pid, s in stats.items()}
-        cs = report(bad, lambda m: m <= self.max_bad, stats=stats)
-        self.reports = {"column_stats": {**cs, "scanned_rows": scanned_rows}}
-        self.reports["token_bounds"] = report(
-            shared.counts_by_part(KIND_OOV_ROWS), lambda m: m == 0.0
-        )
+        def stored_metric(key: str) -> dict:
+            return {pid: self.entries[str(pid)][key] for pid in modes}
+
+        cs = {**column_stats.DEFAULTS, **self.params.get("column_stats", {})}
+        stats = column_stats.part_stats(shared, cs["bucket_width"], modes)
+        bad = {
+            pid: sum(s[k] for k in column_stats.BAD_FIELDS)
+            for pid, s in stats.items()
+        }
+        self.reports = {
+            "column_stats": {
+                **report(bad, lambda m: m <= cs["max_null_rate"], stats=stats),
+                "scanned_rows": scanned_rows,
+            },
+            "token_bounds": report(
+                shared.counts_by_part(KIND_OOV_ROWS), lambda m: m == 0.0
+            ),
+            "uniqueness": report(
+                stored_metric("uniqueness_metric"),
+                lambda m: m == 0.0,
+                detail=stored_metric("uniqueness_detail"),
+            ),
+        }
         if self.allowed is not None:
             self.reports["referential"] = report(
                 referential.unknown_by_part(shared, self.allowed),
@@ -314,12 +319,73 @@ class IncrementalStatsValidator(_IncrementalValidator):
         if self.profiles is not None:
             rescored = self._drift(shared, prof_rows, modes)
             self.reports["drift"] = report(
-                {pid: self.entries[str(pid)]["drift_metric"] for pid in modes},
-                lambda m: m <= 1.0,
+                stored_metric("drift_metric"), lambda m: m <= 1.0
             )
         if by_part or rescored:
-            self._save()
+            save_store(self.store_path, self.entries, None)
         return self.reports["column_stats"]
+
+    def _uniqueness(self, spark, shared: SharedTokenStats, sketches, modes) -> None:
+        """Screen every partition's merged sketch and store its uniqueness
+        metric and detail; the sketch of every read partition is stored.
+
+        A full partition's sketch is the one this run made; a delta or skip
+        partition's is the stored sketch unioned with the delta's. The rows
+        are the merged kind-5 census."""
+        rsd, scope = self.uniq["rsd"], self.uniq["scope"]
+        stored = {
+            pid: [(0, base64.b64decode(self.entries[str(pid)]["sketch_b64"]))]
+            for pid, mode in modes.items()
+            if mode != "full"
+        }
+        for pid, (_, sk, _) in sketches.items():
+            if pid in stored:
+                stored[pid].append((0, sk))
+        sketch = {
+            pid: sketches.get(pid, (0, b"", 0.0))[1:]
+            for pid in modes
+            if pid not in stored
+        }
+        sketch.update(
+            (pid, s[1:]) for pid, s in uniqueness.union_state(spark, stored).items()
+        )
+        rows = shared.counts_by_part(KIND_ROWS)
+        state = {pid: (rows.get(pid, 0), *sketch[pid]) for pid in modes}
+        exact = (
+            set(modes)
+            if self.uniq["always_exact"]
+            else uniqueness.screen(spark, state, rsd, scope, state)
+        )
+        exact_pass, _, suffix = uniqueness.exact_path(scope)
+        # Partition-scope exact results are pure functions of the partition's
+        # file set: a SKIP partition's stored exact dup count cannot have
+        # changed, so it is reused instead of re-scanning — at 10^12 rows,
+        # replaying the exact pass over every flagged-but-unchanged partition
+        # on every run is the difference between an O(delta) rerun and an
+        # O(all flagged data) one. (Global scope cannot memoize per
+        # partition: its exact counts depend on the SET of partitions
+        # scanned together.)
+        dups = {}
+        if scope != "global":
+            dups = {
+                pid: float(self.entries[str(pid)]["uniqueness_metric"])
+                for pid in exact
+                if modes[pid] == "skip"
+            }
+        need_exact = sorted(set(exact) - set(dups))
+        if need_exact:
+            dups.update(
+                _count_by_part(exact_pass(self._read(spark, self._files(need_exact))))
+            )
+        for pid, mode in modes.items():
+            e = self.entries[str(pid)]
+            if mode != "skip":
+                e["sketch_b64"] = base64.b64encode(state[pid][1]).decode()
+            # the memo: exact counts (and screen zeros) ride the store
+            e["uniqueness_metric"] = float(dups.get(pid, 0) if pid in exact else 0)
+            e["uniqueness_detail"] = (
+                "path=exact" if pid in exact else "path=screen"
+            ) + suffix
 
     def _drift(self, shared: SharedTokenStats, prof_rows, modes) -> list[int]:
         """Store every partition's drift metric (max score over its (part,
@@ -340,7 +406,7 @@ class IncrementalStatsValidator(_IncrementalValidator):
                     )
                     for r in prof_rows
                 ),
-                {k: self.params[k] for k in sorted(self.params)},
+                {k: self.drift[k] for k in sorted(self.drift)},
             ]
         )
         todo = [
@@ -354,135 +420,12 @@ class IncrementalStatsValidator(_IncrementalValidator):
             t = t.filter(pc.is_in(t["part_id"], value_set=pa.array(todo, pa.int32())))
             metric = dict.fromkeys(todo, 0.0)
             for pid, *_, score in drift.score_groups(
-                t, quantiles, token_freq, self.params
+                t, quantiles, token_freq, self.drift
             ):
                 metric[pid] = max(metric[pid], score)
             for pid in todo:
                 self.entries[str(pid)].update(drift_metric=metric[pid], drift_fp=fp)
         return todo
-
-
-class IncrementalUniquenessValidator(_IncrementalValidator):
-    """Incremental UNIQUENESS validation on the batch rule's own state and
-    screen (operators/uniqueness.py): a partition's (rows, Datasketches HLL
-    sketch) is mergeable by design, so appended files contribute a delta
-    sketch that unions with the stored one (``union_state``), and the exact
-    row count adds. ``screen`` over the merged state flags a partition whose
-    estimate is below rows * (1 - 3*rsd); a flagged partition falls back to
-    the exact hash-group pass over the WHOLE partition — duplicates can
-    straddle old and new files, so no delta-only exact check is sound; the
-    screen's job is making that full pass rare. A still-flagged partition
-    keeps its exact verdict on every run, including skip runs — the same
-    contract as the manifest's failure-replay semantics (validated
-    partitions skip, failures replay). lgConfigK follows from rsd as in the
-    batch rule. Each entry records its inputs (rsd, scope); an entry
-    recorded for others is full.
-
-    scope="global" (cross-partition duplicates) is where the stored sketches
-    pay twice: the global screen — sum(per-partition estimates) minus the
-    estimate of the UNION of every stored sketch — needs NO scan at all on a
-    skip/delta run, because the old partitions' sketches come from the store.
-    An append to one partition that duplicates ids already living in another
-    (untouched, mode=skip) partition flips the cross signal and triggers the
-    exact global hash-group pass over the whole table — the one case where a
-    skip partition's verdict can change without its files changing, which is
-    precisely the point of the global scope.
-    """
-
-    def __init__(
-        self, table: PartitionedTable, store_path: str,
-        rsd: float = uniqueness.DEFAULTS["rsd"],
-        scope: str = uniqueness.DEFAULTS["scope"],
-    ):
-        self.lg_k = uniqueness.lg_config_k(rsd)
-        super().__init__(table, store_path)
-        self.rsd = rsd
-        self.scope = scope
-
-    def _stored(self, pid: int) -> tuple[int, bytes]:
-        e = self.entries[str(pid)]
-        return int(e["n_rows"]), base64.b64decode(e["sketch_b64"])
-
-    def run(self, spark: SparkSession) -> dict:
-        delta, full, skip = self._classify({"rsd": self.rsd, "scope": self.scope})
-        results = {pid: {"mode": "full"} for pid in full}
-        results.update({pid: {"mode": "delta"} for pid in delta})
-        results.update({pid: {"mode": "skip"} for pid in skip})
-
-        # ALL-skip fast path: with every file set and input unchanged, every
-        # verdict — screen flags included, and in global scope the cross
-        # signal too — is a pure function of the unchanged store, so the
-        # stored results are returned without submitting a single job or
-        # rewriting the store. (A delta/full partition falls through: in
-        # global scope one changed partition can legitimately flip a skip
-        # partition's verdict, so the screen re-runs over the merged state.)
-        if not full and not delta:
-            for pid in skip:
-                e = self.entries[str(pid)]
-                results[pid].update(
-                    metric=float(e["metric"]),
-                    passed=float(e["metric"]) == 0.0,
-                    detail=e["detail"],
-                )
-            return self._report(results)
-
-        # ONE scan over every full partition's files and every added file
-        files = self._files(full) + [
-            (pid, path) for pid, paths in delta.items() for path in paths
-        ]
-        got = {}
-        if files:
-            got = uniqueness.sketch_state(self._read(spark, files), self.lg_k)
-        state = {pid: got.get(pid, (0, b"", 0.0)) for pid in full}
-        # stored sketches, unioned with the delta's: one tiny job, no scan
-        state.update(
-            uniqueness.union_state(
-                spark,
-                {
-                    pid: [self._stored(pid), *([got[pid][:2]] if pid in got else [])]
-                    for pid in (*delta, *skip)
-                },
-            )
-        )
-        exact = uniqueness.screen(spark, state, self.rsd, self.scope, state)
-        exact_pass, _, suffix = uniqueness.exact_path(self.scope)
-        # Partition-scope exact results are pure functions of the partition's
-        # file set: a SKIP partition's stored exact dup count cannot have
-        # changed, so it is reused instead of re-scanning — at 10^12 rows,
-        # replaying the exact pass over every flagged-but-unchanged partition
-        # on every run is the difference between an O(delta) rerun and an
-        # O(all flagged data) one. (Global scope cannot memoize per
-        # partition: its exact counts depend on the SET of partitions
-        # scanned together.)
-        dup_counts = {}
-        if self.scope != "global":
-            dup_counts = {
-                pid: float(self.entries[str(pid)]["metric"])
-                for pid in exact
-                if results[pid]["mode"] == "skip"
-            }
-        need_exact = sorted(set(exact) - set(dup_counts))
-        if need_exact:
-            dup_counts.update(
-                _count_by_part(exact_pass(self._read(spark, self._files(need_exact))))
-            )
-
-        for pid, res in results.items():
-            metric = float(dup_counts.get(pid, 0)) if pid in exact else 0.0
-            res["metric"] = metric
-            res["passed"] = metric == 0.0
-            res["detail"] = ("path=exact" if pid in exact else "path=screen") + suffix
-            if res["mode"] != "skip":
-                n, sk, _ = state[pid]
-                self._record(
-                    pid, n_rows=n, sketch_b64=base64.b64encode(sk).decode()
-                )
-            # the memo: exact counts (and screen zeros) ride the store — in
-            # global scope valid for the all-skip fast path because the
-            # global verdicts are a function of the full unchanged store
-            self.entries[str(pid)].update(metric=metric, detail=res["detail"])
-        self._save()
-        return self._report(results)
 
 
 def run_incremental_suite(
@@ -491,30 +434,24 @@ def run_incremental_suite(
     manifest_dir: str,
     profiles=None,
     allowed=None,
-    vocab_lo: int = 0,
-    vocab_size: int = 32768,
+    params: dict | None = None,
 ) -> dict[str, dict]:
-    """The incremental data-rule suite over two stores in ``manifest_dir``:
-    ``incremental_stats.json`` (merged shared partials: column_stats,
-    token_bounds, drift, referential) and ``incremental_uniqueness.json``
-    (HLL sketches). The unseen files' ``tokens`` are decoded once, by the
-    one shared pass.
+    """The incremental data-rule suite over the one store
+    ``incremental_stats.json`` in ``manifest_dir``, under ``params`` in
+    ``ValidationRunner``'s shape. The unseen files' ``tokens`` are decoded
+    once, by the one shared pass.
 
     Returns {"column_stats": ..., "token_bounds": ..., "drift": ...,
     "referential": ..., "uniqueness": ...}, each {"parts", "modes"} (plus
     column_stats' "scanned_rows"); drift/referential are absent when their
     dimension input is None.
     """
-    sv = IncrementalStatsValidator(
+    v = IncrementalStatsValidator(
         table,
         os.path.join(manifest_dir, "incremental_stats.json"),
         profiles=profiles,
         allowed=allowed,
-        vocab_lo=vocab_lo,
-        vocab_size=vocab_size,
+        params=params,
     )
-    sv.run(spark)
-    uv = IncrementalUniquenessValidator(
-        table, os.path.join(manifest_dir, "incremental_uniqueness.json")
-    )
-    return {**sv.reports, "uniqueness": uv.run(spark)}
+    v.run(spark)
+    return v.reports

@@ -3,7 +3,7 @@
 Story being measured (the Iceberg append pattern): a 64x600000 corpus is
 fully validated once; an append adds ~10% more rows as NEW FILES inside four
 existing clean partitions (unique doc_ids, same distribution); the
-incremental validators then scan ONLY the added files and merge the stored
+incremental validator then scans ONLY the added files and merges the stored
 mergeable state. Reports wall time + scanned rows for both runs and asserts
 the mode split (4 delta partitions, 60 skipped).
 

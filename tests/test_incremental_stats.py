@@ -117,10 +117,11 @@ def test_incremental_drift_delta_matches_batch(spark, tmp_path):
     allowed = spark.read.parquet(f"{d}/allowed_sources")
 
     def batch_verdicts():
-        # drift.evaluate caches its per-group frame (the suite runner
-        # unpersists it); clear it here so the SECOND batch evaluation after
-        # the append is not silently served the pre-append cached plan
-        # (CacheManager matches by logical-plan equality)
+        # drift.evaluate caches nothing. The clearCache() calls in this file
+        # dodge uniqueness.evaluate's ``dups.cache()``, which is never
+        # unpersisted (ROADMAP "Leaked .cache() frames"): CacheManager
+        # matches by logical-plan equality, so a batch evaluation after an
+        # append would be served the pre-append duplicate counts
         spark.catalog.clearCache()
         ctx = RuleContext(
             spark=spark,
@@ -176,9 +177,6 @@ def test_incremental_referential_and_uniqueness(spark, tmp_path):
     reserved for partitions the merged screen flags. Full-run and
     post-append delta-run verdicts both match fresh batch evaluations."""
     from lk_data_test_spark.operators import referential, uniqueness
-    from lk_data_test_spark.plans.incremental_stats import (
-        IncrementalUniquenessValidator,
-    )
     from lk_data_test_spark.plans.rules import RuleContext
 
     d = str(tmp_path / "corpus")
@@ -198,10 +196,9 @@ def test_incremental_referential_and_uniqueness(spark, tmp_path):
             for r in rule_mod.evaluate(table.read(spark), ctx).verdicts.collect()
         }
 
-    ref = str(tmp_path / "ref.json")
-    vu = IncrementalUniquenessValidator(table, str(tmp_path / "uniq.json"))
-    r1 = _reports(spark, table, ref, allowed=allowed)["referential"]
-    u1 = vu.run(spark)
+    store = str(tmp_path / "store.json")
+    out1 = _reports(spark, table, store, allowed=allowed)
+    r1, u1 = out1["referential"], out1["uniqueness"]
     br, bu = batch(referential), batch(uniqueness)
     # roles: part 1 dup (uniqueness fails), part 3 badsrc (referential fails)
     assert br[3][0] is False and bu[1][0] is False
@@ -224,10 +221,8 @@ def test_incremental_referential_and_uniqueness(spark, tmp_path):
         "doc_id string, tokens array<int>, n_tok int, source string",
     ).coalesce(1).write.mode("append").parquet(f"{d}/sequences/part_id=2")
 
-    r2 = _reports(spark, table, ref, allowed=allowed)["referential"]
-    u2 = IncrementalUniquenessValidator(table, str(tmp_path / "uniq.json")).run(
-        spark
-    )
+    out2 = _reports(spark, table, store, allowed=allowed)
+    r2, u2 = out2["referential"], out2["uniqueness"]
     assert r2["modes"][2] == "delta" and u2["modes"][0] == "delta"
     br2, bu2 = batch(referential), batch(uniqueness)
     for pid in br2:
@@ -241,10 +236,8 @@ def test_incremental_referential_and_uniqueness(spark, tmp_path):
     assert u2["parts"][0]["metric"] == 1.0
 
     # idempotent
-    r3 = _reports(spark, table, ref, allowed=allowed)["referential"]
-    u3 = IncrementalUniquenessValidator(table, str(tmp_path / "uniq.json")).run(
-        spark
-    )
+    out3 = _reports(spark, table, store, allowed=allowed)
+    r3, u3 = out3["referential"], out3["uniqueness"]
     assert all(m == "skip" for m in r3["modes"].values())
     assert all(m == "skip" for m in u3["modes"].values())
 
@@ -256,10 +249,6 @@ def test_incremental_uniqueness_global_cross_partition_append(spark, tmp_path):
     signal comes entirely from union-vs-sum over stored sketches. Local
     screens stay silent (the appended ids are unique within part 0), so only
     the global scope can catch this."""
-    from lk_data_test_spark.plans.incremental_stats import (
-        IncrementalUniquenessValidator,
-    )
-
     d = str(tmp_path / "corpus")
     # parts 0 and 5 are clean-role; dup-role part 1 gets d=1 local dup
     # (0.25% — beneath every screen's resolution, so the first run passes)
@@ -267,8 +256,9 @@ def test_incremental_uniqueness_global_cross_partition_append(spark, tmp_path):
     generate(spark, d, cfg)
     table = PartitionedTable(f"{d}/sequences")
     store = str(tmp_path / "uniq_global.json")
+    params = {"uniqueness": {"scope": "global"}}
 
-    u1 = IncrementalUniquenessValidator(table, store, scope="global").run(spark)
+    u1 = _reports(spark, table, store, params=params)["uniqueness"]
     # dup-role part 1 has d=1 local dup — beneath every screen's resolution;
     # all partitions pass on the sketch screen
     assert all(r["passed"] for r in u1["parts"].values())
@@ -285,7 +275,7 @@ def test_incremental_uniqueness_global_cross_partition_append(spark, tmp_path):
         rows, "doc_id string, tokens array<int>, n_tok int, source string"
     ).coalesce(1).write.mode("append").parquet(f"{d}/sequences/part_id=0")
 
-    u2 = IncrementalUniquenessValidator(table, store, scope="global").run(spark)
+    u2 = _reports(spark, table, store, params=params)["uniqueness"]
     assert u2["modes"][0] == "delta"
     assert all(m == "skip" for p, m in u2["modes"].items() if p != 0)
     # the cross signal widens the exact pass to every partition
@@ -307,11 +297,7 @@ def test_incremental_uniqueness_global_cross_partition_append(spark, tmp_path):
     from lk_data_test_spark.plans.rules import RuleContext
 
     spark.catalog.clearCache()
-    ctx = RuleContext(
-        spark=spark,
-        part_ids=table.partition_ids(),
-        params={"uniqueness": {"scope": "global"}},
-    )
+    ctx = RuleContext(spark=spark, part_ids=table.partition_ids(), params=params)
     batch = {
         int(r["part_id"]): (bool(r["passed"]), float(r["metric"]))
         for r in uniqueness.evaluate(table.read(spark), ctx).verdicts.collect()
@@ -385,9 +371,6 @@ def test_skip_runs_do_no_work(spark, tmp_path, monkeypatch):
     O(delta) rerun."""
     import lk_data_test_spark.operators.drift as drift_mod
     import lk_data_test_spark.operators.uniqueness as uniq_mod
-    from lk_data_test_spark.plans.incremental_stats import (
-        IncrementalUniquenessValidator,
-    )
 
     d = str(tmp_path / "corpus")
     cfg = GenConfig(n_parts=5, rows_per_part=1200)
@@ -395,10 +378,9 @@ def test_skip_runs_do_no_work(spark, tmp_path, monkeypatch):
     table = PartitionedTable(f"{d}/sequences")
     profiles = spark.read.parquet(f"{d}/reference_profiles")
 
-    ustore = str(tmp_path / "uniq.json")
-    dstore = str(tmp_path / "drift.json")
-    u1 = IncrementalUniquenessValidator(table, ustore).run(spark)
-    d1 = _reports(spark, table, dstore, profiles=profiles)["drift"]
+    store = str(tmp_path / "store.json")
+    out1 = _reports(spark, table, store, profiles=profiles)
+    u1, d1 = out1["uniqueness"], out1["drift"]
     assert u1["parts"][1]["detail"] == "path=exact"  # dup role got flagged
 
     def boom(*a, **k):
@@ -407,8 +389,8 @@ def test_skip_runs_do_no_work(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(uniq_mod, "duplicate_doc_ids", boom)
     monkeypatch.setattr(drift_mod, "score_groups", boom)
 
-    u2 = IncrementalUniquenessValidator(table, ustore).run(spark)
-    d2 = _reports(spark, table, dstore, profiles=profiles)["drift"]
+    out2 = _reports(spark, table, store, profiles=profiles)
+    u2, d2 = out2["uniqueness"], out2["drift"]
     assert all(m == "skip" for m in u2["modes"].values())
     assert all(m == "skip" for m in d2["modes"].values())
     for pid in u1["parts"]:
@@ -428,31 +410,31 @@ def test_skip_runs_do_no_work(spark, tmp_path, monkeypatch):
         ],
     )
     d3 = _reports(
-        spark, table, dstore, profiles=profiles, params={"ks_threshold": 0.5}
+        spark, table, store, profiles=profiles,
+        params={"drift": {"ks_threshold": 0.5}},
     )["drift"]
     assert all(m == "skip" for m in d3["modes"].values())
     assert all(r["metric"] == 42.0 for r in d3["parts"].values())
 
 
 def test_uniqueness_input_change_reaches_unchanged_partitions(spark, tmp_path):
-    """An rsd or scope change with no file change reaches every partition:
-    each uniqueness entry records the inputs it was screened under, so an
-    entry recorded for others is read again (full), and the report equals
+    """An rsd, scope or always_exact change with no file change reaches
+    every partition: each entry records the inputs it was screened under, so
+    an entry recorded for others is read again (full), and the report equals
     the batch rule under the new inputs. At rsd 0.2 the dup-role partition
     passes on the screen where rsd 0.01 flagged and failed it."""
     from lk_data_test_spark.operators import uniqueness
-    from lk_data_test_spark.plans.incremental_stats import (
-        IncrementalUniquenessValidator,
-    )
     from lk_data_test_spark.plans.rules import RuleContext
 
     d = str(tmp_path / "corpus")
     generate(spark, d, GenConfig(n_parts=5, rows_per_part=1200))
     table = PartitionedTable(f"{d}/sequences")
-    store = str(tmp_path / "uniq.json")
+    store = str(tmp_path / "store.json")
 
     def check(mode, **params):
-        out = IncrementalUniquenessValidator(table, store, **params).run(spark)
+        out = _reports(spark, table, store, params={"uniqueness": params})[
+            "uniqueness"
+        ]
         spark.catalog.clearCache()
         ctx = RuleContext(
             spark=spark, part_ids=table.partition_ids(),
@@ -477,21 +459,23 @@ def test_uniqueness_input_change_reaches_unchanged_partitions(spark, tmp_path):
         True, 0.0, "path=screen scope=global",
     )
     check("skip", rsd=0.2, scope="global")
+    # always_exact skips the screen: every partition takes the exact path
+    assert check("full", rsd=0.2, always_exact=True)[1] == (
+        False, 60.0, "path=exact",
+    )
+    check("skip", rsd=0.2, always_exact=True)
 
 
 def test_incremental_read_runs_no_footer_job(spark, tmp_path):
-    """The incremental stores read their files under the table's memoized
+    """The incremental validator reads its files under the table's memoized
     schema: building the read of a partition's files runs no Spark job,
     where a read without a schema runs a footer-inference job each time."""
-    from lk_data_test_spark.plans.incremental_stats import (
-        IncrementalUniquenessValidator,
-    )
     from tests.test_catalog import _jobs
 
     d = str(tmp_path / "corpus")
     generate(spark, d, GenConfig(n_parts=2, rows_per_part=300))
     table = PartitionedTable(f"{d}/sequences")
-    v = IncrementalUniquenessValidator(table, str(tmp_path / "u.json"))
+    v = IncrementalStatsValidator(table, str(tmp_path / "store.json"))
     v.run(spark)
     df, jobs = _jobs(spark, lambda: v._read(spark, v._files([0])))
     assert jobs == 0
@@ -547,8 +531,8 @@ def test_incremental_suite_equals_batch_rules(spark, tmp_path, monkeypatch):
     """run_incremental_suite gives every rule the verdicts of a fresh batch
     evaluate of the table, on first sight and after an append, from ONE
     build_shared pass per run (with and without profiles; none on an
-    all-skip run); with its partials store deleted, every partition is full
-    again and the verdicts are the same."""
+    all-skip run); with its store deleted, every partition is full again for
+    every rule and the verdicts are the same."""
     import lk_data_test_spark.plans.incremental_stats as inc_mod
     from lk_data_test_spark.plans.incremental_stats import run_incremental_suite
 
@@ -576,7 +560,7 @@ def test_incremental_suite_equals_batch_rules(spark, tmp_path, monkeypatch):
     fused1 = run()
     _check_batch(fused1, _batch(spark, table, allowed, profiles))
     assert fused1["column_stats"]["scanned_rows"] == 5 * 400
-    # the suite also ran the two narrow validators
+    # the suite also reported uniqueness and referential for every partition
     assert set(fused1["uniqueness"]["parts"]) == set(range(5))
     assert set(fused1["referential"]["parts"]) == set(range(5))
     # one pass without profiles too (no kind-1 rows, no drift report)
@@ -603,19 +587,18 @@ def test_incremental_suite_equals_batch_rules(spark, tmp_path, monkeypatch):
     skip = run(passes=0)
     assert all(m == "skip" for m in skip["column_stats"]["modes"].values())
 
-    # the partials store deleted -> every partition full, same verdicts
+    # the store deleted -> every partition full, same verdicts
     os.remove(os.path.join(fdir, "incremental_stats.json"))
     fused3 = run()
-    for rule in ("column_stats", "token_bounds", "drift", "referential"):
+    for rule in fused3:
         assert all(m == "full" for m in fused3[rule]["modes"].values()), rule
-    assert all(m == "skip" for m in fused3["uniqueness"]["modes"].values())
     _check_batch(fused3, b2)
 
 
 def test_fused_token_bounds_range_with_vocab_lo(spark, tmp_path):
     """With vocab_lo > 0 every token_bounds path checks [vocab_lo,
     vocab_size): a token in [vocab_size, vocab_lo + vocab_size) is OOV for
-    the incremental suite, the standalone validator and the batch rule
+    the incremental suite, the validator without profiles and the batch rule
     alike — on first sight and on an append delta."""
     from lk_data_test_spark.operators import token_bounds
     from lk_data_test_spark.plans.incremental_stats import (
@@ -624,6 +607,7 @@ def test_fused_token_bounds_range_with_vocab_lo(spark, tmp_path):
     from lk_data_test_spark.plans.rules import RuleContext
 
     lo, size = 2, 32768
+    params = {"vocab_lo": lo, "vocab_size": size}
     d = str(tmp_path / "corpus")
     generate(spark, d, GenConfig(n_parts=2, rows_per_part=300))
     table = PartitionedTable(f"{d}/sequences")
@@ -638,15 +622,14 @@ def test_fused_token_bounds_range_with_vocab_lo(spark, tmp_path):
     def check(expect_mode):
         fused = run_incremental_suite(
             spark, table, str(tmp_path / "fused"), profiles=profiles,
-            vocab_lo=lo, vocab_size=size,
+            params=params,
         )["token_bounds"]
-        sep = _reports(
-            spark, table, str(tmp_path / "tb.json"), vocab_lo=lo, vocab_size=size
-        )["token_bounds"]
+        sep = _reports(spark, table, str(tmp_path / "tb.json"), params=params)[
+            "token_bounds"
+        ]
         spark.catalog.clearCache()
         ctx = RuleContext(
-            spark=spark, part_ids=table.partition_ids(),
-            params={"vocab_lo": lo, "vocab_size": size},
+            spark=spark, part_ids=table.partition_ids(), params=params
         )
         batch = {
             int(r["part_id"]): (bool(r["passed"]), float(r["metric"]))
@@ -668,9 +651,9 @@ def test_fused_token_bounds_range_with_vocab_lo(spark, tmp_path):
 
 
 def test_incremental_store_format(spark, tmp_path):
-    """The on-disk format of the two incremental stores: per-entry key sets
-    after run_incremental_suite, so a refactor cannot silently change what
-    an existing store holds."""
+    """The on-disk format of the incremental store: one file, one per-entry
+    key set after run_incremental_suite, so a refactor cannot silently
+    change what an existing store holds."""
     import json
 
     from lk_data_test_spark.plans.incremental_stats import (
@@ -686,32 +669,28 @@ def test_incremental_store_format(spark, tmp_path):
         profiles=spark.read.parquet(f"{d}/reference_profiles"),
         allowed=spark.read.parquet(f"{d}/allowed_sources"),
     )
-    expected = {
-        "stats": {"files", "inputs", "partials", "drift_metric", "drift_fp"},
-        "uniqueness": {
-            "files", "inputs", "n_rows", "sketch_b64", "metric", "detail"
-        },
+    keys = {
+        "files", "inputs", "partials", "drift_metric", "drift_fp",
+        "sketch_b64", "uniqueness_metric", "uniqueness_detail",
     }
-    assert sorted(
-        f for f in os.listdir(mdir) if f.endswith(".json")
-    ) == sorted(f"incremental_{name}.json" for name in expected)
-    for name, keys in expected.items():
-        with open(os.path.join(mdir, f"incremental_{name}.json")) as f:
-            entries = json.load(f)
-        assert set(entries) == {"0", "1"}, name
-        for pid, e in entries.items():
-            assert set(e) == keys, (name, pid)
-            assert set(e["files"]) == set(
-                table.partition_info(int(pid)).files
-            ), (name, pid)
-        if name == "uniqueness":
-            assert entries["0"]["inputs"] == {"rsd": 0.01, "scope": "partition"}
-        if name == "stats":
-            assert entries["0"]["inputs"]["vocab"] == [0, 32768]
-            assert set(entries["0"]["inputs"]) == {"vocab", "domain"}
-            assert all(len(p) == 4 for p in entries["0"]["partials"])
-            kinds = {p[1] for p in entries["0"]["partials"]}
-            assert {0, 1, 5} <= kinds <= set(range(6))
+    assert [f for f in os.listdir(mdir) if f.endswith(".json")] == [
+        "incremental_stats.json"
+    ]
+    with open(os.path.join(mdir, "incremental_stats.json")) as f:
+        entries = json.load(f)
+    assert set(entries) == {"0", "1"}
+    for pid, e in entries.items():
+        assert set(e) == keys, pid
+        assert set(e["files"]) == set(table.partition_info(int(pid)).files), pid
+    inputs = entries["0"]["inputs"]
+    assert set(inputs) == {"vocab", "domain", "rsd", "always_exact", "scope"}
+    assert inputs["vocab"] == [0, 32768]
+    assert (inputs["rsd"], inputs["always_exact"], inputs["scope"]) == (
+        0.01, False, "partition",
+    )
+    assert all(len(p) == 4 for p in entries["0"]["partials"])
+    kinds = {p[1] for p in entries["0"]["partials"]}
+    assert {0, 1, 5} <= kinds <= set(range(6))
 
 
 def _append_rows(table, pid, name, n, null_n_tok=False):
@@ -734,8 +713,8 @@ def _append_rows(table, pid, name, n, null_n_tok=False):
 
 
 def test_file_landing_mid_run_is_read_next_run(spark, tmp_path, monkeypatch):
-    """Both stores record the listing their scan read: a file that lands
-    after a store classified its partitions is not recorded as validated,
+    """The store records the listing its scans read: a file that lands
+    after the run classified its partitions is not recorded as validated,
     so the next run reads it as a delta."""
     import lk_data_test_spark.operators.uniqueness as uniq_mod
     import lk_data_test_spark.plans.incremental_stats as inc_mod
@@ -749,12 +728,12 @@ def test_file_landing_mid_run_is_read_next_run(spark, tmp_path, monkeypatch):
     real_build, real_sketches = inc_mod.build_shared, uniq_mod.sketch_state
 
     def build_then_land(*a, **k):
-        # 7 rows with null n_tok land after the partials store's listing
+        # 7 rows with null n_tok land after the listing
         _append_rows(table, 0, "landed-a", 7, null_n_tok=True)
         return real_build(*a, **k)
 
     def sketch_then_land(*a, **k):
-        # 5 clean rows land after the uniqueness store's listing
+        # 5 clean rows land after the listing, before the sketch pass
         _append_rows(table, 0, "landed-b", 5)
         return real_sketches(*a, **k)
 
@@ -807,15 +786,17 @@ def test_allowed_change_rederives_referential_without_scan(spark, tmp_path):
 
 
 def test_pass_input_change_reads_every_partition(spark, tmp_path):
-    """The partials depend on two pass inputs, the vocab bounds (kind 4)
-    and the reference token domain (kind 1): a new vocab size, and then a
-    first run with profiles, classify every partition full, and each
-    verdict equals the batch rule's under the new inputs."""
+    """The stored state depends on the vocab bounds (kind 4), the reference
+    token domain (kind 1) and the uniqueness screen's inputs: a new vocab
+    size, then a first run with profiles, then a new rsd classify every
+    partition full, and each verdict equals the batch rule's under the same
+    params (thresholds of column_stats and drift included)."""
     from lk_data_test_spark.plans.incremental_stats import run_incremental_suite
 
     d, table, allowed, mdir = _two_part_corpus(spark, tmp_path)
-    r = run_incremental_suite(spark, table, mdir, allowed=allowed, vocab_size=900)
-    batch = _batch(spark, table, allowed=allowed, params={"vocab_size": 900})
+    params = {"vocab_size": 900}
+    r = run_incremental_suite(spark, table, mdir, allowed=allowed, params=params)
+    batch = _batch(spark, table, allowed=allowed, params=params)
     assert r["column_stats"]["scanned_rows"] == 600
     assert any(m > 0 for _, m in batch["token_bounds"].values())
     _check_batch(r, batch)
@@ -823,12 +804,24 @@ def test_pass_input_change_reads_every_partition(spark, tmp_path):
     # first run with profiles: the stored partials have no kind-1 rows
     profiles = spark.read.parquet(f"{d}/reference_profiles")
     r = run_incremental_suite(
-        spark, table, mdir, profiles=profiles, allowed=allowed, vocab_size=900
+        spark, table, mdir, profiles=profiles, allowed=allowed, params=params
     )
     assert all(m == "full" for m in r["drift"]["modes"].values())
-    _check_batch(
-        r, _batch(spark, table, allowed, profiles, params={"vocab_size": 900})
+    _check_batch(r, _batch(spark, table, allowed, profiles, params=params))
+
+    # every rule's params at once: a new rsd re-reads every partition
+    params = {
+        "vocab_size": 900,
+        "column_stats": {"max_null_rate": 1000.0},
+        "drift": {"ks_threshold": 0.01},
+        "uniqueness": {"rsd": 0.2},
+    }
+    r = run_incremental_suite(
+        spark, table, mdir, profiles=profiles, allowed=allowed, params=params
     )
+    assert all(m == "full" for m in r["uniqueness"]["modes"].values())
+    assert r["column_stats"]["scanned_rows"] == 600
+    _check_batch(r, _batch(spark, table, allowed, profiles, params=params))
 
 
 def test_incremental_fails_fast(spark, tmp_path):
@@ -838,10 +831,7 @@ def test_incremental_fails_fast(spark, tmp_path):
     format before the shared partials classifies full."""
     import json
 
-    from lk_data_test_spark.plans.incremental_stats import (
-        IncrementalUniquenessValidator,
-        run_incremental_suite,
-    )
+    from lk_data_test_spark.plans.incremental_stats import run_incremental_suite
 
     d = str(tmp_path / "corpus")
     generate(spark, d, GenConfig(n_parts=2, rows_per_part=300))
@@ -850,7 +840,7 @@ def test_incremental_fails_fast(spark, tmp_path):
     store = str(tmp_path / "stats.json")
 
     v = IncrementalStatsValidator(
-        table, store, profiles=profiles, params={"max_ref_tokens": 1}
+        table, store, profiles=profiles, params={"drift": {"max_ref_tokens": 1}}
     )
     with pytest.raises(ValueError, match="run the batch drift rule"):
         v.run(spark)
@@ -859,7 +849,6 @@ def test_incremental_fails_fast(spark, tmp_path):
     tolerant = PartitionedTable(f"{d}/sequences", tolerate_corrupt=True)
     for make in (
         lambda: IncrementalStatsValidator(tolerant, store),
-        lambda: IncrementalUniquenessValidator(tolerant, store),
         lambda: run_incremental_suite(spark, tolerant, str(tmp_path / "m")),
     ):
         with pytest.raises(ValueError, match="ValidationRunner"):
@@ -873,3 +862,56 @@ def test_incremental_fails_fast(spark, tmp_path):
     r = IncrementalStatsValidator(table, store).run(spark)
     assert r["modes"] == {0: "full", 1: "full"}
     assert r["parts"][0]["stats"] == stats_oracle(table.part_dir(0))
+
+
+def test_one_listing_per_run(spark, tmp_path, monkeypatch):
+    """One run of the incremental suite lists each partition once: the
+    listing it classifies is the one it reads and records for every rule."""
+    from lk_data_test_spark.plans.incremental_stats import run_incremental_suite
+
+    d = str(tmp_path / "corpus")
+    generate(spark, d, GenConfig(n_parts=3, rows_per_part=300))
+    table = PartitionedTable(f"{d}/sequences")
+    listed = []
+    real = PartitionedTable.part_files
+    monkeypatch.setattr(
+        PartitionedTable, "part_files",
+        lambda self, pid: listed.append(pid) or real(self, pid),
+    )
+    run_incremental_suite(spark, table, str(tmp_path / "stores"))
+    assert sorted(listed) == [0, 1, 2]
+
+
+def test_cli_incremental_takes_params(spark, tmp_path, capsys):
+    """``--incremental-stats`` takes the rule ``--params`` of a full run:
+    every failing set it prints equals the batch rule's under the same
+    params. At rsd 0.2 the dup-role partition passes the screen."""
+    import json
+
+    from lk_data_test_spark.cli import main
+
+    d = str(tmp_path / "corpus")
+    generate(spark, d, GenConfig(n_parts=5, rows_per_part=1200))
+    params = {"uniqueness": {"rsd": 0.2}}
+    rc = main(
+        ["--data-dir", d, "--incremental-stats", "--params", json.dumps(params)]
+    )
+    assert rc == 0
+    got = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    table = PartitionedTable(f"{d}/sequences")
+    batch = _batch(
+        spark, table,
+        allowed=spark.read.parquet(f"{d}/allowed_sources"),
+        profiles=spark.read.parquet(f"{d}/reference_profiles"),
+        params=params,
+    )
+    failing = {
+        rule: sorted(pid for pid, v in verdicts.items() if not v[0])
+        for rule, verdicts in batch.items()
+    }
+    assert failing["uniqueness"] == []
+    assert got["uniqueness_failed_partitions"] == failing["uniqueness"]
+    assert got["failed_partitions"] == failing["column_stats"]
+    assert got["token_bounds_failed_partitions"] == failing["token_bounds"]
+    assert got["drift_failed_partitions"] == failing["drift"]
+    assert got["referential_failed_partitions"] == failing["referential"]

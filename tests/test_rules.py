@@ -264,7 +264,7 @@ def test_uniqueness_lg_k_follows_rsd(ctx_df, corpus_dir, tmp_path):
     range raises a ValueError naming the range before any job runs, in the
     batch rule and in the incremental validator alike."""
     from lk_data_test_spark.plans.incremental_stats import (
-        IncrementalUniquenessValidator,
+        IncrementalStatsValidator,
     )
 
     assert uniqueness.lg_config_k(0.01) == 14
@@ -283,7 +283,10 @@ def test_uniqueness_lg_k_follows_rsd(ctx_df, corpus_dir, tmp_path):
         with pytest.raises(ValueError, match="must lie in 4-21"):
             uniqueness.evaluate(df, bad)
         with pytest.raises(ValueError, match="must lie in 4-21"):
-            IncrementalUniquenessValidator(table, str(tmp_path / "u.json"), rsd=rsd)
+            IncrementalStatsValidator(
+                table, str(tmp_path / "u.json"),
+                params={"uniqueness": {"rsd": rsd}},
+            )
     assert set(tracker.getJobIdsForGroup(None)) == before
 
 
@@ -330,7 +333,7 @@ def test_drift_removed_method_rejected(ctx_df):
     with pytest.raises(ValueError, match="drop the 'method' param"):
         IncrementalStatsValidator(
             PartitionedTable("unused"), "unused.json",
-            params={"method": "tdigest"},
+            params={"drift": {"method": "tdigest"}},
         )
     # the surviving value is still accepted
     assert drift.resolve_params({"method": "hist"}) == drift.DEFAULTS
