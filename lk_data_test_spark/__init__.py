@@ -16,7 +16,6 @@ Layout
                    drift) plus training-data ops (dedup, similarity, text).
 - ``plans``        rule registry, suite runner, checkpoint manifest (resume).
 - ``functions``    shared column expressions + vectorized pandas UDFs.
-- ``streaming``    incremental (micro-batch) validation over file streams.
 """
 
 __version__ = "0.1.0"

@@ -11,12 +11,15 @@ A partition is SKIPPED on rerun iff:
   - its manifest entry exists,
   - the recorded snapshot_id matches the table's current snapshot for that
     partition (data unchanged),
-  - the recorded rule versions match the current rule suite, and
+  - the recorded rule versions match the current rule suite,
+  - the recorded params digest matches this run's params (an entry written
+    without one re-runs once), and
   - its verdict was "pass"  (failures are replayed).
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import tempfile
@@ -44,6 +47,13 @@ def save_store(path: str, entries: dict, indent: int | None = 1) -> None:
     os.replace(tmp, path)
 
 
+def params_digest(params: dict | None) -> str:
+    """Digest of a run's rule params; ``None`` digests like the runner's
+    default ``{}``."""
+    blob = json.dumps(params or {}, sort_keys=True, default=str)
+    return hashlib.sha256(blob.encode()).hexdigest()[:16]
+
+
 class CheckpointManifest:
     def __init__(self, path: str):
         self.path = path
@@ -53,8 +63,11 @@ class CheckpointManifest:
         save_store(self.path, self.entries)
 
     # -- resume logic ------------------------------------------------------
-    def pending(self, table: PartitionedTable, rules: list[Rule]) -> list[int]:
+    def pending(
+        self, table: PartitionedTable, rules: list[Rule], params: dict | None = None
+    ) -> list[int]:
         rule_versions = {r.rule_id: r.version for r in rules}
+        digest = params_digest(params)
         out = []
         for pid, snap in table.snapshot_ids().items():
             e = self.entries.get(str(pid))
@@ -62,6 +75,7 @@ class CheckpointManifest:
                 e is None
                 or e.get("snapshot_id") != snap
                 or e.get("rule_versions") != rule_versions
+                or e.get("params_digest") != digest
                 or e.get("verdict") != "pass"
             ):
                 out.append(pid)
@@ -71,10 +85,11 @@ class CheckpointManifest:
         """Triage workflow: accept a FAILED partition's current snapshot so
         reruns stop replaying it. The verdict flips to "pass" for resume
         purposes but the ack is recorded with provenance — and it holds only
-        for the acknowledged snapshot/rule versions: if the partition's data
-        or the suite changes, `pending` re-validates it like any other
-        change. Raises KeyError for a partition the manifest has never seen
-        (there is nothing to acknowledge)."""
+        for the acknowledged snapshot, rule versions and params: if the
+        partition's data, the suite or the params change, `pending`
+        re-validates it like any other change. Raises KeyError for a
+        partition the manifest has never seen (there is nothing to
+        acknowledge)."""
         e = self.entries[str(part_id)]
         e["acknowledged"] = {
             "at": datetime.now(timezone.utc).isoformat(),
@@ -96,6 +111,7 @@ class CheckpointManifest:
         rules: list[Rule],
         metrics: dict[str, float],
         verdict: str,
+        params: dict | None = None,
     ) -> None:
         now = datetime.now(timezone.utc).isoformat()
         prev_hist = self.entries.get(str(part_id), {}).get("history", [])
@@ -104,6 +120,7 @@ class CheckpointManifest:
             "snapshot_id": snapshot_id,
             "files": list(files),
             "rule_versions": {r.rule_id: r.version for r in rules},
+            "params_digest": params_digest(params),
             "metrics": metrics,
             "verdict": verdict,
             "completed_at": now,

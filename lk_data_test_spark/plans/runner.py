@@ -14,6 +14,7 @@ row census total.
 from __future__ import annotations
 
 import os
+import shutil
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -65,7 +66,11 @@ class ValidationRunner:
 
     def run(self, force: bool = False) -> SuiteResult:
         all_parts = self.table.partition_ids()
-        pending = all_parts if force else self.manifest.pending(self.table, self.rules)
+        pending = (
+            all_parts
+            if force
+            else self.manifest.pending(self.table, self.rules, self.params)
+        )
         skipped = sorted(set(all_parts) - set(pending))
         if not pending:
             empty = self.spark.createDataFrame(
@@ -165,6 +170,13 @@ class ValidationRunner:
         violations = canonical_violations(_union_all(violation_frames))
         if self.output_dir:
             out_path = os.path.join(self.output_dir, "violations")
+            # dynamic overwrite replaces only the partitions that get rows:
+            # clear every re-validated partition first, so one that now has
+            # no violations keeps none of its old rows
+            for pid in pending:
+                shutil.rmtree(
+                    os.path.join(out_path, f"part_id={pid}"), ignore_errors=True
+                )
             # one shuffle of only the violation rows; deterministic file
             # content via sortWithinPartitions (a global orderBy would add a
             # range exchange + full sort for ordering the writer discards)
@@ -181,10 +193,12 @@ class ValidationRunner:
             )
             # hand back the materialized sink instead of the live plan: later
             # consumers (reports, fixture compares) re-read parquet rather
-            # than re-running every rule's full plan
+            # than re-running every rule's full plan (the explicit schema also
+            # reads a sink that holds no partition at all)
             cols = [f.name for f in violations.schema.fields]
             violations = (
-                self.spark.read.parquet(out_path)
+                self.spark.read.schema(violations.schema)
+                .parquet(out_path)
                 .select(*cols)
                 .orderBy("part_id", "rule_id", "doc_id", "source", "detail")
             )
@@ -273,6 +287,7 @@ class ValidationRunner:
                 self.rules,
                 metrics,
                 "pass" if ok else "fail",
+                self.params,
             )
         self.manifest.save()
         return SuiteResult(

@@ -210,3 +210,66 @@ def test_file_appended_mid_run_stays_pending(spark, corpus_dir, tmp_path):
     assert sorted(res.ran_parts) == clean
     assert all(v["passed"] for v in res.verdicts)
     assert r.manifest.pending(PartitionedTable(str(root)), r.rules) == [target]
+
+
+def test_resume_reruns_partitions_under_new_params(spark, corpus_dir, tmp_path):
+    """A manifest entry holds only under the params it was validated with:
+    a resume under other params re-validates every partition, the passing
+    ones included."""
+    strict = {"column_stats": {"max_null_rate": -1}}
+    _runner(spark, corpus_dir, tmp_path).run()
+
+    res = _runner(spark, corpus_dir, tmp_path, params=strict).run()
+    assert sorted(res.ran_parts) == list(range(TEST_CFG.n_parts))
+    assert res.skipped_parts == []
+    failing = {
+        v["part_id"]
+        for v in res.verdicts
+        if v["rule_id"] == "column_stats" and not v["passed"]
+    }
+    assert failing == set(range(TEST_CFG.n_parts))
+
+
+def test_rerun_replaces_sink_partitions_left_without_violations(
+    spark, corpus_dir, tmp_path
+):
+    """A re-run partition that now has no violation rows keeps none of its
+    old ones: under rsd 0.2 the uniqueness screen passes the duplicate
+    partitions, so the first run's uniqueness rows must leave the sink, and
+    the sink equals that of the same run into a fresh output directory."""
+    loose = {"uniqueness": {"rsd": 0.2}}
+    first = _runner(spark, corpus_dir, tmp_path).run(force=True)
+    assert first.violations.filter("rule_id = 'uniqueness'").count() > 0
+
+    res = _runner(spark, corpus_dir, tmp_path, params=loose).run(force=True)
+    assert all(v["passed"] for v in res.verdicts if v["rule_id"] == "uniqueness")
+    assert res.violations.filter("rule_id = 'uniqueness'").count() == 0
+
+    fresh = _runner(spark, corpus_dir, tmp_path / "fresh", params=loose).run(
+        force=True
+    )
+    assert res.violations.collect() == fresh.violations.collect()
+
+
+def test_sink_run_without_violations(spark, corpus_dir, tmp_path):
+    """A sink run that finds no violation rows hands back an empty frame:
+    the sink then holds no partition to infer a schema from."""
+    import shutil
+
+    clean = sorted(set(range(TEST_CFG.n_parts)) - ALL_FAILING)
+    root = tmp_path / "sequences"
+    for pid in clean:
+        shutil.copytree(
+            f"{corpus_dir}/sequences/part_id={pid}", root / f"part_id={pid}"
+        )
+    r = ValidationRunner(
+        spark,
+        PartitionedTable(str(root)),
+        allowed_sources=spark.read.parquet(f"{corpus_dir}/allowed_sources"),
+        reference_profiles=spark.read.parquet(f"{corpus_dir}/reference_profiles"),
+        manifest_path=str(tmp_path / "manifest.json"),
+        output_dir=str(tmp_path / "out"),
+    )
+    res = r.run(force=True)
+    assert all(v["passed"] for v in res.verdicts)
+    assert res.violations.count() == 0
