@@ -14,10 +14,12 @@ collected active set — a null source never matches in the anti join either.
 In the suite the census comes from the suite's one collect of the partials;
 run alone, the rule builds its own pass (``shared_for``).
 
-Violation rows: broadcast LEFT ANTI join fact->dim. The dimension is tiny
-(20 rows here; <=10^5 realistically), so the anti join is a broadcast hash
-join with zero shuffle of the 10^12-row fact side; the scan reads only
-(doc_id, source, n_tok, part_id) — `tokens` is column-pruned away.
+Violation rows: broadcast LEFT ANTI join fact->dim over the failing
+partitions only (partition-pruned, as column_stats and token_bounds prune
+theirs). The dimension is tiny (20 rows here; <=10^5 realistically), so the
+anti join is a broadcast hash join with zero shuffle of the 10^12-row fact
+side; the scan reads only (doc_id, source, n_tok, part_id) — `tokens` is
+column-pruned away.
 """
 
 from __future__ import annotations
@@ -51,8 +53,19 @@ def evaluate(df: DataFrame, ctx: RuleContext) -> RuleResult:
     allowed = ctx.allowed_sources
     if allowed is None:
         raise ValueError("referential rule requires ctx.allowed_sources")
+    shared = shared_for(df, ctx)
+    unknown = unknown_by_part(shared, allowed)
+    part_ids = (
+        sorted(int(x) for x in ctx.part_ids)
+        if ctx.part_ids is not None
+        else shared.part_ids()
+    )
+    # only a failing partition holds an unknown-source row, so the anti join
+    # reads those partitions alone
+    failing = sorted(unknown)
     violations = (
-        df.select("part_id", "doc_id", "source", "n_tok")
+        df.filter(F.col("part_id").isin(failing) if failing else F.lit(False))
+        .select("part_id", "doc_id", "source", "n_tok")
         .join(F.broadcast(active_sources(allowed)), "source", "left_anti")
         .select(
             F.col("part_id").cast("int"),
@@ -62,13 +75,6 @@ def evaluate(df: DataFrame, ctx: RuleContext) -> RuleResult:
             F.col("n_tok").cast("int"),
             F.concat(F.lit("unknown source: "), F.col("source")).alias("detail"),
         )
-    )
-    shared = shared_for(df, ctx)
-    unknown = unknown_by_part(shared, allowed)
-    part_ids = (
-        sorted(int(x) for x in ctx.part_ids)
-        if ctx.part_ids is not None
-        else shared.part_ids()
     )
     rows = []
     for pid in part_ids:

@@ -20,7 +20,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..plans.rules import RuleContext, RuleResult, part_skeleton
+from ..plans.rules import (
+    VIOLATION_SCHEMA,
+    RuleContext,
+    RuleResult,
+    local_frame,
+    part_skeleton,
+)
 
 RULE_ID = "schema"
 
@@ -74,9 +80,5 @@ def evaluate(df: DataFrame, ctx: RuleContext) -> RuleResult:
             detail,
         )
     else:
-        violations = ctx.spark.createDataFrame(
-            [],
-            "part_id int, rule_id string, doc_id string, source string,"
-            " n_tok int, detail string",
-        )
+        violations = local_frame(ctx.spark, [], VIOLATION_SCHEMA)
     return RuleResult(verdicts, violations)

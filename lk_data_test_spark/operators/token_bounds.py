@@ -29,7 +29,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.rules import VERDICT_SCHEMA, RuleContext, RuleResult, local_frame
+from ..plans.rules import (
+    VERDICT_SCHEMA,
+    VIOLATION_SCHEMA,
+    RuleContext,
+    RuleResult,
+    local_frame,
+)
 from ..plans.shared import KIND_OOV_ROWS, shared_for, vocab_bounds
 
 RULE_ID = "token_bounds"
@@ -95,9 +101,5 @@ def evaluate(df: DataFrame, ctx: RuleContext) -> RuleResult:
             )
         )
     else:
-        violations = ctx.spark.createDataFrame(
-            [],
-            "part_id int, rule_id string, doc_id string, source string,"
-            " n_tok int, detail string",
-        )
+        violations = local_frame(ctx.spark, [], VIOLATION_SCHEMA)
     return RuleResult(verdicts, violations)

@@ -15,12 +15,12 @@ shuffle, so:
    relative error, at the default rsd 0.01.
 2. SCREEN (``screen``): partitions whose estimate is more than 3*rsd below
    their row count are *flagged*.
-3. EXACT (flagged partitions only, partition-pruned scan):
-   a. group by ``xxhash64(doc_id)`` (8-byte shuffle key instead of the full
-      string) and keep hashes with count > 1;
-   b. semi-join the fact rows of those hashes (tiny set) and re-group by the
-      real ``doc_id`` to eliminate hash collisions and emit exact duplicate
-      keys with their counts.
+3. EXACT (flagged partitions only, partition-pruned scan): ONE
+   aggregation by (part_id, doc_id) with the count, ``min(source)`` and
+   ``min(n_tok)``, kept where count > 1. The per-partition verdict counts
+   come from one collect of it; the violation rows stay a lazy, uncached
+   plan over the same aggregation, so no call is ever served an earlier
+   call's answer.
 
 The sketches UNION (``union_state``): the rows add and the union's sketch
 is the sketch of all rows, so the incremental store
@@ -173,20 +173,11 @@ def exact_path(scope: str):
 
 
 def duplicate_doc_ids(df: DataFrame) -> DataFrame:
-    """Exact duplicates via the hash-first pattern -> (part_id, doc_id, dup_count,
-    source, n_tok)."""
-    hashed = df.select("part_id", F.xxhash64("doc_id").alias("h"))
-    dup_hashes = (
-        hashed.groupBy("part_id", "h")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .filter(F.col("c") > 1)
-        .select("part_id", "h")
-    )
-    candidates = df.withColumn("h", F.xxhash64("doc_id")).join(
-        dup_hashes, ["part_id", "h"], "left_semi"
-    )
+    """Exact duplicates in ONE aggregation -> (part_id, doc_id, dup_count,
+    source, n_tok). Grouping by the real ``doc_id`` is exact, so no
+    collision step follows; the scan is the flagged partitions only."""
     return (
-        candidates.groupBy("part_id", "doc_id")
+        df.groupBy("part_id", "doc_id")
         .agg(
             F.count(F.lit(1)).alias("dup_count"),
             F.min("source").alias("source"),
@@ -197,10 +188,14 @@ def duplicate_doc_ids(df: DataFrame) -> DataFrame:
 
 
 def global_duplicate_doc_ids(df: DataFrame) -> DataFrame:
-    """Exact CROSS-partition duplicates via the same hash-first pattern, but
-    grouping the 8-byte hash WITHOUT part_id -> (part_id, doc_id, dup_count,
+    """Exact CROSS-partition duplicates -> (part_id, doc_id, dup_count,
     global_count, n_parts, source, n_tok): one row per (partition, duplicated
-    id), carrying the id's corpus-wide count and partition span."""
+    id), carrying the id's corpus-wide count and partition span.
+
+    Hash-first, unlike the partition-scope pass: this one reads the whole
+    table, so its first shuffle groups the 8-byte ``xxhash64`` instead of
+    the full string, and only the rows whose hash repeats go on to the
+    exact re-grouping by ``doc_id``."""
     hashed = df.select(F.xxhash64("doc_id").alias("h"))
     dup_hashes = (
         hashed.groupBy("h")
@@ -255,9 +250,11 @@ def evaluate(df: DataFrame, ctx: RuleContext) -> RuleResult:
     )
 
     exact_pass, detail, suffix = exact_path(p["scope"])
-    # tiny (one row per duplicated key); cache so violations + verdicts don't
-    # re-run the hash-group plan
-    dups = exact_pass(scoped).cache()
+    # not cached: a cached frame would serve a later call over changed files
+    # its old answer. The verdict collect below runs the aggregation once;
+    # the violations stay lazy (the runner persists them when a sink reads
+    # them)
+    dups = exact_pass(scoped)
     violations = dups.select(
         F.col("part_id").cast("int"),
         F.lit(RULE_ID).alias("rule_id"),
@@ -269,8 +266,8 @@ def evaluate(df: DataFrame, ctx: RuleContext) -> RuleResult:
 
     # ONE collect of the per-partition duplicate-key counts (<= n_parts rows)
     # -> the verdict table as a local relation. Provenance: 'path=exact'
-    # means the hash-group exact scan ran for the partition; 'path=screen'
-    # means the pass rests on the sketch screen alone (resolution ~3*rsd)
+    # means the exact pass ran for the partition; 'path=screen' means the
+    # pass rests on the sketch screen alone (resolution ~3*rsd)
     metrics = {
         int(r["part_id"]): float(r["metric"])
         for r in dups.groupBy("part_id")

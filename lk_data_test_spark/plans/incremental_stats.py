@@ -70,8 +70,6 @@ files; verdicts are driver work over the merged state.
 from __future__ import annotations
 
 import base64
-import hashlib
-import json
 import os
 
 import pyarrow as pa
@@ -81,19 +79,20 @@ from pyspark.sql import functions as F
 
 from ..operators import column_stats, drift, referential, uniqueness
 from ..sources.catalog import PartitionedTable
-from .manifest import load_store, save_store
+from .manifest import digest, load_store, save_store
 from .rules import RuleContext
 from .shared import (
     KIND_NTOK,
     KIND_OOV_ROWS,
     KIND_ROWS,
     KIND_TOKEN,
+    PARTIAL_KEYS,
     SharedTokenStats,
     build_shared,
+    merge_partials,
     vocab_bounds,
 )
 
-_KEYS = ["part_id", "source", "kind", "key"]
 _PARTIALS = pa.schema(
     [("part_id", pa.int32()), ("source", pa.string()), ("kind", pa.int32()),
      ("key", pa.int64()), ("cnt", pa.int64())]
@@ -134,10 +133,6 @@ def classify_partitions(
 def _count_by_part(df) -> dict[int, int]:
     rows = df.groupBy("part_id").agg(F.count(F.lit(1)).alias("n")).collect()
     return {int(r["part_id"]): int(r["n"]) for r in rows}
-
-
-def _digest(obj) -> str:
-    return hashlib.sha256(json.dumps(obj, default=str).encode()).hexdigest()[:16]
 
 
 class IncrementalStatsValidator:
@@ -214,7 +209,7 @@ class IncrementalStatsValidator:
         }
         inputs = {
             "vocab": list(vocab_bounds(self.params)),
-            "domain": _digest(domain),
+            "domain": digest(domain),
             **{k: self.uniq[k] for k in uniqueness.DEFAULTS},
         }
         delta, full, skip = classify_partitions(
@@ -249,13 +244,9 @@ class IncrementalStatsValidator:
             )
             new = build_shared(None, ctx, direct_files=files)
             scanned_rows = sum(new.counts_by_part(KIND_ROWS).values())
-            merged = (
+            merged = merge_partials(
                 pa.concat_tables([merged, new.table().cast(_PARTIALS)])
-                .group_by(_KEYS, use_threads=False)
-                .aggregate([("cnt", "sum")])
-                .rename_columns([*_KEYS, "cnt"])
-                .sort_by([(k, "ascending") for k in _KEYS])
-            )
+            ).sort_by([(k, "ascending") for k in PARTIAL_KEYS])
             sketches = uniqueness.sketch_state(self._read(spark, files), self.lg_k)
         by_part: dict[int, list] = {pid: [] for pid in (*full, *delta)}
         for pid, *r in zip(*(c.to_pylist() for c in merged.columns)):
@@ -396,7 +387,7 @@ class IncrementalStatsValidator:
         since re-scoring every skip partition on every run is O(n_parts x
         sources x histogram domain) of driver Python. A profile or threshold
         change re-scores from the stored partials, with no scan."""
-        fp = _digest(
+        fp = digest(
             [
                 sorted(
                     (
@@ -406,7 +397,7 @@ class IncrementalStatsValidator:
                     )
                     for r in prof_rows
                 ),
-                {k: self.drift[k] for k in sorted(self.drift)},
+                self.drift,
             ]
         )
         todo = [

@@ -47,10 +47,11 @@ def save_store(path: str, entries: dict, indent: int | None = 1) -> None:
     os.replace(tmp, path)
 
 
-def params_digest(params: dict | None) -> str:
-    """Digest of a run's rule params; ``None`` digests like the runner's
-    default ``{}``."""
-    blob = json.dumps(params or {}, sort_keys=True, default=str)
+def digest(obj) -> str:
+    """sha256 of ``obj``'s JSON with sorted keys, cut to 16 hex characters:
+    the digest a manifest entry records of its run's params, and the ones
+    the incremental store records of its inputs."""
+    blob = json.dumps(obj, sort_keys=True, default=str)
     return hashlib.sha256(blob.encode()).hexdigest()[:16]
 
 
@@ -67,7 +68,7 @@ class CheckpointManifest:
         self, table: PartitionedTable, rules: list[Rule], params: dict | None = None
     ) -> list[int]:
         rule_versions = {r.rule_id: r.version for r in rules}
-        digest = params_digest(params)
+        want = digest(params or {})
         out = []
         for pid, snap in table.snapshot_ids().items():
             e = self.entries.get(str(pid))
@@ -75,7 +76,7 @@ class CheckpointManifest:
                 e is None
                 or e.get("snapshot_id") != snap
                 or e.get("rule_versions") != rule_versions
-                or e.get("params_digest") != digest
+                or e.get("params_digest") != want
                 or e.get("verdict") != "pass"
             ):
                 out.append(pid)
@@ -120,7 +121,7 @@ class CheckpointManifest:
             "snapshot_id": snapshot_id,
             "files": list(files),
             "rule_versions": {r.rule_id: r.version for r in rules},
-            "params_digest": params_digest(params),
+            "params_digest": digest(params or {}),
             "metrics": metrics,
             "verdict": verdict,
             "completed_at": now,

@@ -23,10 +23,12 @@ from pyspark.sql import functions as F
 from ..sources.catalog import PartitionedTable
 from .manifest import CheckpointManifest
 from .rules import (
+    VIOLATION_SCHEMA,
     Rule,
     RuleContext,
     canonical_violations,
     default_rules,
+    local_frame,
 )
 from .shared import KIND_ROWS, build_shared
 
@@ -73,11 +75,7 @@ class ValidationRunner:
         )
         skipped = sorted(set(all_parts) - set(pending))
         if not pending:
-            empty = self.spark.createDataFrame(
-                [],
-                "part_id int, rule_id string, doc_id string, source string,"
-                " n_tok int, detail string",
-            )
+            empty = local_frame(self.spark, [], VIOLATION_SCHEMA)
             return SuiteResult([], empty, [], skipped)
 
         df = self.table.read_partitions(self.spark, pending)
@@ -115,9 +113,10 @@ class ValidationRunner:
         # violations are persisted so that a plan consumed twice (once
         # inside a rule's own verdict aggregation — today only the opt-in
         # seq_structure rule's verdict_from_violations; the default rules
-        # take theirs from the shared partials or a cached duplicate-id
-        # frame — once by the sink) runs ONCE; without one nothing in the
-        # run reads them again, so they stay lazy.
+        # take theirs from the shared partials or, for uniqueness, one
+        # collect of its exact pass's counts — once by the sink) runs ONCE;
+        # without one nothing in the run reads them again, so they stay
+        # lazy and no rule keeps a frame from one run to the next.
         from concurrent.futures import ThreadPoolExecutor
 
         from pyspark import StorageLevel

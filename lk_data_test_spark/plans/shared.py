@@ -40,10 +40,14 @@ driver function of the merged partials. ``build_shared`` makes the pass a
 ``RuleContext`` asks for; ``shared_for`` hands a rule the suite's pass, or
 builds one when the rule runs alone.
 
-Vectorization: `mapInArrow` hands us pyarrow RecordBatches; the token lists
-are consumed as (lengths, flat values) — no per-row ndarray conversion, no
-per-group Python loop. Group labels are factorized once per batch; all
-counting is `np.bincount` / `np.unique` over combined integer keys.
+One kernel (``_make_batch_gen``) behind two feeds: Spark's scan through
+``mapInArrow`` (any DataFrame, in-memory frames included) and pyarrow
+reading the listed parquet files in the worker (``direct_files``). Both hand
+it RecordBatches of the same raw columns (part_id, doc_id, source, n_tok,
+tokens). Vectorization: the token lists are consumed as (lengths, flat
+values) — no per-row ndarray conversion, no per-group Python loop. Group
+labels are factorized once per batch; all counting is `np.bincount` /
+`np.unique` over combined integer keys.
 
 The flat-token loop is CHUNKED (1M tokens at a time) so every numpy temporary
 stays under glibc's 32MB mmap threshold: larger buffers are mmap'd fresh on
@@ -100,6 +104,9 @@ def hash_token_bucket(tokens: np.ndarray, mod: int) -> np.ndarray:
     return ((tokens.astype(np.int64) * HASH_MULT) & 0xFFFFFFFF) % mod
 
 PARTIAL_SCHEMA = "part_id int, source string, kind int, key long, cnt long"
+PARTIAL_KEYS = ["part_id", "source", "kind", "key"]
+# the columns the kernel reads, in both feeds
+_RAW_COLUMNS = ["part_id", "doc_id", "source", "n_tok", "tokens"]
 
 _NTOK_BITS = np.int64(33)
 _NTOK_MASK = np.int64((1 << 33) - 1)
@@ -127,18 +134,19 @@ class SharedTokenStats:
         self.vocab_hi = vocab_hi  # exclusive; None disables kind 4
         self._lock = threading.Lock()
         self._table = table
-        if table is not None:
-            self._partials = None
-        elif direct_files:
-            self._partials = _build_partials_direct(
-                df.sparkSession if df is not None else SparkSession.active(),
-                direct_files, self.lo, self.hi,
-                self.contiguous, ref_tokens, hash_mod, vocab_lo, vocab_hi,
+        self._partials = None
+        if table is None:
+            kernel = _make_batch_gen(
+                self.lo, self.hi, ref_tokens, hash_mod, vocab_lo, vocab_hi
             )
-        else:
-            self._partials = _build_partials(
-                df, self.lo, self.hi, self.contiguous, ref_tokens, hash_mod,
-                vocab_lo, vocab_hi,
+            self._partials = (
+                _build_partials_direct(
+                    df.sparkSession if df is not None else SparkSession.active(),
+                    direct_files,
+                    kernel,
+                )
+                if direct_files
+                else _build_partials(df, kernel)
             )
 
     @classmethod
@@ -288,52 +296,34 @@ def _decode_ntok(masked: np.ndarray) -> np.ndarray:
     return out
 
 
-def _build_partials(
-    df: DataFrame,
-    lo: int,
-    hi: int,
-    contiguous: bool,
-    ref_tokens: list[int] | None,
-    hash_mod: int | None = None,
-    vocab_lo: int | None = None,
-    vocab_hi: int | None = None,
-) -> DataFrame:
-    # Domain filtering happens in numpy, not the JVM: a codegen'd F.filter
-    # over 4e9 array elements costs ~3x the whole vectorized numpy mask, and
-    # Arrow moves the raw int32 buffer essentially at memcpy speed (measured:
-    # JVM-filter path 24s vs full-transfer+numpy-mask 17s on 38M rows/16c).
-    n_tok = F.col("n_tok")
-    src = df.select(
-        "part_id",
-        "source",
-        "n_tok",
-        # -1 encodes NULL arrays portably (ANSI mode makes size(NULL) = NULL)
-        F.coalesce(F.size("tokens"), F.lit(-1)).alias("tok_sz"),
-        "tokens",
-        (
-            F.when(F.col("doc_id").isNull(), ROW_NULL_DOC_ID).otherwise(0)
-            + F.when(n_tok.isNull(), ROW_NULL_NTOK).otherwise(0)
-            + F.when(n_tok <= 0, ROW_NONPOS_NTOK).otherwise(0)
-        ).alias("defects"),
-    )
-    gen = _make_batch_gen(lo, hi, ref_tokens, hash_mod, vocab_lo, vocab_hi)
+def _build_partials(df: DataFrame, kernel) -> DataFrame:
+    """The mapInArrow feed: Spark's scan of ``df`` hands ``kernel`` the raw
+    columns. Domain filtering happens in numpy, not the JVM: a codegen'd
+    F.filter over 4e9 array elements costs ~3x the whole vectorized numpy
+    mask, and Arrow moves the raw int32 buffer essentially at memcpy speed
+    (measured: JVM-filter path 24s vs full-transfer+numpy-mask 17s on 38M
+    rows/16c)."""
+    return _merge(df.select(*_RAW_COLUMNS).mapInArrow(kernel, PARTIAL_SCHEMA))
+
+
+def _merge(partials: DataFrame) -> DataFrame:
+    """Every task's partials summed per ``PARTIAL_KEYS``, in Spark."""
+    return partials.groupBy(*PARTIAL_KEYS).agg(F.sum("cnt").alias("cnt"))
+
+
+def merge_partials(table):
+    """A pyarrow Table of partials with ``cnt`` summed per
+    ``PARTIAL_KEYS``: the worker's per-file merge, and the incremental
+    store's merge of stored and new partials."""
     return (
-        src.mapInArrow(gen, PARTIAL_SCHEMA)
-        .groupBy("part_id", "source", "kind", "key")
-        .agg(F.sum("cnt").alias("cnt"))
+        table.group_by(PARTIAL_KEYS, use_threads=False)
+        .aggregate([("cnt", "sum")])
+        .rename_columns([*PARTIAL_KEYS, "cnt"])
     )
 
 
 def _build_partials_direct(
-    spark,
-    files: list[tuple[int, str]],
-    lo: int,
-    hi: int,
-    contiguous: bool,
-    ref_tokens: list[int] | None,
-    hash_mod: int | None = None,
-    vocab_lo: int | None = None,
-    vocab_hi: int | None = None,
+    spark, files: list[tuple[int, str]], kernel
 ) -> DataFrame:
     """Same partials, but each task DECODES ITS PARQUET FILE IN THE PYTHON
     WORKER with pyarrow instead of shipping `tokens` through the JVM scan →
@@ -345,29 +335,24 @@ def _build_partials_direct(
 
     Spark still owns distribution and retries — the input is a range of
     indexes into ``pack_files`` groups of the (part_id, path) file list, one
-    range partition (task) per group, so no shuffle precedes the kernel —
-    and the partials contract (schema, counts, nulls) is bit-identical to
-    the mapInArrow path (pinned by tests/test_rules.py). Used only for local
-    parquet layouts (the PartitionedTable contract); any exotic source falls
-    back to the mapInArrow path."""
+    range partition (task) per group, so no shuffle precedes the kernel.
+    Each parquet batch goes to the same kernel as the mapInArrow feed's,
+    with only the file's ``part_id`` column added, so both feeds emit the
+    same partials (pinned by tests/test_rules.py). The mapInArrow feed stays
+    for what this one cannot read: in-memory frames and the corrupt-tolerant
+    Spark scan."""
     files = [(int(p), str(f)) for p, f in files]
     groups = pack_files(
         [f for _, f in files], spark.sparkContext.defaultParallelism
     )
-    kernel = _make_batch_gen(lo, hi, ref_tokens, hash_mod, vocab_lo, vocab_hi)
-
-    def _mask(bools):
-        return bools.to_numpy(zero_copy_only=False).astype(np.int32)
 
     def read_gen(batches):
         import pyarrow as pa
-        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         for b in batches:
             for i in (j for g in b.column(0).to_pylist() for j in groups[g]):
                 pid, path = files[i]
-                pf = pq.ParquetFile(path)
                 outs: list = []
                 # 16k-row batches, measured optimum (r6 interleaved A/B):
                 # larger ~64MB batches emit 6x fewer partial rows but push
@@ -375,89 +360,22 @@ def _build_partials_direct(
                 # (the first-touch page-fault cost the module docstring
                 # documents) and lose decode/kernel pipelining — net ~10%
                 # slower.
-                for rb in pf.iter_batches(
-                    batch_size=16384,
-                    columns=["doc_id", "source", "n_tok", "tokens"],
-                    use_threads=False,
+                for rb in pq.ParquetFile(path).iter_batches(
+                    batch_size=16384, columns=_RAW_COLUMNS[1:], use_threads=False
                 ):
-                    n_tok = rb.column(2)
-                    toks = rb.column(3)
-                    defects = (
-                        ROW_NULL_DOC_ID * _mask(pc.is_null(rb.column(0)))
-                        | ROW_NULL_NTOK * _mask(pc.is_null(n_tok))
-                        | ROW_NONPOS_NTOK
-                        * _mask(pc.fill_null(pc.less_equal(n_tok, 0), False))
-                    )
-                    asm = pa.RecordBatch.from_arrays(
-                        [
-                            pa.array(
-                                np.full(rb.num_rows, pid, dtype=np.int32)
-                            ),
-                            rb.column(1),
-                            n_tok,
-                            pc.fill_null(pc.list_value_length(toks), -1),
-                            toks,
-                            pa.array(defects),
-                        ],
-                        names=["part_id", "source", "n_tok", "tok_sz",
-                               "tokens", "defects"],
-                    )
-                    outs.extend(kernel([asm]))
+                    part = pa.array(np.full(rb.num_rows, pid, dtype=np.int32))
+                    outs.extend(kernel([rb.add_column(0, "part_id", part)]))
                 if outs:
                     # merge the per-batch partials IN THE WORKER before they
                     # cross back to the JVM: one file emits its final
                     # per-(source, kind, key) counts once (~6x fewer rows
                     # through the Arrow->row boundary and the partial agg)
-                    yield _reduce_partials(pa, pc, outs)
+                    yield from merge_partials(pa.Table.from_batches(outs)).to_batches()
 
-    def _reduce_partials(pa, pc, outs):
-        t = pa.Table.from_batches(outs).combine_chunks()
-        pid = t.column("part_id").to_numpy(zero_copy_only=False)
-        enc = pc.dictionary_encode(t.column("source"))
-        chunk = enc.chunk(0) if hasattr(enc, "chunk") else enc
-        idx = chunk.indices.to_numpy(zero_copy_only=False)
-        n_src = len(chunk.dictionary)
-        codes = (
-            np.where(np.isnan(idx), n_src, idx).astype(np.int64)
-            if idx.dtype.kind == "f"
-            else idx.astype(np.int64)
+    return _merge(
+        spark.range(0, len(groups), 1, numPartitions=len(groups)).mapInArrow(
+            read_gen, PARTIAL_SCHEMA
         )
-        src_vals = np.empty(n_src + 1, dtype=object)
-        src_vals[:n_src] = chunk.dictionary.to_pylist()
-        src_vals[n_src] = None
-        kind = t.column("kind").to_numpy(zero_copy_only=False)
-        key = t.column("key").to_numpy(zero_copy_only=False)
-        cnt = t.column("cnt").to_numpy(zero_copy_only=False)
-        order = np.lexsort((key, kind, codes, pid))
-        pid, codes, kind, key, cnt = (
-            a[order] for a in (pid, codes, kind, key, cnt)
-        )
-        new_grp = np.empty(len(pid), dtype=bool)
-        new_grp[0] = True
-        new_grp[1:] = (
-            (pid[1:] != pid[:-1])
-            | (codes[1:] != codes[:-1])
-            | (kind[1:] != kind[:-1])
-            | (key[1:] != key[:-1])
-        )
-        starts = np.nonzero(new_grp)[0]
-        sums = np.add.reduceat(cnt, starts)
-        return pa.RecordBatch.from_arrays(
-            [
-                pa.array(pid[starts].astype(np.int32), type=pa.int32()),
-                pa.array(src_vals[codes[starts]], type=pa.string()),
-                pa.array(kind[starts].astype(np.int32), type=pa.int32()),
-                pa.array(key[starts].astype(np.int64), type=pa.int64()),
-                pa.array(sums.astype(np.int64), type=pa.int64()),
-            ],
-            names=["part_id", "source", "kind", "key", "cnt"],
-        )
-
-    return (
-        spark.range(0, len(groups), 1, numPartitions=len(groups))
-        .mapInArrow(read_gen, PARTIAL_SCHEMA)
-        .groupBy("part_id", "source", "kind", "key")
-        .agg(F.sum("cnt").alias("cnt"))
     )
 
 
@@ -496,15 +414,19 @@ def _make_batch_gen(
     vocab_hi: int | None,
 ):
     """The per-batch counting kernel, shared by the mapInArrow feed and the
-    pyarrow-direct feed. Input batches have columns (part_id, source, n_tok,
-    tok_sz, tokens, defects) in that order; ``defects`` is the kind-5 bitmask
-    of the row."""
+    pyarrow-direct feed. Input batches carry the raw ``_RAW_COLUMNS``
+    (part_id, doc_id, source, n_tok, tokens), read by name; the token-array
+    sizes and the kind-5 defect bits are computed here, with pyarrow, so
+    both feeds hand over the same columns."""
     span = hi - lo + 1
     ref_np = (
         np.asarray(ref_tokens, dtype=np.int64) if ref_tokens is not None else None
     )
     vlo = np.int64(vocab_lo if vocab_lo is not None else 0)
     vhi = None if vocab_hi is None else np.int64(vocab_hi)
+
+    def _mask(bools):
+        return bools.to_numpy(zero_copy_only=False).astype(np.int64)
 
     def gen(batches):
         import pyarrow as pa
@@ -514,12 +436,22 @@ def _make_batch_gen(
             n = b.num_rows
             if not n:
                 continue
-            pid = b.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
-            src_arr = b.column(1)
-            ntok = b.column(2).to_numpy(zero_copy_only=False)  # float+NaN if nulls
-            tok_sz = b.column(3).to_numpy(zero_copy_only=False).astype(np.int64)
-            lists = b.column(4)
-            defects = b.column(5).to_numpy(zero_copy_only=False).astype(np.int64)
+            pid = b.column("part_id").to_numpy(zero_copy_only=False).astype(np.int64)
+            src_arr = b.column("source")
+            n_tok = b.column("n_tok")
+            ntok = n_tok.to_numpy(zero_copy_only=False)  # float+NaN if nulls
+            lists = b.column("tokens")
+            # -1 marks a NULL token array
+            tok_sz = (
+                pc.fill_null(pc.list_value_length(lists), -1)
+                .to_numpy(zero_copy_only=False)
+                .astype(np.int64)
+            )
+            defects = (
+                ROW_NULL_DOC_ID * _mask(pc.is_null(b.column("doc_id")))
+                | ROW_NULL_NTOK * _mask(pc.is_null(n_tok))
+                | ROW_NONPOS_NTOK * _mask(pc.fill_null(pc.less_equal(n_tok, 0), False))
+            )
 
             # group labels: factorize (part_id, source) — vectorized.
             # null sources get the sentinel code n_src (every kind but 1).
@@ -560,8 +492,7 @@ def _make_batch_gen(
 
             # ---- kind 1: token counts via flat values + lengths ------------
             # chunked: every temporary <= ~8MB (see module docstring)
-            lengths = pc.list_value_length(lists).to_numpy(zero_copy_only=False)
-            lengths = np.nan_to_num(lengths, nan=0.0).astype(np.int64)
+            lengths = np.maximum(tok_sz, 0)
             flat = lists.flatten().to_numpy(zero_copy_only=False)
             span1 = span + 1  # last slot per group = out-of-domain sentinel
             offsets = np.empty(n + 1, dtype=np.int64)

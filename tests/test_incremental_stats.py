@@ -117,12 +117,6 @@ def test_incremental_drift_delta_matches_batch(spark, tmp_path):
     allowed = spark.read.parquet(f"{d}/allowed_sources")
 
     def batch_verdicts():
-        # drift.evaluate caches nothing. The clearCache() calls in this file
-        # dodge uniqueness.evaluate's ``dups.cache()``, which is never
-        # unpersisted (ROADMAP "Leaked .cache() frames"): CacheManager
-        # matches by logical-plan equality, so a batch evaluation after an
-        # append would be served the pre-append duplicate counts
-        spark.catalog.clearCache()
         ctx = RuleContext(
             spark=spark,
             allowed_sources=allowed,
@@ -186,7 +180,6 @@ def test_incremental_referential_and_uniqueness(spark, tmp_path):
     allowed = spark.read.parquet(f"{d}/allowed_sources")
 
     def batch(rule_mod):
-        spark.catalog.clearCache()
         ctx = RuleContext(
             spark=spark, allowed_sources=allowed,
             part_ids=table.partition_ids(),
@@ -296,7 +289,6 @@ def test_incremental_uniqueness_global_cross_partition_append(spark, tmp_path):
     from lk_data_test_spark.operators import uniqueness
     from lk_data_test_spark.plans.rules import RuleContext
 
-    spark.catalog.clearCache()
     ctx = RuleContext(spark=spark, part_ids=table.partition_ids(), params=params)
     batch = {
         int(r["part_id"]): (bool(r["passed"]), float(r["metric"]))
@@ -320,7 +312,6 @@ def test_incremental_token_bounds_delta_adds(spark, tmp_path):
     table = PartitionedTable(f"{d}/sequences")
 
     def batch():
-        spark.catalog.clearCache()
         ctx = RuleContext(spark=spark, part_ids=table.partition_ids())
         return {
             int(r["part_id"]): (bool(r["passed"]), float(r["metric"]))
@@ -435,7 +426,6 @@ def test_uniqueness_input_change_reaches_unchanged_partitions(spark, tmp_path):
         out = _reports(spark, table, store, params={"uniqueness": params})[
             "uniqueness"
         ]
-        spark.catalog.clearCache()
         ctx = RuleContext(
             spark=spark, part_ids=table.partition_ids(),
             params={"uniqueness": params},
@@ -497,7 +487,6 @@ def _batch(spark, table, allowed=None, profiles=None, params=None) -> dict:
     )
     from lk_data_test_spark.plans.rules import RuleContext
 
-    spark.catalog.clearCache()
     ctx = RuleContext(
         spark=spark, allowed_sources=allowed, reference_profiles=profiles,
         part_ids=table.partition_ids(), params=params or {},
@@ -627,7 +616,6 @@ def test_fused_token_bounds_range_with_vocab_lo(spark, tmp_path):
         sep = _reports(spark, table, str(tmp_path / "tb.json"), params=params)[
             "token_bounds"
         ]
-        spark.catalog.clearCache()
         ctx = RuleContext(
             spark=spark, part_ids=table.partition_ids(), params=params
         )
@@ -692,6 +680,60 @@ def test_incremental_store_format(spark, tmp_path):
     kinds = {p[1] for p in entries["0"]["partials"]}
     assert {0, 1, 5} <= kinds <= set(range(6))
 
+
+
+def test_store_digests_written_unsorted_still_skip(spark, tmp_path, monkeypatch):
+    """Stores on disk hold ``domain`` and ``drift_fp`` digests made as the
+    sha256 of an UNSORTED ``json.dumps``. The one sorted-key digest gives
+    the same strings for these inputs: a store whose digests are rewritten
+    in the unsorted form classifies every partition "skip" and re-scores no
+    drift, so no upgrade forces a full run."""
+    import hashlib
+    import json
+
+    import lk_data_test_spark.operators.drift as drift_mod
+
+    def unsorted_digest(obj) -> str:
+        return hashlib.sha256(json.dumps(obj, default=str).encode()).hexdigest()[:16]
+
+    d = str(tmp_path / "corpus")
+    generate(spark, d, GenConfig(n_parts=2, rows_per_part=300))
+    table = PartitionedTable(f"{d}/sequences")
+    profiles = spark.read.parquet(f"{d}/reference_profiles")
+    store = str(tmp_path / "store.json")
+    _reports(spark, table, store, profiles=profiles)
+
+    prof_rows = profiles.collect()
+    domain = sorted({int(t) for r in prof_rows for t in r["token_freq"]})
+    params = drift_mod.resolve_params(None)
+    fp = unsorted_digest(
+        [
+            sorted(
+                (
+                    r["source"],
+                    [float(q) for q in r["n_tok_quantiles"]],
+                    sorted((int(k), float(v)) for k, v in r["token_freq"].items()),
+                )
+                for r in prof_rows
+            ),
+            {k: params[k] for k in sorted(params)},
+        ]
+    )
+    with open(store) as f:
+        entries = json.load(f)
+    for e in entries.values():
+        e["inputs"]["domain"] = unsorted_digest(domain)
+        e["drift_fp"] = fp
+    with open(store, "w") as f:
+        json.dump(entries, f)
+
+    def boom(*a, **k):
+        raise AssertionError("drift re-scored a skip partition")
+
+    monkeypatch.setattr(drift_mod, "score_groups", boom)
+    out = _reports(spark, table, store, profiles=profiles)
+    for rule, r in out.items():
+        assert set(r["modes"].values()) == {"skip"}, rule
 
 def _append_rows(table, pid, name, n, null_n_tok=False):
     """Copy ``n`` rows of a generated file of a partition into a new file

@@ -273,3 +273,66 @@ def test_sink_run_without_violations(spark, corpus_dir, tmp_path):
     res = r.run(force=True)
     assert all(v["passed"] for v in res.verdicts)
     assert res.violations.count() == 0
+
+
+def _bare_runner(spark, data_dir, tmp_path):
+    """A runner over ``data_dir``'s generated tables with no sink."""
+    return ValidationRunner(
+        spark,
+        PartitionedTable(f"{data_dir}/sequences"),
+        allowed_sources=spark.read.parquet(f"{data_dir}/allowed_sources"),
+        reference_profiles=spark.read.parquet(f"{data_dir}/reference_profiles"),
+        manifest_path=str(tmp_path / "manifest.json"),
+    )
+
+
+def test_forced_rerun_counts_rows_appended_since_the_last_run(spark, tmp_path):
+    """A forced rerun in the same session sees rows appended after the first
+    run: no frame a rule kept from the first call may serve the second its
+    old answer. Part 1 (the duplicate role) gains one duplicated id."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from lk_data_test_spark.datagen import GenConfig, generate
+
+    d = str(tmp_path / "corpus")
+    generate(spark, d, GenConfig(n_parts=5, rows_per_part=1200))
+    r = _bare_runner(spark, d, tmp_path)
+
+    def part1_duplicates() -> float:
+        res = r.run(force=True)
+        return next(
+            v["metric"]
+            for v in res.verdicts
+            if v["rule_id"] == "uniqueness" and v["part_id"] == 1
+        )
+
+    assert part1_duplicates() == 60.0
+    part_dir = r.table.part_dir(1)
+    t = pq.read_table(part_dir).slice(0, 60)
+    same_id = pa.array(["appended-dup"] * 60, pa.string())
+    pq.write_table(
+        t.set_column(t.schema.get_field_index("doc_id"), "doc_id", same_id),
+        os.path.join(part_dir, "part-appended.parquet"),
+    )
+    assert part1_duplicates() == 61.0
+
+
+# Spark jobs of a warm forced run over the test corpus: 4 dimension-table
+# collects, 2 for the shared partials, 2 for the uniqueness sketches and 3
+# for the exact pass over the flagged partitions
+WARM_RUN_JOBS = 11
+
+
+def test_warm_forced_run_job_count(spark, corpus_dir, tmp_path):
+    """A second forced run in one session launches at most WARM_RUN_JOBS
+    Spark jobs. No default rule keeps a frame between runs, so the count
+    is the same on every run; a change that adds a job, or a cache that
+    makes the count depend on the session, shows up here."""
+    r = _bare_runner(spark, corpus_dir, tmp_path)
+    r.run(force=True)
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    r.run(force=True)
+    jobs = set(tracker.getJobIdsForGroup(None)) - before
+    assert len(jobs) <= WARM_RUN_JOBS, sorted(jobs)
