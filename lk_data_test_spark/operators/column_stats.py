@@ -13,11 +13,9 @@ Scale design (north_rule: partitioning/shuffle/skew explicit):
   pass's partials (plans/shared.py): the kind-5 row census gives row count,
   null doc_id / source / n_tok and non-positive n_tok; kinds 2/3 give
   len-mismatch and null-tokens rows; the kind-0 ``n_tok`` histogram gives
-  min, max, sum and the buckets. Inside the suite the verdict reads the
-  suite's one collect of the partials; run alone, the rule builds its own
-  pass (``shared_for``). Either way only partial count rows are shuffled,
+  min, max, sum and the buckets. Only partial count rows are shuffled,
   never the rows of a hot partition.
-- The verdict is the sum of the six defect counts per partition.
+- The metric is the sum of the six defect counts per partition.
 - Row-level violation rows are materialized ONLY for partitions whose
   aggregate verdict failed (partition-pruned second scan), so the common
   all-clean case never rescans data.
@@ -29,7 +27,9 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.rules import VERDICT_SCHEMA, RuleContext, RuleResult, local_frame
+from ..plans.rules import (
+    RuleContext, RuleResult, Verdict, parts_to_judge, verdict_frame,
+)
 from ..plans.shared import (
     KIND_LEN_MISMATCH,
     KIND_NTOK,
@@ -105,26 +105,23 @@ def part_stats(
     return out
 
 
+def part_verdicts(shared, params: dict, part_ids) -> tuple[dict[int, Verdict], dict]:
+    """Each partition's verdict and ``part_stats`` under the run's
+    ``params``: the metric is the sum of the six ``BAD_FIELDS`` counts, and
+    a partition passes while it is at most ``max_null_rate``."""
+    p = {**DEFAULTS, **params.get(RULE_ID, {})}
+    limit = float(p["max_null_rate"])
+    stats = part_stats(shared, p["bucket_width"], part_ids)
+    bad = {pid: float(sum(stats[pid][k] for k in BAD_FIELDS)) for pid in part_ids}
+    return {pid: (n <= limit, n, limit, None) for pid, n in bad.items()}, stats
+
+
 def evaluate(df: DataFrame, ctx: RuleContext) -> RuleResult:
-    p = {**DEFAULTS, **ctx.params.get(RULE_ID, {})}
-    stats = part_stats(shared_for(df, ctx), p["bucket_width"])
-    bad_by_part = {
-        pid: sum(s[k] for k in BAD_FIELDS) for pid, s in stats.items()
-    }
-    part_ids = (
-        sorted(int(x) for x in ctx.part_ids) if ctx.part_ids is not None else sorted(stats)
+    shared = shared_for(df, ctx)
+    verdicts, _ = part_verdicts(
+        shared, ctx.params, parts_to_judge(ctx, shared.part_ids())
     )
-    verdict_rows = []
-    failing = []
-    for pid in part_ids:
-        bad = float(bad_by_part.get(pid, 0))
-        passed = bad <= p["max_null_rate"]
-        if not passed:
-            failing.append(pid)
-        verdict_rows.append(
-            (pid, RULE_ID, passed, bad, float(p["max_null_rate"]), None)
-        )
-    verdicts = local_frame(ctx.spark, verdict_rows, VERDICT_SCHEMA)
+    failing = [pid for pid, v in verdicts.items() if not v[0]]
     sz = F.size("tokens")
     defect = F.concat_ws(
         ",",
@@ -149,4 +146,4 @@ def evaluate(df: DataFrame, ctx: RuleContext) -> RuleResult:
         )
         .filter(F.col("detail") != "")
     )
-    return RuleResult(verdicts, violations)
+    return RuleResult(verdict_frame(ctx, RULE_ID, verdicts), violations)

@@ -17,12 +17,10 @@ rows:
    quantile profile.
 
 2. **Token-frequency L1 distance.** The reference profile pins the expected
-   relative frequency of the top-K tokens. Token arrays cross into Arrow raw
-   (memcpy-speed int32 buffers) and are domain-filtered + bin-counted by the
-   chunked numpy kernel in ``plans/shared.py`` — measured ~3x faster than a
-   codegen'd per-element JVM ``F.filter``. Each task emits <= |ref_tokens|
-   partial rows per group instead of shuffling one row per token occurrence
-   (~10^14 rows at target scale for a JVM explode).
+   relative frequency of the top-K tokens. The shared pass's numpy kernel
+   (``plans/shared.py``) counts reference tokens, so each task emits <=
+   |ref_tokens| partial rows per group instead of shuffling one row per
+   token occurrence (~10^14 rows at target scale for a JVM explode).
 
 Plan shape::
 
@@ -30,9 +28,11 @@ Plan shape::
       -> mapInArrow: tagged partials  (kind 0: n_tok hist, kind 1: token cnt)
       -> groupBy(part_id, source, kind, key).sum          [shuffle, partial agg]
       -> toArrow: ONE driver collect, shared by the suite's rules
-      -> driver: KS + L1 per (part_id, source)            [drift_signal]
-      -> verdicts (local rows) / violations (local relation, rows = parts x
-         sources; Spark's format_string writes the detail)
+      -> driver: KS + L1 per (part_id, source)            [score_groups: one
+         pyarrow sort, one numpy slice per group]
+      -> verdicts (local rows, ``part_verdicts``) / violations (local
+         relation, rows = parts x sources; Spark's format_string writes the
+         detail)
 
 Skew note: partial aggregation keys include (kind, key), which fans a hot
 (part, source) over thousands of reducer keys; AQE skew handling covers the
@@ -42,12 +42,18 @@ rest.
 from __future__ import annotations
 
 import numpy as np
-
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.rules import VERDICT_SCHEMA, RuleContext, RuleResult, local_frame
-from ..plans.shared import HASH_MULT, KIND_NTOK, KIND_TOKEN, shared_for
+from ..plans.rules import (
+    RuleContext, RuleResult, Verdict, local_frame, parts_to_judge, verdict_frame,
+)
+from ..plans.shared import (
+    DEFAULT_HASH_BUCKETS, DEFAULT_MAX_REF_TOKENS, HASH_MULT, KIND_NTOK, KIND_TOKEN,
+    shared_for,
+)
 
 RULE_ID = "drift"
 
@@ -55,11 +61,9 @@ DEFAULTS = {
     "ks_threshold": 0.18,
     "l1_threshold": 0.20,
     "min_docs": 300,  # groups smaller than this are too noisy to judge
-    # Driver-OOM guard (plans/shared.py): profiles whose token domain
-    # exceeds max_ref_tokens are folded into hash_buckets hashed buckets on
-    # both the corpus and profile sides instead of being collected raw.
-    "max_ref_tokens": 1_000_000,
-    "hash_buckets": 1 << 16,
+    # the driver-OOM guard of the reference domain (plans/shared.py)
+    "max_ref_tokens": DEFAULT_MAX_REF_TOKENS,
+    "hash_buckets": DEFAULT_HASH_BUCKETS,
 }
 
 def _ks_from_hist(values: np.ndarray, counts: np.ndarray, quantiles: np.ndarray) -> float:
@@ -104,39 +108,33 @@ def profile_maps(prof_rows) -> tuple[dict, dict]:
     return quantiles, token_freq
 
 
-def ref_index(token_freq: dict) -> dict[int, int]:
-    """token -> position in the sorted union of every source's reference
-    tokens (the L1 vector's layout)."""
-    tokens = sorted({t for m in token_freq.values() for t in m})
-    return {t: i for i, t in enumerate(tokens)}
-
-
-def drift_signal(
-    hist_key, hist_cnt, tok_key, tok_cnt, quantiles, ref, ref_idx
-) -> tuple[float, float, float]:
-    """(ks, l1, n_docs) of one (part, source) group: ``hist_key``/``hist_cnt``
-    is its n_tok histogram, ``tok_key``/``tok_cnt`` its reference-token
-    counts, ``quantiles`` the source's 99-quantile profile (None: no KS),
-    ``ref`` its expected token frequencies and ``ref_idx`` the token ->
-    position map of the (all sources') reference token vector."""
-    hist_key, hist_cnt = np.asarray(hist_key), np.asarray(hist_cnt)
-    n_docs = float(hist_cnt.sum())
-    ks = (
-        _ks_from_hist(hist_key, hist_cnt, quantiles)
-        if quantiles is not None and len(hist_key)
-        else 0.0
+def load_profiles(profiles: DataFrame, hash_mod: int | None) -> tuple[dict, dict]:
+    """``profile_maps`` of the profiles, with the token frequencies folded
+    into ``hash_mod`` buckets when the shared pass counted hashed buckets."""
+    if not hash_mod:
+        # sane profile: ONE collect of the tiny dimension serves both maps
+        return profile_maps(profiles.collect())
+    quantiles = {
+        r["source"]: np.asarray(r["n_tok_quantiles"], dtype=np.float64)
+        for r in profiles.select("source", "n_tok_quantiles").collect()
+    }
+    # Pathological profile (token domain over the cap): the corpus side
+    # counted hashed buckets, so fold the profile into the SAME bucket
+    # domain SPARK-SIDE — the driver only ever sees <= sources x hash_mod
+    # aggregated rows, never the raw token map.
+    bucket = F.pmod(
+        F.pmod(F.col("t").cast("bigint") * F.lit(HASH_MULT), F.lit(1 << 32)),
+        F.lit(int(hash_mod)),
     )
-    # total token mass (incl. out-of-profile tokens) from the histogram:
-    # sum(n_tok * count) — no second scan needed
-    total = float((hist_key * hist_cnt).sum())
-    obs = np.zeros(len(ref_idx))
-    for tok, c in zip(tok_key, tok_cnt):
-        i = ref_idx.get(int(tok))
-        if i is not None:
-            obs[i] = float(c)
-    obs = obs / total if total > 0 else obs
-    refv = np.array([ref.get(tk, 0.0) for tk in ref_idx])
-    return ks, float(np.abs(obs - refv).sum()), n_docs
+    token_freq: dict[str, dict[int, float]] = {}
+    for r in (
+        profiles.select("source", F.explode("token_freq").alias("t", "freq"))
+        .groupBy("source", bucket.cast("int").alias("b"))
+        .agg(F.sum("freq").alias("freq"))
+        .collect()
+    ):
+        token_freq.setdefault(r["source"], {})[int(r["b"])] = float(r["freq"])
+    return quantiles, token_freq
 
 
 def score_groups(rows, quantiles: dict, token_freq: dict, p: dict) -> list[tuple]:
@@ -144,21 +142,77 @@ def score_groups(rows, quantiles: dict, token_freq: dict, p: dict) -> list[tuple
     of ``rows`` (kind-0/1 partials, a pyarrow Table) with at least
     ``p["min_docs"]`` documents, in (part_id, source) order; score =
     max(ks / ks_threshold, l1 / l1_threshold). Null sources are not scored
-    (no reference profile)."""
-    ref_idx = ref_index(token_freq)
-    groups = rows.to_pandas()
-    scored = []
-    for (pid, source), g in groups.groupby(["part_id", "source"], sort=True):
-        h = g[g["kind"] == KIND_NTOK]
-        t = g[g["kind"] == KIND_TOKEN]
-        ks, l1, n_docs = drift_signal(
-            h["key"].to_numpy(), h["cnt"].to_numpy(), t["key"], t["cnt"],
-            quantiles.get(source), token_freq.get(source, {}), ref_idx,
+    (no reference profile). The L1 vectors run over the sorted union of
+    every source's reference tokens: one sort groups the rows, and one
+    searchsorted places every token count."""
+    ref = np.array(sorted({t for m in token_freq.values() for t in m}), np.int64)
+    expected = {}
+    for source, m in token_freq.items():
+        expected[source] = np.zeros(len(ref))
+        expected[source][np.searchsorted(ref, np.fromiter(m, np.int64, len(m)))] = (
+            np.fromiter(m.values(), np.float64, len(m))
         )
-        if n_docs >= float(p["min_docs"]):
-            score = max(ks / p["ks_threshold"], l1 / p["l1_threshold"])
-            scored.append((int(pid), source, ks, l1, n_docs, score))
+    rows = rows.filter(pc.is_valid(rows["source"])).sort_by(
+        [(c, "ascending") for c in ("part_id", "source", "kind")]
+    )
+    if not rows.num_rows:
+        return []
+    pid, kind, key, cnt = (
+        rows[c].to_numpy() for c in ("part_id", "kind", "key", "cnt")
+    )
+    src = rows["source"].combine_chunks()
+    pos = np.searchsorted(ref, key)
+    in_ref = pos < len(ref)
+    in_ref[in_ref] = ref[pos[in_ref]] == key[in_ref]
+    new_group = (np.diff(pid) != 0) | pc.not_equal(src[1:], src[:-1]).to_numpy(
+        zero_copy_only=False
+    )
+    starts = np.concatenate([[0], np.flatnonzero(new_group) + 1, [len(pid)]])
+    scored = []
+    for s, e in zip(starts[:-1], starts[1:]):
+        source = src[s].as_py()
+        h = slice(s, s + int(np.searchsorted(kind[s:e], KIND_TOKEN)))
+        n_docs = float(cnt[h].sum())
+        if n_docs < float(p["min_docs"]):
+            continue
+        q = quantiles.get(source)
+        ks = _ks_from_hist(key[h], cnt[h], q) if q is not None and len(key[h]) else 0.0
+        # total token mass (incl. out-of-profile tokens) from the histogram:
+        # sum(n_tok * count) — no second scan needed
+        total = float((key[h] * cnt[h]).sum())
+        t = np.arange(h.stop, e)[in_ref[h.stop:e]]
+        obs = np.zeros(len(ref))
+        obs[pos[t]] = cnt[t]
+        obs = obs / total if total > 0 else obs
+        l1 = float(np.abs(obs - expected.get(source, np.zeros(len(ref)))).sum())
+        score = max(ks / p["ks_threshold"], l1 / p["l1_threshold"])
+        scored.append((int(pid[s]), source, ks, l1, n_docs, score))
     return scored
+
+
+def part_verdicts(
+    rows, quantiles: dict, token_freq: dict, p: dict, part_ids,
+    known: dict[int, float] | None = None, hash_mod: int | None = None,
+) -> tuple[dict[int, Verdict], list[tuple]]:
+    """Each partition's verdict from the kind-0/1 partials ``rows``: the
+    metric is the max score of its scored groups (0 with none), and it
+    passes at <= 1.0. A partition in ``known`` (part_id -> metric scored
+    from the same partials, profiles and params) is not scored again.
+    ``hash_mod`` names a hashed token domain in the detail. -> (verdicts,
+    the scored groups)."""
+    detail = "method=hist" + (f";domain=hashed:{hash_mod}" if hash_mod else "")
+    known = known or {}
+    todo = [pid for pid in part_ids if pid not in known]
+    scored = []
+    if todo:
+        if known:
+            rows = rows.filter(pc.is_in(rows["part_id"], pa.array(todo, pa.int32())))
+        scored = score_groups(rows, quantiles, token_freq, p)
+    metric = dict(known)
+    for pid, *_, score in scored:
+        metric[pid] = max(metric.get(pid, score), score)
+    metric = {pid: float(metric.get(pid, 0.0)) for pid in part_ids}
+    return {pid: (m <= 1.0, m, 1.0, detail) for pid, m in metric.items()}, scored
 
 
 def evaluate(df: DataFrame, ctx: RuleContext) -> RuleResult:
@@ -170,44 +224,13 @@ def evaluate(df: DataFrame, ctx: RuleContext) -> RuleResult:
     # ---- stage 1: tagged partials — the suite's shared pass (ONE scan of
     # `tokens` for the whole suite), or one built from ctx when run alone
     shared = shared_for(df, ctx)
-
-    if shared.hash_mod:
-        quantiles: dict[str, np.ndarray] = {
-            r["source"]: np.asarray(r["n_tok_quantiles"], dtype=np.float64)
-            for r in profiles.select("source", "n_tok_quantiles").collect()
-        }
-        # Pathological profile (token domain over the cap): the corpus side
-        # counted hashed buckets, so fold the profile into the SAME bucket
-        # domain SPARK-SIDE — the driver only ever sees <= sources x
-        # hash_mod aggregated rows, never the raw token map.
-        mod = int(shared.hash_mod)
-        bucket = F.pmod(
-            F.pmod(F.col("t").cast("bigint") * F.lit(HASH_MULT),
-                   F.lit(1 << 32)),
-            F.lit(mod),
-        )
-        freq_rows = (
-            profiles.select(
-                "source", F.explode("token_freq").alias("t", "freq")
-            )
-            .groupBy("source", bucket.cast("int").alias("b"))
-            .agg(F.sum("freq").alias("freq"))
-            .collect()
-        )
-        token_freq: dict[str, dict[int, float]] = {}
-        for r in freq_rows:
-            token_freq.setdefault(r["source"], {})[int(r["b"])] = float(
-                r["freq"]
-            )
-    else:
-        # sane profile: ONE collect of the tiny dimension serves both the
-        # quantile and frequency closures (no extra per-run driver jobs)
-        quantiles, token_freq = profile_maps(profiles.collect())
+    quantiles, token_freq = load_profiles(profiles, shared.hash_mod)
 
     # ---- stage 2, on the driver: KS + L1 per (part_id, source) over the
     # shared collect (<= parts x sources groups of bounded size)
-    scored = score_groups(
-        shared.rows(KIND_NTOK, KIND_TOKEN), quantiles, token_freq, p
+    verdicts, scored = part_verdicts(
+        shared.rows(KIND_NTOK, KIND_TOKEN), quantiles, token_freq, p,
+        parts_to_judge(ctx, shared.part_ids()), hash_mod=shared.hash_mod,
     )
 
     # the scores as a local relation: Spark's format_string builds the
@@ -228,21 +251,4 @@ def evaluate(df: DataFrame, ctx: RuleContext) -> RuleResult:
             "drift ks=%.4f l1=%.4f n=%.0f", F.col("ks"), F.col("l1"), F.col("n_docs")
         ).alias("detail"),
     )
-
-    metric: dict[int, float] = {}
-    for pid, *_, score in scored:
-        metric[pid] = max(metric.get(pid, score), score)
-    part_ids = (
-        sorted(int(x) for x in ctx.part_ids)
-        if ctx.part_ids is not None
-        else shared.part_ids()
-    )
-    detail = "method=hist" + (
-        f";domain=hashed:{shared.hash_mod}" if shared.hash_mod else ""
-    )
-    rows = []
-    for pid in part_ids:
-        m = metric.get(pid, 0.0)
-        rows.append((pid, RULE_ID, m <= 1.0, m, 1.0, detail))
-    verdicts = local_frame(ctx.spark, rows, VERDICT_SCHEMA)
-    return RuleResult(verdicts, violations)
+    return RuleResult(verdict_frame(ctx, RULE_ID, verdicts), violations)

@@ -11,8 +11,6 @@ The verdict needs no join: the shared token pass's kind-5 row census
 (plans/shared.py) counts rows per (part_id, source), so the per-partition
 violation count is the census rows whose source is null or not in the
 collected active set — a null source never matches in the anti join either.
-In the suite the census comes from the suite's one collect of the partials;
-run alone, the rule builds its own pass (``shared_for``).
 
 Violation rows: broadcast LEFT ANTI join fact->dim over the failing
 partitions only (partition-pruned, as column_stats and token_bounds prune
@@ -27,7 +25,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.rules import VERDICT_SCHEMA, RuleContext, RuleResult, local_frame
+from ..plans.rules import (
+    RuleContext, RuleResult, Verdict, parts_to_judge, verdict_frame,
+)
 from ..plans.shared import shared_for
 
 RULE_ID = "referential"
@@ -37,16 +37,17 @@ def active_sources(allowed: DataFrame) -> DataFrame:
     return allowed.filter(F.col("active")).select("source")
 
 
-def unknown_by_part(shared, allowed: DataFrame) -> dict[int, int]:
-    """part_id -> rows whose source is null or not active in ``allowed``
-    (one collect of the active sources), from the kind-5 census of
-    ``shared``; partitions with none are absent."""
+def part_verdicts(shared, allowed: DataFrame, part_ids) -> dict[int, Verdict]:
+    """Each partition's verdict: the metric is its kind-5 census of rows
+    whose source is null or not active in ``allowed`` (one collect of the
+    active sources), and it passes at 0."""
     known = {r["source"] for r in active_sources(allowed).collect()}
     unknown: dict[int, int] = {}
     for pid, source, _, rows in shared.census():
         if source is None or source not in known:
             unknown[pid] = unknown.get(pid, 0) + rows
-    return unknown
+    n = {pid: float(unknown.get(pid, 0)) for pid in part_ids}
+    return {pid: (m == 0, m, 0.0, None) for pid, m in n.items()}
 
 
 def evaluate(df: DataFrame, ctx: RuleContext) -> RuleResult:
@@ -54,15 +55,12 @@ def evaluate(df: DataFrame, ctx: RuleContext) -> RuleResult:
     if allowed is None:
         raise ValueError("referential rule requires ctx.allowed_sources")
     shared = shared_for(df, ctx)
-    unknown = unknown_by_part(shared, allowed)
-    part_ids = (
-        sorted(int(x) for x in ctx.part_ids)
-        if ctx.part_ids is not None
-        else shared.part_ids()
+    verdicts = part_verdicts(
+        shared, allowed, parts_to_judge(ctx, shared.part_ids())
     )
     # only a failing partition holds an unknown-source row, so the anti join
     # reads those partitions alone
-    failing = sorted(unknown)
+    failing = [pid for pid, v in verdicts.items() if not v[0]]
     violations = (
         df.filter(F.col("part_id").isin(failing) if failing else F.lit(False))
         .select("part_id", "doc_id", "source", "n_tok")
@@ -76,9 +74,4 @@ def evaluate(df: DataFrame, ctx: RuleContext) -> RuleResult:
             F.concat(F.lit("unknown source: "), F.col("source")).alias("detail"),
         )
     )
-    rows = []
-    for pid in part_ids:
-        n = float(unknown.get(pid, 0))
-        rows.append((pid, RULE_ID, n <= 0.0, n, 0.0, None))
-    verdicts = local_frame(ctx.spark, rows, VERDICT_SCHEMA)
-    return RuleResult(verdicts, violations)
+    return RuleResult(verdict_frame(ctx, RULE_ID, verdicts), violations)

@@ -13,11 +13,8 @@ least one out-of-vocab id.
 Scale design (north_rule: partitioning / shuffle / skew explicit):
 - The SCREEN is the shared Arrow token pass's kind 4 (plans/shared.py): per
   (part_id, source) counts of rows containing an OOV token, computed on the
-  RAW token values before any profile-domain hashing. In the suite it adds
-  two vectorized compares + a bincount per chunk to a pass the suite already
-  pays for, and the counts come from the suite's one driver-side collect of
-  the partials. Run alone, or handed a pass built for other vocab bounds,
-  the rule builds its own pass from its context (``shared_for``).
+  RAW token values before any profile-domain hashing: two vectorized
+  compares + a bincount per chunk in a pass the suite already pays for.
 - Violation ROWS are materialized only for partitions the screen flagged
   (partition-pruned second scan, the same two-phase shape as uniqueness's
   exact pass and column_stats' row extraction): the common all-clean case
@@ -30,11 +27,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.rules import (
-    VERDICT_SCHEMA,
-    VIOLATION_SCHEMA,
-    RuleContext,
-    RuleResult,
-    local_frame,
+    VIOLATION_SCHEMA, RuleContext, RuleResult, Verdict, local_frame, parts_to_judge,
+    verdict_frame,
 )
 from ..plans.shared import KIND_OOV_ROWS, shared_for, vocab_bounds
 
@@ -53,38 +47,26 @@ def has_oov(lo: int, hi: int) -> Column:
     return F.exists(F.col("tokens"), _oov_pred(lo, hi))
 
 
+def part_verdicts(shared, params: dict, part_ids) -> dict[int, Verdict]:
+    """Each partition's verdict: the metric is its kind-4 count of rows
+    holding a token outside the run's vocab bounds, and it passes at 0."""
+    lo, hi = vocab_bounds(params)
+    oov = shared.counts_by_part(KIND_OOV_ROWS)
+    n = {pid: float(oov.get(pid, 0)) for pid in part_ids}
+    return {pid: (m == 0, m, 0.0, f"vocab=[{lo},{hi})") for pid, m in n.items()}
+
+
 def evaluate(df: DataFrame, ctx: RuleContext) -> RuleResult:
     lo, hi = vocab_bounds(ctx.params)
     shared = shared_for(df, ctx)
-    oov_by_part = shared.counts_by_part(KIND_OOV_ROWS)
-
-    part_ids = (
-        sorted(int(x) for x in ctx.part_ids)
-        if ctx.part_ids is not None
-        else shared.part_ids()
+    verdicts = part_verdicts(
+        shared, ctx.params, parts_to_judge(ctx, shared.part_ids())
     )
-    detail = f"vocab=[{lo},{hi})"
-    verdicts = local_frame(
-        ctx.spark,
-        [
-            (
-                pid,
-                RULE_ID,
-                oov_by_part.get(pid, 0) == 0,
-                float(oov_by_part.get(pid, 0)),
-                0.0,
-                detail,
-            )
-            for pid in part_ids
-        ],
-        VERDICT_SCHEMA,
-    )
-
-    flagged = sorted(pid for pid, n in oov_by_part.items() if n > 0)
+    flagged = [pid for pid, v in verdicts.items() if not v[0]]
     if flagged:
         bad = F.filter(F.col("tokens"), _oov_pred(lo, hi))
         violations = (
-            df.filter(F.col("part_id").isin([int(x) for x in flagged]))
+            df.filter(F.col("part_id").isin(flagged))
             .filter(has_oov(lo, hi))
             .select(
                 F.col("part_id").cast("int"),
@@ -102,4 +84,4 @@ def evaluate(df: DataFrame, ctx: RuleContext) -> RuleResult:
         )
     else:
         violations = local_frame(ctx.spark, [], VIOLATION_SCHEMA)
-    return RuleResult(verdicts, violations)
+    return RuleResult(verdict_frame(ctx, RULE_ID, verdicts), violations)

@@ -19,14 +19,12 @@ shuffle, so:
    aggregation by (part_id, doc_id) with the count, ``min(source)`` and
    ``min(n_tok)``, kept where count > 1. The per-partition verdict counts
    come from one collect of it; the violation rows stay a lazy, uncached
-   plan over the same aggregation, so no call is ever served an earlier
-   call's answer.
+   plan over the same aggregation.
 
 The sketches UNION (``union_state``): the rows add and the union's sketch
 is the sketch of all rows, so the incremental store
-(``plans/incremental_stats.py``, one entry per partition beside its shared
-partials) screens its stored sketches unioned with an append's delta
-sketches through the same ``screen``, with no scan of the old rows.
+(``plans/incremental_stats.py``) gives ``part_verdicts`` its stored
+sketches unioned with an append's, with no scan of the old rows.
 
 The screen can miss duplicate rates below its resolution (~3*rsd); callers
 needing certainty set params ``{"uniqueness": {"always_exact": True}}`` which
@@ -62,7 +60,10 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.rules import VERDICT_SCHEMA, RuleContext, RuleResult, local_frame
+from ..plans.rules import (
+    VIOLATION_SCHEMA, RuleContext, RuleResult, Verdict, local_frame, parts_to_judge,
+    verdict_frame,
+)
 
 RULE_ID = "uniqueness"
 
@@ -160,18 +161,6 @@ def screen(
     return flagged
 
 
-def exact_path(scope: str):
-    """What depends on the scope: (exact-pass function, violation
-    ``detail`` column, verdict ``detail`` suffix)."""
-    if scope == "global":
-        detail = F.format_string(
-            "duplicate doc_id global_count=%d parts=%d", "global_count", "n_parts"
-        )
-        return global_duplicate_doc_ids, detail, " scope=global"
-    detail = F.format_string("duplicate doc_id count=%d", "dup_count")
-    return duplicate_doc_ids, detail, ""
-
-
 def duplicate_doc_ids(df: DataFrame) -> DataFrame:
     """Exact duplicates in ONE aggregation -> (part_id, doc_id, dup_count,
     source, n_tok). Grouping by the real ``doc_id`` is exact, so no
@@ -224,38 +213,57 @@ def global_duplicate_doc_ids(df: DataFrame) -> DataFrame:
     return per_part.join(global_counts, "doc_id")
 
 
-def evaluate(df: DataFrame, ctx: RuleContext) -> RuleResult:
-    p = {**DEFAULTS, **ctx.params.get(RULE_ID, {})}
-    lg_k = lg_config_k(p["rsd"])
-    part_ids = None if ctx.part_ids is None else sorted(int(x) for x in ctx.part_ids)
+def verdict(metric: float, detail: str) -> Verdict:
+    """A partition's verdict from its exact duplicate count (0 when the
+    screen cleared it): it passes at 0."""
+    return (metric == 0.0, metric, 0.0, detail)
 
-    if p["always_exact"]:
-        if part_ids is None:
-            part_ids = sorted(
-                int(r["part_id"])
-                for r in df.select(F.col("part_id").cast("int")).distinct().collect()
-            )
-        exact_parts = set(part_ids)
-    else:
-        state = sketch_state(df, lg_k)
-        if part_ids is None:
-            part_ids = sorted(state)
-        exact_parts = screen(ctx.spark, state, p["rsd"], p["scope"], part_ids)
-    # no pruning when every partition is exact: at global scope duplicates
-    # may straddle any pair
-    scoped = (
-        df
-        if exact_parts == set(part_ids)
-        else df.filter(F.col("part_id").isin(sorted(exact_parts)))
+
+def part_verdicts(
+    spark: SparkSession, state: dict[int, State], p: dict, read, part_ids,
+    known: dict[int, float] | None = None,
+) -> tuple[dict[int, Verdict], DataFrame]:
+    """Each partition's verdict under the resolved params ``p``. The screen
+    of ``state`` (every partition with ``always_exact``) picks the exact
+    partitions, the exact pass reads ``read(part_ids)``, and its
+    duplicate-key count is the metric. At partition scope that count
+    depends on the partition's files alone, so a partition in ``known``
+    (part_id -> count for the same files) is not read again; a global count
+    depends on every partition scanned with it. -> (verdicts, the duplicate
+    rows in ``VIOLATION_SCHEMA``: a lazy plan, not cached, so no later call
+    is served this call's answer)."""
+    exact = (
+        set(part_ids)
+        if p["always_exact"]
+        else screen(spark, state, p["rsd"], p["scope"], part_ids)
     )
-
-    exact_pass, detail, suffix = exact_path(p["scope"])
-    # not cached: a cached frame would serve a later call over changed files
-    # its old answer. The verdict collect below runs the aggregation once;
-    # the violations stay lazy (the runner persists them when a sink reads
-    # them)
-    dups = exact_pass(scoped)
-    violations = dups.select(
+    if p["scope"] == "global":
+        exact_pass, suffix, known = global_duplicate_doc_ids, " scope=global", None
+        detail = F.format_string(
+            "duplicate doc_id global_count=%d parts=%d", "global_count", "n_parts"
+        )
+    else:
+        exact_pass, suffix = duplicate_doc_ids, ""
+        detail = F.format_string("duplicate doc_id count=%d", "dup_count")
+    metric = {pid: float(n) for pid, n in (known or {}).items() if pid in exact}
+    need = sorted(exact - set(metric))
+    dups = exact_pass(read(need)) if need else None
+    if dups is not None:
+        # ONE collect of the per-partition duplicate-key counts
+        counts = dups.groupBy("part_id").agg(F.count(F.lit(1)).alias("n"))
+        metric.update((int(r["part_id"]), float(r["n"])) for r in counts.collect())
+    # provenance: 'path=screen' means the pass rests on the sketch screen
+    # alone (resolution ~3*rsd)
+    verdicts = {
+        pid: verdict(
+            metric.get(pid, 0.0),
+            ("path=exact" if pid in exact else "path=screen") + suffix,
+        )
+        for pid in part_ids
+    }
+    if dups is None:
+        return verdicts, local_frame(spark, [], VIOLATION_SCHEMA)
+    return verdicts, dups.select(
         F.col("part_id").cast("int"),
         F.lit(RULE_ID).alias("rule_id"),
         "doc_id",
@@ -264,29 +272,21 @@ def evaluate(df: DataFrame, ctx: RuleContext) -> RuleResult:
         detail.alias("detail"),
     )
 
-    # ONE collect of the per-partition duplicate-key counts (<= n_parts rows)
-    # -> the verdict table as a local relation. Provenance: 'path=exact'
-    # means the exact pass ran for the partition; 'path=screen' means the
-    # pass rests on the sketch screen alone (resolution ~3*rsd)
-    metrics = {
-        int(r["part_id"]): float(r["metric"])
-        for r in dups.groupBy("part_id")
-        .agg(F.count(F.lit(1)).cast("double").alias("metric"))
-        .collect()
-    }
-    verdicts = local_frame(
-        ctx.spark,
-        [
-            (
-                pid,
-                RULE_ID,
-                metrics.get(pid, 0.0) == 0.0,
-                metrics.get(pid, 0.0),
-                0.0,
-                ("path=exact" if pid in exact_parts else "path=screen") + suffix,
-            )
-            for pid in part_ids
-        ],
-        VERDICT_SCHEMA,
-    )
-    return RuleResult(verdicts, violations)
+
+def evaluate(df: DataFrame, ctx: RuleContext) -> RuleResult:
+    p = {**DEFAULTS, **ctx.params.get(RULE_ID, {})}
+    lg_k = lg_config_k(p["rsd"])
+    state = found = {} if p["always_exact"] else sketch_state(df, lg_k)
+    if p["always_exact"] and ctx.part_ids is None:
+        found = [r[0] for r in df.select("part_id").distinct().collect()]
+    part_ids = parts_to_judge(ctx, found)
+
+    def read(pids):
+        # no pruning when every partition is exact: at global scope
+        # duplicates may straddle any pair
+        if set(pids) == set(part_ids):
+            return df
+        return df.filter(F.col("part_id").isin(pids))
+
+    verdicts, violations = part_verdicts(ctx.spark, state, p, read, part_ids)
+    return RuleResult(verdict_frame(ctx, RULE_ID, verdicts), violations)

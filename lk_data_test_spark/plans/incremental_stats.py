@@ -26,34 +26,25 @@ ONE ``build_shared`` pass and ONE ``uniqueness.sketch_state`` pass read the
 files of every full partition and the added files of every delta partition.
 The store records exactly the listing those passes read, so a file that
 lands mid-run is read by the next run. The verdicts are the batch rules' own
-driver functions of the merged state — column_stats ``part_stats`` and
-``BAD_FIELDS``, token_bounds' kind-4 counts, referential ``unknown_by_part``,
-drift ``score_groups``, uniqueness ``screen`` — under the rule ``params`` of
+``part_verdicts`` of the merged state, under the rule ``params`` of
 ``ValidationRunner``, so a delta verdict equals a fresh batch evaluation of
 the grown table (asserted by tests). An input that changes while no file
 does (the allowed sources, the thresholds, the profiles' quantiles) reaches
 every partition without a scan. The stored state itself depends on the
 vocab bounds (kind 4), the reference token domain (kind 1) and the
 uniqueness screen's rsd, scope and always_exact; each entry records them
-(``inputs``), and an entry recorded for other inputs is full. Drift's
-per-partition metric is memoized under a (profiles, params) fingerprint, so
-an all-skip run re-scores nothing.
+(``inputs``), and an entry recorded for other inputs is full.
 
-Uniqueness screens the merged sketches (the rows are the kind-5 census), and
-the exact hash-group pass runs only for a partition the screen flags. A
-flagged partition falls back to the exact pass over the WHOLE partition —
-duplicates can straddle old and new files, so no delta-only exact check is
-sound; the screen's job is making that full pass rare. At partition scope a
-skip partition's stored exact count is reused, so a still-flagged partition
-keeps its exact verdict on every run, including skip runs — the manifest's
-failure-replay contract. At global scope the cross signal (sum of
-estimates minus the estimate of the union of every sketch) comes from the
-stored sketches with no scan: an append that duplicates ids living in an
-untouched (skip) partition flips the signal and runs the exact global pass
-over the whole table — the one case where a skip partition's verdict changes
-without its files changing, which is the point of the global scope. A run
-where every partition skips returns the stored verdicts with no uniqueness
-job.
+Two verdicts are memoized in the entries, so an all-skip run re-scores
+nothing and runs no uniqueness job: drift's per-partition metric, under a
+(profiles, params) fingerprint, and uniqueness' metric and detail. A
+flagged partition's exact pass reads the WHOLE partition — duplicates can
+straddle old and new files, so no delta-only exact check is sound — except
+that a skip partition's stored count is reused at partition scope. At
+global scope the cross signal comes from the stored sketches with no scan:
+an append that duplicates ids living in an untouched (skip) partition runs
+the exact global pass over the whole table, the one case where a skip
+partition's verdict changes without its files changing.
 
 Two inputs fail fast instead of giving a wrong store: hashed-domain profiles
 (their bucket folding is lossy, and stored partials would mix domains; the
@@ -73,17 +64,14 @@ import base64
 import os
 
 import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..operators import column_stats, drift, referential, uniqueness
+from ..operators import column_stats, drift, referential, token_bounds, uniqueness
 from ..sources.catalog import PartitionedTable
 from .manifest import digest, load_store, save_store
 from .rules import RuleContext
 from .shared import (
     KIND_NTOK,
-    KIND_OOV_ROWS,
     KIND_ROWS,
     KIND_TOKEN,
     PARTIAL_KEYS,
@@ -130,11 +118,6 @@ def classify_partitions(
     return delta, full, skip
 
 
-def _count_by_part(df) -> dict[int, int]:
-    rows = df.groupBy("part_id").agg(F.count(F.lit(1)).alias("n")).collect()
-    return {int(r["part_id"]): int(r["n"]) for r in rows}
-
-
 class IncrementalStatsValidator:
     """The store of per-partition merged state, and every data rule's
     verdict from it.
@@ -142,13 +125,12 @@ class IncrementalStatsValidator:
     ``params`` take ``ValidationRunner``'s shape: top-level ``vocab_lo`` /
     ``vocab_size`` and the ``column_stats``, ``drift`` and ``uniqueness``
     dicts, each over its rule's defaults. ``run(spark)`` reads the unseen
-    files, merges and stores their state, and returns the column_stats
-    report: {"parts": {part_id: {"mode", "passed", "metric", "stats"}},
-    "scanned_rows" (rows this run read), "modes"}. Every rule's report —
+    files, merges and stores their state, and leaves every rule's report —
     column_stats, token_bounds and uniqueness always, drift given
-    ``profiles``, referential given ``allowed`` — is left in ``reports``,
-    each {"parts": {part_id: {"mode", "passed", "metric", ...}}, "modes"};
-    uniqueness adds each partition's ``detail`` (path=screen|exact).
+    ``profiles``, referential given ``allowed`` — in ``reports``, each
+    {"parts": {part_id: {"mode", "passed", "metric", "detail"}}, "modes"};
+    column_stats' parts add their "stats", and it adds "scanned_rows" (rows
+    this run read). It returns the column_stats report.
     """
 
     def __init__(
@@ -242,7 +224,7 @@ class IncrementalStatsValidator:
             ctx = RuleContext(
                 spark=spark, reference_profiles=self.profiles, params=self.params
             )
-            new = build_shared(None, ctx, direct_files=files)
+            new = build_shared(None, ctx, direct_files=files, domain=domain)
             scanned_rows = sum(new.counts_by_part(KIND_ROWS).values())
             merged = merge_partials(
                 pa.concat_tables([merged, new.table().cast(_PARTIALS)])
@@ -261,132 +243,89 @@ class IncrementalStatsValidator:
                 "partials": partials,
             }
         shared = SharedTokenStats.collected(merged)
-        if by_part:
-            # with every partition skipped, every stored uniqueness verdict
-            # stands (at global scope too): no uniqueness job runs
+        if by_part:  # else every stored uniqueness verdict stands
             self._uniqueness(spark, shared, sketches, modes)
 
-        def report(metric: dict, passed, **extra) -> dict:
+        def report(verdicts: dict, stats=None) -> dict:
             parts = {
-                pid: {
-                    "mode": modes[pid],
-                    "metric": float(metric.get(pid, 0)),
-                    "passed": passed(float(metric.get(pid, 0))),
-                    **{k: v[pid] for k, v in extra.items()},
-                }
-                for pid in sorted(modes)
+                pid: {"mode": modes[pid], "passed": passed, "metric": metric,
+                      "detail": detail, **({"stats": stats[pid]} if stats else {})}
+                for pid, (passed, metric, _, detail) in sorted(verdicts.items())
             }
             return {"parts": parts, "modes": {p: r["mode"] for p, r in parts.items()}}
 
-        def stored_metric(key: str) -> dict:
-            return {pid: self.entries[str(pid)][key] for pid in modes}
-
-        cs = {**column_stats.DEFAULTS, **self.params.get("column_stats", {})}
-        stats = column_stats.part_stats(shared, cs["bucket_width"], modes)
-        bad = {
-            pid: sum(s[k] for k in column_stats.BAD_FIELDS)
-            for pid, s in stats.items()
-        }
+        part_ids = sorted(modes)
+        entries = [self.entries[str(pid)] for pid in part_ids]
         self.reports = {
             "column_stats": {
-                **report(bad, lambda m: m <= cs["max_null_rate"], stats=stats),
+                **report(*column_stats.part_verdicts(shared, self.params, part_ids)),
                 "scanned_rows": scanned_rows,
             },
             "token_bounds": report(
-                shared.counts_by_part(KIND_OOV_ROWS), lambda m: m == 0.0
+                token_bounds.part_verdicts(shared, self.params, part_ids)
             ),
-            "uniqueness": report(
-                stored_metric("uniqueness_metric"),
-                lambda m: m == 0.0,
-                detail=stored_metric("uniqueness_detail"),
-            ),
+            "uniqueness": report({
+                pid: uniqueness.verdict(e["uniqueness_metric"], e["uniqueness_detail"])
+                for pid, e in zip(part_ids, entries)
+            }),
         }
         if self.allowed is not None:
             self.reports["referential"] = report(
-                referential.unknown_by_part(shared, self.allowed),
-                lambda m: m == 0.0,
+                referential.part_verdicts(shared, self.allowed, part_ids)
             )
         rescored = []
         if self.profiles is not None:
-            rescored = self._drift(shared, prof_rows, modes)
-            self.reports["drift"] = report(
-                stored_metric("drift_metric"), lambda m: m <= 1.0
-            )
+            verdicts, rescored = self._drift(shared, prof_rows, modes)
+            self.reports["drift"] = report(verdicts)
         if by_part or rescored:
             save_store(self.store_path, self.entries, None)
         return self.reports["column_stats"]
 
     def _uniqueness(self, spark, shared: SharedTokenStats, sketches, modes) -> None:
-        """Screen every partition's merged sketch and store its uniqueness
-        metric and detail; the sketch of every read partition is stored.
+        """Store every partition's uniqueness metric and detail, and the
+        sketch of every read partition.
 
         A full partition's sketch is the one this run made; a delta or skip
         partition's is the stored sketch unioned with the delta's. The rows
-        are the merged kind-5 census."""
-        rsd, scope = self.uniq["rsd"], self.uniq["scope"]
-        stored = {
-            pid: [(0, base64.b64decode(self.entries[str(pid)]["sketch_b64"]))]
+        are the merged kind-5 census. A skip partition's stored count is
+        known, so a still-flagged partition's exact pass is not replayed on
+        every run."""
+        union = uniqueness.union_state(spark, {
+            pid: [(0, base64.b64decode(self.entries[str(pid)]["sketch_b64"])),
+                  *([(0, sketches[pid][1])] if pid in sketches else [])]
             for pid, mode in modes.items()
             if mode != "full"
-        }
-        for pid, (_, sk, _) in sketches.items():
-            if pid in stored:
-                stored[pid].append((0, sk))
-        sketch = {
-            pid: sketches.get(pid, (0, b"", 0.0))[1:]
-            for pid in modes
-            if pid not in stored
-        }
-        sketch.update(
-            (pid, s[1:]) for pid, s in uniqueness.union_state(spark, stored).items()
-        )
+        })
         rows = shared.counts_by_part(KIND_ROWS)
-        state = {pid: (rows.get(pid, 0), *sketch[pid]) for pid in modes}
-        exact = (
-            set(modes)
-            if self.uniq["always_exact"]
-            else uniqueness.screen(spark, state, rsd, scope, state)
+        state = {
+            pid: (rows.get(pid, 0), *union.get(pid, sketches.get(pid, (0, b"", 0.0)))[1:])
+            for pid in modes
+        }
+        verdicts, _ = uniqueness.part_verdicts(
+            spark, state, self.uniq,
+            lambda pids: self._read(spark, self._files(pids)),
+            sorted(modes),
+            known={
+                pid: self.entries[str(pid)]["uniqueness_metric"]
+                for pid, mode in modes.items()
+                if mode == "skip"
+            },
         )
-        exact_pass, _, suffix = uniqueness.exact_path(scope)
-        # Partition-scope exact results are pure functions of the partition's
-        # file set: a SKIP partition's stored exact dup count cannot have
-        # changed, so it is reused instead of re-scanning — at 10^12 rows,
-        # replaying the exact pass over every flagged-but-unchanged partition
-        # on every run is the difference between an O(delta) rerun and an
-        # O(all flagged data) one. (Global scope cannot memoize per
-        # partition: its exact counts depend on the SET of partitions
-        # scanned together.)
-        dups = {}
-        if scope != "global":
-            dups = {
-                pid: float(self.entries[str(pid)]["uniqueness_metric"])
-                for pid in exact
-                if modes[pid] == "skip"
-            }
-        need_exact = sorted(set(exact) - set(dups))
-        if need_exact:
-            dups.update(
-                _count_by_part(exact_pass(self._read(spark, self._files(need_exact))))
-            )
         for pid, mode in modes.items():
             e = self.entries[str(pid)]
             if mode != "skip":
                 e["sketch_b64"] = base64.b64encode(state[pid][1]).decode()
             # the memo: exact counts (and screen zeros) ride the store
-            e["uniqueness_metric"] = float(dups.get(pid, 0) if pid in exact else 0)
-            e["uniqueness_detail"] = (
-                "path=exact" if pid in exact else "path=screen"
-            ) + suffix
+            _, e["uniqueness_metric"], _, e["uniqueness_detail"] = verdicts[pid]
 
-    def _drift(self, shared: SharedTokenStats, prof_rows, modes) -> list[int]:
-        """Store every partition's drift metric (max score over its (part,
-        source) groups, 0 with none) in its entry; -> the re-scored parts.
+    def _drift(self, shared: SharedTokenStats, prof_rows, modes):
+        """Every partition's drift verdict, the metric of each re-scored
+        partition stored in its entry -> (verdicts, the re-scored parts).
 
         The metric is a pure function of (partials, profiles, params): a
-        skip partition whose stored fingerprint matches keeps its metric,
-        since re-scoring every skip partition on every run is O(n_parts x
-        sources x histogram domain) of driver Python. A profile or threshold
-        change re-scores from the stored partials, with no scan."""
+        skip partition whose stored fingerprint matches keeps its metric. A
+        profile or threshold change re-scores from the stored partials, with
+        no scan."""
         fp = digest(
             [
                 sorted(
@@ -400,23 +339,20 @@ class IncrementalStatsValidator:
                 self.drift,
             ]
         )
-        todo = [
-            pid
+        known = {
+            pid: self.entries[str(pid)]["drift_metric"]
             for pid, mode in modes.items()
-            if mode != "skip" or self.entries[str(pid)].get("drift_fp") != fp
-        ]
-        if todo:
-            quantiles, token_freq = drift.profile_maps(prof_rows)
-            t = shared.rows(KIND_NTOK, KIND_TOKEN)
-            t = t.filter(pc.is_in(t["part_id"], value_set=pa.array(todo, pa.int32())))
-            metric = dict.fromkeys(todo, 0.0)
-            for pid, *_, score in drift.score_groups(
-                t, quantiles, token_freq, self.drift
-            ):
-                metric[pid] = max(metric[pid], score)
-            for pid in todo:
-                self.entries[str(pid)].update(drift_metric=metric[pid], drift_fp=fp)
-        return todo
+            if mode == "skip" and self.entries[str(pid)].get("drift_fp") == fp
+        }
+        quantiles, token_freq = drift.profile_maps(prof_rows)
+        verdicts, _ = drift.part_verdicts(
+            shared.rows(KIND_NTOK, KIND_TOKEN), quantiles, token_freq,
+            self.drift, sorted(modes), known,
+        )
+        rescored = [pid for pid in modes if pid not in known]
+        for pid in rescored:
+            self.entries[str(pid)].update(drift_metric=verdicts[pid][1], drift_fp=fp)
+        return verdicts, rescored
 
 
 def run_incremental_suite(
@@ -427,16 +363,9 @@ def run_incremental_suite(
     allowed=None,
     params: dict | None = None,
 ) -> dict[str, dict]:
-    """The incremental data-rule suite over the one store
-    ``incremental_stats.json`` in ``manifest_dir``, under ``params`` in
-    ``ValidationRunner``'s shape. The unseen files' ``tokens`` are decoded
-    once, by the one shared pass.
-
-    Returns {"column_stats": ..., "token_bounds": ..., "drift": ...,
-    "referential": ..., "uniqueness": ...}, each {"parts", "modes"} (plus
-    column_stats' "scanned_rows"); drift/referential are absent when their
-    dimension input is None.
-    """
+    """The ``IncrementalStatsValidator.reports`` of one run over the one
+    store ``incremental_stats.json`` in ``manifest_dir``, under ``params``
+    in ``ValidationRunner``'s shape."""
     v = IncrementalStatsValidator(
         table,
         os.path.join(manifest_dir, "incremental_stats.json"),

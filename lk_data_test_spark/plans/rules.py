@@ -13,6 +13,12 @@ verdicts:    (part_id, rule_id, passed, metric, threshold, detail)  one row per
              lower-resolution screen is auditable downstream
 violations:  (part_id, rule_id, doc_id, source, n_tok, detail) zero+ rows
 
+Each data rule's verdicts come from ONE driver function of the run's merged
+state, its ``part_verdicts`` -> {part_id: (passed, metric, threshold,
+detail)}: the rule's ``evaluate`` calls it on the state of its own scan (the
+suite's shared pass, or one ``shared_for`` builds when the rule runs alone)
+and ``IncrementalStatsValidator`` on the stored state merged with a delta's.
+
 Violation rows are canonically ordered (orderBy part_id, rule_id, doc_id,
 detail) before being persisted so fixtures compare byte-identically — the
 analog of the reference's sorted globs (make_texts.py:230) and sorted counters
@@ -96,6 +102,28 @@ def local_frame(
     import pandas as pd
 
     return spark.createDataFrame(pd.DataFrame(rows, columns=schema.names), schema)
+
+
+# one partition's verdict: (passed, metric, threshold, detail)
+Verdict = tuple[bool, float, float, "str | None"]
+
+
+def parts_to_judge(ctx: RuleContext, found) -> list[int]:
+    """The partitions a rule gives verdicts for: ``ctx.part_ids`` when
+    known, else ``found`` (the partitions its state holds)."""
+    return sorted(int(p) for p in (ctx.part_ids if ctx.part_ids is not None else found))
+
+
+def verdict_frame(
+    ctx: RuleContext, rule_id: str, verdicts: dict[int, Verdict]
+) -> DataFrame:
+    """A rule's per-partition verdicts as ``VERDICT_SCHEMA`` rows, in
+    part_id order."""
+    return local_frame(
+        ctx.spark,
+        [(pid, rule_id, *v) for pid, v in sorted(verdicts.items())],
+        VERDICT_SCHEMA,
+    )
 
 
 def part_skeleton(df: DataFrame, ctx: RuleContext) -> DataFrame:

@@ -118,7 +118,7 @@ class SharedTokenStats:
     files (``df`` may then be None: the active session runs it);
     ``collected`` wraps partials that are already on the driver."""
 
-    def __init__(self, df: DataFrame | None, lo: int, hi: int, contiguous: bool,
+    def __init__(self, df: DataFrame | None, lo: int, hi: int,
                  ref_tokens: list[int] | None = None,
                  hash_mod: int | None = None,
                  vocab_lo: int | None = None,
@@ -127,7 +127,6 @@ class SharedTokenStats:
                  table=None):
         self.lo = int(lo)
         self.hi = int(hi)
-        self.contiguous = bool(contiguous)
         self.ref_tokens = ref_tokens
         self.hash_mod = hash_mod
         self.vocab_lo = vocab_lo
@@ -172,24 +171,26 @@ class SharedTokenStats:
             .limit(max_ref_tokens + 1)
             .collect()
         )
+        kw = dict(vocab_lo=vocab_lo, vocab_hi=vocab_hi, direct_files=direct_files)
         if len(keys) > max_ref_tokens:
-            return cls(df, 0, hash_buckets - 1, True, None,
-                       hash_mod=hash_buckets,
-                       vocab_lo=vocab_lo, vocab_hi=vocab_hi,
-                       direct_files=direct_files)
-        ref_tokens = sorted(r["t"] for r in keys)
-        lo, hi = ref_tokens[0], ref_tokens[-1]
-        contiguous = ref_tokens == list(range(lo, hi + 1))
-        return cls(df, lo, hi, contiguous, None if contiguous else ref_tokens,
-                   vocab_lo=vocab_lo, vocab_hi=vocab_hi,
-                   direct_files=direct_files)
+            return cls(df, 0, hash_buckets - 1, hash_mod=hash_buckets, **kw)
+        return cls.from_domain(df, sorted(r["t"] for r in keys), **kw)
+
+    @classmethod
+    def from_domain(cls, df: DataFrame | None, ref_tokens: list[int], **kw):
+        """The pass over a sorted reference token domain already in hand
+        (empty: no kind-1 rows); ``kw`` as for ``from_profiles``. A domain
+        with gaps keeps its token list for the kernel's membership test."""
+        lo, hi = (ref_tokens[0], ref_tokens[-1]) if ref_tokens else (0, -1)
+        gaps = ref_tokens != list(range(lo, hi + 1))
+        return cls(df, lo, hi, ref_tokens if gaps else None, **kw)
 
     @classmethod
     def collected(cls, table) -> "SharedTokenStats":
         """Partials already on the driver (a pyarrow Table of the
         ``PARTIAL_SCHEMA`` columns, e.g. stored partials merged with a new
         pass's): the readers below, with no Spark plan behind them."""
-        return cls(None, 0, -1, True, table=table)
+        return cls(None, 0, -1, table=table)
 
     @property
     def partials(self) -> DataFrame:
@@ -245,17 +246,20 @@ class SharedTokenStats:
         return sorted(self.counts_by_part(KIND_ROWS))
 
 
-def build_shared(df: DataFrame, ctx, direct_files=None) -> SharedTokenStats:
+def build_shared(df: DataFrame, ctx, direct_files=None, domain=None) -> SharedTokenStats:
     """The shared pass a ``RuleContext`` asks for: token_bounds' vocab
     bounds from ``ctx.params`` (kind 4), drift's domain caps
     (``max_ref_tokens``, ``hash_buckets``) from ``ctx.params["drift"]`` and
     the reference domain from ``ctx.reference_profiles`` — with no profiles,
-    an empty domain and so no kind-1 rows. With ``direct_files`` the pass
-    reads just those (part_id, path) files and ``df`` may be None."""
+    an empty domain and so no kind-1 rows. A caller that already holds the
+    profiles' sorted token ``domain`` (within the cap) passes it, and no
+    domain probe runs. With ``direct_files`` the pass reads just those
+    (part_id, path) files and ``df`` may be None."""
     lo, hi = vocab_bounds(ctx.params)
-    if ctx.reference_profiles is None:
-        return SharedTokenStats(df, 0, -1, True, vocab_lo=lo, vocab_hi=hi,
-                                direct_files=direct_files)
+    if ctx.reference_profiles is None or domain is not None:
+        return SharedTokenStats.from_domain(
+            df, domain or [], vocab_lo=lo, vocab_hi=hi, direct_files=direct_files
+        )
     d = ctx.params.get("drift") or {}
     return SharedTokenStats.from_profiles(
         df,

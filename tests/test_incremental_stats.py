@@ -638,6 +638,31 @@ def test_fused_token_bounds_range_with_vocab_lo(spark, tmp_path):
     assert b2[0][1] == b1[0][1] + 2.0
 
 
+# measured on ``corpus_dir`` (10 x 1,200 rows, profiles and allowed
+# sources). The validator builds the shared pass from the token domain of
+# the profiles it collected, so the two jobs of the domain probe in
+# ``SharedTokenStats.from_profiles`` do not run (12 jobs when they did)
+FIRST_SIGHT_JOBS = 10
+
+
+def test_first_sight_incremental_suite_job_count(spark, corpus_dir, tmp_path):
+    """A first-sight run_incremental_suite launches at most
+    FIRST_SIGHT_JOBS Spark jobs."""
+    from lk_data_test_spark.plans.incremental_stats import run_incremental_suite
+
+    table = PartitionedTable(f"{corpus_dir}/sequences")
+    profiles = spark.read.parquet(f"{corpus_dir}/reference_profiles")
+    allowed = spark.read.parquet(f"{corpus_dir}/allowed_sources")
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    out = run_incremental_suite(
+        spark, table, str(tmp_path / "stores"), profiles=profiles, allowed=allowed
+    )
+    jobs = set(tracker.getJobIdsForGroup(None)) - before
+    assert all(m == "full" for m in out["drift"]["modes"].values())
+    assert len(jobs) <= FIRST_SIGHT_JOBS, sorted(jobs)
+
+
 def test_incremental_store_format(spark, tmp_path):
     """The on-disk format of the incremental store: one file, one per-entry
     key set after run_incremental_suite, so a refactor cannot silently

@@ -744,8 +744,7 @@ def test_shared_scan_noncontiguous_vocab(spark):
         rows, "doc_id string, tokens array<int>, n_tok int, source string,"
         " part_id int"
     )
-    stats = SharedTokenStats(df, lo=5, hi=12, contiguous=False,
-                             ref_tokens=[5, 9, 12])
+    stats = SharedTokenStats(df, lo=5, hi=12, ref_tokens=[5, 9, 12])
     got = {
         (r["part_id"], r["source"], r["key"]): r["cnt"]
         for r in stats.partials.filter(F.col("kind") == KIND_TOKEN).collect()

@@ -336,3 +336,22 @@ def test_warm_forced_run_job_count(spark, corpus_dir, tmp_path):
     r.run(force=True)
     jobs = set(tracker.getJobIdsForGroup(None)) - before
     assert len(jobs) <= WARM_RUN_JOBS, sorted(jobs)
+
+
+# measured on ``corpus_dir`` (10 x 1,200 rows): 11 jobs as above plus the
+# sink writes; the uniqueness exact aggregation runs twice, once for the
+# verdict counts and once for the sink (ROADMAP "Known defects")
+SINK_RUN_JOBS = 23
+
+
+def test_warm_forced_sink_run_job_count(spark, corpus_dir, tmp_path):
+    """A second forced run with a violations sink launches at most
+    SINK_RUN_JOBS Spark jobs."""
+    r = _bare_runner(spark, corpus_dir, tmp_path)
+    r.output_dir = str(tmp_path / "out")
+    r.run(force=True)
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    r.run(force=True)
+    jobs = set(tracker.getJobIdsForGroup(None)) - before
+    assert len(jobs) <= SINK_RUN_JOBS, sorted(jobs)
