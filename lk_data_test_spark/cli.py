@@ -26,6 +26,17 @@ if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
 
+def dimension(spark, path: str, optional: bool = False):
+    """The table at ``path`` through ``read_parquet``: a second read of the
+    unchanged directory runs no Spark job (its schema memo). A missing
+    ``optional`` table is None; a missing required one fails in Spark."""
+    from lk_data_test_spark.sources.catalog import read_parquet
+
+    if optional and not os.path.exists(path):
+        return None
+    return read_parquet(spark, path)
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--data-dir", default=None)
@@ -173,6 +184,8 @@ def main(argv: list[str] | None = None) -> int:
 
     cfg = GenConfig(n_parts=args.parts, rows_per_part=args.rows_per_part)
     seq_path = os.path.join(args.data_dir, "sequences")
+    allowed_path = os.path.join(args.data_dir, "allowed_sources")
+    profiles_path = os.path.join(args.data_dir, "reference_profiles")
     if (args.generate or args.generate_only) and not os.path.exists(seq_path):
         t0 = time.time()
         generate(spark, args.data_dir, cfg)
@@ -196,7 +209,7 @@ def main(argv: list[str] | None = None) -> int:
         t0 = time.time()
         prof = build_reference_profiles(src)
         prof.coalesce(1).write.mode("overwrite").parquet(args.build_profiles)
-        n = spark.read.parquet(args.build_profiles).count()
+        n = dimension(spark, args.build_profiles).count()
         print(
             json.dumps(
                 {
@@ -214,17 +227,13 @@ def main(argv: list[str] | None = None) -> int:
             run_incremental_suite,
         )
 
-        def dimension(name: str):
-            path = os.path.join(args.data_dir, name)
-            return spark.read.parquet(path) if os.path.exists(path) else None
-
         t0 = time.time()
         suite = run_incremental_suite(
             spark,
             PartitionedTable(seq_path),
             os.path.join(args.data_dir, "_manifest"),
-            profiles=dimension("reference_profiles"),
-            allowed=dimension("allowed_sources"),
+            profiles=dimension(spark, profiles_path, optional=True),
+            allowed=dimension(spark, allowed_path, optional=True),
             params=params,
         )
 
@@ -253,12 +262,8 @@ def main(argv: list[str] | None = None) -> int:
         runner = ValidationRunner(
             spark,
             PartitionedTable(seq_path),
-            allowed_sources=spark.read.parquet(
-                os.path.join(args.data_dir, "allowed_sources")
-            ),
-            reference_profiles=spark.read.parquet(
-                os.path.join(args.data_dir, "reference_profiles")
-            ),
+            allowed_sources=dimension(spark, allowed_path),
+            reference_profiles=dimension(spark, profiles_path),
         )
         rep = runner.anomaly_report(k=args.anomaly_k)
         rows = [r.asDict() for r in rep.filter("anomalous").collect()]
@@ -301,12 +306,8 @@ def main(argv: list[str] | None = None) -> int:
     runner = ValidationRunner(
         spark,
         PartitionedTable(seq_path, tolerate_corrupt=args.ignore_corrupt_files),
-        allowed_sources=spark.read.parquet(
-            os.path.join(args.data_dir, "allowed_sources")
-        ),
-        reference_profiles=spark.read.parquet(
-            os.path.join(args.data_dir, "reference_profiles")
-        ),
+        allowed_sources=dimension(spark, allowed_path),
+        reference_profiles=dimension(spark, profiles_path),
         rules=rules,
         output_dir=os.path.join(args.data_dir, "validation_out"),
         params=params,

@@ -29,7 +29,8 @@ Plan shape::
       -> groupBy(part_id, source, kind, key).sum          [shuffle, partial agg]
       -> toArrow: ONE driver collect, shared by the suite's rules
       -> driver: KS + L1 per (part_id, source)            [score_groups: one
-         pyarrow sort, one numpy slice per group]
+         pyarrow sort, one numpy slice per group, against the profiles'
+         quantiles and frequencies of the run's one Dimensions read]
       -> verdicts (local rows, ``part_verdicts``) / violations (local
          relation, rows = parts x sources; Spark's format_string writes the
          detail)
@@ -51,8 +52,8 @@ from ..plans.rules import (
     RuleContext, RuleResult, Verdict, local_frame, parts_to_judge, verdict_frame,
 )
 from ..plans.shared import (
-    DEFAULT_HASH_BUCKETS, DEFAULT_MAX_REF_TOKENS, HASH_MULT, KIND_NTOK, KIND_TOKEN,
-    shared_for,
+    DEFAULT_HASH_BUCKETS, DEFAULT_MAX_REF_TOKENS, KIND_NTOK, KIND_TOKEN,
+    dimensions_for, shared_for,
 )
 
 RULE_ID = "drift"
@@ -95,46 +96,6 @@ def resolve_params(params: dict | None) -> dict:
             "exact, so drop the 'method' param (or set it to 'hist')"
         )
     return p
-
-
-def profile_maps(prof_rows) -> tuple[dict, dict]:
-    """source -> 99 n_tok quantiles and source -> {token: expected frequency}
-    from the collected reference-profile rows."""
-    quantiles = {
-        r["source"]: np.asarray(r["n_tok_quantiles"], dtype=np.float64)
-        for r in prof_rows
-    }
-    token_freq = {r["source"]: dict(r["token_freq"]) for r in prof_rows}
-    return quantiles, token_freq
-
-
-def load_profiles(profiles: DataFrame, hash_mod: int | None) -> tuple[dict, dict]:
-    """``profile_maps`` of the profiles, with the token frequencies folded
-    into ``hash_mod`` buckets when the shared pass counted hashed buckets."""
-    if not hash_mod:
-        # sane profile: ONE collect of the tiny dimension serves both maps
-        return profile_maps(profiles.collect())
-    quantiles = {
-        r["source"]: np.asarray(r["n_tok_quantiles"], dtype=np.float64)
-        for r in profiles.select("source", "n_tok_quantiles").collect()
-    }
-    # Pathological profile (token domain over the cap): the corpus side
-    # counted hashed buckets, so fold the profile into the SAME bucket
-    # domain SPARK-SIDE — the driver only ever sees <= sources x hash_mod
-    # aggregated rows, never the raw token map.
-    bucket = F.pmod(
-        F.pmod(F.col("t").cast("bigint") * F.lit(HASH_MULT), F.lit(1 << 32)),
-        F.lit(int(hash_mod)),
-    )
-    token_freq: dict[str, dict[int, float]] = {}
-    for r in (
-        profiles.select("source", F.explode("token_freq").alias("t", "freq"))
-        .groupBy("source", bucket.cast("int").alias("b"))
-        .agg(F.sum("freq").alias("freq"))
-        .collect()
-    ):
-        token_freq.setdefault(r["source"], {})[int(r["b"])] = float(r["freq"])
-    return quantiles, token_freq
 
 
 def score_groups(rows, quantiles: dict, token_freq: dict, p: dict) -> list[tuple]:
@@ -191,23 +152,23 @@ def score_groups(rows, quantiles: dict, token_freq: dict, p: dict) -> list[tuple
 
 
 def part_verdicts(
-    rows, quantiles: dict, token_freq: dict, p: dict, part_ids,
-    known: dict[int, float] | None = None, hash_mod: int | None = None,
+    rows, dims, p: dict, part_ids, known: dict[int, float] | None = None
 ) -> tuple[dict[int, Verdict], list[tuple]]:
-    """Each partition's verdict from the kind-0/1 partials ``rows``: the
-    metric is the max score of its scored groups (0 with none), and it
-    passes at <= 1.0. A partition in ``known`` (part_id -> metric scored
-    from the same partials, profiles and params) is not scored again.
-    ``hash_mod`` names a hashed token domain in the detail. -> (verdicts,
-    the scored groups)."""
-    detail = "method=hist" + (f";domain=hashed:{hash_mod}" if hash_mod else "")
+    """Each partition's verdict from the kind-0/1 partials ``rows``, scored
+    against the profiles of ``dims`` (plans/shared.py ``Dimensions``; a
+    hashed domain is named in the detail): the metric is the max score of
+    its scored groups (0 with none), and it passes at <= 1.0. A partition in
+    ``known`` (part_id -> metric scored from the same partials, profiles and
+    params) is not scored again. -> (verdicts, the scored groups)."""
+    hashed = f";domain=hashed:{dims.hash_mod}" if dims.hash_mod else ""
+    detail = "method=hist" + hashed
     known = known or {}
     todo = [pid for pid in part_ids if pid not in known]
     scored = []
     if todo:
         if known:
             rows = rows.filter(pc.is_in(rows["part_id"], pa.array(todo, pa.int32())))
-        scored = score_groups(rows, quantiles, token_freq, p)
+        scored = score_groups(rows, dims.quantiles, dims.token_freq, p)
     metric = dict(known)
     for pid, *_, score in scored:
         metric[pid] = max(metric.get(pid, score), score)
@@ -217,20 +178,18 @@ def part_verdicts(
 
 def evaluate(df: DataFrame, ctx: RuleContext) -> RuleResult:
     p = resolve_params(ctx.params.get(RULE_ID))
-    profiles = ctx.reference_profiles
-    if profiles is None:
+    if ctx.reference_profiles is None:
         raise ValueError("drift rule requires ctx.reference_profiles")
 
     # ---- stage 1: tagged partials — the suite's shared pass (ONE scan of
     # `tokens` for the whole suite), or one built from ctx when run alone
     shared = shared_for(df, ctx)
-    quantiles, token_freq = load_profiles(profiles, shared.hash_mod)
 
     # ---- stage 2, on the driver: KS + L1 per (part_id, source) over the
     # shared collect (<= parts x sources groups of bounded size)
     verdicts, scored = part_verdicts(
-        shared.rows(KIND_NTOK, KIND_TOKEN), quantiles, token_freq, p,
-        parts_to_judge(ctx, shared.part_ids()), hash_mod=shared.hash_mod,
+        shared.rows(KIND_NTOK, KIND_TOKEN), dimensions_for(ctx), p,
+        parts_to_judge(ctx, shared.part_ids()),
     )
 
     # the scores as a local relation: Spark's format_string builds the

@@ -47,8 +47,9 @@ the exact global pass over the whole table, the one case where a skip
 partition's verdict changes without its files changing.
 
 Two inputs fail fast instead of giving a wrong store: hashed-domain profiles
-(their bucket folding is lossy, and stored partials would mix domains; the
-batch drift rule handles them) and ``PartitionedTable(tolerate_corrupt=True)``
+(as the run's one dimension read, ``read_dimensions``, marks them; bucket
+folding is lossy, and stored partials would mix domains; the batch drift
+rule handles them) and ``PartitionedTable(tolerate_corrupt=True)``
 (the direct feed has no ``ignoreCorruptFiles``, and a skipped file must not
 be recorded as validated; ValidationRunner reads such tables).
 
@@ -77,6 +78,7 @@ from .shared import (
     PARTIAL_KEYS,
     SharedTokenStats,
     build_shared,
+    dimensions_for,
     merge_partials,
     vocab_bounds,
 )
@@ -178,9 +180,9 @@ class IncrementalStatsValidator:
         )
 
     def run(self, spark: SparkSession) -> dict:
-        prof_rows = self.profiles.collect() if self.profiles is not None else []
-        domain = sorted({int(t) for r in prof_rows for t in r["token_freq"]})
-        if len(domain) > int(self.drift["max_ref_tokens"]):
+        ctx = RuleContext(spark, self.allowed, self.profiles, params=self.params)
+        dims = dimensions_for(ctx)  # the one read of the dimension tables
+        if dims.hash_mod:
             raise ValueError(
                 "hashed-domain profiles are not supported incrementally; "
                 "run the batch drift rule"
@@ -191,7 +193,7 @@ class IncrementalStatsValidator:
         }
         inputs = {
             "vocab": list(vocab_bounds(self.params)),
-            "domain": digest(domain),
+            "domain": digest(dims.domain),
             **{k: self.uniq[k] for k in uniqueness.DEFAULTS},
         }
         delta, full, skip = classify_partitions(
@@ -221,10 +223,7 @@ class IncrementalStatsValidator:
         scanned_rows = 0
         sketches: dict[int, uniqueness.State] = {}
         if files:
-            ctx = RuleContext(
-                spark=spark, reference_profiles=self.profiles, params=self.params
-            )
-            new = build_shared(None, ctx, direct_files=files, domain=domain)
+            new = build_shared(None, ctx, direct_files=files)
             scanned_rows = sum(new.counts_by_part(KIND_ROWS).values())
             merged = merge_partials(
                 pa.concat_tables([merged, new.table().cast(_PARTIALS)])
@@ -271,11 +270,11 @@ class IncrementalStatsValidator:
         }
         if self.allowed is not None:
             self.reports["referential"] = report(
-                referential.part_verdicts(shared, self.allowed, part_ids)
+                referential.part_verdicts(shared, dims.active, part_ids)
             )
         rescored = []
         if self.profiles is not None:
-            verdicts, rescored = self._drift(shared, prof_rows, modes)
+            verdicts, rescored = self._drift(shared, dims, modes)
             self.reports["drift"] = report(verdicts)
         if by_part or rescored:
             save_store(self.store_path, self.entries, None)
@@ -318,7 +317,7 @@ class IncrementalStatsValidator:
             # the memo: exact counts (and screen zeros) ride the store
             _, e["uniqueness_metric"], _, e["uniqueness_detail"] = verdicts[pid]
 
-    def _drift(self, shared: SharedTokenStats, prof_rows, modes):
+    def _drift(self, shared: SharedTokenStats, dims, modes):
         """Every partition's drift verdict, the metric of each re-scored
         partition stored in its entry -> (verdicts, the re-scored parts).
 
@@ -326,28 +325,21 @@ class IncrementalStatsValidator:
         skip partition whose stored fingerprint matches keeps its metric. A
         profile or threshold change re-scores from the stored partials, with
         no scan."""
-        fp = digest(
-            [
-                sorted(
-                    (
-                        r["source"],
-                        [float(q) for q in r["n_tok_quantiles"]],
-                        sorted((int(k), float(v)) for k, v in r["token_freq"].items()),
-                    )
-                    for r in prof_rows
-                ),
-                self.drift,
-            ]
-        )
+        fp = digest([
+            sorted(
+                (s, [float(q) for q in qs],
+                 sorted((int(k), float(v)) for k, v in dims.token_freq[s].items()))
+                for s, qs in dims.quantiles.items()
+            ),
+            self.drift,
+        ])
         known = {
             pid: self.entries[str(pid)]["drift_metric"]
             for pid, mode in modes.items()
             if mode == "skip" and self.entries[str(pid)].get("drift_fp") == fp
         }
-        quantiles, token_freq = drift.profile_maps(prof_rows)
         verdicts, _ = drift.part_verdicts(
-            shared.rows(KIND_NTOK, KIND_TOKEN), quantiles, token_freq,
-            self.drift, sorted(modes), known,
+            shared.rows(KIND_NTOK, KIND_TOKEN), dims, self.drift, sorted(modes), known
         )
         rescored = [pid for pid in modes if pid not in known]
         for pid in rescored:

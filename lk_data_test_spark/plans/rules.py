@@ -76,8 +76,12 @@ class RuleContext:
     # token_bounds, referential and drift take their verdicts from ONE
     # driver-side collect of its partials. The runner builds it once per run
     # with ``build_shared``; a rule given none, or one built for other vocab
-    # bounds than ``params`` names, builds its own from this context
+    # bounds or another token domain than this context names, builds its own
     shared: object | None = None
+    # the dimension tables as read once (plans/shared.py Dimensions): the
+    # runner fills it before the shared pass; ``dimensions_for`` reads it
+    # from this context when it is None
+    dimensions: object | None = None
 
 
 @dataclass(frozen=True)
@@ -85,7 +89,6 @@ class Rule:
     rule_id: str
     version: str
     evaluate: Callable[[DataFrame, RuleContext], RuleResult]
-    params: dict = field(default_factory=dict)
 
 
 def local_frame(

@@ -3,21 +3,26 @@
 NOT a per-partition loop. The pending partitions (selected by the checkpoint
 manifest and pushed into the scan as a partition-pruning filter) are listed
 ONCE; that listing feeds the shared token pass (plans/shared.py) and is what
-the manifest records. Four rules (column_stats, token_bounds, referential,
-drift) take their verdicts from one driver-side collect of the shared
-partials; schema and uniqueness run their own plans grouped by ``part_id``.
-All rules are submitted at once: a rule waiting for the shared collect waits
-on a driver lock and holds no task slot. ``rows_validated`` is the shared
-row census total.
+the manifest records. The dimension tables are read ONCE too, before the
+shared pass, into the context's ``Dimensions``. Four rules (column_stats,
+token_bounds, referential, drift) take their verdicts from one driver-side
+collect of the shared partials; schema and uniqueness run their own plans
+grouped by ``part_id``. All rules are submitted at once: a rule waiting for
+the shared collect waits on a driver lock and holds no task slot.
+``rows_validated`` is the shared row census total.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
+import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.catalog import PartitionedTable
@@ -30,7 +35,7 @@ from .rules import (
     default_rules,
     local_frame,
 )
-from .shared import KIND_ROWS, build_shared
+from .shared import KIND_ROWS, build_shared, dimensions_for
 
 
 @dataclass
@@ -101,6 +106,7 @@ class ValidationRunner:
             part_ids=pending,
             params=self.params,
         )
+        dimensions_for(ctx)  # the run's one read of the dimension tables
         ctx.shared = shared = build_shared(df, ctx, direct_files=direct_files)
 
         # Rules are independent plans: evaluate them CONCURRENTLY (one driver
@@ -117,12 +123,6 @@ class ValidationRunner:
         # collect of its exact pass's counts — once by the sink) runs ONCE;
         # without one nothing in the run reads them again, so they stay
         # lazy and no rule keeps a frame from one run to the next.
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark import StorageLevel
-
-        import time as _time
-
         rule_secs: dict[str, float] = {}
 
         # At 10^12 rows a catastrophically broken partition can turn a
@@ -134,12 +134,10 @@ class ValidationRunner:
         viol_cap = self.params.get("max_violations_per_part")
 
         def eval_rule(rule: Rule):
-            t0 = _time.time()
+            t0 = time.time()
             res = rule.evaluate(df, ctx)
             v = res.violations
             if viol_cap:
-                from pyspark.sql import Window
-
                 # full-row order (canonical sink order + n_tok tie-break) so
                 # the kept prefix is unique even among rows that tie on the
                 # canonical sort keys
@@ -155,7 +153,7 @@ class ValidationRunner:
             rows = [r.asDict() for r in res.verdicts.collect()]
             # wall time to a materialized verdict (rules run concurrently,
             # so these overlap — they are per-rule latencies, not a sum)
-            rule_secs[rule.rule_id] = round(_time.time() - t0, 3)
+            rule_secs[rule.rule_id] = round(time.time() - t0, 3)
             return rows, viol
 
         with ThreadPoolExecutor(max_workers=max(1, len(self.rules))) as ex:
@@ -206,8 +204,6 @@ class ValidationRunner:
             # S5/S6 analogs: verdict table + JSON metrics manifest alongside
             # the violations sink (reference: rdf/*.json report files,
             # check_fackel_references.py:36-37,59-60)
-            import json as _json
-
             # partitioned by part_id with DYNAMIC overwrite (same contract as
             # the violations sink): a resume run rewrites only the re-run
             # partitions' verdict rows and preserves the rest — a flat
@@ -244,7 +240,7 @@ class ValidationRunner:
             if os.path.exists(metrics_path):
                 try:
                     with open(metrics_path) as f:
-                        prev = _json.load(f)
+                        prev = json.load(f)
                 except (OSError, ValueError):
                     prev = {}
             ran_now = sorted(int(p) for p in pending)
@@ -262,7 +258,7 @@ class ValidationRunner:
                 "rules": {r.rule_id: r.version for r in self.rules},
             }
             with open(metrics_path, "w") as f:
-                _json.dump(metrics, f, indent=1, sort_keys=True)
+                json.dump(metrics, f, indent=1, sort_keys=True)
             for fr in violation_frames:
                 try:
                     fr.unpersist()

@@ -38,7 +38,9 @@ memoized driver collect (``partials.toArrow()``), so the suite runs the
 partials plan once however many rules ask, and each rule's verdict is a
 driver function of the merged partials. ``build_shared`` makes the pass a
 ``RuleContext`` asks for; ``shared_for`` hands a rule the suite's pass, or
-builds one when the rule runs alone.
+builds one when the rule runs alone. ``dimensions_for`` reads the dimension
+tables once per context into one ``Dimensions``: the pass's token domain,
+drift's profiles and referential's active sources.
 
 One kernel (``_make_batch_gen``) behind two feeds: Spark's scan through
 ``mapInArrow`` (any DataFrame, in-memory frames included) and pyarrow
@@ -68,6 +70,7 @@ rows); nothing is ever shuffled at token granularity either way.
 from __future__ import annotations
 
 import threading
+from dataclasses import dataclass, field
 
 import numpy as np
 
@@ -91,8 +94,8 @@ ROW_NONPOS_NTOK = 4
 # tokenizers). A pathological profile above the cap falls back to hashing
 # token ids into a bounded bucket domain (Knuth multiplicative mod 2^32),
 # applied identically to the corpus side (numpy, below) and the profile side
-# (drift rule), so frequency comparison stays consistent — at the cost of
-# hash-collision blur instead of a driver OOM.
+# (``read_dimensions``, Spark-side), so frequency comparison stays consistent
+# — at the cost of hash-collision blur instead of a driver OOM.
 DEFAULT_MAX_REF_TOKENS = 1_000_000
 DEFAULT_HASH_BUCKETS = 1 << 16
 HASH_MULT = 2654435761  # Knuth's 2^32 / phi
@@ -125,9 +128,6 @@ class SharedTokenStats:
                  vocab_hi: int | None = None,
                  direct_files: list[tuple[int, str]] | None = None,
                  table=None):
-        self.lo = int(lo)
-        self.hi = int(hi)
-        self.ref_tokens = ref_tokens
         self.hash_mod = hash_mod
         self.vocab_lo = vocab_lo
         self.vocab_hi = vocab_hi  # exclusive; None disables kind 4
@@ -136,7 +136,7 @@ class SharedTokenStats:
         self._partials = None
         if table is None:
             kernel = _make_batch_gen(
-                self.lo, self.hi, ref_tokens, hash_mod, vocab_lo, vocab_hi
+                int(lo), int(hi), ref_tokens, hash_mod, vocab_lo, vocab_hi
             )
             self._partials = (
                 _build_partials_direct(
@@ -159,28 +159,22 @@ class SharedTokenStats:
         vocab_hi: int | None = None,
         direct_files: list[tuple[int, str]] | None = None,
     ) -> "SharedTokenStats":
-        # Bound the profile-domain collect with a LIMIT pushed into the ONE
-        # Spark job (no separate count() job): at most cap+1 distinct keys
-        # ever reach the driver. Seeing cap+1 proves the profile is over the
-        # cap — nothing unbounded is collected; the domain becomes
-        # [0, hash_buckets) and corpus tokens are hashed into it (the drift
-        # rule hashes the profile side identically via `self.hash_mod`).
-        keys = (
-            profiles.select(F.explode(F.map_keys("token_freq")).alias("t"))
-            .distinct()
-            .limit(max_ref_tokens + 1)
-            .collect()
+        """The pass over the token domain of ``profiles``, exact or hashed
+        as ``read_dimensions`` decides under the two caps."""
+        dims = read_dimensions(None, profiles, max_ref_tokens, hash_buckets)
+        return cls.from_domain(
+            df, dims.domain, dims.hash_mod,
+            vocab_lo=vocab_lo, vocab_hi=vocab_hi, direct_files=direct_files,
         )
-        kw = dict(vocab_lo=vocab_lo, vocab_hi=vocab_hi, direct_files=direct_files)
-        if len(keys) > max_ref_tokens:
-            return cls(df, 0, hash_buckets - 1, hash_mod=hash_buckets, **kw)
-        return cls.from_domain(df, sorted(r["t"] for r in keys), **kw)
 
     @classmethod
-    def from_domain(cls, df: DataFrame | None, ref_tokens: list[int], **kw):
+    def from_domain(cls, df, ref_tokens: list[int], hash_mod: int | None = None, **kw):
         """The pass over a sorted reference token domain already in hand
-        (empty: no kind-1 rows); ``kw`` as for ``from_profiles``. A domain
-        with gaps keeps its token list for the kernel's membership test."""
+        (empty: no kind-1 rows), or over ``[0, hash_mod)`` when the domain
+        is hashed; ``kw`` as for ``from_profiles``. A domain with gaps
+        keeps its token list for the kernel's membership test."""
+        if hash_mod:
+            return cls(df, 0, hash_mod - 1, hash_mod=hash_mod, **kw)
         lo, hi = (ref_tokens[0], ref_tokens[-1]) if ref_tokens else (0, -1)
         gaps = ref_tokens != list(range(lo, hi + 1))
         return cls(df, lo, hi, ref_tokens if gaps else None, **kw)
@@ -246,29 +240,17 @@ class SharedTokenStats:
         return sorted(self.counts_by_part(KIND_ROWS))
 
 
-def build_shared(df: DataFrame, ctx, direct_files=None, domain=None) -> SharedTokenStats:
+def build_shared(df: DataFrame, ctx, direct_files=None) -> SharedTokenStats:
     """The shared pass a ``RuleContext`` asks for: token_bounds' vocab
-    bounds from ``ctx.params`` (kind 4), drift's domain caps
-    (``max_ref_tokens``, ``hash_buckets``) from ``ctx.params["drift"]`` and
-    the reference domain from ``ctx.reference_profiles`` — with no profiles,
-    an empty domain and so no kind-1 rows. A caller that already holds the
-    profiles' sorted token ``domain`` (within the cap) passes it, and no
-    domain probe runs. With ``direct_files`` the pass reads just those
-    (part_id, path) files and ``df`` may be None."""
+    bounds from ``ctx.params`` (kind 4) and the reference domain of the
+    context's ``Dimensions`` (``dimensions_for``) — with no profiles, an
+    empty domain and so no kind-1 rows. With ``direct_files`` the pass reads
+    just those (part_id, path) files and ``df`` may be None."""
     lo, hi = vocab_bounds(ctx.params)
-    if ctx.reference_profiles is None or domain is not None:
-        return SharedTokenStats.from_domain(
-            df, domain or [], vocab_lo=lo, vocab_hi=hi, direct_files=direct_files
-        )
-    d = ctx.params.get("drift") or {}
-    return SharedTokenStats.from_profiles(
-        df,
-        ctx.reference_profiles,
-        max_ref_tokens=int(d.get("max_ref_tokens", DEFAULT_MAX_REF_TOKENS)),
-        hash_buckets=int(d.get("hash_buckets", DEFAULT_HASH_BUCKETS)),
-        vocab_lo=lo,
-        vocab_hi=hi,
-        direct_files=direct_files,
+    dims = dimensions_for(ctx)
+    return SharedTokenStats.from_domain(
+        df, dims.domain, dims.hash_mod,
+        vocab_lo=lo, vocab_hi=hi, direct_files=direct_files,
     )
 
 
@@ -281,15 +263,84 @@ def vocab_bounds(params: dict | None) -> tuple[int, int]:
 
 
 def shared_for(df: DataFrame, ctx) -> SharedTokenStats:
-    """``ctx.shared`` when the suite built it for the same vocab bounds;
-    otherwise (a rule run alone, or a pass built for other bounds) a fresh
-    ``build_shared`` pass over ``df``."""
+    """``ctx.shared`` when the suite built it for the vocab bounds and the
+    exact or hashed token domain ``ctx`` names; otherwise (a rule run alone,
+    or a pass built for others) a fresh ``build_shared`` pass over ``df``."""
     shared = ctx.shared
-    if shared is not None and (shared.vocab_lo, shared.vocab_hi) == vocab_bounds(
-        ctx.params
-    ):
+    if shared is not None and (
+        shared.vocab_lo, shared.vocab_hi, shared.hash_mod
+    ) == (*vocab_bounds(ctx.params), dimensions_for(ctx).hash_mod):
         return shared
     return build_shared(df, ctx)
+
+
+@dataclass
+class Dimensions:
+    """The two dimension tables as collected once (``read_dimensions``) for
+    every consumer of a run: referential, the shared pass (over ``domain``,
+    or ``hash_mod`` buckets) and drift (``quantiles``, ``token_freq``)."""
+
+    active: frozenset = frozenset()  # active allowed sources, null excluded
+    domain: list = field(default_factory=list)  # sorted profile token ids
+    hash_mod: int | None = None  # hashed domain: [0, hash_mod), ``domain`` []
+    quantiles: dict = field(default_factory=dict)  # source -> n_tok quantiles
+    token_freq: dict = field(default_factory=dict)  # source -> {token: freq}
+
+
+def read_dimensions(
+    allowed, profiles, max_ref_tokens: int = DEFAULT_MAX_REF_TOKENS,
+    hash_buckets: int = DEFAULT_HASH_BUCKETS,
+) -> Dimensions:
+    """One collect of each dimension table (either may be None).
+
+    Driver-OOM guard: a profile's ``token_freq`` map is collected only if it
+    has at most ``max_ref_tokens`` entries. A withheld map, or a union of
+    keys over the cap, proves the distinct domain over the cap: it becomes
+    ``hash_buckets`` buckets, the frequencies folded into them SPARK-SIDE
+    (<= sources x ``hash_buckets`` rows reach the driver)."""
+    active = frozenset()
+    if allowed is not None:
+        rows = allowed.filter(F.col("active")).select("source").collect()
+        active = frozenset(r["source"] for r in rows) - {None}
+    if profiles is None:
+        return Dimensions(active)
+    over = F.size("token_freq") > max_ref_tokens
+    rows = profiles.select(
+        "source", "n_tok_quantiles",
+        F.when(~over, F.col("token_freq")).alias("token_freq"), over.alias("over"),
+    ).collect()
+    quantiles = {r["source"]: np.asarray(r["n_tok_quantiles"], float) for r in rows}
+    token_freq = {r["source"]: dict(r["token_freq"] or {}) for r in rows}
+    domain = sorted({t for m in token_freq.values() for t in m})
+    if len(domain) <= max_ref_tokens and not any(r["over"] for r in rows):
+        return Dimensions(active, domain, None, quantiles, token_freq)
+    bucket = F.pmod(
+        F.pmod(F.col("t").cast("bigint") * F.lit(HASH_MULT), F.lit(1 << 32)),
+        F.lit(int(hash_buckets)),
+    )
+    token_freq = {}
+    for r in (
+        profiles.select("source", F.explode("token_freq").alias("t", "freq"))
+        .groupBy("source", bucket.cast("int").alias("b"))
+        .agg(F.sum("freq").alias("freq"))
+        .collect()
+    ):
+        token_freq.setdefault(r["source"], {})[int(r["b"])] = float(r["freq"])
+    return Dimensions(active, [], int(hash_buckets), quantiles, token_freq)
+
+
+def dimensions_for(ctx) -> Dimensions:
+    """``ctx.dimensions``, read from ``ctx`` once when it holds none (a rule
+    run alone, a caller's own context) under drift's domain caps."""
+    from ..operators.drift import DEFAULTS
+
+    if ctx.dimensions is None:
+        d = {**DEFAULTS, **(ctx.params.get("drift") or {})}
+        ctx.dimensions = read_dimensions(
+            ctx.allowed_sources, ctx.reference_profiles,
+            int(d["max_ref_tokens"]), int(d["hash_buckets"]),
+        )
+    return ctx.dimensions
 
 
 def _decode_ntok(masked: np.ndarray) -> np.ndarray:

@@ -43,13 +43,6 @@ from pyspark.sql.types import StructType
 
 _PART_RE = re.compile(r"^part_id=(\d+)$")
 
-try:  # pragma: no cover - exercised only when the Iceberg jar is present
-    import pyiceberg  # type: ignore  # noqa: F401
-
-    HAS_ICEBERG = True
-except Exception:  # ImportError in this sandbox
-    HAS_ICEBERG = False
-
 
 def parquet_files(d: str) -> dict[str, os.stat_result]:
     """{relative name: stat} of the parquet files Spark reads under ``d``:

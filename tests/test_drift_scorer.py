@@ -19,6 +19,7 @@ from lk_data_test_spark.plans.shared import (
     KIND_TOKEN,
     SharedTokenStats,
     build_shared,
+    read_dimensions,
 )
 from lk_data_test_spark.sources.catalog import PartitionedTable
 
@@ -70,7 +71,8 @@ def corpus(spark, corpus_dir):
 def test_scorer_matches_reference_on_corpus(corpus):
     df, ctx = corpus
     rows = build_shared(df, ctx).rows(KIND_NTOK, KIND_TOKEN)
-    quantiles, token_freq = drift.profile_maps(ctx.reference_profiles.collect())
+    dims = read_dimensions(None, ctx.reference_profiles)
+    quantiles, token_freq = dims.quantiles, dims.token_freq
     p = drift.resolve_params(None)
     got = drift.score_groups(rows, quantiles, token_freq, p)
     assert got and got == oracle_scores(rows, quantiles, token_freq, p)
@@ -138,9 +140,11 @@ def test_scorer_matches_reference_on_hashed_domain(corpus):
     )
     assert shared.hash_mod == 1 << 16
     rows = shared.rows(KIND_NTOK, KIND_TOKEN)
-    quantiles, token_freq = drift.load_profiles(
-        ctx.reference_profiles, shared.hash_mod
+    dims = read_dimensions(
+        None, ctx.reference_profiles, max_ref_tokens=10, hash_buckets=1 << 16
     )
+    assert dims.hash_mod == shared.hash_mod
+    quantiles, token_freq = dims.quantiles, dims.token_freq
     p = drift.resolve_params(None)
     got = drift.score_groups(rows, quantiles, token_freq, p)
     assert got and got == oracle_scores(rows, quantiles, token_freq, p)

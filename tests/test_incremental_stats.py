@@ -639,9 +639,9 @@ def test_fused_token_bounds_range_with_vocab_lo(spark, tmp_path):
 
 
 # measured on ``corpus_dir`` (10 x 1,200 rows, profiles and allowed
-# sources). The validator builds the shared pass from the token domain of
-# the profiles it collected, so the two jobs of the domain probe in
-# ``SharedTokenStats.from_profiles`` do not run (12 jobs when they did)
+# sources). The validator reads the dimension tables once (one collect
+# each, ``plans/shared.py`` ``read_dimensions``), and the shared pass,
+# referential and drift all take them from that read
 FIRST_SIGHT_JOBS = 10
 
 

@@ -159,7 +159,7 @@ def test_kmeans_monotone_deterministic_and_balances_ivf(spark):
 
 def test_plan_shapes(spark, corpus_dir):
     """The physical plans the engine depends on at 100 TB: partition-pruned
-    scans and broadcast (never shuffled-fact) dimension joins."""
+    scans, and dimension lookups that never shuffle the fact side."""
     from lk_data_test_spark.operators import referential
     from lk_data_test_spark.plans.rules import RuleContext
     from lk_data_test_spark.sources.catalog import PartitionedTable
@@ -176,8 +176,10 @@ def test_plan_shapes(spark, corpus_dir):
     )
     res = referential.evaluate(t.read(spark), ctx)
     vplan = res.violations._jdf.queryExecution().executedPlan().toString()
-    assert "Broadcast" in vplan, "anti join must broadcast the dimension"
-    assert "SortMergeJoin" not in vplan
+    # no join at all: the active sources are a hash-set IN filter over the
+    # failing partitions' scan
+    assert "Join" not in vplan and "Exchange" not in vplan
+    assert "INSET" in vplan and "PartitionFilters" in vplan and "part_id" in vplan
 
 
 def test_uniqueness_exact_pass_is_partition_pruned(spark, corpus_dir):
@@ -394,6 +396,22 @@ def test_cli_build_profiles_mode(spark, corpus_dir, tmp_path, capsys):
         "source", "n_tok_quantiles", "token_freq"
     ]
     assert prof.count() == got["sources"] > 0
+
+
+def test_cli_dimension_reread_runs_no_job(spark, corpus_dir, tmp_path):
+    """The CLI reads its dimension tables through ``read_parquet``: a second
+    read of the same unchanged directory runs no Spark job, and a missing
+    optional table is None."""
+    from lk_data_test_spark.cli import dimension
+
+    path = os.path.join(corpus_dir, "allowed_sources")
+    first = dimension(spark, path)
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    again = dimension(spark, path)
+    assert set(tracker.getJobIdsForGroup(None)) == before
+    assert again.schema == first.schema
+    assert dimension(spark, str(tmp_path / "missing"), optional=True) is None
 
 
 def test_no_cartesian_product_in_any_registry_plan(spark):

@@ -47,6 +47,33 @@ def test_referential(ctx_df):
     assert all(r["detail"].startswith("unknown source: ") for r in v)
 
 
+def test_referential_rows_match_anti_join(ctx_df, defect_corpus):
+    """Referential's violation rows are the rows a left anti join against
+    the active sources keeps: a null source is a violation, and with no
+    active source every row is one."""
+    from lk_data_test_spark.plans.rules import local_frame
+
+    ctx, _ = ctx_df
+    df = PartitionedTable(defect_corpus).read(ctx.spark)
+    cols = ("part_id", "doc_id", "source", "n_tok", "detail")
+    detail = F.concat(F.lit("unknown source: "), F.col("source")).alias("detail")
+    empty = local_frame(ctx.spark, [], ctx.allowed_sources.schema)
+    for allowed, n_rows in ((ctx.allowed_sources, 2), (empty, 400)):
+        res = referential.evaluate(
+            df, RuleContext(spark=ctx.spark, allowed_sources=allowed, part_ids=[0, 4])
+        )
+        got = Counter(tuple(r[c] for c in cols) for r in res.violations.collect())
+        oracle = df.join(
+            F.broadcast(allowed.filter("active").select("source")), "source", "left_anti"
+        ).select(F.col("part_id").cast("int"), "doc_id", "source", "n_tok", detail)
+        assert got == Counter(tuple(r) for r in oracle.collect())
+        assert sum(got.values()) == 2 * n_rows
+        assert sum(n for (_, _, src, _, _), n in got.items() if src is None) == 2
+        assert {
+            r["part_id"]: r["metric"] for r in res.verdicts.collect()
+        } == {0: float(n_rows), 4: float(n_rows)}
+
+
 def test_token_bounds(ctx_df):
     """badcol parts plant exactly 5 rows with an out-of-vocab first token
     (3 above vocab, 2 negative). The rule run alone (it builds its own

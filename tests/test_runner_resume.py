@@ -318,10 +318,11 @@ def test_forced_rerun_counts_rows_appended_since_the_last_run(spark, tmp_path):
     assert part1_duplicates() == 61.0
 
 
-# Spark jobs of a warm forced run over the test corpus: 4 dimension-table
-# collects, 2 for the shared partials, 2 for the uniqueness sketches and 3
-# for the exact pass over the flagged partitions
-WARM_RUN_JOBS = 11
+# Spark jobs of a warm forced run over the test corpus: 2 for the one read
+# of the dimension tables (one collect each), 2 for the shared partials, 2
+# for the uniqueness sketches and 3 for the exact pass over the flagged
+# partitions
+WARM_RUN_JOBS = 9
 
 
 def test_warm_forced_run_job_count(spark, corpus_dir, tmp_path):
@@ -338,10 +339,12 @@ def test_warm_forced_run_job_count(spark, corpus_dir, tmp_path):
     assert len(jobs) <= WARM_RUN_JOBS, sorted(jobs)
 
 
-# measured on ``corpus_dir`` (10 x 1,200 rows): 11 jobs as above plus the
+# measured on ``corpus_dir`` (10 x 1,200 rows): 9 jobs as above plus the
 # sink writes; the uniqueness exact aggregation runs twice, once for the
-# verdict counts and once for the sink (ROADMAP "Known defects")
-SINK_RUN_JOBS = 23
+# verdict counts and once for the sink (ROADMAP "Known defects").
+# Referential's violation rows are a filter against the active set, so the
+# sink write broadcasts no dimension table
+SINK_RUN_JOBS = 20
 
 
 def test_warm_forced_sink_run_job_count(spark, corpus_dir, tmp_path):
@@ -355,3 +358,31 @@ def test_warm_forced_sink_run_job_count(spark, corpus_dir, tmp_path):
     r.run(force=True)
     jobs = set(tracker.getJobIdsForGroup(None)) - before
     assert len(jobs) <= SINK_RUN_JOBS, sorted(jobs)
+
+
+def test_dimension_tables_read_once_per_run(spark, corpus_dir, tmp_path, monkeypatch):
+    """ValidationRunner.run and IncrementalStatsValidator.run each read the
+    dimension tables once: the shared pass, drift and referential all take
+    them from that one read."""
+    import lk_data_test_spark.plans.shared as shared_mod
+    from lk_data_test_spark.plans.incremental_stats import IncrementalStatsValidator
+
+    calls = []
+    real = shared_mod.read_dimensions
+    monkeypatch.setattr(
+        shared_mod, "read_dimensions", lambda *a, **k: calls.append(1) or real(*a, **k)
+    )
+    r = _bare_runner(spark, corpus_dir, tmp_path)
+    res = r.run(force=True)
+    assert len(calls) == 1
+    assert {v["rule_id"] for v in res.verdicts} >= {"drift", "referential"}
+    calls.clear()
+    v = IncrementalStatsValidator(
+        r.table,
+        str(tmp_path / "incremental_stats.json"),
+        profiles=r.reference_profiles,
+        allowed=r.allowed_sources,
+    )
+    v.run(spark)
+    assert len(calls) == 1
+    assert {"drift", "referential"} <= set(v.reports)
